@@ -11,6 +11,7 @@ sorts columns by name before hashing.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -107,21 +108,42 @@ def _track_persists(spark, sf: str, query: str, *dfs: DataFrame) -> None:
     _QUERY_PERSISTS[(_app_key(spark), sf, query)] = list(dfs)
 
 
+def _stopped(spark) -> bool:
+    """True once the session's SparkContext is stopped (pyspark drops
+    its ``_jsc`` handle on stop)."""
+    jsc = spark.sparkContext._jsc
+    return jsc is None or jsc.sc().isStopped()
+
+
 def release_caches(spark) -> int:
     """Unpersist every tracked per-query cache handle of the LIVE
     session (lazy unpersist — safe even while a returned frame is
     still unmaterialized, at the price of recomputation). Returns the
-    number of handles released. Call between unrelated workloads in a
-    long-lived host; the driver's per-process runs never need it."""
+    number of handles actually unpersisted. Call between unrelated
+    workloads in a long-lived host; one-shot per-process runs never
+    need it.
+
+    A stopped session has nothing left to free (its cache went with
+    it): that case releases nothing and is not an error. Any other
+    unpersist failure is logged, not counted, and the rest are still
+    released."""
+    if _stopped(spark):
+        return 0
     app = _app_key(spark)
     n = 0
     for k in [k for k in _QUERY_PERSISTS if k[0] == app]:
         for df in _QUERY_PERSISTS.pop(k):
             try:
                 df.unpersist()
+            except Exception:
+                if not _stopped(spark):
+                    logging.getLogger(__name__).warning(
+                        "release_caches: unpersist of a %r handle failed",
+                        k[2],
+                        exc_info=True,
+                    )
+            else:
                 n += 1
-            except Exception:  # session already stopped — nothing to free
-                pass
     return n
 
 # ---------------------------------------------------------------------------
@@ -1405,90 +1427,21 @@ def q_embedding_neardup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
-    """REAL codec path, driver-gated: every doc carries a valid binary
-    P6 (PPM) image (formula-generated JVM-side), features come from a
-    genuine Python header parse (width/height read from the IMAGE),
-    and the resize is genuine nearest-neighbor over the pixel grid —
-    joined into one frame per doc. The compared frame includes the
-    resized RGB payload as hex, so the driver hash covers the decode
-    and the resampled bytes end to end; the DuckDB twin recomputes
-    every byte analytically from the generator formula, proving the
-    decoder read the real payload."""
-    # unspread (round-18 A/B): the per-branch payload synth+parse here
-    # is small (one image per doc, several scan branches), and the
-    # spread exchange repeated per branch measured ~0.9s worse
-    docs = _docs(spark, sf, spread=False)
-    wp = multimodal.attach_binary_payload(docs, media="ppm")
-    feats = multimodal.extract_features(wp, codec="ppm").select(
-        "doc_id",
-        "n_bytes",
-        "first_byte",
-        "byte_checksum",
-        F.col("width").alias("src_width"),
-        F.col("height").alias("src_height"),
-    )
-    rez = multimodal.resize_images(wp, codec="ppm").select(
-        "doc_id",
-        F.col("n_bytes").alias("resized_bytes"),
-        "width",
-        "height",
-        F.col("checksum").alias("resized_checksum"),
-        F.hex("payload").alias("payload_hex"),
-    )
-    # audio leg (round 10): every doc also carries a VALID RIFF/WAVE
-    # mono-PCM16 clip; features come from the real chunk-walking
-    # parser (rate read from the FILE), integer-exact, and the oracle
-    # recomputes them analytically from the clip formula
-    wav = multimodal.extract_audio_features(
-        multimodal.attach_binary_payload(docs, media="wav")
-    ).select(
-        "doc_id",
-        F.col("n_bytes").alias("wav_bytes"),
-        "sample_rate",
-        "n_samples",
-        "duration_ms",
-        "sum_abs",
-        "max_abs",
-        "zero_crossings",
-    )
-    # png leg (round 10): the SAME formula image, but through a real
-    # COMPRESSED codec — encode_png (zlib deflate + CRC chunks) then
-    # decode_png (CRC-verified chunk walk, inflate, full scanline
-    # unfiltering); gated features are decode outputs only (file size
-    # is zlib-dependent, deliberately ungated)
-    png = multimodal.extract_png_features(
-        multimodal.attach_png_payload(docs)
-    ).select(
-        "doc_id",
-        F.col("width").alias("png_width"),
-        F.col("height").alias("png_height"),
-        F.col("n_pixel_bytes").alias("png_pixel_bytes"),
-        F.col("pixel_checksum").alias("png_checksum"),
-    )
-    # jpeg leg (round 11): a real ENTROPY-CODED codec — encode_jpeg
-    # (baseline JFIF markers + canonical Huffman scan with byte
-    # stuffing) then decode_jpeg (marker walk, DHT-driven Huffman
-    # decode, DC reconstruction, dequantization); gated features are
-    # the integer-exact prefix — the float IDCT never runs, so
-    # nothing float reaches the hash
-    jpg = multimodal.extract_jpeg_features(
-        multimodal.attach_jpeg_payload(docs)
-    ).select(
-        "doc_id",
-        F.col("width").alias("jpeg_width"),
-        F.col("height").alias("jpeg_height"),
-        F.col("n_components").alias("jpeg_components"),
-        F.col("n_blocks").alias("jpeg_blocks"),
-        F.col("dc_sum").alias("jpeg_dc_sum"),
-        F.col("ac_sum").alias("jpeg_ac_sum"),
-        F.col("ac_nonzero").alias("jpeg_ac_nonzero"),
-    )
-    return (
-        feats.join(rez, "doc_id", "left")
-        .join(wav, "doc_id", "left")
-        .join(png, "doc_id", "left")
-        .join(jpg, "doc_id", "left")
-    )
+    """REAL codec path, oracle-gated, in ONE Arrow pass
+    (:func:`multimodal.multimodal_features`): one scan of documents,
+    one projection generating every doc's P6 image and RIFF/WAVE clip
+    JVM-side, and one ``mapInArrow`` that runs the PPM decode, the
+    nearest-neighbor resize, the WAV decode and the PNG and JPEG
+    encode→decode round trips per doc — no per-leg scan and no join.
+    The compared frame includes the resized RGB payload as hex, so the
+    oracle hash covers the decode and the resampled bytes end to end;
+    the DuckDB twin recomputes every value analytically from the
+    generator formulas (the five per-leg twins left-joined on doc_id),
+    proving the decoders read the real payloads."""
+    # unspread: the spread exchange costs more than the one small pass
+    # it would parallelize (1.26 vs 0.62 CPU-s per call on a 521-doc
+    # documents sample, 4 cores)
+    return multimodal.multimodal_features(_docs(spark, sf, spread=False))
 
 
 def q_multimodal_frames(spark: SparkSession, sf: str) -> DataFrame:

@@ -1,9 +1,20 @@
 """Multimodal column plumbing (beyond-reference).
 
 Treats image/audio/video payloads as opaque ``binary`` columns with a
-typed metadata struct, and runs decode / feature-extraction as
-Arrow-batched ``mapInPandas`` — the Spark-side shape (schema,
-partitioning, batch iteration, UDF signature) is real and tested.
+typed metadata struct, and runs decode / feature-extraction as plain
+Python row functions (one payload in, one output tuple — or, for the
+frame extractors, a list of them — out) behind ONE shared Arrow batch
+runner, :func:`_map_docs`: a single ``mapInArrow`` per call that
+converts each batch to Python values once and builds the output
+columns once. Every ``attach_*``/``extract_*``/``resize_*`` leg is a
+thin wrapper over that runner, so the Spark-side shape (schema,
+partitioning, batch iteration) is shared and tested once.
+
+:func:`multimodal_features` composes five legs (PPM features, PPM
+resize, WAV features, PNG round trip, JPEG round trip) in ONE pass:
+one projection generates the PPM and WAV payloads JVM-side, and one
+``mapInArrow`` runs all five row functions per doc — no per-leg scan,
+no per-leg Python node and no join.
 
 Codecs: ``codec="ppm"`` is a REAL image decode path — binary P6
 (portable pixmap) images are parsed header-and-pixels in Python,
@@ -35,20 +46,21 @@ and feed each '00dc' frame through the real :func:`decode_jpeg`.
 is unchanged.
 
 At scale: binary payloads ride the same parquet row groups; feature
-extraction is embarrassingly parallel (mapInPandas, no shuffle), and
+extraction is embarrassingly parallel (mapInArrow, no shuffle), and
 ``spark.sql.files.maxPartitionBytes`` bounds per-task memory.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
     "attach_binary_payload",
+    "media_payload",
     "decode_ppm",
     "decode_wav",
     "decode_png",
@@ -80,6 +92,8 @@ __all__ = [
     "FLIC_FRAME_SCHEMA",
     "FLIC_FRAMES_SQL",
     "extract_features",
+    "multimodal_features",
+    "MULTIMODAL_FEATURES_SCHEMA",
     "extract_audio_features",
     "AUDIO_FEATURE_SCHEMA",
     "WAV_FEATURES_SQL",
@@ -96,17 +110,75 @@ __all__ = [
     "PPM_RESIZE_SQL",
 ]
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("first_byte", T.IntegerType()),
-        T.StructField("byte_checksum", T.LongType()),
-        # filled by decoding codecs (ppm); NULL for codec="raw"
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
+_TYPES = {
+    "long": T.LongType(),
+    "int": T.IntegerType(),
+    "string": T.StringType(),
+    "binary": T.BinaryType(),
+}
+
+
+def _schema(spec: str) -> T.StructType:
+    """All-nullable StructType from ``"name type, ..."`` (types in
+    :data:`_TYPES`) — the output schemas of this module's legs."""
+    return T.StructType(
+        [
+            T.StructField(name, _TYPES[typ])
+            for name, typ in (field.split() for field in spec.split(","))
+        ]
+    )
+
+
+#: ``width``/``height`` are filled by decoding codecs (ppm); NULL for
+#: codec="raw"
+FEATURE_SCHEMA = _schema(
+    "doc_id long, n_bytes long, first_byte int, byte_checksum long,"
+    " width int, height int"
 )
+
+#: (doc_id, payload) — what the Python-side generators emit
+_PAYLOAD_SCHEMA = _schema("doc_id long, payload binary")
+
+
+def _map_docs(
+    df: DataFrame,
+    inputs: list[str | Column],
+    row_fn: Callable,
+    schema: T.StructType,
+    expand: bool = False,
+) -> DataFrame:
+    """The one Arrow batch runner behind every Python leg here.
+
+    A single ``mapInArrow`` over ``doc_id`` plus ``inputs`` (column
+    names or Columns): each batch is converted to Python values once,
+    ``row_fn(*values)`` runs per input row (binary arrives as
+    ``bytes``, NULL as ``None``) and returns the output row WITHOUT its
+    leading ``doc_id`` as a tuple in ``schema`` order, or ``None`` to
+    drop the row; with ``expand=True`` it returns a list of such tuples
+    (0..n output rows per input row). The output columns are built
+    once per batch from those tuples."""
+
+    def run(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for b in batches:
+            rows = []
+            for d, *vals in zip(*(c.to_pylist() for c in b.columns)):
+                out = row_fn(*vals)
+                if expand:
+                    rows.extend((d, *r) for r in out)
+                elif out is not None:
+                    rows.append((d, *out))
+            cols = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.select("doc_id", *inputs).mapInArrow(run, schema)
+
 
 #: deterministic PPM test-image formula (shared by the Spark generator
 #: and the DuckDB twins): image for doc d is w=4+d%5 × h=3+d%4, and
@@ -137,46 +209,38 @@ _Y4M_FSZ = "(6 * (2 + doc_id % 3) * (2 + doc_id % 2))"
 _Y4M_BYTE = "((doc_id * 17 + {f} * 29 + {i} * 5) % 256)"
 
 
-def attach_binary_payload(docs: DataFrame, media: str = "text") -> DataFrame:
-    """Opaque binary column + typed metadata struct.
-
-    Real pipelines read image/audio bytes from object storage; here the
-    payload is deterministic (same Spark-side semantics: BinaryType
-    column + metadata struct):
+def media_payload(media: str = "text") -> Column:
+    """The payload Column of :func:`attach_binary_payload` for
+    ``media`` — an expression over ``doc_id`` (and ``text`` for
+    ``media="text"``), so several payloads can come out of one
+    projection. Real pipelines read image/audio bytes from object
+    storage; here the payload is deterministic:
 
     - ``media="text"``: the utf-8 text bytes (opaque-blob stand-in);
     - ``media="ppm"``: a VALID binary P6 image per doc — header +
       formula-generated RGB bytes, built entirely JVM-side
       (sequence → transform → unhex, no Python) so generation scales
       like any codegen projection. This is what the real ``ppm``
-      decode path parses back.
+      decode path parses back;
+    - ``media="wav"``: a VALID RIFF/WAVE mono-PCM16 clip (44-byte
+      canonical header + formula samples), built the same way;
+    - ``media="y4m"``: a VALID multi-frame C420 YUV4MPEG2 stream,
+      built the same way.
     """
     if media == "ppm":
-        d = F.col("doc_id")
-        w = (F.lit(4) + d % 5).cast("int")
-        h = (F.lit(3) + d % 4).cast("int")
         header = F.concat(
             F.lit("P6\n"),
-            w.cast("string"),
+            F.expr(_PPM_W).cast("int").cast("string"),
             F.lit(" "),
-            h.cast("string"),
+            F.expr(_PPM_H).cast("int").cast("string"),
             F.lit("\n255\n"),
         )
         pixels_hex = F.expr(
             f"array_join(transform(sequence(0, int({_PPM_W} * {_PPM_H} * 3 - 1)),"
             " i -> lpad(hex((doc_id * 31 + i * 7) % 256), 2, '0')), '')"
         )
-        payload = F.concat(F.encode(header, "UTF-8"), F.unhex(pixels_hex))
-        meta = F.struct(
-            F.length(payload).cast("long").alias("n_bytes"),
-            F.lit("image/x-portable-pixmap").alias("mime"),
-            w.alias("width"),
-            h.alias("height"),
-        )
-        return docs.select("doc_id", payload.alias("payload"), meta.alias("meta"))
+        return F.concat(F.encode(header, "UTF-8"), F.unhex(pixels_hex))
     if media == "wav":
-        # a VALID RIFF/WAVE mono-PCM16 clip per doc, built JVM-side as
-        # hex and unhexed — 44-byte canonical header + formula samples
         n = _WAV_N
 
         def le32(v: str) -> str:
@@ -199,34 +263,21 @@ def attach_binary_payload(docs: DataFrame, media: str = "text") -> DataFrame:
             f"i -> concat(lpad(hex(pmod({s}, 65536) % 256), 2, '0'), "
             f"lpad(hex(pmod({s}, 65536) div 256), 2, '0'))), '')"
         )
-        payload = F.unhex(
+        return F.unhex(
             F.expr(
                 f"concat('52494646', {le32(f'36 + 2 * {n}')}, "
                 f"'{static_fmt}', {le32(f'2 * {n}')}, {samples_hex})"
             )
         )
-        meta = F.struct(
-            F.length(payload).cast("long").alias("n_bytes"),
-            F.lit("audio/wav").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-        )
-        return docs.select("doc_id", payload.alias("payload"), meta.alias("meta"))
     if media == "y4m":
-        # a VALID YUV4MPEG2 stream per doc, built JVM-side: ASCII
-        # stream header, then per frame a "FRAME\n" marker (hex
+        # ASCII stream header, then per frame a "FRAME\n" marker (hex
         # 4652414D450A) followed by the packed C420 plane bytes from
-        # the shared formula — same sequence→transform→unhex shape as
-        # the WAV/PPM generators, so generation scales like any
-        # codegen projection
-        d = F.col("doc_id")
-        w = (F.lit(4) + (d % 3) * 2).cast("int")
-        h = (F.lit(4) + (d % 2) * 2).cast("int")
+        # the shared formula
         header = F.concat(
             F.lit("YUV4MPEG2 W"),
-            w.cast("string"),
+            F.expr(_Y4M_W).cast("int").cast("string"),
             F.lit(" H"),
-            h.cast("string"),
+            F.expr(_Y4M_H).cast("int").cast("string"),
             F.lit(" F25:1 Ip A1:1 C420jpeg\n"),
         )
         byte_hex = (
@@ -238,20 +289,30 @@ def attach_binary_payload(docs: DataFrame, media: str = "text") -> DataFrame:
             f"array_join(transform(sequence(0, int({_Y4M_FSZ}) - 1), "
             f"i -> {byte_hex}), ''))), '')"
         )
-        payload = F.concat(F.encode(header, "UTF-8"), F.unhex(frames_hex))
-        meta = F.struct(
-            F.length(payload).cast("long").alias("n_bytes"),
-            F.lit("video/x-yuv4mpeg").alias("mime"),
-            w.alias("width"),
-            h.alias("height"),
-        )
-        return docs.select("doc_id", payload.alias("payload"), meta.alias("meta"))
-    payload = F.encode(F.col("text"), "UTF-8")
+        return F.concat(F.encode(header, "UTF-8"), F.unhex(frames_hex))
+    return F.encode(F.col("text"), "UTF-8")
+
+
+#: media → (mime, width, height) of the metadata struct; the image and
+#: video generators carry their formula dimensions
+_MEDIA_META = {
+    "ppm": ("image/x-portable-pixmap", _PPM_W, _PPM_H),
+    "wav": ("audio/wav", None, None),
+    "y4m": ("video/x-yuv4mpeg", _Y4M_W, _Y4M_H),
+}
+
+
+def attach_binary_payload(docs: DataFrame, media: str = "text") -> DataFrame:
+    """Opaque binary column + typed metadata struct: ``(doc_id,
+    payload, meta)`` with the :func:`media_payload` payload and
+    ``meta = (n_bytes, mime, width, height)``."""
+    payload = media_payload(media)
+    mime, w, h = _MEDIA_META.get(media, ("application/octet-stream", None, None))
     meta = F.struct(
         F.length(payload).cast("long").alias("n_bytes"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
+        F.lit(mime).alias("mime"),
+        (F.expr(w) if w else F.lit(None)).cast("int").alias("width"),
+        (F.expr(h) if h else F.lit(None)).cast("int").alias("height"),
     )
     return docs.select("doc_id", payload.alias("payload"), meta.alias("meta"))
 
@@ -328,56 +389,35 @@ def decode_wav(payload: bytes) -> tuple[int, int, list[int]]:
     return rate, channels, samples
 
 
-AUDIO_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("sum_abs", T.LongType()),
-        T.StructField("max_abs", T.LongType()),
-        T.StructField("zero_crossings", T.LongType()),
-    ]
+AUDIO_FEATURE_SCHEMA = _schema(
+    "doc_id long, n_bytes long, sample_rate int, n_samples long,"
+    " duration_ms long, sum_abs long, max_abs long, zero_crossings long"
 )
 
 
-def extract_audio_features(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched audio feature extraction: each payload goes
+def _wav_row(payload: bytes) -> tuple:
+    """:data:`AUDIO_FEATURE_SCHEMA` row (minus doc_id) of one clip,
     through the REAL :func:`decode_wav` parse (rate read from the
-    FILE, not the metadata) and yields integer-exact signal features
-    — duration, total/peak amplitude, zero crossings ((a<0)≠(b<0)
-    sign transitions) — so the oracle hash can cover them without
-    float tolerance. Same mapInPandas shape as
-    :func:`extract_features`."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for doc_id, payload in zip(b["doc_id"], b["payload"]):
-                p = bytes(payload)
-                rate, _ch, s = decode_wav(p)
-                n = len(s)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_bytes": len(p),
-                        "sample_rate": rate,
-                        "n_samples": n,
-                        "duration_ms": n * 1000 // rate,
-                        "sum_abs": sum(abs(x) for x in s),
-                        "max_abs": max((abs(x) for x in s), default=0),
-                        "zero_crossings": sum(
-                            1 for a, b2 in zip(s, s[1:]) if (a < 0) != (b2 < 0)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA])
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=AUDIO_FEATURE_SCHEMA
+    FILE, not the metadata): duration, total/peak amplitude and zero
+    crossings ((a<0)≠(b<0) sign transitions), all integer-exact."""
+    rate, _ch, s = decode_wav(payload)
+    n = len(s)
+    return (
+        len(payload),
+        rate,
+        n,
+        n * 1000 // rate,
+        sum(abs(x) for x in s),
+        max((abs(x) for x in s), default=0),
+        sum(1 for a, b in zip(s, s[1:]) if (a < 0) != (b < 0)),
     )
+
+
+def extract_audio_features(with_payload: DataFrame) -> DataFrame:
+    """Arrow-batched audio feature extraction (:func:`_wav_row` per
+    payload): integer-exact, so the oracle hash can cover the features
+    without float tolerance."""
+    return _map_docs(with_payload, ["payload"], _wav_row, AUDIO_FEATURE_SCHEMA)
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -387,7 +427,7 @@ def encode_png(width: int, height: int, pixels: bytes) -> bytes:
     """Minimal REAL PNG writer (stdlib-only): 8-bit truecolor RGB,
     non-interlaced, filter 0 scanlines, one zlib IDAT, CRC32 on every
     chunk. The generator side of the png codec path — runs inside
-    ``mapInPandas`` (zlib is Python; the PPM generator stays the
+    ``mapInArrow`` (zlib is Python; the PPM generator stays the
     JVM-side scale demonstration)."""
     import struct
     import zlib
@@ -513,75 +553,39 @@ def decode_png(payload: bytes) -> tuple[int, int, bytes]:
     return w, h, bytes(out)
 
 
+def _png_payload(d: int) -> bytes:
+    """The formula image of doc ``d`` (the SAME one the PPM generator
+    emits: w=4+d%5 × h=3+d%4, pixel byte i = (d·31+i·7) mod 256),
+    written by :func:`encode_png`."""
+    w, h = 4 + d % 5, 3 + d % 4
+    return encode_png(w, h, bytes((d * 31 + i * 7) % 256 for i in range(3 * w * h)))
+
+
 def attach_png_payload(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a VALID PNG per doc — the SAME
-    formula image the PPM generator emits (w=4+d%5 × h=3+d%4, pixel
-    byte i = (d·31+i·7) mod 256), written by :func:`encode_png`
-    inside Arrow-batched ``mapInPandas`` (zlib lives in Python). The
-    oracle never decompresses anything: it recomputes the decoded
-    FEATURES analytically from the formula, so a hash match proves
-    the chunk walk, CRC checks, inflate, and unfiltering actually
-    ran."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for d in b["doc_id"]:
-                d = int(d)
-                w, h = 4 + d % 5, 3 + d % 4
-                px = bytes((d * 31 + i * 7) % 256 for i in range(3 * w * h))
-                rows.append({"doc_id": d, "payload": encode_png(w, h, px)})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
+    """(doc_id, payload) with a VALID PNG per doc (:func:`_png_payload`,
+    Arrow-batched — zlib lives in Python). The oracle never
+    decompresses anything: it recomputes the decoded FEATURES
+    analytically from the formula, so a hash match proves the chunk
+    walk, CRC checks, inflate, and unfiltering actually ran."""
+    return _map_docs(docs, ["doc_id"], lambda d: (_png_payload(d),), _PAYLOAD_SCHEMA)
 
 
-PNG_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_pixel_bytes", T.LongType()),
-        T.StructField("pixel_checksum", T.LongType()),
-    ]
+PNG_FEATURE_SCHEMA = _schema(
+    "doc_id long, width int, height int, n_pixel_bytes long, pixel_checksum long"
 )
 
 
+def _png_row(payload: bytes) -> tuple:
+    """:data:`PNG_FEATURE_SCHEMA` row (minus doc_id): dimensions from
+    the verified IHDR, checksum over the DECODED rgb bytes (file size
+    is zlib-dependent and deliberately not a gated feature)."""
+    w, h, px = decode_png(payload)
+    return w, h, len(px), sum(px) % 1_000_003
+
+
 def extract_png_features(with_payload: DataFrame) -> DataFrame:
-    """Real-decode feature pass for PNG payloads: dimensions from the
-    verified IHDR, checksum over the DECODED rgb bytes (file size is
-    zlib-dependent and deliberately not a gated feature)."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for doc_id, payload in zip(b["doc_id"], b["payload"]):
-                w, h, px = decode_png(bytes(payload))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixel_bytes": len(px),
-                        "pixel_checksum": sum(px) % 1_000_003,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PNG_FEATURE_SCHEMA]
-            )
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=PNG_FEATURE_SCHEMA
-    )
+    """Real-decode feature pass for PNG payloads (:func:`_png_row`)."""
+    return _map_docs(with_payload, ["payload"], _png_row, PNG_FEATURE_SCHEMA)
 
 
 def png_features_sql() -> str:
@@ -988,79 +992,46 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, list[list[int]]]:
     return w, h, nf, blocks
 
 
+def _jpeg_payload(d: int) -> bytes:
+    return encode_jpeg(*_jpeg_formula_blocks(d))
+
+
 def attach_jpeg_payload(docs: DataFrame) -> DataFrame:
     """(doc_id, payload) with a VALID baseline JFIF per doc — the
-    formula coefficient blocks written by :func:`encode_jpeg` inside
-    Arrow-batched ``mapInPandas``. The oracle never parses JPEG: it
-    recomputes the decoded features analytically from the formula, so
-    a hash match proves the marker walk, Huffman decode, unstuffing,
-    DC reconstruction, and dequantization all actually ran."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for d in b["doc_id"]:
-                d = int(d)
-                w, h, blocks = _jpeg_formula_blocks(d)
-                rows.append({"doc_id": d, "payload": encode_jpeg(w, h, blocks)})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
+    formula coefficient blocks written by :func:`encode_jpeg`,
+    Arrow-batched. The oracle never parses JPEG: it recomputes the
+    decoded features analytically from the formula, so a hash match
+    proves the marker walk, Huffman decode, unstuffing, DC
+    reconstruction, and dequantization all actually ran."""
+    return _map_docs(docs, ["doc_id"], lambda d: (_jpeg_payload(d),), _PAYLOAD_SCHEMA)
 
 
-JPEG_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_components", T.IntegerType()),
-        T.StructField("n_blocks", T.LongType()),
-        T.StructField("dc_sum", T.LongType()),
-        T.StructField("ac_sum", T.LongType()),
-        T.StructField("ac_nonzero", T.LongType()),
-    ]
+JPEG_FEATURE_SCHEMA = _schema(
+    "doc_id long, width int, height int, n_components int, n_blocks long,"
+    " dc_sum long, ac_sum long, ac_nonzero long"
 )
 
 
-def extract_jpeg_features(with_payload: DataFrame) -> DataFrame:
-    """Real-decode feature pass for JPEG payloads: dimensions and
+def _jpeg_row(payload: bytes) -> tuple:
+    """:data:`JPEG_FEATURE_SCHEMA` row (minus doc_id): dimensions and
     component count from the parsed SOF0, plus integer-exact sums over
     the DEQUANTIZED coefficient blocks (DC sum, AC sum, nonzero-AC
     count) — everything before the float IDCT, nothing after it."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for doc_id, payload in zip(b["doc_id"], b["payload"]):
-                w, h, nf, blocks = decode_jpeg(bytes(payload))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_components": nf,
-                        "n_blocks": len(blocks),
-                        "dc_sum": sum(c[0] for c in blocks),
-                        "ac_sum": sum(sum(c[1:]) for c in blocks),
-                        "ac_nonzero": sum(
-                            sum(1 for v in c[1:] if v) for c in blocks
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_FEATURE_SCHEMA])
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=JPEG_FEATURE_SCHEMA
+    w, h, nf, blocks = decode_jpeg(payload)
+    return (
+        w,
+        h,
+        nf,
+        len(blocks),
+        sum(c[0] for c in blocks),
+        sum(sum(c[1:]) for c in blocks),
+        sum(sum(1 for v in c[1:] if v) for c in blocks),
     )
+
+
+def extract_jpeg_features(with_payload: DataFrame) -> DataFrame:
+    """Real-decode feature pass for JPEG payloads (:func:`_jpeg_row`)."""
+    return _map_docs(with_payload, ["payload"], _jpeg_row, JPEG_FEATURE_SCHEMA)
 
 
 def jpeg_features_sql() -> str:
@@ -1167,49 +1138,34 @@ def decode_y4m(
     return w, h, fps, cs, frames
 
 
-Y4M_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_id", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frame_bytes", T.LongType()),
-        T.StructField("frame_checksum", T.LongType()),
-        T.StructField("frame_hex", T.StringType()),
-    ]
+Y4M_FRAME_SCHEMA = _schema(
+    "doc_id long, frame_id int, width int, height int, n_frame_bytes long,"
+    " frame_checksum long, frame_hex string"
 )
+
+
+def _frame_rows(w: int, h: int, frames: list[bytes]) -> list[tuple]:
+    """:data:`Y4M_FRAME_SCHEMA` rows (minus doc_id) of decoded frames,
+    with the frame BYTES as uppercase hex so the driver hash covers
+    the full decoded content."""
+    return [
+        (k, w, h, len(fr), sum(fr) % 1_000_003, fr.hex().upper())
+        for k, fr in enumerate(frames)
+    ]
+
+
+def _y4m_rows(payload: bytes) -> list[tuple]:
+    w, h, _fps, _cs, frames = decode_y4m(payload)
+    return _frame_rows(w, h, frames)
 
 
 def extract_y4m_frames(with_payload: DataFrame) -> DataFrame:
     """Row-expanding frame extraction through the REAL
     :func:`decode_y4m` parse (dims read from the FILE header, frame
-    boundaries from the FRAME markers): one row per decoded frame,
-    with the frame BYTES as uppercase hex so the driver hash covers
-    the full decoded content — same discipline as
-    :func:`sample_frames`' frame_hex."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for doc_id, payload in zip(b["doc_id"], b["payload"]):
-                w, h, _fps, _cs, frames = decode_y4m(bytes(payload))
-                for k, frame in enumerate(frames):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_id": k,
-                            "width": w,
-                            "height": h,
-                            "n_frame_bytes": len(frame),
-                            "frame_checksum": sum(frame) % 1_000_003,
-                            "frame_hex": frame.hex().upper(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in Y4M_FRAME_SCHEMA])
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=Y4M_FRAME_SCHEMA
+    boundaries from the FRAME markers): one row per decoded frame —
+    same discipline as :func:`sample_frames`' frame_hex."""
+    return _map_docs(
+        with_payload, ["payload"], _y4m_rows, Y4M_FRAME_SCHEMA, expand=True
     )
 
 
@@ -1420,41 +1376,47 @@ def decode_avi_mjpeg(payload: bytes) -> tuple[int, int, list[bytes]]:
     return width, height, frames
 
 
+def _avi_payload(d: int) -> bytes:
+    frames = []
+    w = h = 0
+    for f in range(2 + d % 3):
+        w, h, blocks = _mjpeg_formula_blocks(d, f)
+        frames.append(encode_jpeg(w, h, blocks))
+    return encode_avi_mjpeg(w, h, frames)
+
+
 def attach_avi_payload(docs: DataFrame) -> DataFrame:
     """(doc_id, payload) with a VALID AVI/MJPEG per doc — the formula
     frames written by :func:`encode_jpeg` and containered by
-    :func:`encode_avi_mjpeg` inside Arrow-batched ``mapInPandas``. The
-    oracle never parses AVI or JPEG: it recomputes the decoded
-    coefficients analytically from the formula, so a hash match proves
-    the RIFF walk, frame split, and entropy decode all actually ran."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for d in b["doc_id"]:
-                d = int(d)
-                frames = []
-                w = h = 0
-                for f in range(2 + d % 3):
-                    w, h, blocks = _mjpeg_formula_blocks(d, f)
-                    frames.append(encode_jpeg(w, h, blocks))
-                rows.append(
-                    {"doc_id": d, "payload": encode_avi_mjpeg(w, h, frames)}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
+    :func:`encode_avi_mjpeg`, Arrow-batched. The oracle never parses
+    AVI or JPEG: it recomputes the decoded coefficients analytically
+    from the formula, so a hash match proves the RIFF walk, frame
+    split, and entropy decode all actually ran."""
+    return _map_docs(docs, ["doc_id"], lambda d: (_avi_payload(d),), _PAYLOAD_SCHEMA)
 
 
 MJPEG_FRAME_SCHEMA = Y4M_FRAME_SCHEMA
+
+
+def _mjpeg_rows(payload: bytes) -> list[tuple]:
+    import struct
+
+    cw, ch, frames = decode_avi_mjpeg(payload)
+    bufs = []
+    for fr in frames:
+        w, h, _nf, blocks = decode_jpeg(fr)
+        if (w, h) != (cw, ch):
+            raise ValueError("frame SOF0 dims disagree with the AVI header")
+        try:
+            bufs.append(b"".join(struct.pack(">h", v) for blk in blocks for v in blk))
+        except struct.error:
+            # foreign JPEGs can dequantize past int16 (big quant ×
+            # category-10 AC) — reject, don't crash
+            raise ValueError(
+                "dequantized coefficient outside the int16 "
+                "canonical-serialization range"
+            ) from None
+    return _frame_rows(cw, ch, bufs)
 
 
 def extract_mjpeg_frames(with_payload: DataFrame) -> DataFrame:
@@ -1466,48 +1428,8 @@ def extract_mjpeg_frames(with_payload: DataFrame) -> DataFrame:
     integer-exact decode output — the same boundary the jpeg feature
     leg gates). ``frame_hex`` puts every coefficient under the driver
     hash; dims are cross-checked container-vs-SOF0."""
-    import pandas as pd
-    import struct
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for doc_id, payload in zip(b["doc_id"], b["payload"]):
-                cw, ch, frames = decode_avi_mjpeg(bytes(payload))
-                for k, fr in enumerate(frames):
-                    w, h, _nf, blocks = decode_jpeg(fr)
-                    if (w, h) != (cw, ch):
-                        raise ValueError(
-                            "frame SOF0 dims disagree with the AVI header"
-                        )
-                    try:
-                        buf = b"".join(
-                            struct.pack(">h", v) for blk in blocks for v in blk
-                        )
-                    except struct.error:
-                        # foreign JPEGs can dequantize past int16 (big
-                        # quant × category-10 AC) — reject, don't crash
-                        raise ValueError(
-                            "dequantized coefficient outside the int16 "
-                            "canonical-serialization range"
-                        ) from None
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_id": k,
-                            "width": w,
-                            "height": h,
-                            "n_frame_bytes": len(buf),
-                            "frame_checksum": sum(buf) % 1_000_003,
-                            "frame_hex": buf.hex().upper(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MJPEG_FRAME_SCHEMA]
-            )
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=MJPEG_FRAME_SCHEMA
+    return _map_docs(
+        with_payload, ["payload"], _mjpeg_rows, MJPEG_FRAME_SCHEMA, expand=True
     )
 
 
@@ -1574,7 +1496,7 @@ MJPEG_FRAMES_SQL = mjpeg_frames_sql()
 # H.264/VP9 needs CABAC/bool-coder entropy decode, motion-compensated
 # sub-pixel interpolation, and in-loop filters — a decoder project of
 # its own, served in production by pyav/ffmpeg behind the SAME
-# mapInPandas plumbing these legs pin.
+# Arrow batch runner these legs pin.
 # ---------------------------------------------------------------------------
 
 _FLIC_MAGIC = 0xAF12  # FLC main-header magic
@@ -1870,24 +1792,7 @@ def attach_flic_payload(docs: DataFrame) -> DataFrame:
     recomputes each RECONSTRUCTED frame analytically (last-writer
     closed form), so a hash match proves the delta chain was applied
     in order on the Spark side."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = [
-                {"doc_id": int(d), "payload": encode_flic(int(d))}
-                for d in b["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
+    return _map_docs(docs, ["doc_id"], lambda d: (encode_flic(d),), _PAYLOAD_SCHEMA)
 
 
 FLIC_FRAME_SCHEMA = Y4M_FRAME_SCHEMA
@@ -1898,31 +1803,12 @@ def extract_flic_frames(with_payload: DataFrame) -> DataFrame:
     :func:`decode_flic` walk: one row per RECONSTRUCTED frame (intra
     decode + the whole delta chain up to it), ``frame_hex`` putting
     every reconstructed pixel byte under the driver hash."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for doc_id, payload in zip(b["doc_id"], b["payload"]):
-                w, h, frames = decode_flic(bytes(payload))
-                for k, fr in enumerate(frames):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_id": k,
-                            "width": w,
-                            "height": h,
-                            "n_frame_bytes": len(fr),
-                            "frame_checksum": sum(fr) % 1_000_003,
-                            "frame_hex": fr.hex().upper(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FLIC_FRAME_SCHEMA]
-            )
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=FLIC_FRAME_SCHEMA
+    return _map_docs(
+        with_payload,
+        ["payload"],
+        lambda p: _frame_rows(*decode_flic(p)),
+        FLIC_FRAME_SCHEMA,
+        expand=True,
     )
 
 
@@ -1985,7 +1871,7 @@ def decode_stub(payload: bytes, codec: str = "raw") -> dict:
             "AV1) — conformant decode needs CABAC/bool-coder entropy "
             "decoding, motion-compensated sub-pixel interpolation and "
             "in-loop filters, a decoder project in itself; production "
-            "plugs pyav/ffmpeg behind the SAME mapInPandas plumbing "
+            "plugs pyav/ffmpeg behind the SAME mapInArrow plumbing "
             "(schema, batching, partitioning) these legs pin and gate."
         )
     return {
@@ -1998,37 +1884,20 @@ def decode_stub(payload: bytes, codec: str = "raw") -> dict:
 
 
 def extract_features(with_payload: DataFrame, codec: str = "raw") -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    mapInPandas: each Arrow batch of payload bytes is decoded in one
-    Python call — the production shape for CPU-bound media work
-    (swap ``decode_stub`` for a real decoder; partitioning, schema and
-    batch iteration stay identical).
-    """
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            feats = [decode_stub(bytes(b), codec) for b in pdf["payload"]]
-            out = pd.DataFrame(
-                feats,
-                columns=["n_bytes", "first_byte", "byte_checksum", "width", "height"],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return with_payload.mapInPandas(run, schema=FEATURE_SCHEMA)
+    """Arrow-batched feature extraction over binary payloads
+    (:func:`decode_stub` per payload) — the production shape for
+    CPU-bound media work: swap ``decode_stub`` for a real decoder;
+    partitioning, schema and batch iteration stay identical."""
+    return _map_docs(
+        with_payload,
+        ["payload"],
+        lambda p: tuple(decode_stub(p, codec).values()),
+        FEATURE_SCHEMA,
+    )
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("checksum", T.LongType()),
-    ]
+RESIZED_SCHEMA = _schema(
+    "doc_id long, payload binary, n_bytes long, width int, height int, checksum long"
 )
 
 
@@ -2070,55 +1939,40 @@ def resize_stub(payload: bytes, width: int, height: int, codec: str = "raw") -> 
     return payload[::stride][:target]
 
 
+def _resize_row(payload: bytes | None, width: int, height: int, codec: str):
+    """:data:`RESIZED_SCHEMA` row (minus doc_id) of one payload, or
+    None for a NULL/empty payload (dropped — mirrors the oracle's n>0
+    gate)."""
+    if not payload:
+        return None
+    rb = resize_stub(payload, width, height, codec)
+    return rb, len(rb), width, height, sum(rb) % 1_000_003
+
+
 def resize_images(
     with_payload: DataFrame, width: int = 8, height: int = 8, codec: str = "raw"
 ) -> DataFrame:
-    """Arrow-batched resize over binary payloads (mapInPandas).
+    """Arrow-batched resize over binary payloads (:func:`_resize_row`).
 
     One Python call per Arrow batch, no shuffle — the embarrassingly
     parallel media shape. Output carries the resized payload plus the
     updated dimensions and a checksum (the oracle compares the scalar
     projection; binary equality is pinned by unit test).
     """
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                if b is None or len(b) == 0:  # mirrors the oracle's n>0 gate
-                    continue
-                rb = resize_stub(bytes(b), width, height, codec)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": rb,
-                        "n_bytes": len(rb),
-                        "width": width,
-                        "height": height,
-                        "checksum": sum(rb) % 1_000_003,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "payload", "n_bytes", "width", "height", "checksum",
-                ],
-            )
-
-    return with_payload.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return _map_docs(
+        with_payload,
+        ["payload"],
+        lambda p: _resize_row(p, width, height, codec),
+        RESIZED_SCHEMA,
+    )
 
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_id", T.IntegerType()),
-        T.StructField("n_frame_bytes", T.LongType()),
-        T.StructField("frame_checksum", T.LongType()),
-        # the frame BYTES as uppercase hex — puts the binary content
-        # itself under the driver's value hash, like resize's payload_hex
-        T.StructField("frame_hex", T.StringType()),
-    ]
+FRAME_SCHEMA = _schema(
+    # frame_hex: the frame BYTES as uppercase hex — puts the binary
+    # content itself under the oracle's value hash, like resize's
+    # payload_hex
+    "doc_id long, frame_id int, n_frame_bytes long, frame_checksum long,"
+    " frame_hex string"
 )
 
 
@@ -2128,47 +1982,80 @@ def sample_frames(
     every_n: int = 2,
     max_frames: int = 3,
 ) -> DataFrame:
-    """Frame sampling: one row per kept frame (row-EXPANDING mapInPandas).
+    """Frame sampling: one row per kept frame (row-EXPANDING).
 
     Treats the payload as a sequence of ``frame_bytes`` chunks (a fake
     video container), keeps every ``every_n``-th frame up to
     ``max_frames`` — the decode-side sampling a video pipeline does
     before feature extraction. Output cardinality is data-dependent
-    (0..max_frames rows per doc): exactly the iterator shape
-    ``mapInPandas`` exists for, where a scalar pandas_udf could not
-    change the row count.
+    (0..max_frames rows per doc, none for a NULL payload), which a
+    scalar UDF could not express.
     """
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                if b is None:
-                    continue
-                b = bytes(b)
-                frames = [
-                    b[i : i + frame_bytes] for i in range(0, len(b), frame_bytes)
-                ]
-                for k, frame in enumerate(frames[::every_n][:max_frames]):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_id": k * every_n,
-                            "n_frame_bytes": len(frame),
-                            "frame_checksum": sum(frame) % 1_000_003,
-                            "frame_hex": frame.hex().upper(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_id", "n_frame_bytes", "frame_checksum",
-                    "frame_hex",
-                ],
-            )
+    def rows(b: bytes | None) -> list[tuple]:
+        if b is None:
+            return []
+        frames = [b[i : i + frame_bytes] for i in range(0, len(b), frame_bytes)]
+        return [
+            (k * every_n, len(fr), sum(fr) % 1_000_003, fr.hex().upper())
+            for k, fr in enumerate(frames[::every_n][:max_frames])
+        ]
 
-    return with_payload.mapInPandas(run, schema=FRAME_SCHEMA)
+    return _map_docs(with_payload, ["payload"], rows, FRAME_SCHEMA, expand=True)
+
+
+#: :func:`multimodal_features` output: the PPM features (source dims
+#: as ``src_*``), the 8×8 PPM resize (its bytes as ``payload_hex``),
+#: the WAV features, and the PNG and JPEG round-trip features
+MULTIMODAL_FEATURES_SCHEMA = _schema(
+    "doc_id long, n_bytes long, first_byte int, byte_checksum long,"
+    " src_width int, src_height int,"
+    " resized_bytes long, width int, height int, resized_checksum long,"
+    " payload_hex string,"
+    " wav_bytes long, sample_rate int, n_samples long, duration_ms long,"
+    " sum_abs long, max_abs long, zero_crossings long,"
+    " png_width int, png_height int, png_pixel_bytes long, png_checksum long,"
+    " jpeg_width int, jpeg_height int, jpeg_components int, jpeg_blocks long,"
+    " jpeg_dc_sum long, jpeg_ac_sum long, jpeg_ac_nonzero long"
+)
+
+
+def _multimodal_row(d: int, ppm: bytes, wav: bytes) -> tuple:
+    rez = _resize_row(ppm, 8, 8, "ppm")
+    return (
+        *decode_stub(ppm, "ppm").values(),
+        *((None,) * 5 if rez is None else (*rez[1:], rez[0].hex().upper())),
+        *_wav_row(wav),
+        *_png_row(_png_payload(d)),
+        *_jpeg_row(_jpeg_payload(d)),
+    )
+
+
+def multimodal_features(docs: DataFrame) -> DataFrame:
+    """Five codec legs per doc in ONE Arrow pass
+    (:data:`MULTIMODAL_FEATURES_SCHEMA`, one row per doc).
+
+    One projection generates each doc's P6 image and RIFF/WAVE clip
+    JVM-side (:func:`media_payload`), then one ``mapInArrow`` runs the
+    legs' row functions on them: the PPM decode
+    (:func:`decode_stub`), the nearest-neighbor resize to 8×8
+    (:func:`_resize_row`), the WAV decode (:func:`_wav_row`), and the
+    PNG and JPEG encode→decode round trips of the same doc's formula
+    image and blocks (:func:`_png_row`, :func:`_jpeg_row`). The values
+    equal the standalone wrappers (:func:`extract_features`,
+    :func:`resize_images`, :func:`extract_audio_features`,
+    :func:`extract_png_features`, :func:`extract_jpeg_features`)
+    left-joined on ``doc_id`` — the resize columns are NULL where the
+    resize leg drops the row (empty payload), as the join leaves them —
+    but with one scan, one Python node and no join. ``doc_id`` is the
+    key: one output row per input row.
+    """
+    return _map_docs(
+        docs,
+        [F.col("doc_id"), media_payload("ppm"), media_payload("wav")],
+        _multimodal_row,
+        MULTIMODAL_FEATURES_SCHEMA,
+    )
 
 
 #: byte at 1-based position {p} of the utf-8 blob's hex encoding

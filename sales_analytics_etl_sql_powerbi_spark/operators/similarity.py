@@ -1379,11 +1379,6 @@ _SQDIST = (
 _SQDIST_DUCK = "list_sum(list_transform(range(1, {n} + 1), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
 
 
-def _quantize_py(vec) -> list[int]:
-    """Driver-side twin of :func:`quantized` (micro-unit integers)."""
-    return [int(round(float(x) * _SCALE)) for x in vec]
-
-
 def _quantize_finite_sample(vecs) -> list[list[int]]:
     """Quantize a codebook training sample, SKIPPING poison vectors
     (NULL, or containing NULL/NaN/Inf) — the driver-side twin of
@@ -1493,6 +1488,18 @@ def _lit_arr_spark(vals: list[int]) -> str:
     return "array(" + ", ".join(f"{v}L" for v in vals) + ")"
 
 
+def _require_codebook(centroids: list[list[int]], fn: str) -> None:
+    """Reject an empty IVF codebook at plan build. Without centroids
+    the literal is ``array()``, which fails only at analysis (or, in
+    the Arrow scorer, inside a Python worker) with an error that names
+    neither the call nor the cause."""
+    if not centroids:
+        raise ValueError(
+            f"{fn}: the IVF codebook is empty — pass at least one centroid "
+            "(ivf_codebook / codebook_from_parquet train one)"
+        )
+
+
 def with_cells(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Assign each quantized vector to its nearest centroid (``cell``).
 
@@ -1511,6 +1518,7 @@ def with_cells(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     DuckDB twin's row_number-over-distance assignment picks identical
     cells.
     """
+    _require_codebook(centroids, "with_cells")
     cents = F.expr(
         "array(" + ", ".join(_lit_arr_spark(c) for c in centroids) + ")"
     )
@@ -1561,8 +1569,9 @@ def with_cells_arrow(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """
     from pyspark.sql import types as T
 
+    _require_codebook(centroids, "with_cells_arrow")
     cents = [[int(v) for v in c] for c in centroids]
-    dim = len(cents[0]) if cents else 0
+    dim = len(cents[0])
     out_schema = T.StructType(
         list(q.schema.fields) + [T.StructField("cell", T.IntegerType(), True)]
     )
@@ -1635,6 +1644,7 @@ def ivf_index(emb: DataFrame, centroids: list[list[int]]) -> DataFrame:
     on mismatch — a same-shape-but-different codebook would silently
     route probes to the wrong cells. Survives a parquet round-trip.
     """
+    _require_codebook(centroids, "ivf_index")
     # assignment strategy (round 19): the vectorized mapInArrow scorer
     # by default — it is the guide-§4.2 shape for the corpus-sized
     # side (interpreted k×dim folds off the per-row path, and opaque
@@ -1679,6 +1689,7 @@ def ivf_query(
     (even same-shape) raises loudly instead of silently routing
     probes to wrong cells.
     """
+    _require_codebook(centroids, "ivf_query")
     _check_stamp(
         _read_stamp(index, "cell"), "ivf_query", **_codebook_stamp(centroids)
     )

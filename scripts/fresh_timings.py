@@ -8,6 +8,8 @@ cold-plan, cold-cache cost a driver correctness run actually pays.
 
 Usage: python scripts/fresh_timings.py [sf_dir] [out_json] [query ...]
 Defaults: sf0.1, bench_fresh_timings.json, the persisted-subtree set.
+A query that fails, or whose subprocess runs past ``TIMEOUT_S``, is
+recorded as null (with a note on stderr) and the sweep goes on.
 """
 
 from __future__ import annotations
@@ -27,6 +29,9 @@ DEFAULT_QUERIES = (
     "customer_dim_repair",
     "dedup_exact",
 )
+
+#: per-query subprocess budget; a query past it is recorded as null
+TIMEOUT_S = 900
 
 _CHILD = r"""
 import sys, time
@@ -68,20 +73,25 @@ def main() -> None:
     out: dict[str, float | None] = {}
     for name in names:
         code = _CHILD.format(repo=REPO, cpus=cpus, name=name, sf=sf)
-        r = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True,
-            text=True,
-            timeout=900,
-        )
         sec = None
-        for line in r.stdout.splitlines():
-            if line.startswith("FRESH_SEC"):
-                sec = float(line.split()[1])
+        try:
+            r = subprocess.run(
+                [sys.executable, "-c", code],
+                capture_output=True,
+                text=True,
+                timeout=TIMEOUT_S,
+            )
+        except subprocess.TimeoutExpired:
+            # a hung query must not abort the sweep: record null, go on
+            print(f"{name}: timed out after {TIMEOUT_S} s", file=sys.stderr)
+        else:
+            for line in r.stdout.splitlines():
+                if line.startswith("FRESH_SEC"):
+                    sec = float(line.split()[1])
+            if sec is None:
+                print(r.stderr[-2000:], file=sys.stderr)
         out[name] = sec
         print(f"{name}: fresh_sec={sec}")
-        if sec is None:
-            print(r.stderr[-2000:], file=sys.stderr)
     with open(out_path, "w") as f:
         json.dump({"sf_dir": sf, "cpus": int(cpus), "fresh_sec": out}, f, indent=1)
     print(f"wrote {out_path}")

@@ -344,3 +344,26 @@ def test_sfratio_table_and_diff(tmp_path):
         capture_output=True, text=True, cwd=repo,
     )
     assert r2.returncode == 1 and "b: 8.0× → 20.0×" in r2.stdout
+
+
+def test_fresh_timings_records_null_for_a_hung_query(tmp_path, monkeypatch, capsys):
+    """A query whose subprocess times out is recorded as null with a
+    stderr note, and the sweep goes on to the next query."""
+    import json
+    import subprocess
+
+    from scripts import fresh_timings
+
+    def fake_run(cmd, **kw):
+        if "'hangs'" in cmd[-1]:
+            raise subprocess.TimeoutExpired(cmd, kw["timeout"])
+        return subprocess.CompletedProcess(cmd, 0, "FRESH_SEC 1.5\n", "")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    out = tmp_path / "fresh.json"
+    monkeypatch.setattr(
+        sys, "argv", ["fresh_timings.py", "/sf", str(out), "hangs", "fine"]
+    )
+    fresh_timings.main()
+    assert json.loads(out.read_text())["fresh_sec"] == {"hangs": None, "fine": 1.5}
+    assert "hangs: timed out" in capsys.readouterr().err

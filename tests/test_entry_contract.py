@@ -81,3 +81,60 @@ def test_release_caches_unpersists_tracked_handles(spark):
         assert not h.storageLevel.useMemory  # unpersisted
     # the query still computes correctly afterwards (lazy recompute)
     assert E._RAW_QUERIES["customer_dim_repair"](spark, sf).count() > 0
+
+
+class _Handle:
+    """Stand-in for a tracked persisted frame whose unpersist fails."""
+
+    def __init__(self, exc=None):
+        self.exc, self.calls = exc, 0
+
+    def unpersist(self):
+        self.calls += 1
+        if self.exc:
+            raise self.exc
+
+
+def test_release_caches_counts_only_successful_unpersists(spark, caplog):
+    """A failing unpersist on a live session is logged and not
+    counted, and the remaining handles are still released."""
+    E.release_caches(spark)  # handles other tests left tracked
+    key = (E._app_key(spark), "sentinel-sf", "sentinel_query")
+    ok, bad, ok2 = _Handle(), _Handle(RuntimeError("boom")), _Handle()
+    E._QUERY_PERSISTS[key] = [ok, bad, ok2]
+    try:
+        with caplog.at_level("WARNING", logger=E.__name__):
+            released = E.release_caches(spark)
+    finally:
+        E._QUERY_PERSISTS.pop(key, None)
+    assert (ok.calls, bad.calls, ok2.calls) == (1, 1, 1)
+    assert released == 2
+    assert key not in E._QUERY_PERSISTS
+    assert "sentinel_query" in caplog.text and "boom" in caplog.text
+
+
+def test_release_caches_on_a_stopped_session_is_silent(spark, monkeypatch, caplog):
+    """A stopped session's cache went with it: nothing is released or
+    counted and nothing raises — whether it stopped before the call or
+    while the handles were being released."""
+
+    class _StoppedContext:
+        _jsc = None
+
+    class _StoppedSession:
+        sparkContext = _StoppedContext()
+
+    assert E.release_caches(_StoppedSession()) == 0
+
+    E.release_caches(spark)
+    key = (E._app_key(spark), "sentinel-sf", "sentinel_query")
+    h = _Handle(RuntimeError("context stopped"))
+    E._QUERY_PERSISTS[key] = [h]
+    stopped = iter([False, True])  # live at entry, stopped at the failure
+    monkeypatch.setattr(E, "_stopped", lambda s: next(stopped))
+    try:
+        with caplog.at_level("WARNING", logger=E.__name__):
+            assert E.release_caches(spark) == 0
+    finally:
+        E._QUERY_PERSISTS.pop(key, None)
+    assert h.calls == 1 and "context stopped" not in caplog.text

@@ -156,6 +156,61 @@ def test_ppm_sql_twins_match_python_path(spark):
         assert r[5] == bytes(z.payload).hex().upper()
 
 
+def test_fused_features_equal_joined_standalone_legs(spark):
+    """multimodal_features (one Arrow pass) returns exactly the
+    standalone wrappers' values, left-joined on doc_id, under the
+    same column names, types and order — doc 0 included."""
+    from pyspark.sql import functions as F
+
+    docs = spark.range(0, 40).select(
+        F.col("id").alias("doc_id"), F.lit("t").alias("text")
+    )
+    fused = multimodal.multimodal_features(docs)
+    M = multimodal
+    wp = M.attach_binary_payload(docs, media="ppm")
+    feats = M.extract_features(wp, codec="ppm").withColumnsRenamed(
+        {"width": "src_width", "height": "src_height"}
+    )
+    rez = M.resize_images(wp, codec="ppm").select(
+        "doc_id",
+        F.col("n_bytes").alias("resized_bytes"),
+        "width",
+        "height",
+        F.col("checksum").alias("resized_checksum"),
+        F.hex("payload").alias("payload_hex"),
+    )
+    wav = M.extract_audio_features(
+        M.attach_binary_payload(docs, media="wav")
+    ).withColumnRenamed("n_bytes", "wav_bytes")
+    png = M.extract_png_features(M.attach_png_payload(docs)).select(
+        "doc_id", *[F.col(c).alias(f"png_{a}") for c, a in (
+            ("width", "width"), ("height", "height"),
+            ("n_pixel_bytes", "pixel_bytes"), ("pixel_checksum", "checksum"),
+        )]
+    )
+    jpg = M.extract_jpeg_features(M.attach_jpeg_payload(docs)).select(
+        "doc_id", *[F.col(c).alias(f"jpeg_{a}") for c, a in (
+            ("width", "width"), ("height", "height"),
+            ("n_components", "components"), ("n_blocks", "blocks"),
+            ("dc_sum", "dc_sum"), ("ac_sum", "ac_sum"),
+            ("ac_nonzero", "ac_nonzero"),
+        )]
+    )
+    joined = (
+        feats.join(rez, "doc_id", "left")
+        .join(wav, "doc_id", "left")
+        .join(png, "doc_id", "left")
+        .join(jpg, "doc_id", "left")
+    )
+    assert fused.schema == multimodal.MULTIMODAL_FEATURES_SCHEMA
+    assert [(f.name, f.dataType) for f in fused.schema] == [
+        (f.name, f.dataType) for f in joined.schema
+    ]
+    got = sorted(tuple(r) for r in fused.collect())
+    assert got == sorted(tuple(r) for r in joined.collect())
+    assert [r[0] for r in got] == list(range(40))
+
+
 def test_sample_frames_expands_rows(spark):
     from sales_analytics_etl_sql_powerbi_spark.operators import multimodal as M
 

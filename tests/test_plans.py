@@ -397,3 +397,21 @@ def test_pagerank_converged_mode_lineage_is_checkpoint_bounded(spark):
     # both end 2 iterations past their last checkpoint (every 4): the
     # lineage must be interval-bounded, not iteration-proportional
     assert n14 <= n6 + 5, (n6, n14)
+
+
+def test_multimodal_features_is_one_scan_one_python_node(spark, sf_dir):
+    """The five codec legs of multimodal_features run in ONE Arrow
+    pass: one documents scan, one Python node, no broadcast and no
+    join — per-leg scans, Python nodes and joins cost several times
+    the codec work itself at this size."""
+    import re
+
+    import __spark_entry__ as E
+
+    df = E.queries()["multimodal_features"](spark, sf_dir)
+    plan = _plan(df)
+    assert plan.count("FileScan parquet") == 1, plan
+    python_nodes = re.findall(r"\b(?:MapInArrow|MapInPandas|\w*EvalPython)\b", plan)
+    assert python_nodes == ["MapInArrow"], plan
+    assert "BroadcastExchange" not in plan, plan
+    assert not re.search(r"\b[A-Z]\w*Join\b|CartesianProduct", plan), plan

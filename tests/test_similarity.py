@@ -202,6 +202,25 @@ def test_ann_index_query_matches_stateless_and_reuses_cache(spark):
         idx.unpersist()
 
 
+def test_empty_ivf_codebook_raises_at_plan_build(spark):
+    """An empty codebook fails loudly, naming the call, before any
+    plan is analyzed — not as an opaque ``array()`` analysis error or
+    a Python-worker crash."""
+    df, _ = emb_frame(spark, n=20)
+    q = similarity.quantized(df)
+    cases = {
+        "with_cells": lambda: similarity.with_cells(q, []),
+        "with_cells_arrow": lambda: similarity.with_cells_arrow(q, []),
+        "ivf_index": lambda: similarity.ivf_index(df, []),
+    }
+    for name, build in cases.items():
+        with pytest.raises(ValueError, match=f"^{name}: the IVF codebook is empty"):
+            build()
+    idx = similarity.ivf_index(df, similarity.ivf_codebook(df, n_clusters=2))
+    with pytest.raises(ValueError, match="^ivf_query: the IVF codebook is empty"):
+        similarity.ivf_query(idx, df.where("vec_id < 2"), [])
+
+
 def test_ivf_index_query_matches_stateless(spark):
     """The materialized IVF index path must return the stateless
     entry's exact rows (same codebook, same routing, same ranks)."""
