@@ -30,7 +30,9 @@ from sales_analytics_etl_sql_powerbi_spark.operators.dims import (
     backfill_from_staging,
     upsert_missing,
 )
+from sales_analytics_etl_sql_powerbi_spark.session import scoped
 from sales_analytics_etl_sql_powerbi_spark.sources.readers import (
+    TIMESTAMP_CONF,
     read_input,
     read_table as _read_table_uncached,
 )
@@ -1692,29 +1694,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             # The driver builds its own SparkSession; every DATE→
             # TIMESTAMP boundary cast (and string timestamp parse)
             # interprets wall-clock values in the SESSION zone, while
-            # the DuckDB oracle is zone-naive. Pin UTC around plan
-            # construction so hashes cannot shift under a non-UTC
-            # driver environment, then RESTORE the caller's zone:
-            # timezone-sensitive expressions capture their zone at
-            # analysis time (Catalyst's ResolveTimeZone rule binds the
-            # session zone into Cast/date expressions when the
-            # DataFrame is built — verified empirically: a cast
-            # analyzed under UTC keeps UTC wall-clock semantics when
-            # executed under another session zone), so the returned —
-            # already analyzed — plan stays UTC-correct while the
-            # shared session config is left exactly as the caller had
-            # it. Residual caveat (documented, not silently papered
-            # over): client-side RENDERING via toPandas localizes to
-            # the session zone at collect time, so a deliberately
-            # non-UTC caller sees wall-clock values in its own zone —
-            # that is that caller's choice, no longer masked by us.
-            prior = spark.conf.get("spark.sql.session.timeZone", None)
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            try:
-                return _boundary(fn(spark, sf))
-            finally:
-                if prior and prior != "UTC":
-                    spark.conf.set("spark.sql.session.timeZone", prior)
+            # the DuckDB oracle is zone-naive. The query is built and
+            # run under UTC (and the events reader's nanos setting) in
+            # a scoped session, so hashes cannot shift under a non-UTC
+            # caller and the caller's confs stay untouched.
+            return _boundary(fn(scoped(spark, TIMESTAMP_CONF), sf))
 
         return run
 

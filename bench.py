@@ -52,6 +52,19 @@ import os
 import sys
 import time
 
+#: session conf added on top of ``session.get_spark`` — cost-metric
+#: plumbing (round 16): the UI's REST API is the source for per-query
+#: shuffle bytes / task counts; retention must cover every job of every
+#: pass, and synchronous state tracking makes the post-run read
+#: deterministic (no async listener lag between the last job and the
+#: REST fetch)
+COST_CONF = {
+    "spark.ui.enabled": "true",
+    "spark.ui.retainedJobs": "100000",
+    "spark.ui.retainedStages": "100000",
+    "spark.appStateStore.asyncTracking.enable": "false",
+}
+
 
 def run_pass(spark, sf_dir: str, tag: str = "") -> tuple[dict[str, float], int]:
     """One full pass over every bench query; returns (timings, view rows).
@@ -297,34 +310,21 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
+    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark-graft-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # default 1g, overridable for scale sweeps whose result sets
-        # legitimately grow with SF (the bench clocks FULL client
-        # materialization by contract)
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_GRAFT_MAX_RESULT", "1g"),
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # cost-metric plumbing (round 16): the UI's REST API is the
-        # source for per-query shuffle bytes / task counts; retention
-        # must cover every job of every pass, and synchronous state
-        # tracking makes the post-run read deterministic (no async
-        # listener lag between the last job and the REST fetch)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.appStateStore.asyncTracking.enable", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="spark-graft-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            **COST_CONF,
+            # default 1g, overridable for scale sweeps whose result sets
+            # legitimately grow with SF (the bench clocks FULL client
+            # materialization by contract)
+            "spark.driver.maxResultSize": os.environ.get(
+                "SPARK_GRAFT_MAX_RESULT", "1g"
+            ),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

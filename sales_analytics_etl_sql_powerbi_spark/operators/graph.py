@@ -26,7 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import adopt, scoped
+
 __all__ = ["pagerank"]
+
+#: PageRank loop sizing: one partition per this many nodes, capped at
+#: the session parallelism
+ROWS_PER_PARTITION = 65536
 
 
 def pagerank(
@@ -61,6 +67,13 @@ def pagerank(
     Edge/degree frames are computed once and persisted; rank frames
     are checkpointed every ``checkpoint_every`` iterations to keep the
     plan flat.
+
+    Confs contract: the caller's session confs are never written. The
+    fixed-mode loop runs in a private child session
+    (:func:`..session.scoped`) with AQE off and
+    ``spark.sql.shuffle.partitions`` at the loop's partition count;
+    the returned frame belongs to the caller's session, so whatever
+    consumes it plans under the caller's confs.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -96,24 +109,16 @@ def pagerank(
         return empty
     # loop partition count, derived from the graph's own size (guide
     # §2 — scale-adaptive, not a constant): enough partitions that each
-    # holds ~rowsPerPartition nodes, capped at the session parallelism.
-    # At sf0.1 (1.2k nodes) that is ONE partition — every per-iteration
-    # exchange moves one buffer instead of launching 32 near-empty
-    # tasks; at a billion-node graph the cap makes it defaultParallelism
-    # exactly as before. Conf-overridable; 0 pins the old
-    # parallelism-sized behavior. LIMITATION: the count sizes the loop
-    # by NODES; a dense graph (edges ≫ nodes, e.g. a near-clique over
-    # few vertices) computes edge-sized contribution maps at this
-    # node-sized parallelism — set the conf to 0 (or a small
-    # rowsPerPartition) for that shape.
-    try:
-        rows_per = int(
-            spark.conf.get("spark_graft.graph.rowsPerPartition", "65536")
-        )
-    except ValueError:
-        rows_per = 65536
+    # holds ~ROWS_PER_PARTITION nodes, capped at the session
+    # parallelism. At sf0.1 (1.2k nodes) that is ONE partition — every
+    # per-iteration exchange moves one buffer instead of launching 32
+    # near-empty tasks; at a billion-node graph the cap makes it
+    # defaultParallelism exactly as before. LIMITATION: the count sizes
+    # the loop by NODES; a dense graph (edges ≫ nodes, e.g. a
+    # near-clique over few vertices) computes edge-sized contribution
+    # maps at this node-sized parallelism.
     par = max(spark.sparkContext.defaultParallelism, 2)
-    p_n = par if rows_per <= 0 else max(1, min(par, n // rows_per + 1))
+    p_n = max(1, min(par, n // ROWS_PER_PARTITION + 1))
     # the pinned node frame reads the already-cached distinct (one
     # node-sized exchange, no recompute)
     nodes = nodes_raw.repartition(p_n, "node").persist(
@@ -136,7 +141,7 @@ def pagerank(
     )
     teleport = (1.0 - damping) / n
 
-    def contribs_of(r: DataFrame) -> DataFrame:
+    def contribs_of(links: DataFrame, r: DataFrame) -> DataFrame:
         return (
             links.join(r, links["src"] == r["node"])
             .select(
@@ -187,8 +192,8 @@ def pagerank(
         # twice per iteration and the plan doubles per round —
         # 149 jobs / 14.7s vs 58 / 4.4s at sf0.1. The persist is
         # load-bearing, not belt-and-braces.
-        # AQE is scoped OFF for the loop's actions (round 19): with
-        # the partitioning pinned explicitly above, AQE has nothing
+        # The loop runs in a private session with AQE OFF (round 19):
+        # with the partitioning pinned explicitly above, AQE has nothing
         # left to re-plan here — no coalescible exchange, no join it
         # may rewrite, no agg skew handling (it only splits joins) —
         # while its per-query-stage materialization turns every
@@ -200,54 +205,52 @@ def pagerank(
         # p_n the explicit repartitions use, so the groupBy exchange
         # lands on the loop's partitioning directly (the post-agg
         # repartition collapses into it) instead of spraying a
-        # node-sized reduce over 32 near-empty tasks. Both settings
-        # are restored in `finally`; the returned frame is a
-        # checkpointed RDD scan, so consumer actions re-plan nothing
-        # under the restored settings. CAVEAT: session confs are
-        # session-GLOBAL — a driver submitting unrelated queries from
-        # other threads while this loop runs would plan them under the
-        # scoped values; run fixed-mode pagerank from the thread that
-        # owns the session (every in-repo caller does).
-        prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(p_n))
-        try:
-            pending: list[DataFrame] = []
-            for it in range(max_iter):
-                contribs = contribs_of(ranks).persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                pending.append(contribs)
-                dm = contribs.agg(
+        # node-sized reduce over 32 near-empty tasks. The session is
+        # :func:`..session.scoped`'s child of the caller's, and the
+        # loop's frames are adopted into it, so the caller's confs are
+        # never written (threads sharing the caller's session plan
+        # under its own settings throughout); the final checkpointed
+        # ranks are adopted back, so consumers plan under the caller's.
+        loop = scoped(
+            spark,
+            {
+                "spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": str(p_n),
+            },
+        )
+        loop_nodes, loop_links = adopt(loop, nodes), adopt(loop, links)
+        ranks = adopt(loop, ranks)
+        pending: list[DataFrame] = []
+        for it in range(max_iter):
+            contribs = contribs_of(loop_links, ranks).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+            pending.append(contribs)
+            dm = contribs.agg(
+                (F.lit(1.0) - F.coalesce(F.sum("__in"), F.lit(0.0))).alias("__dm")
+            )
+            new_ranks = (
+                loop_nodes.join(contribs, "node", "left")
+                .crossJoin(F.broadcast(dm))
+                .select(
+                    "node",
                     (
-                        F.lit(1.0) - F.coalesce(F.sum("__in"), F.lit(0.0))
-                    ).alias("__dm")
+                        F.lit(teleport)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("__in"), F.lit(0.0))
+                            + F.col("__dm") / F.lit(float(n))
+                        )
+                    ).alias("rank"),
                 )
-                new_ranks = (
-                    nodes.join(contribs, "node", "left")
-                    .crossJoin(F.broadcast(dm))
-                    .select(
-                        "node",
-                        (
-                            F.lit(teleport)
-                            + F.lit(damping)
-                            * (
-                                F.coalesce(F.col("__in"), F.lit(0.0))
-                                + F.col("__dm") / F.lit(float(n))
-                            )
-                        ).alias("rank"),
-                    )
-                )
-                if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-                    new_ranks = new_ranks.localCheckpoint(eager=True)
-                    for p in pending:
-                        p.unpersist()
-                    pending = []
-                ranks = new_ranks
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
+            )
+            if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
+                new_ranks = new_ranks.localCheckpoint(eager=True)
+                for p in pending:
+                    p.unpersist()
+                pending = []
+            ranks = new_ranks
+        ranks = adopt(spark, ranks)
         nodes_raw.unpersist()
         nodes.unpersist()
         links.unpersist()
@@ -258,7 +261,7 @@ def pagerank(
     # (L1 delta + the next iteration's dangling mass together)
     dangling = dangling_frame(ranks).collect()[0][0]
     for it in range(max_iter):
-        new_ranks = nodes.join(contribs_of(ranks), "node", "left").select(
+        new_ranks = nodes.join(contribs_of(links, ranks), "node", "left").select(
             "node",
             (
                 F.lit(teleport)

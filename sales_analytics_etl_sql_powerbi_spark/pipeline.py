@@ -470,8 +470,7 @@ def sales_product_geo_view(
 #: reporting-view partition sizing: the view is a consumed-many-times
 #: surface (persisted by the bench, aggregated by every BI query), so
 #: its partition count should follow ITS row count, not the scan
-#: spread's core-count fan-out. Conf-overridable
-#: (``spark_graft.view.rowsPerPartition``; 0 disables the bound).
+#: spread's core-count fan-out.
 VIEW_ROWS_PER_PARTITION = 65536
 
 
@@ -502,17 +501,6 @@ def _bound_view_partitions(
     """
     import os as _os
 
-    try:
-        rows_per = int(
-            spark.conf.get(
-                "spark_graft.view.rowsPerPartition",
-                str(VIEW_ROWS_PER_PARTITION),
-            )
-        )
-    except ValueError:
-        rows_per = VIEW_ROWS_PER_PARTITION
-    if rows_per <= 0:
-        return view
     layout = parquet_layout(_os.path.join(sf_dir, "lineitem.parquet"))
     if layout is None:
         return view
@@ -520,7 +508,7 @@ def _bound_view_partitions(
     parallelism = spark.sparkContext.defaultParallelism
     if groups >= parallelism:
         return view  # production layout — the spread was a no-op
-    target = max(1, min(parallelism, rows // rows_per + 1))
+    target = max(1, min(parallelism, rows // VIEW_ROWS_PER_PARTITION + 1))
     return view.coalesce(target)
 
 

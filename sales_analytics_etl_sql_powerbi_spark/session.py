@@ -13,13 +13,20 @@ matter identically on a 1000-executor cluster reading 100 TB:
 - shuffle partitions default to cores locally; at cluster scale this is
   overridden by AQE's coalescing from
   ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``.
+
+Library code that needs a different setting never writes the caller's
+session: :func:`scoped` hands it a session with the setting, and
+:func:`adopt` moves frames between the two.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import uuid
+import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -27,28 +34,10 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    force_skew_split: bool = False,
 ) -> SparkSession:
-    """Build (or reuse) the tuned SparkSession.
-
-    ``force_skew_split`` sets ``spark.sql.adaptive.forceOptimizeSkewedJoin``,
-    which makes AQE split skewed join partitions even when the split
-    forces an extra shuffle downstream. Background (measured in the
-    round-4 AQE probe, ``scripts/stress.py --skew``, PLAN_AUDIT.md): a
-    20M-row join where one key carries 50% of the rows completes in
-    ~4.9s with the default settings — AQE splits the skewed partition
-    (``SortMergeJoin(skew=true)``) whenever the join output feeds a
-    global aggregate, a DIFFERENT-key aggregation, or a write. The one
-    shape where AQE declines to split is a groupBy on the SAME key as
-    the join (the split would break the reusable hash distribution and
-    force a re-shuffle). Flip this knob ON for deployments where that
-    same-key-downstream skew hurts more than the extra exchange —
-    e.g. a platform-share rollup immediately after a platform-keyed
-    join under an Amazon-56%-of-units distribution; leave it OFF
-    (default) when the downstream aggregate benefits from reusing the
-    join's partitioning. Manual salting (``operators/skew.py``) remains
-    the surgical per-join alternative.
-    """
+    """Build (or reuse) the tuned SparkSession — the one builder every
+    entry point (bench, scripts, tests) goes through; callers add their
+    own settings through ``extra_conf``."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
@@ -62,10 +51,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.adaptive.forceOptimizeSkewedJoin",
-            "true" if force_skew_split else "false",
-        )
         # -- shuffle sizing --
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # -- scan sizing: 128MB splits keep 100TB scans at ~800k tasks --
@@ -106,3 +91,64 @@ def get_spark(
     if ckpt and spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir(ckpt)
     return spark
+
+
+#: caller session → {override set → its child session}; weak keys, so a
+#: caller that is dropped takes its children with it
+_CHILDREN: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_CHILDREN_LOCK = threading.Lock()
+
+
+def scoped(spark: SparkSession, overrides: dict[str, str]) -> SparkSession:
+    """A session running under ``spark``'s confs plus ``overrides`` —
+    the one way library code scopes a conf; it never writes the
+    caller's session.
+
+    Returns ``spark`` itself when every override already holds on it.
+    Otherwise returns a child from ``spark.newSession()``: its own
+    SQLConf over the caller's SparkContext, cache and global temp
+    views. One child is kept per (caller, override set), so frames a
+    library memoizes stay in the session that built them. On every call
+    the child gets the caller's current modifiable runtime confs again
+    (a new session sees only the builder's confs), then the overrides.
+    """
+    if all(spark.conf.get(k, None) == v for k, v in overrides.items()):
+        return spark
+    with _CHILDREN_LOCK:
+        children = _CHILDREN.setdefault(spark, {})
+        key = frozenset(overrides.items())
+        child = children.get(key)
+        if child is None:
+            child = children[key] = spark.newSession()
+        want = {
+            k: v for k, v in spark.conf.getAll.items() if spark.conf.isModifiable(k)
+        }
+        want.update(overrides)
+        have = child.conf.getAll
+        for k in have.keys() - want.keys():
+            if child.conf.isModifiable(k):
+                child.conf.unset(k)
+        for k, v in want.items():
+            if have.get(k) != v:
+                child.conf.set(k, v)
+    return child
+
+
+def adopt(session: SparkSession, df: DataFrame) -> DataFrame:
+    """``df`` as a frame of ``session``: same analyzed plan (conf-bound
+    parts such as a cast's zone or a parquet relation's reader settings
+    keep the values they were built under), planned and run under
+    ``session``'s confs, and still served from any cache ``df``'s plan
+    is in. Goes through a global temp view, dropped before returning;
+    no job runs."""
+    if df.sparkSession is session:
+        return df
+    name = "adopt_" + uuid.uuid4().hex
+    df.createOrReplaceGlobalTempView(name)
+    try:
+        db = session.conf.get("spark.sql.globalTempDatabase")
+        return session.table(f"{db}.{name}")
+    finally:
+        # the session catalog's drop, not ``session.catalog``'s: that
+        # one also uncaches the view's plan — ``df``'s own cache entry
+        session._jsparkSession.sessionState().catalog().dropGlobalTempView(name)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..functions.cleaning import normalize_colname
+from ..session import adopt, scoped
 
 #: Driver-provided testdata tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -206,10 +207,7 @@ def read_input(spark: SparkSession, path: str, sheet: int | str = 0) -> DataFram
     raise ValueError(f"Unsupported input extension: {ext!r} ({path})")
 
 
-#: Scan-spread default: do not create slices under this many rows.
-#: Overridable per session via ``spark_graft.scan.rowsPerSlice`` (``0``
-#: disables the spread entirely — the plan-shape tests that pin the
-#: at-scale contract use that).
+#: Scan spread: do not create slices under this many rows.
 SPREAD_ROWS_PER_SLICE = 64
 
 
@@ -267,7 +265,7 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
       at scale this is a structural no-op and the scan keeps its
       pushdown/pruning shape.
     - otherwise round-robin repartition to
-      ``min(defaultParallelism, rows // rowsPerSlice)`` when that
+      ``min(defaultParallelism, rows // SPREAD_ROWS_PER_SLICE)`` when that
       beats the file's own parallelism. Catalyst pushes deterministic
       filters and column pruning THROUGH a Repartition node, so
       ``PushedFilters``/``ReadSchema`` still reach the scan; the
@@ -275,20 +273,7 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
       results are partitioning-independent by construction everywhere
       in this package (content-addressed sampling, range-partitioned
       id generation, rounded/quantized aggregate surfaces).
-
-    ``spark_graft.scan.rowsPerSlice`` (session conf) overrides the
-    slice floor; ``0`` disables the spread.
     """
-    try:
-        rows_per_slice = int(
-            spark.conf.get(
-                "spark_graft.scan.rowsPerSlice", str(SPREAD_ROWS_PER_SLICE)
-            )
-        )
-    except ValueError:
-        rows_per_slice = SPREAD_ROWS_PER_SLICE
-    if rows_per_slice <= 0:
-        return df
     layout = parquet_layout(path)
     if layout is None:
         return df
@@ -296,7 +281,7 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     parallelism = spark.sparkContext.defaultParallelism
     if row_groups >= parallelism:
         return df
-    target = min(parallelism, rows // rows_per_slice)
+    target = min(parallelism, rows // SPREAD_ROWS_PER_SLICE)
     if target <= row_groups:
         return df
     return df.repartition(target)
@@ -324,6 +309,15 @@ def read_table(
     return spread_scan(spark, df, path) if spread else df
 
 
+#: the confs timestamps are read and cast under — the events ``ts``
+#: encodings (see :func:`read_events`) and the zone-naive DuckDB
+#: oracle — also the set every ``queries()`` entry plans under
+TIMESTAMP_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
 def read_events(
     spark: SparkSession, sf_dir: str, spread: bool = True
 ) -> DataFrame:
@@ -333,46 +327,38 @@ def read_events(
     rounds, so both are normalized here rather than trusting the file:
 
     - parquet INT64 TIMESTAMP(NANOS), which Spark's reader rejects
-      unless ``spark.sql.legacy.parquet.nanosAsLong`` is set (the conf
-      is runtime-settable, so it is applied here — the driver builds
-      its own SparkSession). The long nanos are truncated to
-      microseconds with integer division — ``/ 1000`` through DOUBLE
-      would lose precision at 1.7e18 — exactly what DuckDB's
-      microsecond TIMESTAMP does, so both engines see identical values.
+      unless ``spark.sql.legacy.parquet.nanosAsLong`` is set. The long
+      nanos are truncated to microseconds with integer division —
+      ``/ 1000`` through DOUBLE would lose precision at 1.7e18 —
+      exactly what DuckDB's microsecond TIMESTAMP does, so both engines
+      see identical values.
     - parquet ``timestamp[us]`` without a zone, which Spark reads as
       TimestampNTZType. The NTZ→TimestampType cast interprets the
-      wall-clock value in the SESSION time zone, so it is pinned to
-      UTC here (runtime-settable, same defensive treatment as
-      nanosAsLong — the driver builds its own SparkSession and may
-      not run in UTC) before casting; values stay identical to
-      DuckDB's naive TIMESTAMP read of the same file.
+      wall-clock value in the SESSION time zone, so it is built under
+      UTC; values stay identical to DuckDB's naive TIMESTAMP read of
+      the same file.
 
+    Both run under :data:`TIMESTAMP_CONF` through
+    :func:`..session.scoped`, so the caller's confs are never written
+    (callers build their own SparkSession). The scan keeps the
+    nanos-as-long reader it was built with and the cast keeps its UTC
+    zone, so the frame is returned as one of the caller's session.
     Downstream (streaming watermarks, window(), the oracle hash
     compare) always sees one stable type: TimestampType.
     """
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read = scoped(spark, TIMESTAMP_CONF)
     path = os.path.join(sf_dir, "events.parquet")
-    df = spark.read.parquet(path)
+    df = read.read.parquet(path)
     if spread:
-        df = spread_scan(spark, df, path)
+        df = spread_scan(read, df, path)
     dt = df.schema["ts"].dataType
     if isinstance(dt, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(dt, T.TimestampNTZType):
-        # Pin UTC only around building the cast — the session zone is
-        # bound into the Cast at analysis time (ResolveTimeZone), so
-        # the caller's zone can be restored immediately without the
-        # plan changing meaning. No lasting session mutation.
-        prior = spark.conf.get("spark.sql.session.timeZone", None)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        try:
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-        finally:
-            if prior and prior != "UTC":
-                spark.conf.set("spark.sql.session.timeZone", prior)
-    return df
+        df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    return adopt(spark, df)
 
 
 def load_tables(

@@ -24,20 +24,9 @@ def main() -> None:
     only = set(sys.argv[4:])
     os.makedirs(outdir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark-graft-plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="spark-graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

@@ -59,17 +59,12 @@ def main() -> int:
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = os.path.abspath(sf_dir)
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-correctness")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="check-correctness", master="local[8]", shuffle_partitions=8
     )
     spark.sparkContext.setLogLevel("ERROR")
 

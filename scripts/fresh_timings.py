@@ -36,18 +36,8 @@ TIMEOUT_S = 900
 _CHILD = r"""
 import sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-cpus = {cpus!r}
-spark = (
-    SparkSession.builder.master(f"local[{{cpus}}]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.driver.memory", "16g")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .getOrCreate()
-)
+from sales_analytics_etl_sql_powerbi_spark.session import get_spark
+spark = get_spark(master="local[{cpus}]", shuffle_partitions={cpus})
 spark.sparkContext.setLogLevel("ERROR")
 # session warmup only (JVM/Arrow init — session cost, not query cost;
 # same shape as bench.py's untimed session warmers)

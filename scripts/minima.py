@@ -29,21 +29,9 @@ def main() -> None:
         print("usage: minima.py [sf_dir] [repeats] query [query ...]")
         raise SystemExit(2)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    from pyspark.sql import SparkSession
+    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark-graft-minima")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="spark-graft-minima")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

@@ -40,28 +40,11 @@ def iso_ms(s: str) -> float:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = set(sys.argv[2:])
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark-graft-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.appStateStore.asyncTracking.enable", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     import bench
+    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
+
+    spark = get_spark(app_name="spark-graft-profile", extra_conf=bench.COST_CONF)
+    spark.sparkContext.setLogLevel("ERROR")
 
     # warm-up (untimed) then profiled pass
     t0 = time.perf_counter()

@@ -17,24 +17,30 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _session(app: str, partitions: int, extra_conf: dict[str, str] | None = None):
+    """A probe's session: ``session.get_spark`` on ``local[32]``, quiet
+    and warmed by one trivial job. The probes were sized for a 24g
+    driver heap: run them with ``SPARK_DRIVER_MEM=24g``."""
+    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
+
+    spark = get_spark(
+        app_name=app,
+        master="local[32]",
+        shuffle_partitions=partitions,
+        extra_conf=extra_conf,
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(10).count()
+    return spark
+
+
 def main() -> None:
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     sf_dir = "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress", 32)
 
     from sales_analytics_etl_sql_powerbi_spark import pipeline
     from sales_analytics_etl_sql_powerbi_spark.operators import analytics
@@ -95,21 +101,10 @@ def docs_main() -> None:
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     sf_dir = "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-docs")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-docs", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import dedup
 
@@ -172,22 +167,10 @@ def events_main() -> None:
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 100
     sf_dir = "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-events")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-events", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators.asof import events_asof
     from sales_analytics_etl_sql_powerbi_spark.sources.readers import read_events
@@ -237,28 +220,20 @@ def skew_main() -> None:
     """
     n_rows = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-skew")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # force the shuffle path: a broadcast join would hide the skew
-        # (AQE has its own runtime broadcast threshold — disable both)
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        .config(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m"
-        )
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
+    spark = _session(
+        "stress-skew",
+        64,
+        {
+            # force the shuffle path: a broadcast join would hide the skew
+            # (AQE has its own runtime broadcast threshold — disable both)
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8m",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
 
     # ~50% of rows share key 0; the rest spread over 100k keys
     fact = spark.range(n_rows).select(
@@ -317,19 +292,9 @@ def state_main() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-state")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-state", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.streaming import windows as W
 
@@ -431,21 +396,10 @@ def vectors_main() -> None:
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 100
     sf_dir = "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-vectors")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-vectors", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import similarity as S
 
@@ -641,20 +595,9 @@ def rules_main() -> None:
     """
     n_rows = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-rules")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-rules", 32)
 
     import __spark_entry__ as entry
     from sales_analytics_etl_sql_powerbi_spark.operators.rules import (
@@ -718,21 +661,10 @@ def incremental_main() -> None:
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     sf_dir = "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-incremental")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-incremental", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import dedup
 
@@ -800,20 +732,9 @@ def shards_main() -> None:
     n_shards = int(sys.argv[3]) if len(sys.argv) > 3 else 64
     sf_dir = "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-shards")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-shards", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.sources import sinks
 
@@ -860,21 +781,10 @@ def scd2_main() -> None:
     dim_n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
     chg_n = dim_n // 10
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-scd2")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-scd2", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators.dims import (
         SCD2_END_OF_TIME,
@@ -962,19 +872,9 @@ def entity_main() -> None:
     """
     total = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-entity")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-entity", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators.dims import (
         entity_match_pairs,
@@ -1101,20 +1001,10 @@ def sketches_main() -> None:
     """
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-sketches")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-sketches", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import sketches
 
@@ -1166,20 +1056,10 @@ def retrieval_main() -> None:
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     sf_dir = "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-retrieval")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-retrieval", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import text as T
 
@@ -1217,20 +1097,10 @@ def cdc_main() -> None:
     snap_n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
     chg_n = snap_n // 10
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-cdc")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-cdc", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators.dims import cdc_apply
 
@@ -1286,19 +1156,10 @@ def tokmix_main() -> None:
     the same data, asserts identical flags, and reports both times."""
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
 
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-tokmix")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-tokmix", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import sampling as S
 
@@ -1355,19 +1216,9 @@ def bpe_ids_main() -> None:
     every task); the join's is a constant small broadcast."""
     n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-bpe-ids")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-bpe-ids", 32)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import bpe
 
@@ -1420,19 +1271,9 @@ def multimodal_main() -> None:
     """
     n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-multimodal")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-multimodal", 32)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import multimodal as M
 
@@ -1476,19 +1317,9 @@ def corpus_e2e_main() -> None:
     """
     n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-corpus-e2e")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-corpus-e2e", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators.corpus import (
         build_training_corpus,
@@ -1587,18 +1418,8 @@ def excel_main() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-excel")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-excel", 32)
 
     from sales_analytics_etl_sql_powerbi_spark.sources.readers import (
         read_excel_distributed,
@@ -1674,19 +1495,9 @@ def packing_incr_main() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-packing-incr")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-packing-incr", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import packing
     from sales_analytics_etl_sql_powerbi_spark.sources import sinks
@@ -1774,19 +1585,9 @@ def packing_main() -> None:
     n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000_000
     B = 512
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-packing")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-packing", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import packing
 
@@ -1864,21 +1665,7 @@ def cdc_restart_main() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-
-    def fresh_session(name: str):
-        s = (
-            SparkSession.builder.master("local[32]")
-            .appName(name)
-            .config("spark.sql.shuffle.partitions", "32")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.driver.memory", "24g")
-            .getOrCreate()
-        )
-        s.sparkContext.setLogLevel("ERROR")
-        s.range(10).count()
-        return s
 
     from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
 
@@ -1886,7 +1673,7 @@ def cdc_restart_main() -> None:
     table = f"{work}/table"
 
     # ---- phase 1: delete-heavy history, window on --------------------
-    spark = fresh_session("stress-cdc-restart-p1")
+    spark = _session("stress-cdc-restart-p1", 32)
     init = spark.range(snap_n).selectExpr(
         "id AS k", "cast(id % 97 AS string) AS v"
     )
@@ -1919,7 +1706,7 @@ def cdc_restart_main() -> None:
     spark.stop()
 
     # ---- phase 2: RESTART + late out-of-order batch ------------------
-    spark = fresh_session("stress-cdc-restart-p2")
+    spark = _session("stress-cdc-restart-p2", 32)
     late_max = batch_n // 2  # far below s_max − window
     late = spark.range(batch_n // 4).select(
         # half target RETAINED tombstones (last delete batch — their
@@ -1966,7 +1753,7 @@ def cdc_restart_main() -> None:
     spark.stop()
 
     # ---- phase 3: RESTART + on-time batch advances the mark ----------
-    spark = fresh_session("stress-cdc-restart-p3")
+    spark = _session("stress-cdc-restart-p3", 32)
     new_max = s_max + window // 2
     ontime = spark.range(batch_n // 8).select(
         (F.lit(3 * snap_n) + F.col("id")).alias("k"),
@@ -2014,19 +1801,9 @@ def cdc_stream_main() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-cdc-stream")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-cdc-stream", 32)
 
     from sales_analytics_etl_sql_powerbi_spark.operators.dims import cdc_apply
     from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
@@ -2123,19 +1900,9 @@ def graph_main() -> None:
     n_nodes = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
     n_edges = n_nodes * 10
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-graph")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-graph", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import graph
 
@@ -2176,19 +1943,9 @@ def concurrent_append_main() -> None:
     import time
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-concurrent-append")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-concurrent-append", 32)
 
     from sales_analytics_etl_sql_powerbi_spark.sources.sinks import (
         ConcurrentWriteError,
@@ -2282,20 +2039,10 @@ def aggregates_main() -> None:
     mergeable-aggregate families, measured like --sketches."""
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-aggregates")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-aggregates", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import histograms
 
@@ -2353,18 +2100,8 @@ def bpe_main() -> None:
     Probe: a ~1M-token corpus over ~25k types — time 24 distributed
     merges (→ s/merge), then 1000 local merges, and pin prefix parity
     between the two paths."""
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-bpe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-bpe", 32)
 
     from sales_analytics_etl_sql_powerbi_spark.operators.bpe import (
         bpe_train,
@@ -2422,18 +2159,8 @@ def bpe_32k_main() -> None:
     n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 500_000
     n_merges = int(sys.argv[3]) if len(sys.argv) > 3 else 32_000
 
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-bpe-32k")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-bpe-32k", 32)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import bpe
 
@@ -2497,19 +2224,9 @@ def lsh_cap_main() -> None:
     )
     cap = int(sys.argv[4]) if len(sys.argv) > 4 else 250
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-lsh-cap")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-lsh-cap", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators import dedup
 
@@ -2589,19 +2306,9 @@ def entity_zipf_main() -> None:
     pool = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000
     zips = int(sys.argv[4]) if len(sys.argv) > 4 else 1_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("stress-entity-zipf")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10).count()
+    spark = _session("stress-entity-zipf", 64)
 
     from sales_analytics_etl_sql_powerbi_spark.operators.dims import (
         _AUTO_CELL_SIZE,

@@ -3,16 +3,9 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -9,6 +9,8 @@ round-5 sf0.1 sweep caught exactly this: an sf0.01-pinned codebook
 hash-mismatching against sf0.1 data.
 """
 
+import pathlib
+
 import __spark_entry__ as E
 from sales_analytics_etl_sql_powerbi_spark.operators import similarity
 
@@ -138,3 +140,27 @@ def test_release_caches_on_a_stopped_session_is_silent(spark, monkeypatch, caplo
     finally:
         E._QUERY_PERSISTS.pop(key, None)
     assert h.calls == 1 and "context stopped" not in caplog.text
+
+
+def test_one_session_builder_and_no_library_conf_writes():
+    """Every session is built by ``session.get_spark``, and library code
+    scopes confs only through ``session.scoped``: no other file builds a
+    session, and no library file writes a session conf."""
+    root = pathlib.Path(E.__file__).resolve().parent
+    pkg = sorted((root / "sales_analytics_etl_sql_powerbi_spark").rglob("*.py"))
+    entry = [root / "__spark_entry__.py"]
+    tooling = [root / "bench.py", *sorted((root / "scripts").glob("*.py"))]
+    tooling += sorted((root / "tests").glob("*.py"))
+    factory = root / "sales_analytics_etl_sql_powerbi_spark" / "session.py"
+
+    def offenders(files, needles):
+        return [
+            f"{p.relative_to(root)}:{i}"
+            for p in files
+            if p != factory
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if any(n in line for n in needles)
+        ]
+
+    assert offenders(pkg + entry + tooling, ["SparkSession" + ".builder"]) == []
+    assert offenders(pkg + entry, [".conf" + ".set(", ".conf" + ".unset("]) == []

@@ -55,21 +55,3 @@ def test_salted_join_rejects_outer(spark):
     large, small = frames(spark)
     with pytest.raises(ValueError, match="inner/left"):
         salted_join(large, small, "k", how="right", salt=4)
-
-
-def test_get_spark_force_skew_split_knob_lands(spark):
-    """session.get_spark(force_skew_split=...) must actually land the
-    AQE conf on the (reused) session — the knob exists so a deployment
-    with a same-key-downstream skew can flip it without re-deriving the
-    round-4 probe analysis (see get_spark docstring / PLAN_AUDIT.md)."""
-    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
-
-    key = "spark.sql.adaptive.forceOptimizeSkewedJoin"
-    prior = spark.conf.get(key, "false")
-    try:
-        s = get_spark(force_skew_split=True)
-        assert s.conf.get(key) == "true"
-        s2 = get_spark(force_skew_split=False)
-        assert s2.conf.get(key) == "false"
-    finally:
-        spark.conf.set(key, prior)

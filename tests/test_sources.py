@@ -35,10 +35,36 @@ def test_read_input_dispatch(spark, tmp_path):
         read_input(spark, "/nope/file.avro")
 
 
-def test_read_events_nanos_normalized(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_read_events_nanos_normalized(spark, sf_dir, tmp_path, unit):
+    """Both ``ts`` encodings read as TimestampType with the source's
+    microseconds (nanos truncated), and the caller's confs untouched:
+    the ``ns`` copy is read from a session whose ``nanosAsLong`` is
+    false, which the reader must not flip."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    src = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    want_us = src["ts"].cast(pa.int64()).to_pylist()
+    caller = spark
+    if unit == "ns":
+        # sub-microsecond digits the reader must truncate away
+        ns = pa.array([v * 1000 + 789 for v in want_us], pa.int64())
+        i = src.schema.get_field_index("ts")
+        src = src.set_column(i, "ts", ns.cast(pa.timestamp("ns")))
+        pq.write_table(src, tmp_path / "events.parquet")
+        sf_dir = str(tmp_path)
+        caller = spark.newSession()
+        caller.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    before = caller.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+    ev = read_events(caller, sf_dir)
     assert isinstance(ev.schema["ts"].dataType, T.TimestampType)
-    assert ev.count() > 0
+    got = ev.select("event_id", F.unix_micros("ts").alias("us")).collect()
+    by_id = dict(zip(src["event_id"].to_pylist(), want_us))
+    assert len(got) == len(by_id) > 0
+    assert all(r.us == by_id[r.event_id] for r in got)
+    assert caller.conf.get("spark.sql.legacy.parquet.nanosAsLong") == before
 
 
 def test_write_modes_and_create(spark, tmp_path):
@@ -185,13 +211,6 @@ def test_scan_spread_parallelizes_row_group_starved_files(spark, sf_dir):
     # per-call opt-out
     raw = read_table(spark, sf_dir, "documents", spread=False)
     assert raw.rdd.getNumPartitions() == 1
-    # conf kill-switch (plan tests that pin the at-scale shape use it)
-    spark.conf.set("spark_graft.scan.rowsPerSlice", "0")
-    try:
-        off = read_table(spark, sf_dir, "documents")
-        assert off.rdd.getNumPartitions() == 1
-    finally:
-        spark.conf.unset("spark_graft.scan.rowsPerSlice")
     # value identity across the spread
     a = sorted(map(tuple, docs.select("doc_id").collect()))
     b = sorted(map(tuple, raw.select("doc_id").collect()))
