@@ -312,7 +312,8 @@ def _q_elem_bound(dim: int = _DIM) -> int:
     with raw |x| > ~3037 made the ``__norm`` self-dot overflow 2^63
     and kill the job, even though it sat inside the old per-element
     ``try_cast`` bound of ~9.2e12). The binding constraint is the
-    WORST consumer, ``_SQDIST``: (x-y)^2 <= (2B)^2 per element over
+    WORST consumer, the IVF squared distance
+    (:func:`_centroid_sqdists`): (x-y)^2 <= (2B)^2 per element over
     ``dim`` terms, so dim·4·B² <= 2^63-1. That bound also covers the
     self-dot norm (dim·B²), every pairwise dot (|x·y| <= B²), and the
     ±1 hyperplane projections (|Σ ±x| <= dim·B)."""
@@ -1372,10 +1373,6 @@ ORDER BY vec_a, vec_b
 
 
 _IVF_SAMPLE = 4096  # codebook training sample bound (rows collected)
-_SQDIST = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-    " cast(0 as bigint), (acc, v) -> acc + v)"
-)
 _SQDIST_DUCK = "list_sum(list_transform(range(1, {n} + 1), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
 
 
@@ -1500,8 +1497,33 @@ def _require_codebook(centroids: list[list[int]], fn: str) -> None:
         )
 
 
+def _centroid_sqdists(q: F.Column, centroids: list[list[int]]) -> F.Column:
+    """Exact int64 squared distance from the quantized vector ``q`` to
+    every centroid, element ``i`` for cell ``i``: ONE ``transform``
+    over one array-of-centroids literal, so the plan carries a single
+    distance expression however large k grows (see :func:`with_cells`).
+    An element is NULL when ``q`` is NULL, holds a NULL element, or
+    has another width."""
+    cents = F.expr(
+        "array(" + ", ".join(_lit_arr_spark(c) for c in centroids) + ")"
+    )
+    return F.transform(
+        cents,
+        lambda c: F.aggregate(
+            F.zip_with(q, c, lambda x, y: (x - y) * (x - y)),
+            F.lit(0).cast("long"),
+            lambda acc, v: acc + v,
+        ),
+    )
+
+
 def with_cells(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Assign each quantized vector to its nearest centroid (``cell``).
+
+    The reference implementation of cell assignment:
+    :func:`ivf_index` ships :func:`with_cells_arrow`, and
+    ``test_with_cells_arrow_matches_expression_form`` checks it
+    row-for-row against this form.
 
     A fused argmin in ONE projection — no row amplification (the k×
     crossJoin shape would shuffle k copies of a 100-TB corpus). The
@@ -1519,17 +1541,7 @@ def with_cells(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     cells.
     """
     _require_codebook(centroids, "with_cells")
-    cents = F.expr(
-        "array(" + ", ".join(_lit_arr_spark(c) for c in centroids) + ")"
-    )
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("__q"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ),
-    )
+    dists = _centroid_sqdists(F.col("__q"), centroids)
     return q.withColumn(
         "cell", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
     )
@@ -1561,8 +1573,6 @@ def with_cells_arrow(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     fold exactly: a NULL ``__q``, a NULL element, or a width other
     than the codebook's all make every per-centroid fold NULL on the
     JVM side, so the row gets a NULL cell here too (slow path).
-    Gate: session conf ``spark_graft.ivf.arrowAssign=false`` restores
-    the expression form (:func:`ivf_index` reads it).
 
     Pass only the columns the consumer needs before calling (guide
     §4.1) — the batch crosses the Python boundary both ways.
@@ -1645,27 +1655,25 @@ def ivf_index(emb: DataFrame, centroids: list[list[int]]) -> DataFrame:
     route probes to the wrong cells. Survives a parquet round-trip.
     """
     _require_codebook(centroids, "ivf_index")
-    # assignment strategy (round 19): the vectorized mapInArrow scorer
-    # by default — it is the guide-§4.2 shape for the corpus-sized
-    # side (interpreted k×dim folds off the per-row path, and opaque
-    # to the §4.4 inferred-isnotnull pushdown duplication); the
-    # session conf restores the pure-expression form for comparison
-    # or for Python-worker-free deployments.
-    use_arrow = (
-        str(
-            emb.sparkSession.conf.get("spark_graft.ivf.arrowAssign", "true")
-        ).lower()
-        != "false"
-    )
-    if use_arrow:
-        idx = with_cells_arrow(
-            quantized(emb).select("vec_id", "__q", "__norm"), centroids
-        ).select("vec_id", "cell", "__q", "__norm")
-    else:
-        idx = with_cells(quantized(emb), centroids).select(
-            "vec_id", "cell", "__q", "__norm"
-        )
+    # the vectorized mapInArrow scorer, not the expression form: it
+    # takes the interpreted k×dim folds off the per-row path and is
+    # opaque to the inferred-isnotnull pushdown duplication. Settled
+    # A/B (ivf_index noop write, k=16, median of 6, 4-core host):
+    # 20k rows / 3 row groups 0.73 vs 2.58 s wall (1.27 vs 3.36
+    # CPU-s), 2k rows 0.37 vs 0.58 s, 500 rows 0.30 vs 0.33 s.
+    idx = with_cells_arrow(
+        quantized(emb).select("vec_id", "__q", "__norm"), centroids
+    ).select("vec_id", "cell", "__q", "__norm")
     return _stamp_index(idx, "cell", _codebook_stamp(centroids))
+
+
+def _require_ivf_params(fn: str, nprobe: int, topk: int) -> None:
+    """Reject a non-positive ``nprobe`` or ``topk`` at plan build: the
+    probe ``slice`` would otherwise fail inside Spark on a negative
+    length, and a zero would silently return no rows."""
+    for name, v in (("nprobe", nprobe), ("topk", topk)):
+        if v < 1:
+            raise ValueError(f"{fn}: {name} must be >= 1, got {v}")
 
 
 def ivf_query(
@@ -1677,10 +1685,22 @@ def ivf_query(
 ) -> DataFrame:
     """Top-k over a prebuilt :func:`ivf_index` for a batch of queries.
 
-    Probe routing is a (queries × k)-row broadcast join ranked by
-    exact integer distance; candidate selection is an equi-join on
-    ``cell``. The query batch is broadcast — the corpus-sized index is
-    only touched via the cell equi-join.
+    The query batch is quantized once. Probe routing is one projection
+    per query row: the exact integer distance to every centroid (the
+    same single ``transform`` over the centroid literal as
+    :func:`with_cells`) is paired with its cell, and
+    ``slice(sort_array(...), 1, nprobe)`` keeps the nearest cells.
+    ``sort_array`` puts a NULL distance (a poison query) first and
+    breaks ties to the lower cell — the DuckDB twin's ``row_number()
+    OVER (distance, cell)`` order. The probe rows carry the quantized
+    query, so candidate selection is ONE broadcast equi-join of the
+    probes with the index on ``cell``: the corpus-sized index is
+    touched only there, and the query side is one scan and one
+    projection — no cross join, window or second scan.
+
+    Query ids are keys: each query row is routed and scored on its
+    own, so pass a batch with distinct ``vec_id``; a repeated id's
+    candidates are ranked together, once per copy.
 
     An index built by :func:`ivf_index` carries its codebook's shape
     and content digest in the ``cell`` column's schema metadata; the
@@ -1690,50 +1710,28 @@ def ivf_query(
     probes to wrong cells.
     """
     _require_codebook(centroids, "ivf_query")
+    _require_ivf_params("ivf_query", nprobe, topk)
     _check_stamp(
         _read_stamp(index, "cell"), "ivf_query", **_codebook_stamp(centroids)
     )
-    qz = quantized(queries).select(
+    dists = F.transform(
+        _centroid_sqdists(F.col("__q"), centroids),
+        lambda d, cell: F.struct(d.alias("d"), cell.alias("cell")),
+    )
+    probes = quantized(queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("__q").alias("__qq"),
         F.col("__norm").alias("__qn"),
-    )
-    spark = queries.sparkSession
-    # the k-row centroid frame is built from LITERALS, not
-    # createDataFrame (round 19): parallelizing a 16-element python
-    # list slices it over defaultParallelism partitions, and each of
-    # those tasks launches a PYTHON WORKER just to unpickle its slice —
-    # measured 9.5s of executor run time (32 workers × ~300 ms) for a
-    # frame that broadcasts to a few KB. The literal posexplode stays
-    # entirely in the JVM: one task, zero Python workers.
-    # range(0, 1, 1, numPartitions=1): the default otherwise slices one
-    # row over defaultParallelism near-empty tasks
-    cent_df = spark.range(0, 1, 1, 1).select(
-        F.posexplode(
-            F.expr(
-                "array(" + ", ".join(_lit_arr_spark(c) for c in centroids) + ")"
-            )
-        ).alias("cell", "__c")
-    ).select(F.col("cell").cast("int").alias("cell"), "__c")
-    # probe routing: n_queries × k rows, ranked by exact integer sq-dist
-    pw = Window.partitionBy("query_id").orderBy(
-        F.asc("__cdist"), F.asc("cell")
-    )
-    probes = (
-        qz.select("query_id", "__qq")
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("__cdist", F.expr(_SQDIST.format(a="__qq", b="__c")))
-        .withColumn("prn", F.row_number().over(pw))
-        .where(F.col("prn") <= nprobe)
-        .select("query_id", "cell")
-    )
-    joined = (
-        index.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(qz), "query_id")
-        .where(F.col("vec_id") != F.col("query_id"))
+        F.explode(F.slice(F.sort_array(dists), 1, nprobe).getField("cell")).alias(
+            "cell"
+        ),
     )
     cos = _cos(_dot("__qq", "__q"), F.col("__qn"), F.col("__norm"))
-    scored = joined.select("query_id", "vec_id", cos.alias("cosine"))
+    scored = (
+        index.join(F.broadcast(probes), "cell")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", cos.alias("cosine"))
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("int"))
@@ -1756,20 +1754,21 @@ def ann_ivf_topk(
     With k cells and nprobe probes, each query touches ~nprobe/k of the
     corpus. Codebook training is a deterministic driver-side KMeans
     over a bounded sample (:func:`ivf_codebook`); everything after is
-    relational: probe routing is a (queries × k)-row broadcast join
-    ranked by exact integer distance, candidate selection is an
-    equi-join on ``cell``. Scale: k grows with corpus (k ≈ sqrt(N) rule
-    of thumb), codebook stays driver-sized.
+    relational: the corpus is cell-assigned by one ``mapInArrow``
+    scorer (:func:`ivf_index`), and each query row picks its probe
+    cells in one projection and meets the index in one broadcast
+    equi-join on ``cell`` (:func:`ivf_query`). Scale: k grows with
+    corpus (k ≈ sqrt(N) rule of thumb), codebook stays driver-sized.
 
     CONTRACT SHAPE, NOT DEPLOYMENT SHAPE: this is the stateless
     composition of :func:`ivf_codebook` + :func:`ivf_index` +
-    :func:`ivf_query`, retraining the codebook per call because the
-    driver's oracle contract requires a self-contained query — the
-    heaviest entry in bench for exactly that reason. A deployment
-    trains the codebook + materializes :func:`ivf_index` ONCE
-    (parquet round-trip pinned by test) and serves with
-    :func:`ivf_query` — measured (PLAN_AUDIT round 5): 1.0–1.2s per
-    query batch over the materialized index vs ~14s stateless.
+    :func:`ivf_query`, retraining the codebook per call (unless
+    ``centroids`` is passed) and re-assigning the whole corpus per
+    call, because the driver's oracle contract requires a
+    self-contained query. A deployment trains the codebook +
+    materializes :func:`ivf_index` ONCE (parquet round-trip pinned by
+    test) and serves each query batch with :func:`ivf_query` over
+    it.
 
     Fully oracle-checked: the DuckDB twin (:func:`ann_ivf_topk_sql`)
     trains the identical codebook from the same parquet sample and
@@ -1783,6 +1782,7 @@ def ann_ivf_topk(
     the same corpus; training is deterministic, so the results are
     identical either way.
     """
+    _require_ivf_params("ann_ivf_topk", nprobe, topk)
     if centroids is None:
         centroids = ivf_codebook(emb, n_clusters, sample_n)
     return ivf_query(

@@ -388,10 +388,10 @@ def vectors_main() -> None:
     engine one). Exercises the pieces small-SF correctness can't see:
     `auto_n_planes` past its lower clamp (200k vectors → 11 planes →
     2048 buckets), bucket-occupancy balance under the real hyperplanes,
-    the IVF path at a √N-scaled cluster count (with_cells' plan stays
-    ONE expression however big k gets), and the candidate equi-joins
-    staying output-bound. Prints the brute-force baseline time for the
-    ANN-vs-exact contrast at the same N.
+    the IVF path at a √N-scaled cluster count (the probe routing's
+    plan stays ONE distance expression however big k gets), and the
+    candidate equi-joins staying output-bound. Prints the brute-force
+    baseline time for the ANN-vs-exact contrast at the same N.
     """
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 100
     sf_dir = "/root/testdata/sf0.1"

@@ -151,21 +151,9 @@ def test_fact_filters_reach_the_scan(spark, plan_sf):
 # dedup / ANN plan guards — the "never all-pairs" claims from
 # PLAN_AUDIT.md, pinned as assertions (VERDICT r4 item 3). Candidate
 # generation in every near-dup / ANN path must stay an equi-join
-# (hash- or sort-merge-based on the band/bucket/cell key); the only
-# nested-loop the family is allowed is the IVF probe-routing cross of
-# two bounded sides (n_queries rows × k centroids).
+# (hash- or sort-merge-based on the band/bucket/cell key), and no
+# guarded plan has a nested loop.
 # ---------------------------------------------------------------------------
-
-
-def _subtree(lines: list[str], i: int) -> list[str]:
-    """Lines of the plan subtree rooted at lines[i] (tree-drawing depth)."""
-    root_depth = _node_depth(lines[i])
-    out = [lines[i]]
-    for j in range(i + 1, len(lines)):
-        if _node_depth(lines[j]) <= root_depth:
-            break
-        out.append(lines[j])
-    return out
 
 
 def _docs(spark, sf):
@@ -222,36 +210,32 @@ def test_ann_lsh_topk_is_broadcast_bucket_join(spark, plan_sf):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_ann_ivf_topk_nested_loop_is_bounded_probe_routing_only(spark, plan_sf):
+def test_ann_ivf_topk_has_no_nested_loop_and_one_equi_join(spark, plan_sf):
     from sales_analytics_etl_sql_powerbi_spark.operators import similarity
 
     plan = _plan(similarity.ann_ivf_topk(_emb(spark, plan_sf)))
     assert "CartesianProduct" not in plan, plan
-    # candidate selection + query re-attach are broadcast equi-joins
-    assert plan.count("BroadcastHashJoin") >= 2, plan
+    # probe routing is a projection per query row (sorted centroid
+    # distances sliced to nprobe), not a cross join with the centroids
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    # candidate selection is the one join: the probe rows, which carry
+    # the quantized query, broadcast into an equi-join on cell
+    assert plan.count("BroadcastHashJoin") == 1, plan
     assert "SortMergeJoin" not in plan, plan
-    # at most ONE nested loop: the probe-routing cross of the
-    # vec_id<n_queries slice with the k-row literal centroid table —
-    # both sides bounded by construction, and the corpus scan must NOT
-    # appear inside it
-    lines = plan.splitlines()
-    bnlj = [i for i, l in enumerate(lines) if "BroadcastNestedLoopJoin" in l]
-    assert len(bnlj) <= 1, plan
-    for i in bnlj:
-        sub = _subtree(lines, i)
-        # one side is the literal centroid table: a Generate
-        # (posexplode of the literal centroid array over range(1) —
-        # the round-19 pure-JVM build), or a LocalTableScan / Scan
-        # ExistingRDD from the older createDataFrame path…
-        assert any(
-            "Generate" in l or "LocalTableScan" in l or "Scan ExistingRDD" in l
-            for l in sub
-        ), "\n".join(sub)
-        # …and any file scan on the other side is the filtered query
-        # slice (vec_id < n_queries), never the whole corpus
-        assert any(
-            "Filter" in l and "vec_id" in l and "< 5" in l for l in sub
-        ), "\n".join(sub)
+
+
+def test_ann_ivf_topk_entry_is_one_python_task(spark, plan_sf):
+    """The gated IVF entry reads the one-row-group embeddings table
+    unspread, so its cell scorer runs as one Python task, and its query
+    side is one branch: no round-robin spread, no nested loop, one
+    broadcast equi-join."""
+    import __spark_entry__ as E
+
+    plan = _plan(E.queries()["ann_ivf_topk"](spark, plan_sf))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "RoundRobinPartitioning" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
 
 
 def test_neardup_query_is_band_equi_join_against_the_index(spark, plan_sf):

@@ -221,6 +221,22 @@ def test_empty_ivf_codebook_raises_at_plan_build(spark):
         similarity.ivf_query(idx, df.where("vec_id < 2"), [])
 
 
+@pytest.mark.parametrize("param", ["nprobe", "topk"])
+@pytest.mark.parametrize("value", [0, -1])
+def test_non_positive_ivf_nprobe_or_topk_raises_at_plan_build(spark, param, value):
+    """A non-positive ``nprobe`` or ``topk`` fails at plan build with an
+    error naming the call — not as an empty result or an error from
+    inside Spark's ``slice``."""
+    df, _ = emb_frame(spark, n=20)
+    cents = similarity.ivf_codebook(df, n_clusters=2)
+    idx = similarity.ivf_index(df, cents)
+    kw = {param: value}
+    with pytest.raises(ValueError, match=f"^ann_ivf_topk: {param} must be >= 1"):
+        similarity.ann_ivf_topk(df, n_clusters=2, **kw)
+    with pytest.raises(ValueError, match=f"^ivf_query: {param} must be >= 1"):
+        similarity.ivf_query(idx, df.where("vec_id < 2"), cents, **kw)
+
+
 def test_ivf_index_query_matches_stateless(spark):
     """The materialized IVF index path must return the stateless
     entry's exact rows (same codebook, same routing, same ranks)."""
