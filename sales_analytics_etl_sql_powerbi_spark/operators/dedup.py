@@ -21,9 +21,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "exact_dedup",
-    "exact_dedup_incremental",
-    "neardup_index",
-    "neardup_query",
     "shingle_sets",
     "shingle_docs",
     "minhash_signatures",
@@ -130,8 +127,8 @@ def shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
     NULL-text docs collided in EVERY band and surfaced as a bogus
     near-dup pair, while the DuckDB twin (whose ``unnest`` emits no
     NULL shingle) reported none. Filtering at the single shared source
-    keeps every consumer — pair generator, incremental index/query,
-    cluster collapse, the Jaccard verifier — and both engines on one
+    keeps every consumer — pair generator, cluster collapse, the
+    Jaccard verifier — and both engines on one
     convention: a NULL document has no shingles and never matches
     (clusters still label it a singleton from the docs side).
     """
@@ -241,10 +238,7 @@ def _band_structs(
 ) -> F.Column:
     """array<struct<band_id, band_hash>> over a signature row (m0..m15).
 
-    The ONE shared band-hash builder for the self-join candidate
-    generator and the incremental index/query split — the band
-    arithmetic cannot drift between an index written last month and
-    the batch hashed today.
+    The band-hash expression of :func:`lsh_candidate_pairs`.
 
     ``bands``/``rows_per_band`` default to the module constants (the
     production setting, carried with a MEASURED recall table — see
@@ -508,212 +502,6 @@ SELECT doc_a, doc_b, jaccard FROM (
 ) t {thr}
 ORDER BY doc_a, doc_b
 """
-
-
-def exact_dedup_incremental(batch: DataFrame, known: DataFrame) -> DataFrame:
-    """Exact-dedup a NEW batch against an already-deduped corpus.
-
-    ``known`` carries a ``content_hash`` column (e.g. a materialized
-    :func:`exact_dedup` output, or just ``SELECT content_hash`` from
-    it). The batch first collapses internally (same hash-aggregate as
-    the full op), then anti-joins the corpus hashes — rows returned
-    are exactly the canonical batch docs whose content the corpus has
-    never seen, i.e. what an append-only ingest should write.
-
-    Scale: the anti-join keys are 32-char hashes; AQE broadcasts when
-    the known side is small, otherwise it is one shuffle on the hash —
-    co-locatable for repeated loads by bucketing the corpus hash table
-    on ``content_hash`` (``sinks.write_bucketed``). Nothing here
-    rescans or rehashes the existing corpus text.
-    """
-    return exact_dedup(batch).join(
-        known.select("content_hash"), "content_hash", "left_anti"
-    )
-
-
-def _explode_bands(ix: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_hash) rows from an indexed frame's
-    ``bands`` array — the one shared explode for every band consumer."""
-    return ix.select("doc_id", F.explode_outer("bands").alias("b")).select(
-        "doc_id",
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_hash").alias("band_hash"),
-    )
-
-
-def neardup_index(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Materializable near-dup index: (doc_id, sh_set, bands).
-
-    The MinHash-LSH twin of ``similarity.ann_index`` — the production
-    shape for CONTINUOUS ingestion, where the corpus is deduped once
-    and each new batch must only be checked against it (plus itself),
-    never by re-minhashing the whole corpus. ``bands`` is the
-    array<struct<band_id, band_hash>> the candidate join explodes;
-    ``sh_set`` stays in the index so the exact-Jaccard verifier never
-    needs the original text again. Persist it, or write it to parquet
-    (``sinks.write_bucketed(..., by=["doc_id"])``) for cross-job reuse.
-
-    The signature is computed IN-ROW from the shingle-set array
-    (per-element 63-bit hash → per-permutation ``array_min`` → band
-    md5, the same fused-fold shape as ``text.doc_profile``): ONE
-    projection over ONE read of the shingle sets — no explode, no
-    groupBy shuffle, and no double evaluation of the shingling subplan
-    that a sets⋈signatures self-join would cost. Parity with the
-    grouped minhash path is pinned by
-    ``test_dedup.py::test_index_bands_match_grouped_minhash_bands``.
-
-    The build params — shingle width ``k`` plus the module's
-    (n_perm, bands) signature shape — are stamped into the ``bands``
-    column's schema metadata (round 17, same mechanism as
-    ``similarity.ann_index``); :func:`neardup_query` validates against
-    the stamp at plan build, closing the documented-but-silent
-    mixed-``k`` contract (and a version drift of the signature shape)
-    for materialized indexes. Survives persist / parquet round-trips.
-    """
-    sets = shingle_sets(docs, k)
-    # hash array in its own projection: referenced by 16 permutations,
-    # so CollapseProject keeps it single-evaluated (see _H63_FROM_MD5).
-    # The md5 is bound to its own lambda variable via the nested
-    # transform — HOF lambda bodies get no CSE, so inlining
-    # h63_from_md5(md5(s)) would hash every shingle twice
-    hs = F.transform(
-        F.transform(F.col("sh_set"), lambda sh: F.md5(sh)),
-        lambda m: h63_from_md5(m) % F.lit(_P31),
-    )
-    with_hs = sets.select("doc_id", "sh_set", hs.alias("__hs"))
-    mins = [
-        F.array_min(
-            F.transform(
-                F.col("__hs"),
-                lambda h: (h * F.lit(_A[i]) + F.lit(_B[i])) % F.lit(_P31),
-            )
-        )
-        for i in range(_N_PERM)
-    ]
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            mins[b * _ROWS_PER_BAND + r].cast("string")
-                            for r in range(_ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(_BANDS)
-        ]
-    )
-    from .similarity import _stamp_index
-
-    return _stamp_index(
-        with_hs.select("doc_id", "sh_set", bands.alias("bands")),
-        "bands",
-        {"k": k, "n_perm": _N_PERM, "bands": _BANDS},
-    )
-
-
-def neardup_query(
-    index: DataFrame,
-    batch: DataFrame,
-    k: int = 3,
-    threshold: float = 0.8,
-    include_intra_batch: bool = True,
-) -> DataFrame:
-    """Near-dup matches for a NEW batch against a prebuilt index.
-
-    Returns (doc_id, dup_of, jaccard): ``doc_id`` is a batch doc,
-    ``dup_of`` the indexed (or, with ``include_intra_batch``, an
-    earlier-in-batch) doc it near-duplicates at ``jaccard ≥
-    threshold``. The ingest decision is then one anti-join: batch docs
-    absent from this result are genuinely new.
-
-    ``k`` must match the value the index was built with — an index
-    materialized by :func:`neardup_index` carries (k, n_perm, bands)
-    in its schema-metadata stamp and a mismatch RAISES here at plan
-    build (round 17; a hand-built unstamped index keeps the old
-    silent caller contract — mixed shingle widths miss everything).
-    Candidates come from the band equi-join only — batch bands vs
-    index bands (and batch-self for intra-batch pairs, oriented
-    later-dups-earlier) — so per-batch cost scales with batch size ×
-    band collision rate, not corpus size. Verification reuses the
-    index's stored ``sh_set``; corpus text is never touched.
-    """
-    from .similarity import _check_stamp, _read_stamp
-
-    _check_stamp(
-        _read_stamp(index, "bands"),
-        "neardup_query",
-        k=k,
-        n_perm=_N_PERM,
-        bands=_BANDS,
-    )
-    # batch is batch-sized: persist its index so the band explode and
-    # both verify sides share one minhash computation
-    from pyspark.storagelevel import StorageLevel
-
-    qidx = neardup_index(batch, k).persist(StorageLevel.MEMORY_AND_DISK)
-
-    qb = _explode_bands(qidx).withColumnsRenamed({"doc_id": "doc_id_new"})
-    new_sets = qidx.select(F.col("doc_id"), F.col("sh_set").alias("__sh_new"))
-    n_inter = F.size(F.array_intersect("__sh_new", "__sh_old"))
-    n_union = F.size("__sh_new") + F.size("__sh_old") - n_inter
-
-    def verified(cand: DataFrame, dup_side: DataFrame) -> DataFrame:
-        # candidates verify against THEIR OWN dup_of population (index
-        # for cross pairs, batch for intra pairs) — a doc_id present in
-        # both worlds must never be scored against the wrong text
-        return (
-            cand.distinct()
-            .join(new_sets, "doc_id")
-            .join(dup_side, "dup_of")
-            .select(
-                "doc_id",
-                "dup_of",
-                (n_inter.cast("double") / n_union.cast("double")).alias(
-                    "jaccard"
-                ),
-            )
-        )
-
-    cross = verified(
-        qb.join(_explode_bands(index), on=["band_id", "band_hash"]).select(
-            F.col("doc_id_new").alias("doc_id"), F.col("doc_id").alias("dup_of")
-        ),
-        index.select(
-            F.col("doc_id").alias("dup_of"), F.col("sh_set").alias("__sh_old")
-        ),
-    )
-    out = cross
-    if include_intra_batch:
-        qb2 = qb.withColumnsRenamed({"doc_id_new": "doc_id_prev"})
-        intra = verified(
-            qb.join(qb2, on=["band_id", "band_hash"])
-            .where(F.col("doc_id_prev") < F.col("doc_id_new"))
-            .select(
-                F.col("doc_id_new").alias("doc_id"),
-                F.col("doc_id_prev").alias("dup_of"),
-            ),
-            qidx.select(
-                F.col("doc_id").alias("dup_of"), F.col("sh_set").alias("__sh_old")
-            ),
-        )
-        out = out.unionByName(intra)
-    # one row per (doc_id, dup_of) even if an id exists in BOTH worlds
-    # (contract violation, but the output must stay deterministic):
-    # keep the best-scoring path — "is this a near-dup of X" is true if
-    # ANY qualifying path says so
-    out = (
-        out.groupBy("doc_id", "dup_of")
-        .agg(F.max("jaccard").alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-        .localCheckpoint(eager=True)
-    )
-    qidx.unpersist()
-    return out.orderBy("doc_id", "dup_of")
 
 
 _SIM_BITS = 32

@@ -1,10 +1,9 @@
 """Mergeable fixed-bin histograms → approximate quantiles.
 
-The companion to :mod:`.sketches` (HLL distinct counts) for the OTHER
-recurring incremental-aggregate need: percentiles over a growing fact
-history. ``percentile()``/``approx_percentile`` answer one query over
-one frame; at 100 TB the question is "p95 per group, updated per
-load, WITHOUT re-scanning history" — and unlike HLL sketches, a
+The recurring incremental-aggregate need: percentiles over a growing
+fact history. ``percentile()``/``approx_percentile`` answer one query
+over one frame; at 100 TB the question is "p95 per group, updated per
+load, WITHOUT re-scanning history" — and unlike an HLL sketch, a
 fixed-bin histogram merges EXACTLY (vector addition), so rollups are
 bit-deterministic in any order.
 

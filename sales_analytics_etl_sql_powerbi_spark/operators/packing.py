@@ -53,7 +53,6 @@ __all__ = [
     "global_prefix_sum",
     "bucketed_exclusive_scan",
     "pack_sequences",
-    "pack_sequences_incremental",
     "pack_sequences_sql",
     "assemble_examples",
     "assemble_examples_sql",
@@ -188,7 +187,6 @@ def pack_sequences(
     docs: DataFrame,
     budget: int = 128,
     num_buckets: int | None = None,
-    base_offset: int = 0,
 ) -> DataFrame:
     """Pack the corpus token stream into fixed-``budget`` training
     examples: (doc_id, example_id, pos_in_example, n_seg_tokens,
@@ -237,14 +235,6 @@ def pack_sequences(
         num_buckets=num_buckets,
         materialize_input=False,
     )
-    if base_offset:
-        # incremental continuation (see pack_sequences_incremental):
-        # the virtual stream resumes at the stored base, BEFORE the
-        # example split — example ids and in-example positions then
-        # come out identical to a from-scratch pack of the full corpus
-        d = d.withColumn(
-            "__off", F.col("__off") + F.lit(int(base_offset)).cast("long")
-        )
     b = F.lit(budget).cast("long")
     first_ex = F.expr(f"__off DIV {budget}")
     last_ex = F.expr(f"(__off + __n - 1) DIV {budget}")
@@ -311,12 +301,12 @@ FROM (
 def assemble_examples(segs: DataFrame) -> DataFrame:
     """Final assembly: collapse :func:`pack_sequences` segments into
     one row per training example — (example_id, n_tokens, n_docs,
-    text) — the frame :func:`..sampling.training_shards` shuffles and
-    the shard writer materializes. One groupBy(example_id) shuffle
-    whose groups are bounded by construction (an example holds ≤
-    budget tokens, so ≤ budget segments); segment order is restored
-    from ``pos_in_example`` inside the row (array_sort on the struct,
-    position first), never by a global sort.
+    text) — the frame :func:`..sampling.training_shards` shuffles.
+    One groupBy(example_id) shuffle whose groups are bounded by
+    construction (an example holds ≤ budget tokens, so ≤ budget
+    segments); segment order is restored from ``pos_in_example``
+    inside the row (array_sort on the struct, position first), never
+    by a global sort.
     """
     return segs.groupBy("example_id").agg(
         F.sum("n_seg_tokens").cast("long").alias("n_tokens"),
@@ -345,34 +335,3 @@ SELECT example_id,
 FROM ({pack_sequences_sql(budget, source)}) p
 GROUP BY example_id
 """
-
-
-def pack_sequences_incremental(
-    new_docs: DataFrame,
-    base_total_tokens: int,
-    budget: int = 128,
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """Append-only corpus growth without repacking: pack ONLY the new
-    documents, with the virtual token stream continuing at
-    ``base_total_tokens`` (the already-packed corpus's total token
-    count — the packing analog of the CDC stored high-water mark:
-    persist it with the shards, feed it back on the next batch, and
-    ``base + sum(new __n)`` is the next base). Existing example ids
-    never shift; the part-full boundary example from the previous
-    batch is CONTINUED by the first new segments (same ``example_id``,
-    ``pos_in_example`` resuming where it stopped). Contract: new
-    doc_ids sort after every previously packed id — the order key IS
-    the stream order, so an out-of-order append would rewrite
-    history, exactly like a late CDC batch below its window.
-
-    Two-increment ≡ from-scratch equivalence is unit-pinned.
-    """
-    if base_total_tokens < 0:
-        raise ValueError("base_total_tokens must be >= 0")
-    return pack_sequences(
-        new_docs,
-        budget=budget,
-        num_buckets=num_buckets,
-        base_offset=base_total_tokens,
-    )

@@ -1004,7 +1004,7 @@ def ann_index(
     """Materializable LSH index: the bucketed, quantized corpus.
 
     The production shape for repeated ANN queries — build ONCE
-    (persist, or ``sinks.write_bucketed(..., by=["bucket"])`` for
+    (persist, or ``sinks.write_bucketed(..., bucket_by=["bucket"])`` for
     cross-job reuse with co-located candidate joins), then hit it with
     :func:`ann_query` per query batch. The 100×-corpus probe
     (PLAN_AUDIT.md) showed the index build dominating stateless
@@ -1641,7 +1641,7 @@ def ivf_index(emb: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Materializable IVF index: the quantized, cell-assigned corpus.
 
     Build once with a trained codebook (:func:`ivf_codebook`), persist
-    or ``write_bucketed(..., by=["cell"])``, then hit it per query
+    or ``write_bucketed(..., bucket_by=["cell"])``, then hit it per query
     batch with :func:`ivf_query` — the production shape; the stateless
     :func:`ann_ivf_topk` entry rebuilds per call by contract. Keep the
     ``centroids`` alongside the index (they are driver-sized) — queries

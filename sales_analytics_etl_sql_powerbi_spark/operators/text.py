@@ -69,7 +69,7 @@ def _in_list_count(tokens: Column, words: tuple[str, ...]) -> Column:
 def exploded_tokens(docs: DataFrame, drop_empty: bool = True) -> DataFrame:
     """(doc_id, token) rows — THE shared tokenize-and-explode step, so
     the token contract cannot drift between the operators built on it
-    (vocab_topk, tfidf_terms, bm25_search, frequency module).
+    (vocab_topk, tfidf_terms, bm25_search).
     ``drop_empty`` additionally drops zero-length tokens (the
     retrieval operators' contract; vocab_topk keeps its original
     NULL-only filter for oracle-hash stability)."""

@@ -63,12 +63,9 @@ def get_spark(
         #    pandas_udf variants) --
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # -- Arrow batch rows cap the per-batch memory of every
-        #    pandas_udf/mapInPandas worker; lower via env for
-        #    memory-tight single-node stress runs (round 15) --
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
-        )
+        #    pandas_udf/mapInPandas worker; a memory-tight caller
+        #    lowers it through ``extra_conf`` --
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # -- a crashed Python worker dumps a traceback instead of the
         #    bare "exited unexpectedly" (cost: one extra signal handler)
         .config("spark.python.worker.faulthandler.enabled", "true")

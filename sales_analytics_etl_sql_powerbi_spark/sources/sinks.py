@@ -301,7 +301,9 @@ def acquire_upsert_lock(spark, path: str, ctx: str) -> None:
     FS ``create(overwrite=false)`` (namenode-atomic on HDFS). A lock
     whose same-host owner is dead is reclaimed (crash recovery); a
     live owner — or any foreign-host owner — raises loudly instead of
-    silently corrupting (round 18 — VERDICT r17 item 1)."""
+    silently corrupting (round 18 — VERDICT r17 item 1). A create that
+    fails for any other reason (ENOSPC, EACCES, an I/O error) leaves no
+    lock file behind and re-raises its own error, not a race."""
     fs, root = _hfs(spark, path)
     fs.mkdirs(root)
     lock = _child(spark, root, _LOCK_NAME)
@@ -310,7 +312,8 @@ def acquire_upsert_lock(spark, path: str, ctx: str) -> None:
         try:
             _write_small_file(fs, lock, payload, overwrite=False)
             return
-        except Exception:
+        except Exception as exc:
+            create_error = exc
             try:
                 info = json.loads(_read_small_file(fs, lock).decode())
             except Exception:
@@ -326,6 +329,8 @@ def acquire_upsert_lock(spark, path: str, ctx: str) -> None:
                     "must be removed manually (_UPSERT_LOCK)."
                 ) from None
             fs.delete(lock, False)  # dead owner — reclaim and retry
+    if not fs.exists(lock):
+        raise create_error
     raise ConcurrentWriteError(
         f"{ctx}: could not acquire the upsert lock on {path!r} after "
         "reclaiming a dead writer's lock — another writer is racing; "
@@ -552,237 +557,6 @@ def _write_training_shards(
         w.parquet(path)
 
 
-def zorder_value(
-    bounds: dict[str, tuple[float, float]], bits: int = 8
-) -> Column:
-    """Z-order (Morton) value from 2+ numeric columns.
-
-    Each column is width-bucketed into ``2**bits`` uniform buckets
-    between its (min, max) ``bounds``, and the bucket bits are
-    interleaved — points close in EVERY dimension get close z-values,
-    so sorting by z clusters the data in all dimensions at once.
-    Pure Column arithmetic (shifts + masks unrolled per bit; bits=8 ×
-    3 cols = 24 terms inside one codegen span) — no UDF.
-
-    Uniform-width buckets: skewed columns bucket unevenly (the
-    classic z-order caveat) — for pruning, what matters is the
-    monotone bucket ↔ value mapping, which holds regardless; the
-    skew-robust refinement is :func:`zorder_value_quantile`.
-    """
-    cols = list(bounds)
-    n = len(cols)
-    if n < 2:
-        raise ValueError("z-ordering needs >= 2 columns (use a plain sort for 1)")
-    max_bucket = (1 << bits) - 1
-    buckets = []
-    for c in cols:
-        lo, hi = bounds[c]
-        span = float(hi) - float(lo) or 1.0
-        buckets.append(
-            F.least(
-                F.lit(max_bucket),
-                F.greatest(
-                    F.lit(0),
-                    F.floor(
-                        (F.col(c).cast("double") - F.lit(float(lo)))
-                        / F.lit(span)
-                        * F.lit(1 << bits)
-                    ).cast("long"),
-                ),
-            )
-        )
-    return _interleave(buckets, bits)
-
-
-def _interleave(buckets: list[Column], bits: int) -> Column:
-    """Morton interleave of per-dimension bucket ids (bit b of dim i →
-    z bit b·ndims + i)."""
-    n = len(buckets)
-    z = F.lit(0).cast("long")
-    for i, bucket in enumerate(buckets):
-        for b in range(bits):
-            z = z + F.shiftleft(
-                F.shiftright(bucket, b).bitwiseAND(F.lit(1)), b * n + i
-            )
-    return z
-
-
-def zorder_value_quantile(
-    boundaries: dict[str, list[float]], bits: int = 8
-) -> Column:
-    """Skew-robust Z-order: per-column QUANTILE buckets, then interleave.
-
-    ``boundaries[c]`` is the sorted list of ``2**bits − 1`` interior
-    quantile cut points (from ``df.stat.approxQuantile`` — one pass);
-    a row's bucket = #cuts ≤ value, i.e. its RANK bucket. Equal-height
-    buckets mean each z-cell (hence each written file) covers ~equal
-    row counts however skewed the values are — a uniform-width bucketing
-    would dump a heavy-tailed column's mass into one bucket and lose
-    the multi-dimensional clustering for it. Bucketing stays monotone
-    in the value, so parquet min/max pruning semantics are unchanged.
-    Cost: ``size(filter(cuts, ...))`` is O(2^bits) comparisons per row
-    per column inside codegen — a write-side cost, bits=6..8 is plenty.
-    """
-    cols = list(boundaries)
-    if len(cols) < 2:
-        raise ValueError("z-ordering needs >= 2 columns (use a plain sort for 1)")
-    max_bucket = (1 << bits) - 1
-    buckets = []
-    for c in cols:
-        cuts = sorted(float(v) for v in boundaries[c])
-        lit = f"array({', '.join(f'{v!r}D' for v in cuts)})"
-        cnt = F.expr(
-            f"size(filter({lit}, __b -> __b <= cast({c} as double)))"
-        ).cast("long")
-        buckets.append(F.least(F.lit(max_bucket), cnt))
-    return _interleave(buckets, bits)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 32,
-    bits: int = 8,
-    mode: str = "overwrite",
-    quantile: bool = False,
-) -> None:
-    """Write parquet laid out in Z-order over ``cols``.
-
-    The multi-dimensional pruning layout: a single-column sort gives
-    tight per-file min/max statistics for THAT column only; Z-order
-    gives usefully-tight ranges for EVERY listed column, so predicate
-    pushdown skips files for queries filtering on any of them (parquet
-    row-group stats + Spark's file-level pruning do the skipping —
-    nothing to configure at read time). The complement to
-    :func:`write_bucketed`: bucketing co-locates equi-JOIN keys,
-    Z-order co-locates range-FILTER keys.
-
-    One stats job (min/max per column — or one approxQuantile pass
-    with ``quantile=True``, the skew-robust variant that equalizes
-    per-file ROW counts on heavy-tailed columns), then one range
-    shuffle + in-task sort — the same cost shape as any global sort,
-    so at 100 TB pick n_files ≈ data / target_file_size and let the
-    range exchange spread by z-value.
-    """
-    row = df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[
-            f
-            for c in cols
-            for f in (F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}"))
-        ],
-    ).collect()[0]
-    if row["__n"] == 0:
-        # empty input: nothing to bucket on — an empty overwrite keeps
-        # the schema and is a legitimate no-op
-        df.write.mode(mode).parquet(path)
-        return
-    bounds = {c: (row[f"__lo_{c}"], row[f"__hi_{c}"]) for c in cols}
-    dead = [c for c, (lo, hi) in bounds.items() if lo is None or hi is None]
-    if dead:
-        # NON-empty data with an all-NULL listed column: the caller
-        # asked for a clustering guarantee this write cannot give —
-        # fail loudly rather than silently produce an unclustered file
-        raise ValueError(
-            f"cannot Z-order on all-NULL column(s) {dead} — "
-            "drop them from cols or fix the upstream values"
-        )
-    if quantile:
-        probs = [i / (1 << bits) for i in range(1, 1 << bits)]
-        qs = df.stat.approxQuantile(cols, probs, 0.001)
-        z = zorder_value_quantile(dict(zip(cols, qs)), bits)
-    else:
-        z = zorder_value(bounds, bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
-    partition_by: list[str] | None = None,
-) -> int:
-    """Rewrite a small-files parquet directory into ~target-sized files.
-
-    The streaming sinks (and any high-frequency micro-batch append)
-    accumulate many small files; at scale that turns every scan into
-    open/footer overhead and starves row-group pruning. Compaction =
-    list the current bytes (driver-side file listing, no data read),
-    read + ``repartition(ceil(bytes / target))``, write to
-    ``dst_path``. Write-to-new-dir, not in-place: an in-place rewrite
-    that fails mid-way destroys the source — callers swap directories
-    after success (the same publish-then-swap discipline as any
-    overwrite). ``sort_within_by`` re-sorts rows inside each output
-    file (restores clustering the append order lost). Returns the
-    file count written.
-
-    Parquet compresses ~on par with the source (same codec), so the
-    input-bytes heuristic lands near target size; exactness doesn't
-    matter — what matters is O(total/target) files instead of
-    O(append count).
-
-    A hive-partitioned source (``dt=K/`` directories) must pass the
-    SAME columns as ``partition_by`` to keep its layout — otherwise
-    the rewrite deliberately flattens partitions into data columns
-    (valid, but readers lose directory pruning and a swapped-in
-    directory must not keep receiving partitioned appends). With
-    ``partition_by`` the rewrite range-partitions on (partition cols,
-    row key): the range sampler allocates tasks PROPORTIONAL to row
-    counts, so a large hive partition splits into several ~target-sized
-    files while small partitions share a task — not one-file-per-
-    partition. The row key is ``sort_within_by`` when given (the range
-    exchange then pre-orders the in-file sort) else a hash of the data
-    columns. Sizing is still computed from the global byte count.
-
-    File sizing/counting goes through the Hadoop FileSystem API (the
-    same resolver Spark's own reads use), so any supported URI works —
-    s3a/gs/hdfs/file — not just driver-local paths.
-    """
-    import math
-
-    src_bytes = _parquet_bytes(spark, src_path)
-    if src_bytes == 0:
-        raise ValueError(
-            f"no parquet data found under {src_path!r} — nothing to compact"
-        )
-    n_files = max(1, math.ceil(src_bytes / target_file_bytes))
-    df = spark.read.parquet(src_path)
-    if partition_by:
-        data_cols = [c for c in df.columns if c not in partition_by]
-        if sort_within_by:
-            tail = [F.col(c) for c in sort_within_by]
-        elif data_cols:
-            tail = [F.hash(*data_cols)]
-        else:
-            # pure partition-key table: nothing to split within a
-            # partition value, fall back to the plain layout
-            tail = []
-        df = df.repartitionByRange(n_files, *partition_by, *tail)
-    else:
-        df = df.repartition(n_files)
-    if sort_within_by:
-        df = df.sortWithinPartitions(*sort_within_by)
-    # the writer records the PHYSICAL plan's schema; the repartition
-    # exchange can strip column metadata the source footers carried
-    # (e.g. a similarity index's build-param stamp), silently
-    # de-stamping the compacted table — same hazard as the upsert sink
-    w = preserve_column_metadata(df).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(dst_path)
-    return _parquet_file_count(spark, dst_path)
-
-
 def _hadoop_parquet_files(spark, path: str):
     """(path, length) for every VISIBLE ``*.parquet`` under ``path``
     via the Hadoop FileSystem API — works for any URI scheme Spark can
@@ -811,181 +585,3 @@ def _hadoop_parquet_files(spark, path: str):
 
 def _parquet_bytes(spark, path: str) -> int:
     return sum(n for _, n in _hadoop_parquet_files(spark, path))
-
-
-def _parquet_file_count(spark, path: str) -> int:
-    return sum(1 for _ in _hadoop_parquet_files(spark, path))
-
-
-# ---------------------------------------------------------------------------
-# Packed-shard export (round 11): pack_sequences → parquet shards with
-# APPEND-ONLY incremental growth. Unlike write_training_shards (content-
-# hash sharding — the right layout for one-shot randomized exports, but
-# every append touches every shard), packed shards are keyed by the
-# SEQUENTIAL example_id, so corpus growth only ever rewrites the one
-# boundary shard and writes new ones — the incremental-export layout.
-# ---------------------------------------------------------------------------
-
-_PACK_META = "_PACK_META"
-
-
-def _pack_meta_path(path: str) -> str:
-    return os.path.join(path, _PACK_META)
-
-
-def read_pack_meta(path: str) -> dict:
-    """The export's stored continuation state (the packing analog of
-    streaming/cdc.py's _HWM sidecar): total_tokens is what
-    pack_sequences_incremental needs as its base, budget and
-    examples_per_shard pin the layout so a mismatched append fails
-    loudly instead of silently splitting at different boundaries."""
-    import json
-
-    with open(_pack_meta_path(path), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def _write_pack_meta(path: str, meta: dict) -> None:
-    import json
-
-    os.makedirs(path, exist_ok=True)
-    with open(_pack_meta_path(path), "w", encoding="utf-8") as f:
-        json.dump(meta, f)
-
-
-def _write_example_shards(examples: DataFrame, path: str, eps: int) -> None:
-    """One parquet file per shard dir, rows ordered by example_id —
-    byte-reproducible, and with DYNAMIC partition overwrite only the
-    shard dirs present in ``examples`` are replaced (the no-rewrite
-    property the incremental path depends on).
-
-    Every column is normalized to NULLABLE first: a from-scratch frame
-    carries not-null groupBy keys (parquet then omits definition
-    levels) while the incremental path unions read-back parquet
-    (all-nullable) — same rows, different file bytes. Pinning
-    nullability pins the encoding, which is what makes
-    incremental ≡ from-scratch BYTE-identical, not just row-identical.
-    """
-    from pyspark.sql import types as T
-
-    nullable = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in examples.schema.fields]
-    )
-    # union with an empty all-nullable relation: output nullability is
-    # the OR of the sides, and unlike a when(true, c) wrapper or
-    # DataFrame.to(), Catalyst cannot fold it back to not-null
-    spark = examples.sparkSession
-    out = (
-        spark.createDataFrame([], nullable)
-        .unionByName(examples)
-        .withColumn("shard", F.expr(f"example_id DIV {int(eps)}").cast("int"))
-    )
-    (
-        out.repartition(F.col("shard"))
-        .sortWithinPartitions("shard", "example_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
-def write_packed_shards(
-    examples: DataFrame, path: str, examples_per_shard: int, budget: int
-) -> dict:
-    """From-scratch export of :func:`..operators.packing.assemble_examples`
-    output: shard ``example_id DIV examples_per_shard``, one file per
-    shard dir, plus the ``_PACK_META`` continuation sidecar. Returns
-    the stored meta. ``budget`` is recorded (not applied) — appends
-    must pack with the same budget or the boundary arithmetic breaks.
-    """
-    if examples_per_shard < 1:
-        raise ValueError("examples_per_shard must be >= 1")
-    total = examples.agg(F.sum("n_tokens")).first()[0] or 0
-    _write_example_shards(examples, path, examples_per_shard)
-    meta = {
-        "total_tokens": int(total),
-        "budget": int(budget),
-        "examples_per_shard": int(examples_per_shard),
-    }
-    _write_pack_meta(path, meta)
-    return meta
-
-
-def write_packed_shards_incremental(
-    new_examples: DataFrame, path: str, budget: int
-) -> dict:
-    """Append-only growth: merge the (possibly partial) boundary
-    example with its stored half, rewrite ONLY the boundary shard and
-    the new ones, advance the sidecar. ``new_examples`` must come from
-    ``assemble_examples(pack_sequences_incremental(new_docs,
-    meta["total_tokens"], budget))`` — its first example id is the
-    stored boundary, its boundary row carries only the NEW tokens.
-
-    Untouched shards are genuinely untouched (dynamic partition
-    overwrite replaces only the shard dirs present in the frame) and
-    the result is byte-identical to a from-scratch export of the full
-    corpus — both properties are unit-pinned. The boundary-shard
-    read-back is one shard file (≤ examples_per_shard rows), not a
-    corpus scan; everything else is the same one-shuffle write as the
-    from-scratch path.
-    """
-    spark = new_examples.sparkSession
-    meta = read_pack_meta(path)
-    if int(meta["budget"]) != int(budget):
-        raise ValueError(
-            f"budget {budget} != stored {meta['budget']} — appends must "
-            "pack with the export's original budget"
-        )
-    eps = int(meta["examples_per_shard"])
-    base_total = int(meta["total_tokens"])
-    new_total = base_total + int(
-        new_examples.agg(F.sum("n_tokens")).first()[0] or 0
-    )
-    boundary_ex = base_total // budget
-    shard_b = boundary_ex // eps
-    merged = new_examples
-    shard_dir = os.path.join(path, f"shard={shard_b}")
-    if os.path.isdir(shard_dir):
-        old = spark.read.parquet(shard_dir).select(
-            "example_id", "n_tokens", "n_docs", "text"
-        )
-        if base_total % budget:
-            # the stored boundary row and the incoming partial row are
-            # two halves of ONE example whose segments abut — fuse
-            # text in STREAM order (old half first), sum the counts.
-            # collect_list arrival order is not deterministic, so the
-            # halves are tagged and array_sort'ed — the same
-            # struct-sort discipline assemble_examples uses
-            both = (
-                old.where(F.col("example_id") == boundary_ex)
-                .withColumn("__half", F.lit(0))
-                .unionByName(
-                    merged.where(F.col("example_id") == boundary_ex)
-                    .withColumn("__half", F.lit(1))
-                )
-            )
-            fused = both.groupBy("example_id").agg(
-                F.sum("n_tokens").cast("long").alias("n_tokens"),
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct(F.col("__half"), F.col("text")))
-                        ),
-                        lambda s: s["text"],
-                    ),
-                    " ",
-                ).alias("text"),
-            )
-            merged = (
-                old.where(F.col("example_id") != boundary_ex)
-                .unionByName(fused)
-                .unionByName(merged.where(F.col("example_id") != boundary_ex))
-            )
-        else:
-            merged = old.unionByName(merged)
-    _write_example_shards(merged, path, eps)
-    meta = dict(meta, total_tokens=new_total)
-    _write_pack_meta(path, meta)
-    return meta

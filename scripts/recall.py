@@ -232,11 +232,12 @@ def rerank_main() -> None:
     Env (round 15 — VERDICT r14 item 3): ``SPARK_GRAFT_RP_TASK_ROWS``
     bounds the Arrow projection leg's per-task rows by construction
     (threads ``max_rows_per_task`` through shortlisted_cosine_topk);
-    ``SPARK_GRAFT_ARROW_BATCH`` caps per-batch rows at the session
-    level. Use both with a lowered ``SPARK_DRIVER_MEM`` (the one
-    driver-heap variable, read by ``session.get_spark``; default 8g)
-    on memory-tight single-node runs — the 32M straggler kill was the
-    Python worker losing the box-OOM race to an 80g JVM.
+    the session's Arrow batch cap is fixed at 10,000 rows
+    (``get_spark(extra_conf=...)`` overrides it). Use the env with a
+    lowered ``SPARK_DRIVER_MEM`` (the one JVM heap variable, read by
+    ``session.get_spark``; default 8g) on memory-tight single-node
+    runs — the 32M straggler kill was the Python worker losing the
+    box-OOM race to an 80g JVM.
 
     ``inflate`` > 1 unions (inflate−1) blocks of fully SYNTHETIC
     hash-random vectors (deterministic per (vec_id, dim) — near-

@@ -214,9 +214,7 @@ def skew_main() -> None:
     units, FL ~10% of states): a shuffle join where one key's partition
     dwarfs the rest. Verifies AQE's skew-join splitting actually
     engages (`isSkew=true` in the final adaptive plan) and the join
-    finishes without a straggler dominating wall-clock; the salting
-    operator (`operators/skew.py`) remains the manual fallback for
-    engines/settings without AQE.
+    finishes without a straggler dominating wall-clock.
     """
     n_rows = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000_000
 
@@ -646,128 +644,6 @@ def rules_main() -> None:
     assert len(stages) == 1, "rule chain must fuse into ONE codegen span"
 
 
-def incremental_main() -> None:
-    """Incremental-dedup amortization: per-batch cost vs corpus rerun.
-
-    Builds a mult× corpus (same decorrelated union as --docs), times
-    (a) the one-time near-dup index build + materialization, (b) a
-    1k-doc batch deduped against the materialized index via
-    neardup_query, and (c) the honest alternative — re-running
-    neardup_pairs over corpus ∪ batch. The claim under test: (b) is
-    far cheaper than (c) and stays flat as the corpus grows, because
-    per-batch work is batch-minhash + band equi-join + candidate
-    verify, never a corpus re-minhash.
-    """
-    mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    sf_dir = "/root/testdata/sf0.1"
-
-    from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
-
-    spark = _session("stress-incremental", 64)
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    n0 = docs.count()
-    parts = [
-        docs.select(
-            (F.col("doc_id") + F.lit(i * n0)).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(f" c{i}")).alias("text"),
-        )
-        for i in range(mult)
-    ]
-    corpus = parts[0]
-    for p in parts[1:]:
-        corpus = corpus.unionByName(p)
-    corpus = corpus.repartition(64).persist(StorageLevel.MEMORY_AND_DISK)
-    n = corpus.count()
-    # batch = 1k fresh docs: half salted (new content), half near-dups
-    # of corpus docs (so the query path has real matches to find)
-    base = docs.where(F.col("doc_id") < 1000)
-    batch = base.select(
-        (F.col("doc_id") + F.lit(mult * n0)).alias("doc_id"),
-        F.when(
-            F.col("doc_id") % 2 == 0, F.concat(F.col("text"), F.lit(" fresh z"))
-        ).otherwise(F.col("text")).alias("text"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    nb = batch.count()
-    print(f"corpus rows: {n}, batch rows: {nb}")
-
-    t0 = time.time()
-    index = dedup.neardup_index(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    index.count()
-    print(f"index build+materialize (one-time): {time.time()-t0:.1f}s")
-
-    t0 = time.time()
-    matches = dedup.neardup_query(index, batch, threshold=0.8)
-    nm = matches.count()
-    print(f"neardup_query batch-vs-index ({nm} matches): {time.time()-t0:.1f}s")
-
-    t0 = time.time()
-    full = dedup.neardup_pairs(corpus.unionByName(batch), threshold=0.8)
-    nf = full.count()
-    print(f"full neardup_pairs rerun on corpus+batch ({nf} pairs): {time.time()-t0:.1f}s")
-
-    index.unpersist()
-    corpus.unpersist()
-    batch.unpersist()
-    leftover = spark.sparkContext._jsc.getPersistentRDDs().size()
-    print(f"persistent storage entries after run: {leftover}")
-
-
-def shards_main() -> None:
-    """Training-shard export at scale: the global content-hash shuffle.
-
-    mult× docs corpus → write_training_shards into n_shards; verifies
-    the one-file-per-shard layout contract survives scale and times the
-    shuffle+sort+write. At 100 TB the same plan runs with thousands of
-    shards; what must hold is one task per shard and deterministic
-    within-shard order — both asserted here.
-    """
-    import glob
-    import shutil
-
-    mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    n_shards = int(sys.argv[3]) if len(sys.argv) > 3 else 64
-    sf_dir = "/root/testdata/sf0.1"
-
-    from pyspark.sql import functions as F
-
-    spark = _session("stress-shards", 64)
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n0 = docs.count()
-    parts = [
-        docs.select(
-            (F.col("doc_id") + F.lit(i * n0)).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(f" c{i}")).alias("text"),
-        )
-        for i in range(mult)
-    ]
-    big = parts[0]
-    for p in parts[1:]:
-        big = big.unionByName(p)
-    n = big.count()
-    out = "/tmp/stress_shards"
-    shutil.rmtree(out, ignore_errors=True)
-
-    t0 = time.time()
-    sinks.write_training_shards(big, out, n_shards=n_shards)
-    secs = time.time() - t0
-    dirs = sorted(glob.glob(f"{out}/shard=*"))
-    per_dir = [len([f for f in glob.glob(f"{d}/*") if f.endswith(".parquet")]) for d in dirs]
-    rows = spark.read.parquet(out).count()
-    print(
-        f"write_training_shards {n} rows -> {len(dirs)} shards in {secs:.1f}s; "
-        f"one-file-per-shard: {set(per_dir) == {1}}; rows preserved: {rows == n}"
-    )
-    assert set(per_dir) == {1} and rows == n
-    shutil.rmtree(out, ignore_errors=True)
-
-
 def scd2_main() -> None:
     """SCD2 scale probe (VERDICT r5 item 4): 10M-row dim × 1M-row
     change batch.
@@ -989,64 +865,6 @@ def entity_main() -> None:
             )
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def sketches_main() -> None:
-    """HLL sketch rollup vs exact distinct at 10M rows (round 6).
-
-    The claim to quantify: once the per-day sketch table exists,
-    every coarser distinct-count rollup reads the (tiny) sketch table
-    instead of re-shuffling the raw corpus — and an incremental load
-    updates it by appending one day's sketches.
-    """
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
-
-    from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
-
-    spark = _session("stress-sketches", 64)
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import sketches
-
-    ev = (
-        spark.range(n)
-        .selectExpr(
-            "cast(id % 90 as string) day",
-            "cast((id * 2654435761) % 3000000 as long) user_id",
-            "cast(id % 5 as string) kind",
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ev.count()
-
-    t0 = time.time()
-    exact = ev.groupBy("kind").agg(F.count_distinct("user_id").alias("n"))
-    exact_rows = {r.kind: r.n for r in exact.collect()}
-    print(f"exact distinct by kind (raw shuffle): {time.time()-t0:.1f}s")
-
-    t0 = time.time()
-    sk = sketches.distinct_sketch_table(ev, ["day", "kind"], "user_id").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    n_groups = sk.count()
-    print(f"sketch table build ({n_groups} groups): {time.time()-t0:.1f}s")
-
-    t0 = time.time()
-    est = {
-        r.kind: r.n_distinct_approx
-        for r in sketches.rollup_estimate(sk, ["kind"]).collect()
-    }
-    print(f"rollup from sketches: {time.time()-t0:.2f}s")
-    errs = [abs(est[k] - exact_rows[k]) / exact_rows[k] for k in exact_rows]
-    print(f"max rel err vs exact: {max(errs):.4f}")
-
-    # incremental: one new day's sketches + merge with the table
-    t0 = time.time()
-    new_day = ev.where(F.col("day") == "0").withColumn("day", F.lit("90"))
-    delta = sketches.distinct_sketch_table(new_day, ["day", "kind"], "user_id")
-    merged = sketches.merge_sketch_tables([sk, delta], ["day", "kind"])
-    m = merged.count()
-    print(f"incremental day append + merge ({m} groups): {time.time()-t0:.1f}s")
 
 
 def retrieval_main() -> None:
@@ -1477,104 +1295,6 @@ def excel_main() -> None:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def packing_incr_main() -> None:
-    """Incremental packing END-TO-END probe (round 12): compose
-    pack_sequences_incremental → assemble_examples →
-    write_packed_shards_incremental at multi-million-doc scale and
-    prove the append costs the BATCH, not the corpus: wall time vs a
-    from-scratch repack of the grown corpus, plus the shard-rewrite
-    count (must be the boundary shard + the new shards only).
-
-    Usage: python scripts/stress.py --packing-incr [base_docs] [batch_docs]
-    """
-    base_n = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000_000
-    batch_n = int(sys.argv[3]) if len(sys.argv) > 3 else max(base_n // 100, 1)
-    budget, eps = 4096, 256
-
-    import glob
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    spark = _session("stress-packing-incr", 64)
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import packing
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    def docs(lo: int, hi: int):
-        # 4..10 tokens per doc, deterministic words
-        return spark.range(lo, hi).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.sequence(F.lit(0), (F.col("id") % 7) + 3),
-                    lambda i: F.concat(
-                        F.lit("w"),
-                        ((F.col("id") * 13 + i * 7) % 997).cast("string"),
-                    ),
-                ),
-            ).alias("text"),
-        )
-
-    def shard_files(path: str) -> dict[str, frozenset]:
-        return {
-            d: frozenset(os.listdir(d))
-            for d in glob.glob(os.path.join(path, "shard=*"))
-        }
-
-    root = tempfile.mkdtemp(prefix="packincr-")
-    try:
-        scratch = os.path.join(root, "base")
-        t0 = time.time()
-        ex = packing.assemble_examples(
-            packing.pack_sequences(docs(0, base_n), budget=budget)
-        )
-        meta = sinks.write_packed_shards(ex, scratch, eps, budget)
-        t_base = time.time() - t0
-        before = shard_files(scratch)
-        print(
-            f"from-scratch base: {base_n} docs, {meta['total_tokens']} "
-            f"tokens, {len(before)} shards, {t_base:.1f}s"
-        )
-
-        t0 = time.time()
-        ex2 = packing.assemble_examples(
-            packing.pack_sequences_incremental(
-                docs(base_n, base_n + batch_n), meta["total_tokens"], budget
-            )
-        )
-        meta2 = sinks.write_packed_shards_incremental(ex2, scratch, budget)
-        t_incr = time.time() - t0
-        after = shard_files(scratch)
-        rewritten = sorted(
-            d for d in after if before.get(d) != after[d]
-        )
-        untouched = sum(1 for d in before if before[d] == after.get(d))
-        print(
-            f"incremental append: {batch_n} docs -> "
-            f"{meta2['total_tokens'] - meta['total_tokens']} tokens, "
-            f"{t_incr:.1f}s; shards rewritten/added: {len(rewritten)} "
-            f"(boundary + new), untouched: {untouched}/{len(before)}"
-        )
-
-        t0 = time.time()
-        ex_full = packing.assemble_examples(
-            packing.pack_sequences(docs(0, base_n + batch_n), budget=budget)
-        )
-        sinks.write_packed_shards(
-            ex_full, os.path.join(root, "repack"), eps, budget
-        )
-        t_repack = time.time() - t0
-        print(
-            f"from-scratch repack of {base_n + batch_n} docs: {t_repack:.1f}s "
-            f"-> append is {t_repack / max(t_incr, 1e-9):.1f}x cheaper"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def packing_main() -> None:
     """Sequence-packing scale probe (round 10): pack N synthetic docs
     (variable token counts) into budget-sized examples and verify the
@@ -1639,259 +1359,6 @@ def packing_main() -> None:
     )
     print("invariants hold by aggregate ✓")
     spark.stop()
-
-
-def cdc_restart_main() -> None:
-    """Stored-HWM tombstone-compaction RESTART probe (VERDICT r9 item
-    3). Three phases, each in its OWN SparkSession (stopped between
-    phases — a genuine process-state restart, not just a fresh call):
-
-    1. delete-heavy batches up to seq max S with ``tombstone_window=W``
-       → records retained-tombstone count and the stored ``_HWM``;
-    2. RESTART, then a late out-of-order batch whose own max sequence
-       is far below S−W: asserts (a) every change in it that targets a
-       tombstoned key is rejected, (b) the stored mark is unchanged
-       (monotone — batch-local marking would have derived a lower
-       one), (c) retained tombstones within the window are NOT
-       over-compacted and the snapshot row set is unchanged except
-       for genuinely-fresh keys;
-    3. RESTART, then an on-time batch advancing the mark: asserts
-       compaction resumes exactly at new-mark − W.
-    """
-    snap_n = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
-    batch_n = snap_n // 20
-    window = batch_n  # retain one batch's worth of sequence skew
-
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    work = tempfile.mkdtemp(prefix="cdcrestart-")
-    table = f"{work}/table"
-
-    # ---- phase 1: delete-heavy history, window on --------------------
-    spark = _session("stress-cdc-restart-p1", 32)
-    init = spark.range(snap_n).selectExpr(
-        "id AS k", "cast(id % 97 AS string) AS v"
-    )
-    cdc.snapshot_init(init, table)
-    n_batches = 6
-    t0 = time.time()
-    for b in range(n_batches):
-        deletes = spark.range(batch_n).select(
-            ((F.col("id") * 17 + b * batch_n) % snap_n).alias("k"),
-            F.lit(None).cast("string").alias("v"),
-            F.lit("D").alias("op"),
-            (F.lit(b * batch_n) + F.col("id")).alias("seq"),
-        )
-        cdc.apply_cdc_batch(spark, table, deletes, "k", tombstone_window=window)
-    s_max = n_batches * batch_n - 1
-    hwm1 = cdc._read_hwm(table, cdc.latest_version(table))
-    internal = cdc.read_snapshot(spark, table, internal=True)
-    stones1 = internal.where("__cdc_deleted").count()
-    min_stone_seq = internal.where("__cdc_deleted").agg(
-        F.min("__cdc_seq")
-    ).collect()[0][0]
-    rows1 = cdc.read_snapshot(spark, table).count()
-    print(
-        f"phase 1: {n_batches} delete batches in {time.time()-t0:.1f}s, "
-        f"hwm={hwm1} (expect {s_max}), {stones1} tombstones retained, "
-        f"min tombstone seq {min_stone_seq} (threshold {s_max - window})"
-    )
-    assert hwm1 == s_max
-    assert min_stone_seq > s_max - window  # window honoured, not exceeded
-    spark.stop()
-
-    # ---- phase 2: RESTART + late out-of-order batch ------------------
-    spark = _session("stress-cdc-restart-p2", 32)
-    late_max = batch_n // 2  # far below s_max − window
-    late = spark.range(batch_n // 4).select(
-        # half target RETAINED tombstones (last delete batch — their
-        # seqs are way above these late seqs, so the per-key stale
-        # filter must reject every one), half target far-beyond-
-        # snapshot fresh keys (must apply). Keys whose tombstones were
-        # already compacted are deliberately NOT targeted: a change
-        # later than the promised window resurrecting one is the
-        # documented source-violating boundary, not this probe.
-        F.when(
-            F.col("id") % 2 == 0,
-            (F.col("id") * 17 + (n_batches - 1) * batch_n) % snap_n,
-        )
-        .otherwise(F.lit(2 * snap_n) + F.col("id"))
-        .alias("k"),
-        F.lit("late").alias("v"),
-        F.lit("U").alias("op"),
-        (F.col("id") % late_max).alias("seq"),
-    )
-    n_fresh = batch_n // 4 - batch_n // 8  # the odd-id half
-    t0 = time.time()
-    cdc.apply_cdc_batch(spark, table, late, "k", tombstone_window=window)
-    hwm2 = cdc._read_hwm(table, cdc.latest_version(table))
-    internal = cdc.read_snapshot(spark, table, internal=True)
-    stones2 = internal.where("__cdc_deleted").count()
-    zombies = (
-        cdc.read_snapshot(spark, table)
-        .where((F.col("v") == "late") & (F.col("k") < snap_n))
-        .count()
-    )
-    applied_fresh = (
-        cdc.read_snapshot(spark, table).where(F.col("k") >= 2 * snap_n).count()
-    )
-    print(
-        f"phase 2 (restart + late batch, own max seq {late_max - 1}): "
-        f"{time.time()-t0:.1f}s, hwm={hwm2} (monotone, expect {s_max}), "
-        f"tombstones {stones1}→{stones2}, zombie resurrections {zombies}, "
-        f"fresh keys applied {applied_fresh}/{n_fresh}"
-    )
-    assert hwm2 == s_max  # batch-local marking would say late_max − 1
-    assert zombies == 0  # (a) tombstoned keys reject the late update
-    assert stones2 == stones1  # (c) no over-compaction from a low mark
-    assert applied_fresh == n_fresh
-    spark.stop()
-
-    # ---- phase 3: RESTART + on-time batch advances the mark ----------
-    spark = _session("stress-cdc-restart-p3", 32)
-    new_max = s_max + window // 2
-    ontime = spark.range(batch_n // 8).select(
-        (F.lit(3 * snap_n) + F.col("id")).alias("k"),
-        F.lit("p3").alias("v"),
-        F.lit("I").alias("op"),
-        (F.lit(new_max) - F.col("id")).alias("seq"),
-    )
-    cdc.apply_cdc_batch(spark, table, ontime, "k", tombstone_window=window)
-    hwm3 = cdc._read_hwm(table, cdc.latest_version(table))
-    internal = cdc.read_snapshot(spark, table, internal=True)
-    stones3 = internal.where("__cdc_deleted").count()
-    min_stone_seq3 = internal.where("__cdc_deleted").agg(
-        F.min("__cdc_seq")
-    ).collect()[0][0]
-    print(
-        f"phase 3 (restart + on-time batch): hwm={hwm3} (expect {new_max}), "
-        f"tombstones {stones2}→{stones3}, min tombstone seq "
-        f"{min_stone_seq3} (threshold {new_max - window})"
-    )
-    assert hwm3 == new_max
-    assert stones3 < stones2  # compaction resumed…
-    assert min_stone_seq3 > new_max - window  # …exactly at mark − W
-    print("stored-HWM restart semantics hold across 3 sessions ✓")
-    spark.stop()
-    shutil.rmtree(work, ignore_errors=True)
-
-
-def cdc_stream_main() -> None:
-    """Streaming-CDC end-to-end replay probe (VERDICT r6 item 6).
-
-    Sustained micro-batches through ``stream_cdc_apply`` with (a)
-    OUT-OF-ORDER file delivery (maxFilesPerTrigger=1 over files whose
-    listing order scrambles the sequence order), (b) a forced REPLAY
-    (a second run from a fresh checkpoint re-delivers every batch on
-    top of the already-replicated table), and (c) a delete-heavy
-    workload with and without ``tombstone_window``. Asserts the final
-    snapshot equals the one-shot batch ``cdc_apply`` result BIT-
-    EXACTLY (exceptAll both ways) and prints per-batch publish
-    overhead and tombstone retention.
-    """
-    snap_n = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
-    n_batches = 8
-    batch_n = snap_n // 20
-
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    spark = _session("stress-cdc-stream", 32)
-
-    from sales_analytics_etl_sql_powerbi_spark.operators.dims import cdc_apply
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    work = tempfile.mkdtemp(prefix="cdcstream-")
-    src = f"{work}/src"
-    schema = "k long, v string, op string, seq long"
-
-    init = spark.range(snap_n).selectExpr("id AS k", "cast(id % 97 AS string) AS v")
-
-    def batch_frame(b: int):
-        # each batch touches a striped key range; ops mixed I/U/D;
-        # seq strictly increasing across batches (b * batch_n + i)
-        return spark.range(batch_n).select(
-            ((F.col("id") * 31 + b) % (snap_n + snap_n // 10)).alias("k"),
-            F.concat(F.lit(f"b{b}-"), F.col("id").cast("string")).alias("v"),
-            F.when(F.col("id") % 5 == 3, F.lit("D"))
-            .when(F.col("id") % 5 == 4, F.lit("I"))
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            (F.lit(b * batch_n) + F.col("id")).alias("seq"),
-        )
-
-    # write one file per batch, NAMED so directory-listing order
-    # scrambles sequence order (file sources tie-break equal mtimes by
-    # path) — batch 7 lists first, 0 last
-    all_changes = None
-    for b in range(n_batches):
-        bf = batch_frame(b)
-        bf.coalesce(1).write.mode("append").parquet(f"{src}/f{n_batches - b:02d}")
-        all_changes = bf if all_changes is None else all_changes.unionByName(bf)
-    all_changes = all_changes.localCheckpoint(eager=True)
-
-    # ---- batch reference: one-shot cdc_apply over the union --------------
-    ref = cdc_apply(init, all_changes, "k").localCheckpoint(eager=True)
-    print(f"batch reference rows: {ref.count()}")
-
-    # ---- streamed replication, out-of-order delivery ---------------------
-    table = f"{work}/table"
-    cdc.snapshot_init(init, table)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/f*")
-    )
-    t0 = time.time()
-    q = cdc.stream_cdc_apply(stream, table, "k", checkpoint_dir=f"{work}/ckpt1")
-    q.awaitTermination(600)
-    dt = time.time() - t0
-    v1 = cdc.latest_version(table)
-    print(
-        f"stream run 1 (out-of-order): {dt:.1f}s, {v1} versions published, "
-        f"{dt / max(v1, 1):.1f}s/batch publish-then-swap"
-    )
-    got = cdc.read_snapshot(spark, table)
-    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
-    print("snapshot == batch cdc_apply result (bit-exact) ✓")
-
-    # ---- forced replay: fresh checkpoint re-delivers EVERY batch ---------
-    t0 = time.time()
-    q = cdc.stream_cdc_apply(stream, table, "k", checkpoint_dir=f"{work}/ckpt2")
-    q.awaitTermination(600)
-    print(f"stream run 2 (full replay): {time.time()-t0:.1f}s")
-    got = cdc.read_snapshot(spark, table)
-    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
-    print("replayed snapshot still == batch result (idempotent merge) ✓")
-
-    # ---- delete-heavy: tombstone growth, with/without the window ---------
-    for window in (None, batch_n * 2):
-        tbl = f"{work}/tbl_del_{window}"
-        cdc.snapshot_init(init, tbl)
-        for b in range(n_batches):
-            deletes = spark.range(batch_n).select(
-                ((F.col("id") * 17 + b * batch_n) % snap_n).alias("k"),
-                F.lit(None).cast("string").alias("v"),
-                F.lit("D").alias("op"),
-                (F.lit(b * batch_n) + F.col("id")).alias("seq"),
-            )
-            cdc.apply_cdc_batch(
-                spark, tbl, deletes, "k", tombstone_window=window
-            )
-        internal = cdc.read_snapshot(spark, tbl, internal=True)
-        stones = internal.where("__cdc_deleted").count()
-        print(
-            f"delete-heavy, tombstone_window={window}: "
-            f"{stones} tombstones retained of ~{n_batches * batch_n} deletes"
-        )
-    shutil.rmtree(work, ignore_errors=True)
 
 
 def graph_main() -> None:
@@ -2035,8 +1502,8 @@ def concurrent_append_main() -> None:
 
 
 def aggregates_main() -> None:
-    """Histogram + frequent-items at 10M rows (round 6): the other two
-    mergeable-aggregate families, measured like --sketches."""
+    """Histogram quantiles at 10M rows (round 6): the mergeable
+    histogram table against the exact full-sort percentile."""
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
 
     from pyspark.sql import functions as F
@@ -2075,21 +1542,6 @@ def aggregates_main() -> None:
     ex = {r.g: r.p for r in exact}
     err = max(abs(q[(g, 0.95)] - ex[g]) for g in ex)
     print(f"max |hist p95 - exact p95|: {err:.1f} (bin width {100000/256:.1f})")
-
-    # frequent tokens over a synthetic zipf-ish token stream
-    from sales_analytics_etl_sql_powerbi_spark.operators import frequency
-
-    docs = spark.range(n // 10).selectExpr(
-        "id AS doc_id",
-        "concat('t', cast(id % 7 AS string), ' t', cast(id % 97 AS string),"
-        " ' tail', cast(id AS string)) AS text",
-    )
-    t0 = time.time()
-    top = frequency.frequent_tokens_approx(docs, topk=10, capacity=2000).collect()
-    print(
-        f"frequent_tokens_approx over {3 * n // 10} tokens: {time.time()-t0:.1f}s; "
-        f"top1={top[0].token} [{top[0].count_min}, {top[0].count_max}]"
-    )
 
 
 def bpe_main() -> None:
@@ -2463,10 +1915,6 @@ if __name__ == "__main__":
         vectors_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--state":
         state_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--incremental":
-        incremental_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--shards":
-        shards_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--scd2":
         scd2_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--entity":
@@ -2475,14 +1923,8 @@ if __name__ == "__main__":
         entity_zipf_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--lsh-cap":
         lsh_cap_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--cdc-stream":
-        cdc_stream_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--cdc-restart":
-        cdc_restart_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--packing":
         packing_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--packing-incr":
-        packing_incr_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--excel":
         excel_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--corpus-e2e":
@@ -2493,8 +1935,6 @@ if __name__ == "__main__":
         bpe_ids_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--tokmix":
         tokmix_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--sketches":
-        sketches_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--retrieval":
         retrieval_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--cdc":

@@ -164,71 +164,6 @@ def test_neardup_clusters_accepts_precomputed_pairs(spark):
     assert rounds and rounds[-1][1] == 0
 
 
-def test_exact_dedup_incremental_filters_known_content(spark):
-    old = docs_frame(spark)  # contains doc 0's text (and its dup 2)
-    known = dedup.exact_dedup(old)
-    batch = spark.createDataFrame(
-        [
-            (10, "the quick brown fox jumps over the lazy dog"),  # known content
-            (11, "a genuinely new document about gradient descent"),
-            (12, "a genuinely new document about gradient descent"),  # intra-batch dup
-        ],
-        DOCS,
-    )
-    out = dedup.exact_dedup_incremental(batch, known).collect()
-    # known content dropped; intra-batch dup collapsed to min(doc_id)
-    assert [(r.canonical_doc_id, r.dup_count) for r in out] == [(11, 2)]
-
-
-def test_neardup_query_matches_full_pairs_on_union(spark):
-    """Incremental index/query == the full-corpus pair run, restricted
-    to pairs whose LATER doc is in the batch (new ids sort above old
-    ones here, so that restriction is exactly 'pairs the incremental
-    path is responsible for finding')."""
-    all_docs = docs_frame(spark).unionByName(
-        spark.createDataFrame(
-            [
-                (10, "the quick brown fox jumps over the lazy dog"),  # dup of 0/2
-                (11, "the quick brown fox jumps over a lazy dog"),  # near-dup
-                (12, "the quick brown fox jumps over a lazy dog"),  # dup of 11
-            ],
-            DOCS,
-        )
-    )
-    old = all_docs.where(F.col("doc_id") < 10)
-    batch = all_docs.where(F.col("doc_id") >= 10)
-    thr = 0.5
-    full = dedup.neardup_pairs(all_docs, threshold=thr)
-    expected = {
-        (r.doc_b, r.doc_a, round(r.jaccard, 9))
-        for r in full.collect()
-        if r.doc_b >= 10
-    }
-    inc = dedup.neardup_query(dedup.neardup_index(old), batch, threshold=thr)
-    got = {(r.doc_id, r.dup_of, round(r.jaccard, 9)) for r in inc.collect()}
-    assert got == expected
-    assert expected  # the fixture must actually exercise cross + intra pairs
-    assert any(d >= 10 and o < 10 for d, o, _ in expected)  # cross old/new
-    assert any(d >= 10 and o >= 10 for d, o, _ in expected)  # intra-batch
-
-
-def test_neardup_query_without_intra_batch(spark):
-    old = docs_frame(spark)
-    batch = spark.createDataFrame(
-        [
-            (10, "the quick brown fox jumps over the lazy dog"),
-            (11, "the quick brown fox jumps over the lazy dog"),
-        ],
-        DOCS,
-    )
-    inc = dedup.neardup_query(
-        dedup.neardup_index(old), batch, threshold=0.9, include_intra_batch=False
-    )
-    got = {(r.doc_id, r.dup_of) for r in inc.collect()}
-    # both batch docs match corpus docs 0 and 2; the 10<->11 pair is excluded
-    assert got == {(10, 0), (10, 2), (11, 0), (11, 2)}
-
-
 def test_simhash_neardup_pairs_exact_vs_bruteforce(spark):
     """Banded candidates + popcount verify must equal the brute-force
     all-pairs hamming computation (pigeonhole: no false negatives at
@@ -267,69 +202,6 @@ def test_simhash_neardup_validates_banding(spark):
 
     with pytest.raises(ValueError):
         dedup.simhash_neardup_pairs(docs_frame(spark), max_hamming=4, n_bands=4)
-
-
-def test_index_bands_match_grouped_minhash_bands(spark):
-    """The index's in-row fused minhash must be bit-identical to the
-    explode+groupBy signature path (drift here silently breaks
-    incremental-vs-full parity)."""
-    docs = docs_frame(spark)
-    # rebuild the band rows both ways and compare the full sets
-    sig = dedup.minhash_signatures(docs)
-    grouped_bands = {
-        (r.doc_id, r.band_id, r.band_hash)
-        for r in sig.select(
-            "doc_id", dedup.F.explode(dedup._band_structs()).alias("b")
-        )
-        .select("doc_id", "b.band_id", "b.band_hash")
-        .collect()
-    }
-    index_bands = {
-        (r.doc_id, r.band_id, r.band_hash)
-        for r in dedup._explode_bands(dedup.neardup_index(docs)).collect()
-    }
-    assert index_bands == grouped_bands
-
-
-def test_neardup_query_doc_id_collision_scores_right_text(spark):
-    """A doc_id present in BOTH index and batch must verify against its
-    own world's text, not the other's."""
-    old = spark.createDataFrame(
-        [(5, "alpha beta gamma delta epsilon zeta")], DOCS
-    )
-    batch = spark.createDataFrame(
-        [
-            (5, "totally unrelated content about something else entirely"),
-            (6, "alpha beta gamma delta epsilon zeta"),  # dup of INDEX doc 5
-        ],
-        DOCS,
-    )
-    out = dedup.neardup_query(dedup.neardup_index(old), batch, threshold=0.9)
-    rows = {(r.doc_id, r.dup_of): r.jaccard for r in out.collect()}
-    # batch doc 6 matches index doc 5 at jaccard 1.0 (same text);
-    # batch doc 5 (different text) matches nothing — in particular it
-    # must NOT appear scored against the index's sh_set for id 5
-    assert rows == {(6, 5): 1.0}
-
-
-def test_neardup_index_parquet_roundtrip_serves_queries(spark, tmp_path):
-    """The index/query split's cross-job claim: an index written to
-    parquet and read back must serve neardup_query identically to the
-    in-memory one (bands array-of-structs and sh_set survive the
-    round trip bit-for-bit)."""
-    old = docs_frame(spark)
-    batch = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog")], DOCS
-    )
-    mem_index = dedup.neardup_index(old)
-    p = str(tmp_path / "nd_index")
-    mem_index.write.parquet(p)
-    disk_index = spark.read.parquet(p)
-    mem = {(r.doc_id, r.dup_of, r.jaccard)
-           for r in dedup.neardup_query(mem_index, batch, threshold=0.5).collect()}
-    disk = {(r.doc_id, r.dup_of, r.jaccard)
-            for r in dedup.neardup_query(disk_index, batch, threshold=0.5).collect()}
-    assert mem == disk and mem
 
 
 def test_keep_canonical_drops_near_dups_keeps_min(spark):
@@ -596,47 +468,3 @@ def test_neardup_pairs_bucket_cap_threads_through(spark):
     counters = dedup.lsh_cap_audit(audit)
     assert counters["oversized_buckets"] == 8
     assert counters["dropped_entries"] == 8 * 16
-
-
-def test_neardup_index_stamp_validates_k(spark, tmp_path):
-    """Round 17: the materialized near-dup index carries (k, n_perm,
-    bands) in schema metadata; a mixed-k query — which silently
-    missed everything — now raises at plan build, including across a
-    parquet round-trip. Unstamped indexes keep the old contract."""
-    import pytest
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import dedup as D
-    from sales_analytics_etl_sql_powerbi_spark.operators.similarity import (
-        _read_stamp,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon {i}") for i in range(6)],
-        "doc_id long, text string",
-    )
-    idx = D.neardup_index(docs, k=3)
-    assert _read_stamp(idx, "bands") == {"k": 3, "n_perm": 16, "bands": 8}
-    batch = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon 0")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="k: index was built with 3"):
-        D.neardup_query(idx, batch, k=5)
-    # parquet round-trip keeps the stamp (and the raise)
-    p = str(tmp_path / "nd_idx")
-    idx.write.parquet(p)
-    disk = spark.read.parquet(p)
-    with pytest.raises(ValueError, match="k: index was built with 3"):
-        D.neardup_query(disk, batch, k=5)
-    # matching k over the round-tripped index still finds the dup
-    hits = D.neardup_query(disk, batch, k=3, threshold=0.5)
-    assert hits.count() >= 1
-    # round 18 (VERDICT r17 item 2): a TRUNCATED stamp — present but
-    # missing keys the builder always writes — raises instead of
-    # validating the partial key set as if complete
-    from sales_analytics_etl_sql_powerbi_spark.operators.similarity import (
-        _STAMP_KEY,
-    )
-
-    cut = idx.withMetadata("bands", {_STAMP_KEY: {"k": 3}})
-    with pytest.raises(ValueError, match="missing key.*bands.*n_perm"):
-        D.neardup_query(cut, batch, k=3)

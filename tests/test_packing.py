@@ -153,19 +153,11 @@ def test_assemble_examples_roundtrip(spark):
         assert r.n_docs >= 1
 
 
-def test_pack_assemble_shard_export_composition(spark, tmp_path):
-    """The full pre-training export chain: pack → assemble → shard
-    write. Examples spread across shards by content hash, every
-    example lands exactly once, and a rerun writes byte-identical
-    shards (the writer's determinism contract holding on PACKED
-    output, not just raw docs)."""
-    import hashlib
-    import os
-
-    from sales_analytics_etl_sql_powerbi_spark.sources.sinks import (
-        write_training_shards,
-    )
-
+def test_pack_assemble_shard_export_composition(spark):
+    """The pre-training export chain up to the shard write: pack →
+    assemble. Every example id lands exactly once, the example count
+    is ceil(total_tokens / budget), and the examples' text read in
+    example-id order is the corpus token stream in doc_id order."""
     docs = spark.range(60).select(
         (F.col("id") * 2).alias("doc_id"),
         F.concat_ws(
@@ -176,187 +168,16 @@ def test_pack_assemble_shard_export_composition(spark, tmp_path):
             ),
         ).alias("text"),
     )
-    examples = packing.assemble_examples(packing.pack_sequences(docs, budget=11))
-
-    def digest(root):
-        out = {}
-        for d in sorted(x for x in os.listdir(root) if x.startswith("shard=")):
-            full = os.path.join(root, d)
-            files = [f for f in os.listdir(full) if f.endswith(".parquet")]
-            assert len(files) == 1  # one file per shard
-            out[d] = hashlib.md5(
-                open(os.path.join(full, files[0]), "rb").read()
-            ).hexdigest()
-        return out
-
-    p1, p2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    write_training_shards(examples, p1, n_shards=4, key="example_id")
-    write_training_shards(examples, p2, n_shards=4, key="example_id")
-    assert digest(p1) == digest(p2)  # byte-reproducible
-    back = spark.read.parquet(p1 + "/shard=*")
-    assert back.count() == examples.count()
-    assert back.select("example_id").distinct().count() == examples.count()
-
-
-def test_pack_sequences_incremental_equals_full_repack(spark):
-    """Two-increment packing ≡ packing the whole corpus at once: the
-    stored token total is the only state; the boundary example is
-    continued, ids never shift."""
-    all_docs = spark.range(30).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.sequence(F.lit(1), (F.col("id") % 11) + 1),
-                lambda i: F.concat(F.lit("w"), i.cast("string")),
-            ),
-        ).alias("text"),
-    )
-    B = 13
-    full = sorted(tuple(r) for r in packing.pack_sequences(all_docs, budget=B).collect())
-    old = all_docs.where("doc_id < 17")
-    new = all_docs.where("doc_id >= 17")
-    base = old.selectExpr(
-        "sum(size(split(trim(text), ' +'))) AS t"
-    ).collect()[0]["t"]
-    part1 = packing.pack_sequences(old, budget=B).collect()
-    part2 = packing.pack_sequences_incremental(new, int(base), budget=B).collect()
-    two = sorted(tuple(r) for r in part1 + part2)
-    assert two == full
-    # the boundary example is shared between increments
-    ex1 = {r.example_id for r in part1}
-    ex2 = {r.example_id for r in part2}
-    assert max(ex1) in ex2 or base % B == 0
-
-
-def _mk_docs(spark, ids):
-    # varied token counts: doc i has 3 + i % 7 tokens "d{i}t{j}"
-    rows = [
-        (i, " ".join(f"d{i}t{j}" for j in range(3 + i % 7))) for i in ids
+    B = 11
+    examples = packing.assemble_examples(packing.pack_sequences(docs, budget=B))
+    rows = sorted(examples.collect(), key=lambda r: r.example_id)
+    stream = [
+        t for r in docs.orderBy("doc_id").collect() for t in r.text.split()
     ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_packed_shard_export_incremental_matches_from_scratch(spark, tmp_path):
-    """The round-11 composition: pack half the corpus, export, then
-    pack the second half incrementally and append — the shard tree
-    must be BYTE-identical to a from-scratch export of the full
-    corpus, and every shard strictly below the boundary must not be
-    rewritten (same file, same mtime)."""
-    import os
-
-    from sales_analytics_etl_sql_powerbi_spark.operators.packing import (
-        assemble_examples,
-        pack_sequences,
-        pack_sequences_incremental,
-    )
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    budget, eps = 16, 2
-    full_docs = _mk_docs(spark, range(24))
-    half1 = _mk_docs(spark, range(12))
-    half2 = _mk_docs(spark, range(12, 24))
-
-    full_path = str(tmp_path / "full")
-    inc_path = str(tmp_path / "inc")
-
-    full_ex = assemble_examples(pack_sequences(full_docs, budget=budget))
-    sinks.write_packed_shards(full_ex, full_path, eps, budget)
-
-    ex1 = assemble_examples(pack_sequences(half1, budget=budget))
-    meta = sinks.write_packed_shards(ex1, inc_path, eps, budget)
-    # the split lands mid-example (total tokens of half1 not a
-    # multiple of budget) so the boundary-fusion path is exercised
-    assert meta["total_tokens"] % budget != 0
-
-    def shard_files(path):
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith("shard="):
-                (f,) = [x for x in os.listdir(os.path.join(path, d))
-                        if x.endswith(".parquet")]
-                out[int(d.split("=")[1])] = os.path.join(path, d, f)
-        return out
-
-    before = {
-        s: (p, os.stat(p).st_mtime_ns) for s, p in shard_files(inc_path).items()
-    }
-    boundary_shard = (meta["total_tokens"] // budget) // eps
-
-    ex2 = assemble_examples(
-        pack_sequences_incremental(half2, meta["total_tokens"], budget=budget)
-    )
-    meta2 = sinks.write_packed_shards_incremental(ex2, inc_path, budget)
-
-    full_total = full_ex.agg({"n_tokens": "sum"}).first()[0]
-    assert meta2["total_tokens"] == full_total
-
-    got, want = shard_files(inc_path), shard_files(full_path)
-    assert set(got) == set(want)
-    for s in want:
-        with open(got[s], "rb") as a, open(want[s], "rb") as b:
-            assert a.read() == b.read(), f"shard {s} differs from from-scratch"
-    # no-rewrite: shards strictly below the boundary are untouched
-    untouched = [s for s in before if s < boundary_shard]
-    assert untouched, "test must cover at least one untouched shard"
-    for s in untouched:
-        p, mtime = before[s]
-        assert shard_files(inc_path)[s] == p
-        assert os.stat(p).st_mtime_ns == mtime, f"shard {s} was rewritten"
-    # rows also match the from-scratch pack exactly
-    a = sorted(
-        (r.example_id, r.n_tokens, r.n_docs, r.text)
-        for r in spark.read.parquet(inc_path).collect()
-    )
-    b = sorted(
-        (r.example_id, r.n_tokens, r.n_docs, r.text)
-        for r in spark.read.parquet(full_path).collect()
-    )
-    assert a == b
-
-
-def test_packed_shard_export_exact_boundary_and_budget_guard(spark, tmp_path):
-    """Exact-budget boundary (no partial example to fuse) appends
-    cleanly; a mismatched budget on append fails loudly."""
-    import pytest
-
-    from sales_analytics_etl_sql_powerbi_spark.operators.packing import (
-        assemble_examples,
-        pack_sequences,
-        pack_sequences_incremental,
-    )
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    budget, eps = 8, 2
-    # 4 docs of exactly 4 tokens: 16 tokens = 2 full examples
-    rows = [(i, " ".join(f"x{i}{j}" for j in range(4))) for i in range(4)]
-    half1 = spark.createDataFrame(rows, "doc_id long, text string")
-    rows2 = [(i, " ".join(f"x{i}{j}" for j in range(4))) for i in range(4, 10)]
-    half2 = spark.createDataFrame(rows2, "doc_id long, text string")
-
-    path = str(tmp_path / "exact")
-    meta = sinks.write_packed_shards(
-        assemble_examples(pack_sequences(half1, budget=budget)), path, eps, budget
-    )
-    assert meta["total_tokens"] == 16
-    ex2 = assemble_examples(
-        pack_sequences_incremental(half2, 16, budget=budget)
-    )
-    sinks.write_packed_shards_incremental(ex2, path, budget)
-
-    full = spark.createDataFrame(rows + rows2, "doc_id long, text string")
-    want = sorted(
-        (r.example_id, r.n_tokens, r.n_docs, r.text)
-        for r in assemble_examples(pack_sequences(full, budget=budget)).collect()
-    )
-    got = sorted(
-        (r.example_id, r.n_tokens, r.n_docs, r.text)
-        for r in spark.read.parquet(path).collect()
-    )
-    assert got == want
-
-    with pytest.raises(ValueError, match="budget"):
-        sinks.write_packed_shards_incremental(ex2, path, budget + 1)
+    assert [r.example_id for r in rows] == list(range(len(rows)))
+    assert len(rows) == -(-len(stream) // B)
+    assert sum(r.n_tokens for r in rows) == len(stream)
+    assert [t for r in rows for t in r.text.split()] == stream
 
 
 def test_scan_null_group_cross_bucket(spark):

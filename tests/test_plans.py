@@ -238,40 +238,6 @@ def test_ann_ivf_topk_entry_is_one_python_task(spark, plan_sf):
     assert plan.count("BroadcastHashJoin") == 1, plan
 
 
-def test_neardup_query_is_band_equi_join_against_the_index(spark, plan_sf):
-    """Incremental dedup must stay candidate-bounded: batch bands vs
-    index bands equi-join, never batch×corpus. (localCheckpoint in
-    neardup_query truncates lineage, so inspect the pre-checkpoint
-    composition directly.)"""
-    from pyspark.sql import functions as F
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import dedup
-
-    docs = _docs(spark, plan_sf)
-    index = dedup.neardup_index(docs.where(F.col("doc_id") % 2 == 0))
-    batch = docs.where(F.col("doc_id") % 2 == 1)
-    qidx = dedup.neardup_index(batch)
-    qb = qidx.select("doc_id", F.explode_outer("bands").alias("b")).select(
-        F.col("doc_id").alias("doc_id_new"),
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_hash").alias("band_hash"),
-    )
-    ib = index.select("doc_id", F.explode_outer("bands").alias("b")).select(
-        "doc_id",
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_hash").alias("band_hash"),
-    )
-    plan = _plan(qb.join(ib, on=["band_id", "band_hash"]))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    join_lines = [
-        l
-        for l in plan.splitlines()
-        if "SortMergeJoin" in l or "ShuffledHashJoin" in l or "BroadcastHashJoin" in l
-    ]
-    assert any("band_hash" in l for l in join_lines), plan
-
-
 def test_asof_join_is_one_shuffle_no_range_join(spark, plan_sf):
     """The as-of family's whole point: union-tag + window = ONE hash
     exchange on the key, never a range-join candidate blowup."""

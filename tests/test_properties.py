@@ -2722,203 +2722,6 @@ def test_stateful_totals_and_dedup_match_python_simulator(spark, evs):
         assert (r.event_id, r.ts, r.user_id, r.event_type, r.value) in input_rows
 
 
-# ---------------------------------------------------------------------------
-# Write-side sink fuzz (round 15 — VERDICT r14 item 5): the packed-
-# shard incremental path's byte-identity was pinned on ONE fixed shape
-# only; hypothesis now generates doc/budget/shard-size/append-split
-# shapes, including empty appends and splits landing exactly on
-# example boundaries (no partial example to fuse).
-# ---------------------------------------------------------------------------
-
-_SINK = settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-@_SINK
-@given(
-    st.lists(st.integers(1, 9), min_size=1, max_size=16),  # tokens per doc
-    st.integers(3, 20),                                    # budget
-    st.integers(1, 4),                                     # examples_per_shard
-    st.lists(st.integers(0, 16), max_size=3),              # raw split cuts
-)
-def test_packed_shard_incremental_equiv_fuzz(
-    spark, tmp_path_factory, tok_counts, budget, eps, raw_cuts
-):
-    """write_packed_shards_incremental over ARBITRARY append splits ==
-    one from-scratch export of the full corpus, byte-for-byte per
-    shard file — boundary fusion, boundary-on-example-edge, empty
-    appends, and multi-append chains all land identically."""
-    import os
-
-    from sales_analytics_etl_sql_powerbi_spark.operators.packing import (
-        assemble_examples,
-        pack_sequences,
-        pack_sequences_incremental,
-    )
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    n = len(tok_counts)
-
-    def docs(lo, hi):
-        rows = [
-            (i, " ".join(f"d{i}t{j}" for j in range(tok_counts[i])))
-            for i in range(lo, hi)
-        ]
-        return spark.createDataFrame(
-            rows or [(0, None)], "doc_id long, text string"
-        ).where(F.col("text").isNotNull())
-
-    from pyspark.sql import functions as F
-
-    cuts = sorted({c % (n + 1) for c in raw_cuts})
-    edges = [0] + cuts + [n]
-    chunks = [(edges[i], edges[i + 1]) for i in range(len(edges) - 1)]
-
-    base = tmp_path_factory.mktemp("pack_fuzz")
-    full_path, inc_path = str(base / "full"), str(base / "inc")
-
-    full_ex = assemble_examples(pack_sequences(docs(0, n), budget=budget))
-    want_meta = sinks.write_packed_shards(full_ex, full_path, eps, budget)
-
-    lo, hi = chunks[0]
-    ex0 = assemble_examples(pack_sequences(docs(lo, hi), budget=budget))
-    meta = sinks.write_packed_shards(ex0, inc_path, eps, budget)
-    for lo, hi in chunks[1:]:
-        exi = assemble_examples(
-            pack_sequences_incremental(
-                docs(lo, hi), meta["total_tokens"], budget=budget
-            )
-        )
-        meta = sinks.write_packed_shards_incremental(exi, inc_path, budget)
-
-    assert meta == want_meta
-
-    def shard_files(path):
-        out = {}
-        for d in sorted(os.listdir(path)):
-            if d.startswith("shard="):
-                (f,) = [
-                    x
-                    for x in os.listdir(os.path.join(path, d))
-                    if x.endswith(".parquet")
-                ]
-                out[int(d.split("=")[1])] = os.path.join(path, d, f)
-        return out
-
-    got, want = shard_files(inc_path), shard_files(full_path)
-    assert set(got) == set(want)
-    for s in want:
-        with open(got[s], "rb") as a, open(want[s], "rb") as b:
-            assert a.read() == b.read(), f"shard {s} differs (chunks={chunks})"
-
-
-@_SINK
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 3), st.integers(-50, 50), st.integers(0, 9)),
-        min_size=1,
-        max_size=40,
-    ),
-    st.booleans(),  # hive-partitioned?
-    st.booleans(),  # sort_within?
-    st.integers(1, 3),  # number of source appends
-)
-def test_compact_parquet_preserves_rows_fuzz(
-    spark, tmp_path_factory, rows, parted, sorted_within, n_appends
-):
-    """compact_parquet on arbitrary multi-append sources: the row
-    multiset is preserved exactly, the returned count matches the
-    files written, and a hive-partitioned source keeps its directory
-    layout when the same columns are passed as partition_by."""
-    import os
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    base = tmp_path_factory.mktemp("compact_fuzz")
-    src, dst = str(base / "src"), str(base / "dst")
-
-    per = max(1, len(rows) // n_appends)
-    for k in range(0, len(rows), per):
-        df = spark.createDataFrame(rows[k : k + per], "p int, a int, b int")
-        w = df.write.mode("append")
-        if parted:
-            w = w.partitionBy("p")
-        w.parquet(src)
-
-    n = sinks.compact_parquet(
-        spark,
-        src,
-        dst,
-        target_file_bytes=4096,
-        sort_within_by=["a"] if sorted_within else None,
-        partition_by=["p"] if parted else None,
-    )
-    # select() pins column order: a hive-partitioned read surfaces the
-    # partition column LAST, which is layout, not data
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(dst).select("p", "a", "b").collect()
-    )
-    assert got == sorted(rows)
-    assert n == sum(
-        1
-        for root, _, fs in os.walk(dst)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    if parted:
-        want_dirs = {f"p={p}" for p in {r[0] for r in rows}}
-        assert {d for d in os.listdir(dst) if d.startswith("p=")} == want_dirs
-
-
-@_SINK
-@given(
-    st.lists(
-        st.tuples(
-            st.one_of(st.integers(-100, 100), st.sampled_from([0, 1])),
-            st.one_of(
-                st.integers(0, 10),
-                st.integers(0, 100_000),  # heavy tail for the quantile variant
-            ),
-        ),
-        min_size=1,
-        max_size=60,
-    ),
-    st.booleans(),  # quantile variant?
-    st.integers(1, 4),
-)
-def test_write_zordered_preserves_rows_fuzz(
-    spark, tmp_path_factory, rows, quantile, n_files
-):
-    """write_zordered (uniform AND quantile bucketing) preserves the
-    row multiset on arbitrary skewed inputs and never exceeds the
-    requested file count; an all-NULL z column still raises."""
-    import os
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    base = tmp_path_factory.mktemp("zorder_fuzz")
-    path = str(base / "z")
-    df = spark.createDataFrame(rows, "x int, y int")
-    sinks.write_zordered(df, path, ["x", "y"], n_files=n_files, quantile=quantile)
-    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    assert got == sorted(rows)
-    n_written = sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet")
-    )
-    assert 1 <= n_written <= n_files
-
-    import pytest
-
-    nulls = spark.createDataFrame(
-        [(1, None)] * 3, "x int, y int"
-    )
-    with pytest.raises(ValueError, match="all-NULL"):
-        sinks.write_zordered(nulls, str(base / "z2"), ["x", "y"])
-
-
 _POISON_ELEM = st.one_of(
     st.floats(-150.0, 150.0, allow_nan=False, allow_infinity=False),
     st.sampled_from(
@@ -3290,11 +3093,6 @@ def _py_sets_and_bands(docs, k=3):
             for b in range(dedup._BANDS)
         }
     return sets, bands
-
-
-def _py_jaccard(sa, sb):
-    inter = len(sa & sb)
-    return inter / (len(sa) + len(sb) - inter)
 
 
 def _py_neardup_pairs(docs, k=3, threshold=0.0):
@@ -3695,73 +3493,6 @@ def test_sampler_family_matches_python_md5_walk(spark, rows, rate, n):
 )
 @given(
     st.lists(
-        st.one_of(st.none(), st.text(alphabet="ab ", max_size=12)),
-        min_size=1,
-        max_size=8,
-    ),
-    st.lists(
-        st.one_of(st.none(), st.text(alphabet="ab ", max_size=12)),
-        min_size=1,
-        max_size=6,
-    ),
-    st.booleans(),
-    st.sampled_from([0.0, 0.34, 0.67]),
-)
-def test_neardup_query_matches_python_reference(
-    spark, corpus_texts, batch_texts, intra, threshold
-):
-    """The incremental index/query split == a sequential walk on
-    arbitrary (corpus, batch) shapes: cross pairs are batch×index band
-    collisions, intra pairs are later-dup-of-earlier within the batch,
-    each verified with exact Jaccard against the CORRECT side's
-    shingle sets, thresholded, deduped to best-path per (doc, dup_of).
-    Extends the fixed-shape equivalence pin to hypothesis corpora
-    (including NULL-text docs on both sides)."""
-    from sales_analytics_etl_sql_powerbi_spark.operators import dedup
-
-    corpus = [(i, t) for i, t in enumerate(corpus_texts)]
-    batch = [(1000 + i, t) for i, t in enumerate(batch_texts)]
-    idx = dedup.neardup_index(
-        spark.createDataFrame(corpus, "doc_id long, text string"), k=3
-    )
-    got = {
-        (r.doc_id, r.dup_of): r.jaccard
-        for r in dedup.neardup_query(
-            idx,
-            spark.createDataFrame(batch, "doc_id long, text string"),
-            k=3,
-            threshold=threshold,
-            include_intra_batch=intra,
-        ).collect()
-    }
-
-    sets_a, bands_a = _py_sets_and_bands(corpus)
-    sets_b, bands_b = _py_sets_and_bands(batch)
-    want = {}
-    for b, bb in bands_b.items():
-        for a, ba in bands_a.items():
-            if bb & ba:
-                j = _py_jaccard(sets_b[b], sets_a[a])
-                if j >= threshold:
-                    want[(b, a)] = j
-        if intra:
-            for b2, bb2 in bands_b.items():
-                if b2 < b and bb & bb2:
-                    j = _py_jaccard(sets_b[b], sets_b[b2])
-                    if j >= threshold:
-                        want[(b, b2)] = j
-    assert set(got) == set(want), (sorted(got), sorted(want))
-    for key, j in want.items():
-        assert abs(got[key] - j) < 1e-12, (key, got[key], j)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(
         st.tuples(
             st.sampled_from(["g1", "g2"]),
             st.one_of(
@@ -3847,63 +3578,6 @@ def test_histogram_quantiles_property(spark, rows, cut, n_bins):
                 assert abs(est[key] - truth) <= width + 1e-9, (
                     g, q, est[key], truth, width,
                 )
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(
-        st.one_of(st.none(), st.text(alphabet="ab ", max_size=20)),
-        min_size=1,
-        max_size=10,
-    ),
-    st.sampled_from([2, 3, 7]),
-)
-def test_misra_gries_interval_guarantee_property(spark, texts, capacity):
-    """frequent_tokens_approx's UNCONDITIONAL interval contract on
-    arbitrary corpora at tiny capacities (forcing decrements): every
-    returned token's true count sits in [count_min, count_max], the
-    interval width is <= N/(capacity+1), and every heavy hitter
-    (true count > width) is PRESENT in the full summary."""
-    from collections import Counter
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import frequency
-
-    docs = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = frequency.frequent_tokens_approx(
-        df, topk=None, capacity=capacity
-    ).collect()
-
-    truth = Counter()
-    for _, t in docs:
-        if t is None:
-            continue
-        for w in re.split(" +", t.strip()):
-            if w:
-                truth[w] += 1
-    n = sum(truth.values())
-
-    widths = {r.token: r.count_max - r.count_min for r in out}
-    assert len(set(widths.values())) <= 1  # one global error interval
-    width = next(iter(widths.values()), 0)
-    assert width <= n // (capacity + 1)
-    got_tokens = set()
-    for r in out:
-        assert r.count_min <= truth[r.token] <= r.count_max, (
-            r.token, r.count_min, truth[r.token], r.count_max,
-        )
-        got_tokens.add(r.token)
-    # presence is guaranteed relative to the THEORETICAL decrement
-    # bound N/(capacity+1) (a token can vanish from an EMPTY summary
-    # when every count <= that bound — then width above is
-    # unobservable, not zero)
-    for tok, c in truth.items():
-        if c > n / (capacity + 1):
-            assert tok in got_tokens, (tok, c, n, capacity)
 
 
 _PII_FRAGMENT = st.one_of(
@@ -4222,9 +3896,9 @@ def test_stratified_mix_and_shards_match_python_walk(spark, rows, quotas, n_shar
 # ---------------------------------------------------------------------------
 # Streaming ingest/sink simulator fuzz (round 16 — VERDICT r15 item 5):
 # the last probe-pinned-but-not-fuzzed surface. The foreachBatch
-# handler and the CDC batch apply are plain functions over on-disk
-# state, so the micro-batch protocol (arbitrary splits, out-of-order
-# delivery, forced replays) is driven directly — no StreamingQuery
+# handler is a plain function over on-disk state, so the micro-batch
+# protocol (arbitrary splits, out-of-order delivery, forced replays)
+# is driven directly — no StreamingQuery
 # per example; the streaming wiring itself stays pinned by
 # tests/test_streaming.py's end-to-end queries.
 # ---------------------------------------------------------------------------
@@ -4295,86 +3969,6 @@ def test_foreach_batch_upsert_replay_fuzz(spark, tmp_path_factory, rows, cuts, d
     for i in replay_order:
         upsert_batch_into_parquet(bdf(batches[i]), out, ["k"])
     assert table() == got
-
-
-@_STREAM_SIM
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 9),                      # key
-            st.text(max_size=8),                    # payload
-            st.sampled_from(["I", "U", "D"]),       # op
-        ),
-        min_size=1,
-        max_size=16,
-    ),
-    st.lists(st.integers(0, 16), max_size=3),       # split cuts
-    st.data(),
-)
-def test_cdc_arbitrary_split_out_of_order_replay_fuzz(
-    spark, tmp_path_factory, chg, cuts, data
-):
-    """apply_cdc_batch over ARBITRARY batch splits, delivered in an
-    ARBITRARY ORDER, with every batch REPLAYED once more afterwards,
-    converges to the same state as (a) a sequential Python CDC
-    simulator (max-seq wins; delete = absent) and (b) applying the
-    whole change set as ONE batch — the restart/out-of-order contract
-    the 3-session probe pinned on one shape, now on arbitrary ones.
-    Each apply_cdc_batch call reads only persisted state, so every
-    batch boundary IS a process restart."""
-    import os
-
-    from sales_analytics_etl_sql_powerbi_spark.streaming.cdc import (
-        apply_cdc_batch,
-        read_snapshot,
-        snapshot_init,
-    )
-
-    # unique, gap-free-ish sequences in delivery order of the full set
-    changes = [
-        (k, f"p{payload}", op, seq) for seq, (k, payload, op) in enumerate(chg)
-    ]
-    schema = "k int, payload string, op string, seq long"
-
-    def final_state(rows):
-        best = {}
-        for k, payload, op, seq in rows:
-            if k not in best or seq > best[k][1]:
-                best[k] = ((k, payload, op), seq)
-        return {
-            (k, payload)
-            for (k, payload, op), _ in best.values()
-            if op != "D"
-        }
-
-    expected = final_state(changes)
-
-    bounds = sorted({min(c, len(changes)) for c in cuts} | {0, len(changes)})
-    batches = [
-        changes[a:b] for a, b in zip(bounds, bounds[1:]) if changes[a:b]
-    ] or [changes]
-    order = data.draw(st.permutations(range(len(batches))))
-
-    root = str(tmp_path_factory.mktemp("cdc"))
-    split_tbl = os.path.join(root, "split")
-    snapshot_init(spark.createDataFrame([], "k int, payload string"), split_tbl)
-    for i in list(order) + list(order):  # deliver once, then replay all
-        if batches[i]:
-            apply_cdc_batch(
-                spark, split_tbl, spark.createDataFrame(batches[i], schema), "k"
-            )
-    got_split = {
-        (r.k, r.payload) for r in read_snapshot(spark, split_tbl).collect()
-    }
-    assert got_split == expected, (got_split, expected)
-
-    one_tbl = os.path.join(root, "one")
-    snapshot_init(spark.createDataFrame([], "k int, payload string"), one_tbl)
-    apply_cdc_batch(spark, one_tbl, spark.createDataFrame(changes, schema), "k")
-    got_one = {
-        (r.k, r.payload) for r in read_snapshot(spark, one_tbl).collect()
-    }
-    assert got_one == expected, (got_one, expected)
 
 
 _INGEST = settings(
@@ -4543,7 +4137,7 @@ def test_ann_index_append_arbitrary_splits_replays_match_rebuild(
 ):
     """Round 17: the grown-index invariant under ARBITRARY batch
     splits, append order, and replays — the same simulator-fuzz
-    discipline the CDC/ingest sinks got in r16. Vectors are split
+    discipline the upsert/ingest sinks got in r16. Vectors are split
     into up to 4 batches by a generated assignment, appended in
     order with generated mid-stream replays; the final materialized
     index must be row-identical to a one-shot ann_index over the

@@ -432,221 +432,6 @@ def test_excel_distributed_parity_and_alignment(spark, tmp_path):
         read_excel_distributed(spark, str(d / "*.xlsx")).collect()
 
 
-def test_zorder_layout_tightens_stats_in_every_dimension(spark, tmp_path):
-    """Z-order must give usefully-tight per-file min/max ranges for BOTH
-    columns; a single-column sort only does for its own column. Measured
-    from the actual parquet footers — the stats the reader prunes on."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    n = 1 << 14
-    df = (
-        spark.range(n)
-        .selectExpr(
-            "cast(conv(substring(md5(cast(id as string)), 1, 6), 16, 10) % 1024 as long) x",
-            "cast(conv(substring(md5(cast(id as string)), 7, 6), 16, 10) % 1024 as long) y",
-        )
-    )
-
-    def avg_spread(path, col):
-        spreads = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            los, his = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                los.append(st.min)
-                his.append(st.max)
-            spreads.append((max(his) - min(los)) / 1023)
-        return sum(spreads) / len(spreads)
-
-    zpath = str(tmp_path / "z")
-    sinks.write_zordered(df, zpath, ["x", "y"], n_files=16)
-    spath = str(tmp_path / "s")
-    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(spath)
-
-    # x-sorted layout: x tight, y useless (~full range per file)
-    assert avg_spread(spath, "x") < 0.15
-    assert avg_spread(spath, "y") > 0.85
-    # z-order: BOTH dimensions usefully tight (16 files ≈ 4×4 grid → ~0.25)
-    assert avg_spread(zpath, "x") < 0.5
-    assert avg_spread(zpath, "y") < 0.5
-    # and values survive the layout intact
-    assert spark.read.parquet(zpath).count() == n
-
-
-def test_zorder_value_validation():
-    import pytest
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    with pytest.raises(ValueError):
-        sinks.zorder_value({"x": (0, 10)})
-
-
-def test_quantile_zorder_equalizes_bucket_heights_on_skew(spark, tmp_path):
-    """The quantile variant's mechanism: on a heavy-tailed column,
-    uniform-width bucketing concentrates a large share of rows into one
-    bucket (that dimension contributes nothing to clustering there);
-    quantile cuts give ~equal-height buckets. File ROW-count balance is
-    NOT the discriminator — repartitionByRange balances counts under
-    either bucketing — so the histogram is asserted directly, plus the
-    written quantile layout round-trips completely."""
-    import bisect
-    import glob
-    import math
-
-    import pyarrow.parquet as pq
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    n = 1 << 13
-    bits = 6
-    # x ~ heavy-tailed (cubed hash), y uniform
-    df = spark.range(n).selectExpr(
-        "cast(pow(conv(substring(md5(cast(id as string)), 1, 4), 16, 10) % 256, 3) as long) x",
-        "cast(conv(substring(md5(cast(id as string)), 7, 6), 16, 10) % 1024 as long) y",
-    )
-    xs = sorted(r.x for r in df.select("x").collect())
-    lo, hi = xs[0], xs[-1]
-    span = float(hi - lo) or 1.0
-    nb = 1 << bits
-    uni = [0] * nb
-    for x in xs:
-        uni[min(nb - 1, int(math.floor((x - lo) / span * nb)))] += 1
-    cuts = df.stat.approxQuantile(["x"], [i / nb for i in range(1, nb)], 0.001)[0]
-    qnt = [0] * nb
-    for x in xs:
-        qnt[min(nb - 1, bisect.bisect_right(sorted(cuts), x))] += 1
-    # uniform: the dense head lands in one bucket (>25% of all rows);
-    # quantile: no bucket above ~3x the even split
-    assert max(uni) / n > 0.25, max(uni) / n
-    assert max(qnt) / n < 3 / nb, max(qnt) / n
-    # and the executed writer path round-trips completely
-    qpath = str(tmp_path / "quant")
-    sinks.write_zordered(df, qpath, ["x", "y"], n_files=8, bits=bits, quantile=True)
-    assert (
-        sum(pq.ParquetFile(f).metadata.num_rows for f in glob.glob(f"{qpath}/*.parquet"))
-        == n
-    )
-    assert spark.read.parquet(qpath).agg({"x": "sum"}).collect()[0][0] == sum(xs)
-
-
-def test_compact_parquet_reduces_file_count_preserves_rows(spark, tmp_path):
-    import glob
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    src = str(tmp_path / "many")
-    # 40 tiny appended files (micro-batch append pattern)
-    for i in range(10):
-        spark.range(i * 100, (i + 1) * 100).selectExpr(
-            "id", "cast(id % 7 as long) k"
-        ).repartition(4).write.mode("append").parquet(src)
-    n_src = len(glob.glob(f"{src}/*.parquet"))
-    assert n_src >= 40
-    dst = str(tmp_path / "compact")
-    total = sum(
-        __import__("os").path.getsize(f) for f in glob.glob(f"{src}/*.parquet")
-    )
-    out = sinks.compact_parquet(
-        spark, src, dst, target_file_bytes=total // 3, sort_within_by=["k"]
-    )
-    assert out <= 4  # ~3 target-sized files, not 40
-    a = spark.read.parquet(src)
-    b = spark.read.parquet(dst)
-    assert b.count() == 1000
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_write_zordered_empty_input_is_noop_write(spark, tmp_path):
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    empty = spark.range(0).selectExpr("id x", "id y")
-    for q in (False, True):
-        p = str(tmp_path / f"e{q}")
-        sinks.write_zordered(empty, p, ["x", "y"], quantile=q)
-        assert spark.read.parquet(p).count() == 0
-
-
-def test_compact_parquet_handles_partitioned_source_and_empty(spark, tmp_path):
-    import pytest
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    src = str(tmp_path / "part_src")
-    spark.range(200).selectExpr("id", "cast(id % 3 as long) dt").write.partitionBy(
-        "dt"
-    ).parquet(src)
-    dst = str(tmp_path / "part_dst")
-    n = sinks.compact_parquet(
-        spark, src, dst, target_file_bytes=10**12, partition_by=["dt"]
-    )
-    assert n >= 1 and spark.read.parquet(dst).count() == 200
-    import glob as _g
-
-    assert sorted(
-        d.split("dt=")[1] for d in _g.glob(f"{dst}/dt=*")
-    ) == ["0", "1", "2"]  # hive layout preserved
-    with pytest.raises(ValueError):
-        sinks.compact_parquet(spark, str(tmp_path / "nothing"), dst)
-
-
-def test_compact_parquet_splits_large_hive_partition(spark, tmp_path):
-    """A skewed hive partition must split into several ~target-sized
-    files (range partitioner allocates tasks by row count), not
-    collapse into one oversized single-task file."""
-    import glob
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    src = str(tmp_path / "skew_src")
-    # dt=0 holds 95% of the rows; dt=1/dt=2 are tiny
-    spark.range(20_000).selectExpr(
-        "id", "cast(case when id < 19000 then 0 else id % 2 + 1 end as long) dt"
-    ).write.partitionBy("dt").parquet(src)
-    total = sum(
-        __import__("os").path.getsize(f)
-        for f in glob.glob(f"{src}/**/*.parquet", recursive=True)
-    )
-    dst = str(tmp_path / "skew_dst")
-    sinks.compact_parquet(
-        spark, src, dst, target_file_bytes=max(total // 6, 1), partition_by=["dt"]
-    )
-    big = glob.glob(f"{dst}/dt=0/*.parquet")
-    assert len(big) >= 2, "large partition stayed a single file"
-    small = glob.glob(f"{dst}/dt=1/*.parquet") + glob.glob(f"{dst}/dt=2/*.parquet")
-    assert len(small) <= 4  # small partitions are NOT sprayed into n_files
-    a, b = spark.read.parquet(src), spark.read.parquet(dst)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_compact_parquet_all_columns_partitioned_fails_cleanly(spark, tmp_path):
-    """partition_by covering EVERY column: no within-partition split
-    key exists. The compact must not die in a confusing zero-arg
-    F.hash() — it reaches the write, where Spark raises its canonical
-    ALL_PARTITION_COLUMNS_NOT_ALLOWED (such a table cannot exist as
-    hive-partitioned parquet anyway)."""
-    import pytest
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    src = str(tmp_path / "pk_src")
-    spark.range(50).selectExpr(
-        "cast(id % 3 as long) dt", "id AS x"
-    ).write.partitionBy("dt").parquet(src)
-    dst = str(tmp_path / "pk_dst")
-    with pytest.raises(AnalysisException, match="ALL_PARTITION_COLUMNS"):
-        sinks.compact_parquet(
-            spark, src, dst, target_file_bytes=10**12, partition_by=["dt", "x"]
-        )
-
-
 def test_asof_tolerance_preserves_column_order(spark):
     """Tolerance and no-tolerance calls of the same as-of function must
     return the SAME column order (ADVICE r5: the old implementation
@@ -670,14 +455,3 @@ def test_asof_tolerance_preserves_column_order(spark):
             tolerance_seconds=5.0, **kw,
         )
         assert plain.columns == tol.columns
-
-
-def test_write_zordered_all_null_column_errors(spark, tmp_path):
-    import pytest
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    df = spark.range(10).selectExpr("id x", "cast(null as long) y")
-    for q in (False, True):
-        with pytest.raises(ValueError, match="all-NULL"):
-            sinks.write_zordered(df, str(tmp_path / f"n{q}"), ["x", "y"], quantile=q)

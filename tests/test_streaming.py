@@ -387,202 +387,6 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
     assert got == want and got
 
 
-# ---------------------------------------------------------------------------
-# streaming CDC replication into the versioned snapshot store (round 6)
-# ---------------------------------------------------------------------------
-
-CDC_SCHEMA = "k long, v string, op string, seq long"
-
-
-def test_cdc_snapshot_versioning_and_batch_apply(spark, tmp_path):
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    table = str(tmp_path / "tbl")
-    init = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    assert cdc.snapshot_init(init, table) == 0
-    assert cdc.latest_version(table) == 0
-
-    ch = spark.createDataFrame(
-        [(1, "a2", "U", 1), (3, "c", "I", 2), (2, None, "D", 3)], CDC_SCHEMA
-    ).select("k", "v", "op", "seq")
-    v = cdc.apply_cdc_batch(spark, table, ch.select("k", "v", "op", "seq"), "k")
-    assert v == 1 and cdc.latest_version(table) == 1
-    got = {
-        r.k: r.v for r in cdc.read_snapshot(spark, table).select("k", "v").collect()
-    }
-    assert got == {1: "a2", 3: "c"}
-    # time travel: version 0 still readable
-    old = {r.k: r.v for r in cdc.read_snapshot(spark, table, version=0).collect()}
-    assert old == {1: "a", 2: "b"}
-    # replaying the SAME batch publishes a new version with identical content
-    v2 = cdc.apply_cdc_batch(spark, table, ch, "k")
-    again = {r.k: r.v for r in cdc.read_snapshot(spark, table).select("k", "v").collect()}
-    assert v2 == 2 and again == got
-
-
-def test_cdc_stream_replication_end_to_end(spark, tmp_path):
-    """Change files arriving as a stream → foreachBatch merge →
-    versioned snapshot matches a one-shot batch apply of all changes."""
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    table = str(tmp_path / "tbl2")
-    cdc.snapshot_init(
-        spark.createDataFrame([(i, "init") for i in range(10)], "k long, v string"),
-        table,
-    )
-    src = str(tmp_path / "changes")
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    all_changes = [
-        (1, "x1", "U", 1),
-        (2, None, "D", 2),
-        (20, "new", "I", 3),
-        (1, "x2", "U", 4),   # later seq for key 1 in a LATER file
-    ]
-    spark.createDataFrame(all_changes[:3], CDC_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame(all_changes[3:], CDC_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = spark.readStream.schema(CDC_SCHEMA).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src)
-    q = cdc.stream_cdc_apply(
-        stream, table, "k", checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    got = {
-        r.k: r.v for r in cdc.read_snapshot(spark, table).select("k", "v").collect()
-    }
-    assert got[1] == "x2" and 2 not in got and got[20] == "new"
-    assert len(got) == 10  # 10 - 1 delete + 1 insert
-    assert cdc.latest_version(table) >= 1
-
-
-def test_cdc_prune_versions_keeps_latest(spark, tmp_path):
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    table = str(tmp_path / "tbl3")
-    cdc.snapshot_init(
-        spark.createDataFrame([(1, "a")], "k long, v string"), table
-    )
-    for s in range(3):
-        ch = spark.createDataFrame([(1, f"v{s}", "U", s)], CDC_SCHEMA)
-        cdc.apply_cdc_batch(spark, table, ch, "k")
-    removed = cdc.prune_versions(table, keep_last=2)
-    assert removed == [0, 1]
-    assert cdc.latest_version(table) == 3
-    assert cdc.read_snapshot(spark, table).count() == 1
-    import pytest
-
-    with pytest.raises(Exception):
-        cdc.read_snapshot(spark, table, version=0)
-
-
-def test_cdc_out_of_order_batches_cannot_regress(spark, tmp_path):
-    """The cross-batch guarantee cdc_apply alone can't give: applying
-    an OLDER batch after a newer one must be a no-op (stale filter),
-    and a re-delivered older insert must not resurrect a
-    higher-sequence delete (tombstones)."""
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    table = str(tmp_path / "tbl_ooo")
-    cdc.snapshot_init(
-        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), table
-    )
-    newer = spark.createDataFrame(
-        [(1, "NEW", "U", 10), (2, None, "D", 11)], CDC_SCHEMA
-    )
-    older = spark.createDataFrame(
-        [(1, "OLD", "U", 5), (2, "zombie", "I", 6)], CDC_SCHEMA
-    )
-    cdc.apply_cdc_batch(spark, table, newer, "k")
-    cdc.apply_cdc_batch(spark, table, older, "k")  # must be fully stale
-    got = {r.k: r.v for r in cdc.read_snapshot(spark, table).collect()}
-    assert got == {1: "NEW"}  # no regression, no zombie resurrection
-    # the tombstone is visible internally, with its sequence
-    internal = {
-        r["k"]: (r["__cdc_seq"], r["__cdc_deleted"])
-        for r in cdc.read_snapshot(spark, table, internal=True).collect()
-    }
-    assert internal[2] == (11, True)
-    # a genuinely newer insert DOES revive the key
-    revive = spark.createDataFrame([(2, "back", "I", 12)], CDC_SCHEMA)
-    cdc.apply_cdc_batch(spark, table, revive, "k")
-    got = {r.k: r.v for r in cdc.read_snapshot(spark, table).collect()}
-    assert got == {1: "NEW", 2: "back"}
-
-
-def test_cdc_tombstone_hwm_monotone_across_restart(spark, tmp_path):
-    """Stored high-water mark for tombstone compaction (VERDICT r7
-    item 6 / r9 item 3). All store state lives on disk (version dirs
-    + the ``_HWM`` sidecar), so each ``apply_cdc_batch`` call IS a
-    restart — nothing in memory carries over. Pins three properties:
-
-    1. a late out-of-order batch with low sequences cannot resurrect
-       a tombstoned key (per-key stale filter, unchanged);
-    2. the compaction mark is MONOTONE across restarts — the late
-       batch restores the stored mark instead of deriving a lower one
-       from its own rows;
-    3. the mark never exceeds an observed sequence, so a tombstone is
-       compacted exactly when the window says it may be — never
-       earlier (no over-compaction).
-
-    Scale probe with real session restarts: scripts/stress.py
-    --cdc-restart.
-    """
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    table = str(tmp_path / "tbl_hwm")
-    window = 50
-    cdc.snapshot_init(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-        ),
-        table,
-    )
-    # batch A: delete k=1 @90, update k=2 @100 → mark 100, threshold
-    # 50 → the 90-tombstone is retained (90 > 50)
-    a = spark.createDataFrame([(1, None, "D", 90), (2, "b2", "U", 100)], CDC_SCHEMA)
-    cdc.apply_cdc_batch(spark, table, a, "k", tombstone_window=window)
-    assert cdc._read_hwm(table, 1) == 100
-    internal = cdc.read_snapshot(spark, table, internal=True)
-    assert internal.where("k = 1 AND __cdc_deleted").count() == 1
-    # "restart" + late batch B, max seq 30: batch-local marking would
-    # drop the threshold to −20; the stored mark keeps it at 100
-    b = spark.createDataFrame(
-        [(1, "zombie", "U", 30), (3, "c2", "U", 20)], CDC_SCHEMA
-    )
-    cdc.apply_cdc_batch(spark, table, b, "k", tombstone_window=window)
-    assert cdc._read_hwm(table, 2) == 100  # monotone (property 2)
-    got = {r.k: r.v for r in cdc.read_snapshot(spark, table).collect()}
-    assert 1 not in got  # tombstone still rejects the zombie (1)
-    assert got[3] == "c2"  # fresh-by-key change still applies
-    internal = cdc.read_snapshot(spark, table, internal=True)
-    assert internal.where("k = 1 AND __cdc_deleted").count() == 1  # (3)
-    # batch C @145 → threshold 95 → the 90-tombstone compacts NOW,
-    # exactly when the window first allows it
-    c = spark.createDataFrame([(4, "d", "I", 145)], CDC_SCHEMA)
-    cdc.apply_cdc_batch(spark, table, c, "k", tombstone_window=window)
-    assert cdc._read_hwm(table, 3) == 145
-    internal = cdc.read_snapshot(spark, table, internal=True)
-    assert internal.where("k = 1").count() == 0  # compacted
-    got = {r.k: r.v for r in cdc.read_snapshot(spark, table).collect()}
-    assert got == {2: "b2", 3: "c2", 4: "d"}
-    # mixed usage: a batch applied WITHOUT tombstone_window must carry
-    # the stored mark forward — a later windowed late batch would
-    # otherwise fall back to its own max and regress the threshold
-    nowin = spark.createDataFrame([(5, "e", "I", 60)], CDC_SCHEMA)
-    cdc.apply_cdc_batch(spark, table, nowin, "k")  # no window arg
-    assert cdc._read_hwm(table, 4) == 145  # carried, not dropped
-    late2 = spark.createDataFrame([(6, "f", "I", 10)], CDC_SCHEMA)
-    cdc.apply_cdc_batch(spark, table, late2, "k", tombstone_window=window)
-    assert cdc._read_hwm(table, 5) == 145  # still monotone
-
-
 def test_stream_static_dim_enrichment(spark, tmp_path):
     """Stream-static broadcast join: streamed events pick up dim
     attributes; results match the batch join; the stream side never
@@ -622,96 +426,6 @@ def test_stream_static_dim_enrichment(spark, tmp_path):
         r.event_id: r.tier for r in spark.sql("select * from t_enrich_out").collect()
     }
     assert got == batch
-
-
-def test_cdc_tombstone_compaction_bounded_window(spark, tmp_path):
-    """tombstone_window=W (VERDICT r6 item 2): tombstones older than
-    max(incoming seq) − W are dropped at publish — the snapshot's
-    delete overhead is bounded by the window, not by history — while
-    tombstones INSIDE the window keep blocking zombie resurrection."""
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    table = str(tmp_path / "tbl_compact")
-    cdc.snapshot_init(
-        spark.createDataFrame(
-            [(k, f"v{k}") for k in range(1, 6)], "k long, v string"
-        ),
-        table,
-    )
-    # batch 1: delete keys 1,2 at seq 10,11 (window 100 → retained)
-    cdc.apply_cdc_batch(
-        spark,
-        table,
-        spark.createDataFrame([(1, None, "D", 10), (2, None, "D", 11)], CDC_SCHEMA),
-        "k",
-        tombstone_window=100,
-    )
-    internal = cdc.read_snapshot(spark, table, internal=True)
-    assert internal.where("__cdc_deleted").count() == 2
-    # zombie insert for key 1 below its tombstone seq: still blocked
-    cdc.apply_cdc_batch(
-        spark,
-        table,
-        spark.createDataFrame([(1, "zombie", "I", 5)], CDC_SCHEMA),
-        "k",
-        tombstone_window=100,
-    )
-    got = {r.k for r in cdc.read_snapshot(spark, table).collect()}
-    assert 1 not in got and 2 not in got
-    # batch at seq 200: both tombstones (seq ≤ 200-100) compact away
-    cdc.apply_cdc_batch(
-        spark,
-        table,
-        spark.createDataFrame([(3, "v3b", "U", 200)], CDC_SCHEMA),
-        "k",
-        tombstone_window=100,
-    )
-    internal = cdc.read_snapshot(spark, table, internal=True)
-    assert internal.where("__cdc_deleted").count() == 0
-    assert {r.k for r in cdc.read_snapshot(spark, table).collect()} == {3, 4, 5}
-    # no window (default): tombstones retained indefinitely
-    table2 = str(tmp_path / "tbl_nocompact")
-    cdc.snapshot_init(
-        spark.createDataFrame([(1, "a")], "k long, v string"), table2
-    )
-    cdc.apply_cdc_batch(
-        spark, table2,
-        spark.createDataFrame([(1, None, "D", 10)], CDC_SCHEMA), "k",
-    )
-    cdc.apply_cdc_batch(
-        spark, table2,
-        spark.createDataFrame([(2, "b", "I", 500)], CDC_SCHEMA), "k",
-    )
-    assert (
-        cdc.read_snapshot(spark, table2, internal=True)
-        .where("__cdc_deleted")
-        .count()
-        == 1
-    )
-
-
-def test_cdc_latest_version_falls_back_to_committed_dirs(spark, tmp_path):
-    """Mid-swap (or crashed-publish) recovery: with the _LATEST
-    pointer missing, latest_version finds the newest fully-committed
-    v=N directory via its _SUCCESS marker."""
-    import os
-
-    from sales_analytics_etl_sql_powerbi_spark.streaming import cdc
-
-    table = str(tmp_path / "tbl_ptr")
-    cdc.snapshot_init(
-        spark.createDataFrame([(1, "a")], "k long, v string"), table
-    )
-    cdc.apply_cdc_batch(
-        spark, table,
-        spark.createDataFrame([(1, "b", "U", 1)], CDC_SCHEMA), "k",
-    )
-    assert cdc.latest_version(table) == 1
-    os.remove(os.path.join(table, "_LATEST"))
-    assert cdc.latest_version(table) == 1  # fallback scan
-    assert {r.v for r in cdc.read_snapshot(spark, table).collect()} == {"b"}
-    # file:// scheme resolves through the same local path
-    assert cdc.latest_version("file://" + table) == 1
 
 
 def test_multibatch_watermark_matches_python_simulator(spark, tmp_path):
@@ -1172,3 +886,31 @@ class TestConcurrentWriters:
             write_append(poison, tbl)
         assert self._leftovers(tbl) == []
         assert spark.read.parquet(tbl).count() == 5
+
+
+def test_upsert_lock_create_failure_is_not_reported_as_a_race(
+    spark, tmp_path, monkeypatch
+):
+    """A lock create that fails for a reason other than an existing
+    lock (here ENOSPC) leaves no lock file behind. It must surface its
+    own error, not a ConcurrentWriteError blaming a racing writer; the
+    table stays lock-free, so the next upsert proceeds."""
+    import errno
+    import os
+
+    import pytest
+
+    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
+
+    def no_space(*_args, **_kwargs):
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    tbl = str(tmp_path / "tbl")
+    with monkeypatch.context() as m:
+        m.setattr(sinks, "_write_small_file", no_space)
+        with pytest.raises(OSError) as info:
+            sinks.acquire_upsert_lock(spark, tbl, "ctx")
+    assert info.value.errno == errno.ENOSPC
+    assert not os.path.exists(os.path.join(tbl, "_UPSERT_LOCK"))
+    sinks.acquire_upsert_lock(spark, tbl, "ctx")
+    sinks.release_upsert_lock(spark, tbl)
