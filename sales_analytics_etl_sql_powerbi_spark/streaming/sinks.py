@@ -20,6 +20,7 @@ stop, the batch-friendly trigger the tests and backfills use; pass
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 __all__ = [
     "stream_to_parquet",
@@ -59,8 +60,8 @@ def foreach_batch_upsert_parquet(
     current table before appending — a replayed batch (failure
     recovery, at-least-once sources) inserts nothing the table already
     has. The anti-join reads only the key columns of the existing
-    table (column-pruned scan); the batch side is micro-batch-sized.
-    Returns the started StreamingQuery.
+    table (declared key schema, no inference job); the batch side is
+    micro-batch-sized. Returns the started StreamingQuery.
     """
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
@@ -88,8 +89,8 @@ def upsert_batch_into_parquet(
     key's surviving row comes from the FIRST batch that carried it,
     and any replayed batch (at-least-once delivery, failure recovery)
     inserts nothing the table already has. The anti-join reads only
-    the key columns of the existing table (column-pruned scan); the
-    batch side is micro-batch-sized.
+    the key columns of the existing table (declared key schema, no
+    inference job); the batch side is micro-batch-sized.
 
     Crash consistency (round 17 — VERDICT r16 item 3): a batch that
     dies MID-WRITE cannot tear the table. Visible ``.parquet`` files
@@ -114,21 +115,24 @@ def upsert_batch_into_parquet(
     unchanged."""
     from sales_analytics_etl_sql_powerbi_spark.sources.sinks import (
         _append_isolated,
+        _hfs,
         acquire_upsert_lock,
         clear_stale_staging,
         preserve_column_metadata,
         release_upsert_lock,
-        table_has_parquet,
     )
 
     spark = batch_df.sparkSession
-    acquire_upsert_lock(spark, path, "upsert_batch_into_parquet")
+    t = _hfs(spark, path)
+    acquire_upsert_lock(t, "upsert_batch_into_parquet")
     try:
-        clear_stale_staging(spark, path)
+        clear_stale_staging(t)
+        # the lock made the root, so an empty table reads as an empty
+        # relation; the declared key schema spares an inference job
+        key_schema = StructType([batch_df.schema[k] for k in key_cols])
+        existing_keys = spark.read.schema(key_schema).parquet(path)
         fresh = batch_df.dropDuplicates(key_cols)
-        if table_has_parquet(spark, path):
-            existing_keys = spark.read.parquet(path).select(*key_cols)
-            fresh = fresh.join(existing_keys, on=key_cols, how="left_anti")
+        fresh = fresh.join(existing_keys, on=key_cols, how="left_anti")
         # re-assert the batch's column metadata as the outermost
         # projection — the writer records the PHYSICAL output schema,
         # and the dedup/anti-join above can optimize upstream metadata
@@ -137,9 +141,9 @@ def upsert_batch_into_parquet(
         # footer, so a stamped index grown through this sink would
         # lose its stamp nondeterministically)
         fresh = preserve_column_metadata(fresh)
-        _append_isolated(fresh, path, None)
+        _append_isolated(fresh, t, None)
     finally:
-        release_upsert_lock(spark, path)
+        release_upsert_lock(t)
 
 
 def drain_available_now(q, timeout: float = 60.0) -> None:

@@ -906,11 +906,12 @@ def test_upsert_lock_create_failure_is_not_reported_as_a_race(
         raise OSError(errno.ENOSPC, "No space left on device")
 
     tbl = str(tmp_path / "tbl")
+    t = sinks._hfs(spark, tbl)
     with monkeypatch.context() as m:
         m.setattr(sinks, "_write_small_file", no_space)
         with pytest.raises(OSError) as info:
-            sinks.acquire_upsert_lock(spark, tbl, "ctx")
+            sinks.acquire_upsert_lock(t, "ctx")
     assert info.value.errno == errno.ENOSPC
     assert not os.path.exists(os.path.join(tbl, "_UPSERT_LOCK"))
-    sinks.acquire_upsert_lock(spark, tbl, "ctx")
-    sinks.release_upsert_lock(spark, tbl)
+    sinks.acquire_upsert_lock(t, "ctx")
+    sinks.release_upsert_lock(t)
