@@ -15,6 +15,7 @@ is non-semantic; what must survive is:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import socket
 import uuid
@@ -22,6 +23,9 @@ from collections import namedtuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -60,15 +64,10 @@ def _hfs(spark, path: str) -> _Table:
 
 def _read_small_file(fs, hpath) -> bytes:
     """Whole tiny file (lock / writer marker — tens of bytes) through
-    the Hadoop stream, one byte per py4j call."""
+    the Hadoop stream, in one py4j call."""
     stream = fs.open(hpath)
     try:
-        data = bytearray()
-        while True:
-            b = stream.read()
-            if b < 0:
-                return bytes(data)
-            data.append(b)
+        return bytes(stream.readAllBytes())
     finally:
         stream.close()
 
@@ -335,10 +334,65 @@ def acquire_upsert_lock(t: _Table, ctx: str) -> None:
 
 
 def release_upsert_lock(t: _Table) -> None:
+    """Delete the table's upsert lock. A failed delete is logged, not
+    raised (the upsert's own outcome stands), because the lock it
+    leaves names this live pid: every later upsert from this process
+    into the table raises :class:`ConcurrentWriteError` until the file
+    is removed by hand."""
     try:
         t.fs.delete(t.Path(t.root, _LOCK_NAME), False)
-    except Exception:
-        pass
+    except Exception as exc:
+        log.warning(
+            "could not release the upsert lock %s/%s: %s",
+            t.path.rstrip("/"), _LOCK_NAME, exc,
+        )
+
+
+#: footer key under which every Spark parquet write stores its schema JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _table_schema(spark, t: _Table) -> StructType | None:
+    """The table's Spark schema, or None while it holds no visible data
+    file. A local table with data files at its root reads it from one
+    visible file's footer on the driver (no Spark job); partitioned
+    tables, other schemes, and files Spark did not write pay Spark's
+    own schema inference."""
+    local = _local_file_path(t.root)
+    names = [
+        n for n in os.listdir(local)
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    ] if local is not None else []
+    if names:
+        import pyarrow.parquet as pq
+
+        meta = pq.read_metadata(os.path.join(local, min(names))).metadata
+        if meta and _SPARK_SCHEMA_KEY in meta:
+            return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    elif next(_hadoop_parquet_files(t), None) is None:
+        return None
+    return spark.read.parquet(t.path).schema
+
+
+def check_upsert_schema(spark, t: _Table, schema: StructType) -> None:
+    """Raise ValueError unless a batch's columns match the table's by
+    name and data type (nullability and metadata ignored, as
+    ``simpleString`` shows types). A batch of another type would
+    otherwise publish files whose footers disagree with the table's: a
+    later read of the table fails, or the anti-join compares keys
+    across types."""
+    have = _table_schema(spark, t)
+    if have is None:
+        return
+    table = {f.name: f.dataType.simpleString() for f in have.fields}
+    batch = {f.name: f.dataType.simpleString() for f in schema.fields}
+    for name in [*table, *(n for n in batch if n not in table)]:
+        got, want = batch.get(name, "absent"), table.get(name, "absent")
+        if got != want:
+            raise ValueError(
+                f"upsert into {t.path!r}: column {name!r} is {got} in the "
+                f"batch but {want} in the table"
+            )
 
 
 def preserve_column_metadata(df: DataFrame) -> DataFrame:

@@ -117,6 +117,7 @@ def upsert_batch_into_parquet(
         _append_isolated,
         _hfs,
         acquire_upsert_lock,
+        check_upsert_schema,
         clear_stale_staging,
         preserve_column_metadata,
         release_upsert_lock,
@@ -127,6 +128,7 @@ def upsert_batch_into_parquet(
     acquire_upsert_lock(t, "upsert_batch_into_parquet")
     try:
         clear_stale_staging(t)
+        check_upsert_schema(spark, t, batch_df.schema)
         # the lock made the root, so an empty table reads as an empty
         # relation; the declared key schema spares an inference job
         key_schema = StructType([batch_df.schema[k] for k in key_cols])

@@ -2,6 +2,8 @@
 
 import datetime
 
+import pytest
+
 from sales_analytics_etl_sql_powerbi_spark.streaming import windows as W
 
 EVENTS = "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -915,3 +917,149 @@ def test_upsert_lock_create_failure_is_not_reported_as_a_race(
     assert not os.path.exists(os.path.join(tbl, "_UPSERT_LOCK"))
     sinks.acquire_upsert_lock(t, "ctx")
     sinks.release_upsert_lock(t)
+
+
+class TestUpsertDeclaredRead:
+    """The upsert reads the existing keys with the batch's declared key
+    schema: no schema-inference job, an empty root reads as an empty
+    table, and a batch whose columns differ from the table's by name or
+    type raises before anything is written."""
+
+    @staticmethod
+    def _batch(spark, lo, hi, k_type="int"):
+        return spark.range(lo, hi).selectExpr(
+            f"cast(id as {k_type}) as k", "id * 10 as v"
+        )
+
+    def test_key_read_launches_no_job(self, spark, tmp_path, monkeypatch):
+        """Everything the upsert does before its write (lock, sweep,
+        schema check, key read, anti-join plan) runs no Spark job; the
+        write is stubbed so the job group holds only those steps."""
+        from sales_analytics_etl_sql_powerbi_spark.sources import sinks
+        from sales_analytics_etl_sql_powerbi_spark.streaming.sinks import (
+            upsert_batch_into_parquet,
+        )
+
+        tbl = str(tmp_path / "tbl")
+        upsert_batch_into_parquet(self._batch(spark, 0, 5), tbl, ["k"])
+        appended = []
+        monkeypatch.setattr(
+            sinks, "_append_isolated", lambda df, *_: appended.append(df)
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("upsert-key-read", "upsert-key-read")
+        try:
+            upsert_batch_into_parquet(self._batch(spark, 3, 8), tbl, ["k"])
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(sc.statusTracker().getJobIdsForGroup("upsert-key-read")) == []
+        assert sorted(r.k for r in appended[0].collect()) == [5, 6, 7]
+
+    def test_first_upsert_into_empty_root(self, spark, tmp_path):
+        """An existing but empty table root is an empty table: the
+        first batch lands deduplicated, and a later batch that differs
+        only in nullability and column metadata is accepted."""
+        import os
+
+        from pyspark.sql import functions as F
+
+        from sales_analytics_etl_sql_powerbi_spark.streaming.sinks import (
+            upsert_batch_into_parquet,
+        )
+
+        tbl = str(tmp_path / "tbl")
+        os.makedirs(tbl)
+        first = self._batch(spark, 0, 4).unionByName(self._batch(spark, 2, 3))
+        upsert_batch_into_parquet(first, tbl, ["k"])
+        got = spark.read.parquet(tbl)
+        assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+            ("k", "int"), ("v", "bigint")
+        ]
+        assert sorted(tuple(r) for r in got.collect()) == [
+            (i, i * 10) for i in range(4)
+        ]
+        nullable = self._batch(spark, 3, 6).select(
+            F.when(F.col("k") >= 0, F.col("k")).alias("k"), "v"
+        ).withMetadata("v", {"unit": "cents"})
+        upsert_batch_into_parquet(nullable, tbl, ["k"])
+        assert sorted(r.k for r in spark.read.parquet(tbl).collect()) == list(
+            range(6)
+        )
+
+    @pytest.mark.parametrize("k_type", ["string", "double", "smallint"])
+    def test_type_mismatch_raises_before_writing(self, spark, tmp_path, k_type):
+        """A batch whose key type differs from the table's raises,
+        naming the table, the column and both types, and leaves the
+        table's files as they were (the unchecked upsert published
+        files whose footers disagreed with the table's)."""
+        import os
+        import re
+
+        from sales_analytics_etl_sql_powerbi_spark.streaming.sinks import (
+            upsert_batch_into_parquet,
+        )
+
+        tbl = str(tmp_path / "tbl")
+        upsert_batch_into_parquet(self._batch(spark, 0, 3), tbl, ["k"])
+        before = sorted(os.listdir(tbl))
+        bad = self._batch(spark, 3, 6, k_type)
+        with pytest.raises(
+            ValueError,
+            match=re.escape(tbl) + f".*'k' is {k_type} in the batch but int",
+        ):
+            upsert_batch_into_parquet(bad, tbl, ["k"])
+        assert sorted(os.listdir(tbl)) == before
+        assert sorted(r.k for r in spark.read.parquet(tbl).collect()) == [0, 1, 2]
+
+    def test_missing_column_raises(self, spark, tmp_path):
+        from sales_analytics_etl_sql_powerbi_spark.streaming.sinks import (
+            upsert_batch_into_parquet,
+        )
+
+        tbl = str(tmp_path / "tbl")
+        upsert_batch_into_parquet(self._batch(spark, 0, 3), tbl, ["k"])
+        with pytest.raises(ValueError, match="'v' is absent in the batch but bigint"):
+            upsert_batch_into_parquet(
+                self._batch(spark, 3, 6).drop("v"), tbl, ["k"]
+            )
+
+
+def test_release_upsert_lock_logs_a_failed_delete(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A lock delete that fails is logged with the lock's path and the
+    cause, not swallowed: the lock left behind names this live pid and
+    blocks every later upsert from this process."""
+    import logging
+    import os
+
+    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
+
+    tbl = str(tmp_path / "tbl")
+    t = sinks._hfs(spark, tbl)
+    sinks.acquire_upsert_lock(t, "ctx")
+
+    def broken_delete(*_args):
+        raise OSError("delete refused")
+
+    with monkeypatch.context() as m:
+        m.setattr(t.fs, "delete", broken_delete)
+        with caplog.at_level(logging.WARNING, logger=sinks.__name__):
+            sinks.release_upsert_lock(t)
+    assert f"{tbl}/_UPSERT_LOCK" in caplog.text
+    assert "delete refused" in caplog.text
+    assert os.path.exists(os.path.join(tbl, "_UPSERT_LOCK"))
+    sinks.release_upsert_lock(t)
+    assert not os.path.exists(os.path.join(tbl, "_UPSERT_LOCK"))
+
+
+def test_small_file_round_trips_through_a_file_uri(spark, tmp_path):
+    """Lock and marker files are read whole in one call; a payload of
+    every byte value survives the Hadoop stream both ways."""
+    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
+
+    payload = bytes(range(256)) * 16
+    t = sinks._hfs(spark, "file:" + str(tmp_path / "tbl"))
+    blob = t.Path(t.root, "blob")
+    sinks._write_small_file(t.fs, blob, payload, overwrite=True)
+    assert sinks._read_small_file(t.fs, blob) == payload
