@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import broadcast_threshold_bytes, plan_size_bytes
+
 __all__ = [
     "cdc_apply",
     "entity_clusters",
@@ -240,31 +242,6 @@ def scd2_apply(
 _AUTO_CELL_SIZE = 250
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's own size estimate for a plan — the SAME statistic
-    Spark's planner compares to ``autoBroadcastJoinThreshold`` when it
-    decides whether a join side broadcasts, so a regime decision based
-    on it agrees with the planner's by construction."""
-    return int(
-        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
-
-
-def _broadcast_threshold_bytes(df: DataFrame) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (−1 =
-    broadcasting disabled). Size-string forms ('10MB') are parsed with
-    Spark's own JavaUtils so the semantics can't drift."""
-    spark = df.sparkSession
-    v = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    try:
-        return int(v)
-    except ValueError:
-        return int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils
-            .byteStringAsBytes(v)
-        )
-
-
 def entity_match_pairs(
     dim: DataFrame,
     key: str = "customer_id",
@@ -415,8 +392,8 @@ def entity_match_pairs(
             raise ValueError(
                 "max_cell_size must be an int, None, or 'auto'"
             )
-        thr = _broadcast_threshold_bytes(dim)
-        est = _plan_size_bytes(base)
+        thr = broadcast_threshold_bytes(dim)
+        est = plan_size_bytes(base)
         if thr > 0 and est <= thr:
             # broadcast regime: Spark spreads the hot cell across the
             # probe side's partitions already; salting measured 2-4×

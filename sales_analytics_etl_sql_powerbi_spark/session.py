@@ -149,3 +149,28 @@ def adopt(session: SparkSession, df: DataFrame) -> DataFrame:
         # the session catalog's drop, not ``session.catalog``'s: that
         # one also uncaches the view's plan — ``df``'s own cache entry
         session._jsparkSession.sessionState().catalog().dropGlobalTempView(name)
+
+
+def plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's own size estimate for a plan — the SAME statistic
+    Spark's planner compares to ``autoBroadcastJoinThreshold`` when it
+    decides whether a join side broadcasts, so a regime decision based
+    on it agrees with the planner's by construction."""
+    return int(
+        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+
+
+def broadcast_threshold_bytes(df: DataFrame) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` of ``df``'s session in
+    bytes (−1 = broadcasting disabled). Size-string forms ('10MB') are
+    parsed with Spark's own JavaUtils so the semantics can't drift."""
+    spark = df.sparkSession
+    v = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    try:
+        return int(v)
+    except ValueError:
+        return int(
+            spark._jvm.org.apache.spark.network.util.JavaUtils
+            .byteStringAsBytes(v)
+        )

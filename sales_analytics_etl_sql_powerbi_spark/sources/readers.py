@@ -19,6 +19,7 @@ in practice; reference sheets are single-digit MB).
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -41,29 +42,136 @@ TESTDATA_TABLES = (
 )
 
 
+#: Spark's CSV ``maxColumns`` default — a wider header fails its read
+_CSV_MAX_COLUMNS = 20480
+#: longest header line read on the driver; a longer one falls back
+_CSV_HEADER_BYTES = 1 << 20
+
+
+def _spark_hidden(name: str) -> bool:
+    """Whether Spark's file listing skips ``name``
+    (``InMemoryFileIndex.shouldFilterOutPathName``)."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return hidden and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def _csv_data_files(path: str) -> list[str] | None:
+    """The files a Spark read of ``path`` scans, when that is plain on
+    the driver: a local non-hidden file, or a local directory whose
+    visible entries are all files. None for anything else (a URI, a
+    glob, a subdirectory, a missing path)."""
+    if "://" in path or path.startswith("file:") or any(c in path for c in "*?[]{}\\"):
+        return None
+    if os.path.isfile(path):
+        return None if _spark_hidden(os.path.basename(path)) else [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for entry in os.scandir(path):
+        if _spark_hidden(entry.name):
+            continue
+        if not entry.is_file():
+            return None
+        files.append(entry.path)
+    return files
+
+
+def _first_line(path: str) -> bytes:
+    with open(path, "rb") as f:
+        return f.readline(_CSV_HEADER_BYTES)
+
+
+def _driver_csv_header(spark: SparkSession, path: str) -> list[str] | None:
+    """The column names Spark's ``header=True`` CSV read of ``path``
+    gives, read on the driver, or None where that is not provable.
+
+    It applies when every data file of a local ``path`` starts with the
+    same non-blank ASCII line free of the quote, the escape, NUL and an
+    interior CR: Spark's parser then splits that line on ``,`` and
+    nothing else, whichever file's line it reads. A UTF-8 BOM and the
+    line end are dropped, then Spark's ``CSVUtils.makeSafeHeader`` runs:
+    an empty name becomes ``_c{i}``, and a duplicated name — compared
+    case-insensitively unless ``spark.sql.caseSensitive`` — becomes
+    ``{name}{i}``."""
+    files = _csv_data_files(path)
+    if not files:
+        return None
+    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    if not default_fs.startswith("file:"):
+        return None
+    lines = {_first_line(f) for f in files}
+    if len(lines) != 1:
+        return None
+    line = lines.pop()
+    if len(line) == _CSV_HEADER_BYTES:
+        return None  # may run on past the bytes read
+    if line.startswith(b"\xef\xbb\xbf"):
+        line = line[3:]
+    line = line.removesuffix(b"\n").removesuffix(b"\r")
+    # Spark skips a line that Java's String.trim (every char up to the
+    # space) leaves empty
+    if (
+        not line.strip(bytes(range(33)))
+        or not line.isascii()
+        or any(c in line for c in b'"\\\0\r')
+    ):
+        return None
+    names = line.decode("ascii").split(",")
+    if len(names) > _CSV_MAX_COLUMNS:
+        return None
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
+
+    def fold(name: str) -> str:
+        return name if case_sensitive else name.lower()
+
+    counts = Counter(fold(n) for n in names)
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if counts[fold(n)] > 1 else n
+        for i, n in enumerate(names)
+    ]
+
+
+def _csv_reader(spark: SparkSession):
+    return (
+        spark.read.option("header", True)
+        .option("encoding", "UTF-8")
+        # keep raw strings: no schema inference pass over the data
+        .option("inferSchema", False)
+    )
+
+
+def csv_header_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The all-string schema of a CSV export with a header line: the
+    names Spark's ``header=True`` read gives, every column StringType.
+
+    Read on the driver without a Spark job where
+    :func:`_driver_csv_header` proves the names equal Spark's; anywhere
+    else (quoted or non-ASCII headers, parts whose first lines differ,
+    an empty file, remote paths) Spark infers the header with its own
+    one-job read."""
+    names = _driver_csv_header(spark, path)
+    if names is None:
+        return _csv_reader(spark).csv(path).schema
+    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+
+
 def read_csv_all_string(
     spark: SparkSession, path: str, normalize_names: bool = True
 ) -> DataFrame:
     """S1 — CSV scan with every column as StringType (mirrors dtype=str).
 
-    Header inference runs once (cheap driver pass over the first file's
-    header line via Spark's own header handling); data columns are never
-    type-inferred, exactly like the reference. The BOM is consumed by
-    Spark's UTF-8 reader on the first header cell; ``normalize_colname``
-    removes any residue (reference etl/order_info_etl.py:31-35,182).
+    The header comes from :func:`csv_header_schema` — on the driver for
+    a plain local export, so the read launches no job — and data
+    columns are never type-inferred, exactly like the reference. A
+    UTF-8 BOM is dropped from the header by either read (utf-8-sig);
+    ``normalize_colname`` then cleans the names (reference
+    etl/order_info_etl.py:31-35,182).
     """
-    df = (
-        spark.read.option("header", True)
-        .option("encoding", "UTF-8")
-        # keep raw strings: no schema inference pass over the data
-        .option("inferSchema", False)
-        .csv(path)
-    )
-    # header=True without a schema yields all-string columns already;
-    # assert rather than re-cast so a Spark behavior change is loud.
-    for f in df.schema.fields:
-        if not isinstance(f.dataType, T.StringType):  # pragma: no cover
-            df = df.withColumn(f.name, df[f.name].cast("string"))
+    df = _csv_reader(spark).schema(csv_header_schema(spark, path)).csv(path)
     if normalize_names:
         df = df.toDF(*[normalize_colname(c) for c in df.columns])
     return df

@@ -254,35 +254,33 @@ def _append_isolated(df: DataFrame, t: _Table, partition_by: list[str] | None) -
 def _publish_staging(t: _Table, staging) -> None:
     """Move every data file from the staging dir into the table,
     preserving partition subdirectories; carry ``_SUCCESS`` over only
-    if the table has none yet."""
-    fs, root = t.fs, t.root
-    staging_str = staging.toString().rstrip("/") + "/"
-    it = fs.listFiles(staging, True)
-    while it.hasNext():
-        f = it.next()
-        src = f.getPath()
-        full = src.toString()
-        if not full.startswith(staging_str):  # defensive: FS returned
-            continue  # a path outside the staging root — never publish it
-        rel = full[len(staging_str):]
-        parts = rel.split("/")
-        name = parts[-1]
-        if name.startswith("_") or name.startswith("."):
-            continue  # _SUCCESS / committer leftovers — handled below
-        if any(p.startswith("_") or p.startswith(".") for p in parts[:-1]):
-            continue  # files under hidden dirs (_temporary) never publish
-        dest = root
-        for p in parts[:-1]:
-            dest = t.Path(dest, p)
-        fs.mkdirs(dest)
-        dest_file = t.Path(dest, name)
-        if not fs.rename(src, dest_file):
-            raise OSError(
-                f"publish failed: could not rename {full} to "
-                f"{dest_file.toString()} (destination exists?)"
-            )
+    if the table has none yet. Each directory is listed once and only
+    partition subdirectories are walked; the table root exists (the
+    writer made it), so only a partition directory is made, once,
+    before its first file lands."""
+    fs = t.fs
+    pending = [(staging, t.root, True)]
+    while pending:
+        src_dir, dest_dir, made = pending.pop()
+        for st in fs.listStatus(src_dir):
+            src = st.getPath()
+            name = src.getName()
+            if name.startswith(("_", ".")):
+                continue  # _SUCCESS (below), _temporary, committer leftovers
+            dest = t.Path(dest_dir, name)
+            if st.isDirectory():
+                pending.append((src, dest, False))
+                continue
+            if not made:
+                fs.mkdirs(dest_dir)
+                made = True
+            if not fs.rename(src, dest):
+                raise OSError(
+                    f"publish failed: could not rename {src.toString()} to "
+                    f"{dest.toString()} (destination exists?)"
+                )
     success_src = t.Path(staging, "_SUCCESS")
-    success_dst = t.Path(root, "_SUCCESS")
+    success_dst = t.Path(t.root, "_SUCCESS")
     if fs.exists(success_src) and not fs.exists(success_dst):
         fs.rename(success_src, success_dst)
 

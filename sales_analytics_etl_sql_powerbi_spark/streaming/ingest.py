@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.cleaning import normalize_colname
 from ..pipeline import clean_order_export
+from ..sources.readers import csv_header_schema
 
 
 def stream_order_export(
@@ -36,15 +37,15 @@ def stream_order_export(
     """Streaming order-export ingestion: the typed staging frame,
     continuously.
 
-    A streaming file source needs a declared schema; it is derived once
-    from a driver-side batch header read (metadata only — no data
-    scan), exactly the all-``StringType`` shape ``read_csv_all_string``
-    guarantees. Header normalization and the full cleaning stack then
-    apply as the same plan-level projections as the batch path.
+    A streaming file source needs a declared schema. It comes from
+    :func:`..sources.readers.csv_header_schema`, the all-``StringType``
+    shape ``read_csv_all_string`` reads with: the header line read on
+    the driver where that provably gives Spark's own names (no Spark
+    job), else Spark's inferred header (one job reading the first
+    line). Header normalization and the full cleaning stack then apply
+    as the same plan-level projections as the batch path.
     """
-    raw_schema = (
-        spark.read.option("header", True).option("inferSchema", False).csv(path)
-    ).schema
+    raw_schema = csv_header_schema(spark, path)
     reader = spark.readStream.schema(raw_schema).option("header", True)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

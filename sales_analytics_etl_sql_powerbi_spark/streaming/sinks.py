@@ -22,6 +22,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from ..session import broadcast_threshold_bytes, plan_size_bytes
+
+#: the largest batch, by Catalyst's size estimate, an upsert runs as one
+#: task: above it, the batch's own scan and transforms lose more on one
+#: core than one stage saves. Upsert wall time of an order-export CSV
+#: cleaned by ``clean_order_export``, distributed plan → one task, 4-core
+#: host: 0.3 MB (estimate 0.2 MB) 0.73 → 0.61 s; 1.3 MB (0.8 MB) replayed
+#: 0.50 → 0.90 s; 4 MB (2.5 MB) 1.52 → 2.13 s; 58 MB (38 MB) 6.7 → 21 s.
+_ONE_TASK_BATCH_BYTES = 512 * 1024
+
 __all__ = [
     "stream_to_parquet",
     "foreach_batch_upsert_parquet",
@@ -59,9 +69,9 @@ def foreach_batch_upsert_parquet(
     Every micro-batch is key-deduped then anti-joined against the
     current table before appending — a replayed batch (failure
     recovery, at-least-once sources) inserts nothing the table already
-    has. The anti-join reads only the key columns of the existing
-    table (declared key schema, no inference job); the batch side is
-    micro-batch-sized. Returns the started StreamingQuery.
+    has. Each micro-batch goes through :func:`upsert_batch_into_parquet`
+    (one single-task job for a small batch, the distributed plan for a
+    larger one). Returns the started StreamingQuery.
     """
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
@@ -88,9 +98,21 @@ def upsert_batch_into_parquet(
     anti-joined against the CURRENT table keys, then appended — so a
     key's surviving row comes from the FIRST batch that carried it,
     and any replayed batch (at-least-once delivery, failure recovery)
-    inserts nothing the table already has. The anti-join reads only
-    the key columns of the existing table (declared key schema, no
-    inference job); the batch side is micro-batch-sized.
+    inserts nothing the table already has. Which of several rows
+    sharing a key within one batch survives is not specified. Rows
+    whose key holds a NULL never match an existing key, so every batch
+    carrying one inserts it. The anti-join reads only the key columns
+    of the existing table (declared key schema, no inference job).
+
+    Two plans, one result. When Catalyst's size estimate of the
+    existing keys is within ``spark.sql.autoBroadcastJoinThreshold`` —
+    the test Spark's planner makes before it broadcasts — and the
+    batch's is within that and :data:`_ONE_TASK_BATCH_BYTES`, each side
+    is coalesced to one partition and the anti-join is a shuffled hash
+    join: the plan has no exchange, so the write is one job of one task
+    and lands one file. Otherwise (or with broadcasting disabled) the
+    dedup shuffles and the join is whatever the planner picks, spread
+    over the cluster.
 
     Crash consistency (round 17 — VERDICT r16 item 3): a batch that
     dies MID-WRITE cannot tear the table. Visible ``.parquet`` files
@@ -133,6 +155,16 @@ def upsert_batch_into_parquet(
         # relation; the declared key schema spares an inference job
         key_schema = StructType([batch_df.schema[k] for k in key_cols])
         existing_keys = spark.read.schema(key_schema).parquet(path)
+        threshold = broadcast_threshold_bytes(batch_df)
+        if (
+            0 < threshold
+            and plan_size_bytes(existing_keys) <= threshold
+            and plan_size_bytes(batch_df) <= min(threshold, _ONE_TASK_BATCH_BYTES)
+        ):
+            # one partition each side, so the dedup and a shuffled hash
+            # anti-join need no exchange: the write is one job of one task
+            batch_df = batch_df.coalesce(1)
+            existing_keys = existing_keys.coalesce(1).hint("shuffle_hash")
         fresh = batch_df.dropDuplicates(key_cols)
         fresh = fresh.join(existing_keys, on=key_cols, how="left_anti")
         # re-assert the batch's column metadata as the outermost

@@ -365,3 +365,23 @@ def test_multimodal_features_is_one_scan_one_python_node(spark, sf_dir):
     assert python_nodes == ["MapInArrow"], plan
     assert "BroadcastExchange" not in plan, plan
     assert not re.search(r"\b[A-Z]\w*Join\b|CartesianProduct", plan), plan
+
+
+def test_batch_sized_upsert_write_plan_has_no_exchange(spark, tmp_path, monkeypatch):
+    """An upsert whose batch and existing keys are within the broadcast
+    threshold writes through one stage: the dedup and the anti-join
+    run in one partition, with no shuffle and no broadcast exchange."""
+    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
+    from sales_analytics_etl_sql_powerbi_spark.streaming.sinks import (
+        upsert_batch_into_parquet,
+    )
+
+    tbl = str(tmp_path / "tbl")
+    upsert_batch_into_parquet(spark.range(20).selectExpr("id AS k", "id AS v"), tbl, ["k"])
+    written = []
+    monkeypatch.setattr(sinks, "_append_isolated", lambda df, *_: written.append(df))
+    batch = spark.range(40).selectExpr("id % 30 AS k", "id AS v")
+    upsert_batch_into_parquet(batch, tbl, ["k"])
+    plan = _plan(written[0])
+    assert "Exchange" not in plan, plan
+    assert "ShuffledHashJoin" in plan and "LeftAnti" in plan, plan

@@ -30,6 +30,103 @@ def test_csv_all_string_bom_header(spark, tmp_path):
     assert df.first().goods_number == "3"  # stays a string
 
 
+_BOM = "\ufeff".encode()
+
+#: header shapes → (the CSV parts, whether the header is read on the
+#: driver); a shape whose parts differ lists one content per part
+_HEADER_SHAPES = {
+    "plain": ([b"a,b,c\n1,2,3\n"], True),
+    "bom": ([_BOM + b"Order No,b\n1,2\n"], True),
+    "crlf": ([b"a,b\r\n1,2\r\n"], True),
+    "spaces_hyphens": ([b" Line-Number ,goods-number,Order No\n1,2,3\n"], True),
+    "empty_name": ([b"a,,c\n1,2,3\n"], True),
+    "trailing_comma": ([b"a,b,\n1,2,3\n"], True),
+    "exact_duplicates": ([b"a,b,a\n1,2,3\n"], True),
+    "case_duplicates": ([b"a,B,A,b\n1,2,3,4\n"], True),
+    "bom_duplicates": ([_BOM + b"a,a\n1,2\n"], True),
+    "same_parts": ([b"a,b\n1,2\n", b"a,b\n3,4\n"], True),
+    "quoted": ([b'"a,b",c\n1,2\n'], False),
+    "different_parts": ([b"a,b\n1,2\n", b"a,c\n3,4\n5,6\n"], False),
+    "non_ascii": (["\u00e9t\u00e9,b\n1,2\n".encode()], False),
+    "empty_file": ([b""], False),
+    "blank_first_line": ([b" \na,b\n1,2\n"], False),
+}
+
+
+def _jobs_in(spark, fn):
+    """(fn's result, the ids of the Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = "jobs-" + os.urandom(4).hex()
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred_header(session, path):
+    """Spark's own ``header=True`` names, normalized like the reader's."""
+    from sales_analytics_etl_sql_powerbi_spark.functions.cleaning import (
+        normalize_colname,
+    )
+
+    cols = session.read.option("header", True).csv(path).columns
+    return [normalize_colname(c) for c in cols]
+
+
+def _assert_header_parity(session, path, declared):
+    from sales_analytics_etl_sql_powerbi_spark.sources import readers
+
+    df, jobs = _jobs_in(session, lambda: read_csv_all_string(session, path))
+    assert df.columns == _inferred_header(session, path)
+    assert all(isinstance(f.dataType, T.StringType) for f in df.schema.fields)
+    assert (readers._driver_csv_header(session, path) is not None) == declared
+    if declared:
+        assert jobs == []
+
+
+@pytest.mark.parametrize("shape", sorted(_HEADER_SHAPES))
+def test_csv_header_parity(spark, tmp_path, shape):
+    """The driver-read header gives the columns of Spark's inferred
+    ``header=True`` read, and launches no job; a header the driver
+    cannot prove equal is left to Spark's inference."""
+    parts, declared = _HEADER_SHAPES[shape]
+    if len(parts) == 1:
+        path = tmp_path / "one.csv"
+        path.write_bytes(parts[0])
+    else:
+        path = tmp_path / "parts"
+        path.mkdir()
+        for i, content in enumerate(parts):
+            (path / f"part-{i}.csv").write_bytes(content)
+        (path / "_SUCCESS").write_bytes(b"")
+    _assert_header_parity(spark, str(path), declared)
+
+
+def test_csv_header_parity_case_sensitive(spark, tmp_path):
+    """Under ``spark.sql.caseSensitive`` only exact duplicates are
+    renamed, as in Spark's own header read."""
+    from sales_analytics_etl_sql_powerbi_spark.session import scoped
+
+    path = tmp_path / "one.csv"
+    path.write_bytes(b"a,B,A,b,a\n1,2,3,4,5\n")
+    child = scoped(spark, {"spark.sql.caseSensitive": "true"})
+    _assert_header_parity(child, str(path), True)
+    df = read_csv_all_string(child, str(path), normalize_names=False)
+    assert df.columns == ["a0", "B", "A", "b", "a4"]
+
+
+def test_csv_header_parity_export_fixture(spark, sf_dir):
+    """The 32-part order export behind the CSV gate is read without a
+    header job."""
+    from sales_analytics_etl_sql_powerbi_spark.sources.fixtures import (
+        ensure_order_export_csv,
+    )
+
+    _assert_header_parity(spark, ensure_order_export_csv(sf_dir), True)
+
+
 def test_read_input_dispatch(spark, tmp_path):
     with pytest.raises(ValueError, match="Unsupported input extension"):
         read_input(spark, "/nope/file.avro")

@@ -1024,6 +1024,105 @@ class TestUpsertDeclaredRead:
             )
 
 
+class TestUpsertRegimes:
+    """A batch-sized upsert is planned as one stage (one job of one
+    task); a larger batch, or broadcasting disabled, runs the
+    distributed plan; both build the same table."""
+
+    @staticmethod
+    def _batches(spark):
+        """In-batch duplicate keys, NULL key parts, a replayed batch."""
+        rows = [
+            [(1, "a", 10), (1, "a", 10), (2, "b", 20), (None, "n", 30), (None, "n", 30)],
+            [(2, "b", 21), (3, None, 40), (3, None, 40), (4, "d", 50)],
+            [(1, "a", 10), (1, "a", 10), (2, "b", 20), (None, "n", 30), (None, "n", 30)],
+            [(4, "d", 51), (5, "e", 60), (5, "e", 60)],
+        ]
+
+        def sql(v):
+            return "NULL" if v is None else repr(v)
+
+        # VALUES, not createDataFrame: a local relation carries a size
+        # estimate, an RDD of Python rows does not
+        return [
+            spark.sql(
+                "SELECT CAST(k1 AS INT) AS k1, CAST(k2 AS STRING) AS k2, "
+                "CAST(v AS BIGINT) AS v FROM VALUES "
+                + ", ".join(f"({', '.join(map(sql, row))})" for row in batch)
+                + " AS t(k1, k2, v)"
+            )
+            for batch in rows
+        ]
+
+    @staticmethod
+    def _run(spark, tbl):
+        """Upsert the batch sequence into ``tbl``; (table rows, the
+        (jobs, tasks) each upsert launched)."""
+        from sales_analytics_etl_sql_powerbi_spark.streaming.sinks import (
+            upsert_batch_into_parquet,
+        )
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        costs = []
+        for i, batch in enumerate(TestUpsertRegimes._batches(spark)):
+            group = f"upsert-regime-{id(spark)}-{tbl}-{i}"
+            sc.setJobGroup(group, group)
+            try:
+                upsert_batch_into_parquet(batch, tbl, ["k1", "k2"])
+            finally:
+                sc.setJobGroup(None, None)
+            jobs = list(tracker.getJobIdsForGroup(group))
+            tasks = sum(
+                tracker.getStageInfo(s).numTasks
+                for j in jobs
+                for s in tracker.getJobInfo(j).stageIds
+                if tracker.getStageInfo(s) is not None
+            )
+            costs.append((len(jobs), tasks))
+        rows = spark.read.parquet(tbl).collect()
+        return sorted(map(tuple, rows), key=repr), costs
+
+    def test_batch_sized_upsert_is_one_job_of_one_task(self, spark, tmp_path):
+        _, costs = self._run(spark, str(tmp_path / "tbl"))
+        assert costs == [(1, 1)] * 4
+
+    def test_batch_above_one_task_size_keeps_the_distributed_plan(
+        self, spark, tmp_path
+    ):
+        """A batch estimated above the one-task bound (though within the
+        broadcast threshold) is not squeezed into one task."""
+        from sales_analytics_etl_sql_powerbi_spark.session import plan_size_bytes
+        from sales_analytics_etl_sql_powerbi_spark.streaming import sinks
+
+        batch = spark.range(0, 50_000, numPartitions=4).selectExpr("id AS k", "id AS v")
+        assert sinks._ONE_TASK_BATCH_BYTES < plan_size_bytes(batch)
+        sc = spark.sparkContext
+        sc.setJobGroup("upsert-above-bound", "upsert-above-bound")
+        try:
+            sinks.upsert_batch_into_parquet(batch, str(tmp_path / "tbl"), ["k"])
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup("upsert-above-bound")) > 1
+        assert spark.read.parquet(str(tmp_path / "tbl")).count() == 50_000
+
+    def test_regimes_build_identical_tables(self, spark, tmp_path):
+        from sales_analytics_etl_sql_powerbi_spark.session import scoped
+
+        small, _ = self._run(spark, str(tmp_path / "small"))
+        spread = scoped(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+        big, costs = self._run(spread, str(tmp_path / "big"))
+        assert all(jobs > 1 for jobs, _ in costs)
+        assert small == big
+        assert small == sorted(
+            [
+                (1, "a", 10), (2, "b", 20), (3, None, 40), (4, "d", 50),
+                (5, "e", 60), (None, "n", 30), (None, "n", 30),
+            ],
+            key=repr,
+        )
+
+
 def test_release_upsert_lock_logs_a_failed_delete(
     spark, tmp_path, monkeypatch, caplog
 ):
