@@ -1075,11 +1075,10 @@ def q_text_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     merges = _PLAN_CACHE[mkey]
     # Round 18: both bpe branches aggregate at (token, detail)
     # granularity and subwords/ids are pure functions of the token, so
-    # the corpus-sized encode join is unnecessary — per-token corpus
+    # no corpus-sized encode join is needed — per-token corpus
     # counts are ONE aggregate over the shared token frame, joined to
     # the vocab-sized encoded table (guide §8: decide on the small
-    # table). Row-identical to bpe_encode(...).groupBy by
-    # construction; proven against the unchanged oracle.
+    # table).
     toks_ne = toks_all.where(F.length("token") > 0)
     tok_counts = toks_ne.groupBy("token").agg(
         F.count(F.lit(1)).cast("long").alias("n_occurrences")
@@ -1108,9 +1107,8 @@ def q_text_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     # retrained merges, so the convention (sorted base first, merge
     # products in learned order, unknown base symbols → −1) is pinned
     # cross-engine; tf carries n_oov
-    # same vocab-granularity route: the id stamp is the SAME literal
-    # expression bpe_encode_ids uses (subword_ids_expr), applied to the
-    # shared encoded vocab instead of a second corpus-sized encode
+    # same vocab-granularity route: the id stamp (subword_ids_expr)
+    # is applied to the shared encoded vocab
     ids = _bpe.subword_ids_expr(
         _bpe.bpe_vocab_ids(merges, alphabet=list(_BPE_ID_ALPHABET))
     )

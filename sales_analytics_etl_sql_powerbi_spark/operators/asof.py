@@ -25,12 +25,12 @@ DuckDB's ASOF JOIN, whose equal-timestamp winner is unspecified), so
 results hash-match bit-for-bit.
 
 ``asof_forward`` is the mirror (earliest right at-or-after, same
-one-shuffle shape); ``asof_nearest`` composes both and picks the
-closer match per row (ties → backward, pandas semantics). All three
-take ``tolerance_seconds`` — matches farther than the tolerance in
-time are nulled out, pandas ``merge_asof(tolerance=...)`` semantics —
-applied as a post-projection on the carried match timestamp, so the
-plan shape (and its single shuffle) is unchanged.
+one-shuffle shape); ``events_asof_directions`` composes both and
+picks the closer match per row (ties → backward, pandas semantics).
+Both directions take ``tolerance_seconds`` — matches farther than the
+tolerance in time are nulled out, pandas ``merge_asof(tolerance=...)``
+semantics — applied as a post-projection on the carried match
+timestamp, so the plan shape (and its single shuffle) is unchanged.
 """
 
 from __future__ import annotations
@@ -41,10 +41,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "asof_backward",
     "asof_forward",
-    "asof_nearest",
-    "events_asof",
     "events_asof_directions",
-    "events_asof_sql",
     "events_asof_directions_sql",
 ]
 
@@ -56,9 +53,8 @@ def _ts_num(col: Column) -> Column:
 
 
 def _prefer_backward(b_ts: Column, f_ts: Column, ts: Column) -> Column:
-    """The ONE nearest-side chooser (ties → backward, a NULL side loses
-    to a non-NULL side) — shared by asof_nearest and
-    events_asof_directions so the tie/NULL semantics cannot drift."""
+    """The nearest-side chooser of :func:`events_asof_directions`: ties
+    go backward, and a NULL side loses to a non-NULL side."""
     d_b = _ts_num(ts) - _ts_num(b_ts)
     d_f = _ts_num(f_ts) - _ts_num(ts)
     return F.when(b_ts.isNull(), F.lit(False)).otherwise(
@@ -213,123 +209,6 @@ def asof_forward(
     if tolerance_seconds is not None:
         return _apply_tolerance(out, ts, payload, tolerance_seconds)
     return out if _keep_match_ts else out.drop("asof___ts")
-
-
-def asof_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_key: str,
-    ts: str = "ts",
-    payload: tuple[str, ...] = ("value",),
-    tiebreak: str | None = None,
-    tolerance_seconds: float | None = None,
-) -> DataFrame:
-    """Left rows + the CLOSEST right payload in time (either direction).
-
-    pandas ``merge_asof(direction="nearest")``: per left row, compare
-    the backward match and the forward match and keep whichever is
-    closer in time; exact ties go backward. Needs ``left_key`` — a
-    unique-per-left-row column (event id) — to join the two passes
-    back together; the join is an equi-join on that key, so the total
-    cost is two as-of windows + one key-sized shuffle. Tolerance
-    applies to the chosen side.
-    """
-    b = asof_backward(
-        left, right, on, ts, payload, tiebreak, _keep_match_ts=True
-    )
-    f = asof_forward(
-        left.select(left_key, on, ts),
-        right,
-        on,
-        ts,
-        payload,
-        tiebreak,
-        _keep_match_ts=True,
-    ).select(
-        F.col(left_key),
-        F.col("asof___ts").alias("__fwd___ts"),
-        *[F.col(f"asof_{c}").alias(f"__fwd_{c}") for c in payload],
-    )
-    j = b.join(f, left_key)
-    use_b = _prefer_backward(
-        F.col("asof___ts"), F.col("__fwd___ts"), F.col(ts)
-    )
-    chosen_ts = F.when(use_b, F.col("asof___ts")).otherwise(F.col("__fwd___ts"))
-    out = j.select(
-        *[c for c in b.columns if not c.startswith("asof_")],
-        chosen_ts.alias("asof___ts"),
-        *[
-            F.when(use_b, F.col(f"asof_{c}"))
-            .otherwise(F.col(f"__fwd_{c}"))
-            .alias(f"asof_{c}")
-            for c in payload
-        ],
-    )
-    if tolerance_seconds is not None:
-        return _apply_tolerance(out, ts, payload, tolerance_seconds)
-    return out.drop("asof___ts")
-
-
-def events_asof(
-    events: DataFrame,
-    anchor_type: str = "purchase",
-    source_type: str = "view",
-) -> DataFrame:
-    """Each anchor event + the user's most recent prior source event.
-
-    The canonical funnel question ("which view preceded this
-    purchase?") as one as-of join keyed by user.
-    """
-    anchors = events.where(F.col("event_type") == anchor_type).select(
-        "event_id", "user_id", "ts"
-    )
-    sources = events.where(F.col("event_type") == source_type).select(
-        "user_id", "ts", F.col("event_id").alias("src_event_id"), "value"
-    )
-    out = asof_backward(
-        anchors,
-        sources,
-        on="user_id",
-        ts="ts",
-        payload=("src_event_id", "value"),
-        tiebreak="src_event_id",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("asof_src_event_id").alias("prior_view_id"),
-        F.col("asof_value").alias("prior_view_value"),
-    ).orderBy("event_id")
-
-
-def events_asof_sql(
-    anchor_type: str = "purchase", source_type: str = "view"
-) -> str:
-    """Window-formulation twin (same ordering, same inclusive <=)."""
-    return f"""
-WITH u AS (
-  SELECT event_id, user_id, ts, 1 AS side,
-         NULL::BIGINT AS tb, NULL::BIGINT AS p_id, NULL::DOUBLE AS p_value
-  FROM events WHERE event_type = '{anchor_type}'
-  UNION ALL
-  SELECT NULL::BIGINT, user_id, ts, 0 AS side,
-         event_id AS tb, event_id AS p_id, value AS p_value
-  FROM events WHERE event_type = '{source_type}'
-),
-carried AS (
-  SELECT *,
-         last_value(p_id IGNORE NULLS) OVER w AS prior_view_id,
-         last_value(p_value IGNORE NULLS) OVER w AS prior_view_value
-  FROM u
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, side ASC, tb ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT event_id, user_id, ts, prior_view_id, prior_view_value
-FROM carried WHERE side = 1
-ORDER BY event_id
-"""
 
 
 def events_asof_directions(events: DataFrame) -> DataFrame:

@@ -20,9 +20,8 @@ corpus:
 
 Encoding re-uses the same trick: apply the merges to the DISTINCT
 token table (vocab-sized, in Python-loop order with the same
-checkpoint cadence), then one key equi-join stamps every corpus token
-with its subword sequence — the corpus is touched exactly twice
-(tokenize, join), regardless of merge count.
+checkpoint cadence); a caller joins per-token corpus counts to it, so
+the corpus is never touched by the merge chain.
 
 The merge-application fold is greedy left-to-right over the symbol
 array, which equals standard non-overlapping BPE application: after a
@@ -41,14 +40,9 @@ from .text import exploded_tokens
 
 __all__ = [
     "bpe_train",
-    "bpe_train_local",
-    "bpe_encode",
     "bpe_encode_vocab",
     "bpe_train_py",
-    "bpe_train_py_fast",
-    "bpe_apply_py",
     "bpe_vocab_ids",
-    "bpe_encode_ids",
     "subword_ids_expr",
 ]
 
@@ -139,76 +133,13 @@ def bpe_train(
     return merges
 
 
-def bpe_train_local(
-    docs: DataFrame,
-    n_merges: int = 50,
-    min_pair_count: int = 2,
-    max_vocab_rows: int = 4_000_000,
-) -> list[tuple[str, str]]:
-    """Driver-side training fast path for REAL vocabulary sizes
-    (VERDICT r7 item 5): one distributed corpus aggregate builds the
-    (token, count) table, ONE bounded collect ships it to the driver
-    (the table is vocabulary-sized by construction — the same
-    boundedness argument as the IVF codebook sample; a web-scale
-    corpus has ~10⁷ types ≈ low hundreds of MB), and the pure-Python
-    reference trainer runs the merge loop locally with zero further
-    cluster round-trips.
-
-    WHEN EACH PATH WINS: :func:`bpe_train` pays one driver sync PER
-    MERGE (~0.3s measured) — fine for tens of merges, hours for a
-    real 32k-merge vocabulary. This path pays one collect up front
-    and then ~µs per merge on driver-sized data, so it wins whenever
-    the type table fits driver memory — i.e. essentially always for
-    whitespace-token corpora. The distributed loop remains the
-    arbitrarily-scalable fallback (vocab bigger than driver memory)
-    and the cross-implementation parity witness.
-
-    ``max_vocab_rows`` is the explicit size guard: the collect is
-    refused (ValueError) rather than silently attempted when the type
-    count exceeds it. Output is identical to :func:`bpe_train` —
-    same argmax, tie-break, and fold semantics (parity-pinned in
-    tests).
-    """
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    counts = (
-        exploded_tokens(docs)
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).cast("long").alias("__wc"))
-    ).persist()
-    try:
-        n_types = counts.count()
-        if n_types > max_vocab_rows:
-            raise ValueError(
-                f"distinct-token table has {n_types} rows > "
-                f"max_vocab_rows={max_vocab_rows}; raise the guard or "
-                "use the distributed bpe_train"
-            )
-        wc = {r["token"]: r["__wc"] for r in counts.collect()}
-    finally:
-        counts.unpersist()
-    return bpe_train_py_fast(wc, n_merges=n_merges, min_pair_count=min_pair_count)
-
-
-#: merge-count boundary for bpe_encode's impl="auto": at or below,
-#: the pure-JVM expression chain (cross-engine witness, zero Python);
-#: above, the chain's costs compound — one fold EXPRESSION per merge
-#: on the vocab plan plus a localCheckpoint job every
-#: ``checkpoint_every`` merges (a 32k-merge model would pay ~4000
-#: eager jobs just building the vocab table) — so the vocab-sized
-#: Arrow rank-map application takes over (measured at 32k merges:
-#: see PLAN_AUDIT round 16).
-_EXPR_MERGE_BOUND = 256
-
-
 def _validate_merges(merges: list[tuple[str, str]]) -> None:
-    """Reject ill-formed merge lists up front (ADVICE r16): the arrow
-    rank-map path and the expr fold chain are only equivalent when
-    every pair's operands are DERIVABLE — a single character (incl.
-    the end-of-word marker) or the product of an EARLIER merge, which
-    every trained list satisfies by construction. A hand-ordered list
-    crossing the auto impl bound used to change output with no
-    diagnostic. Driver-side, O(total merge chars)."""
+    """Reject ill-formed merge lists up front: every pair's operands
+    must be DERIVABLE — a single character (incl. the end-of-word
+    marker) or the product of an EARLIER merge, which every trained
+    list satisfies by construction. A pair with an underivable operand
+    can never fire, so the fold would drop it without a diagnostic.
+    Driver-side, O(total merge chars)."""
     derived: set[str] = set()
     for i, (a, b) in enumerate(merges):
         for op in (a, b):
@@ -217,111 +148,33 @@ def _validate_merges(merges: list[tuple[str, str]]) -> None:
                     f"ill-formed merge list: pair {i} operand {op!r} is "
                     "neither a single character nor the product of an "
                     "earlier merge — trained merge lists (bpe_train / "
-                    "bpe_train_local) satisfy this by construction; "
+                    "bpe_train_py) satisfy this by construction; "
                     "reorder or retrain a hand-built list"
                 )
         derived.add(a + b)
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    checkpoint_every: int = 8,
-    impl: str = "auto",
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """Encode the corpus with a learned merge list: (doc_id, token,
-    subwords array<string>, n_subwords) — one row per corpus token
-    occurrence. The merge chain is applied to the DISTINCT token
-    table only; the corpus pays one tokenize and one key equi-join
-    however many merges the model has.
-
-    TWO PHYSICAL PATHS, identical output (hypothesis-pinned):
-    ``impl="expr"`` chains one greedy-fold expression per merge on
-    the vocab table — all-JVM, the cross-engine witness, but plan
-    size and checkpoint-job count grow linearly in merges.
-    ``impl="arrow"`` applies the rank-map greedy loop
-    (:func:`bpe_apply_py`) per DISTINCT token in one Arrow-batched
-    pandas_udf — the real-vocabulary path (a 32k-merge model is one
-    ~MB ranks dict shipped once per worker, and the corpus-sized join
-    is unchanged). ``"auto"`` picks expr at ≤ ``_EXPR_MERGE_BOUND``
-    merges, arrow beyond — safe because the merge list is validated
-    well-formed first (:func:`_validate_merges`), the precondition
-    under which the two paths are hypothesis-pinned identical.
-
-    ``toks``: optionally a precomputed ``exploded_tokens(docs,
-    drop_empty=False)`` frame (typically persisted by a composition
-    that tokenizes once for several consumers — round 18); the
-    empty-token contract is applied here either way.
-    """
-    toks = (
-        exploded_tokens(docs)
-        if toks is None
-        else toks.where(F.length("token") > 0)
-    )
-    vocab = bpe_encode_vocab(
-        toks, merges, checkpoint_every=checkpoint_every, impl=impl
-    )
-    return toks.join(vocab, "token").select(
-        "doc_id",
-        "token",
-        "subwords",
-        F.size("subwords").cast("int").alias("n_subwords"),
-    )
 
 
 def bpe_encode_vocab(
     tokens: DataFrame,
     merges: list[tuple[str, str]],
     checkpoint_every: int = 8,
-    impl: str = "auto",
 ) -> DataFrame:
-    """(token, subwords) over the DISTINCT tokens of ``tokens`` — the
-    vocab-sized half of :func:`bpe_encode`, exposed on its own
-    (optimization round 18) so a composition that only needs
-    vocab-granularity output can skip the corpus-sized stamp join
-    entirely: per-token corpus counts are one aggregate over the
-    already-exploded token frame, and subwords are a pure function of
-    the token, so (counts ⋈ this) equals ``bpe_encode(...).groupBy``
-    row for row at a fraction of the shuffled bytes (guide §8 —
-    decide on the small table, don't drag the corpus through it).
+    """(token, subwords) over the DISTINCT tokens of ``tokens``: the
+    merge chain runs on the vocab-sized table only, one greedy-fold
+    expression per merge, all-JVM, with lineage truncated every
+    ``checkpoint_every`` merges. Subwords are a pure function of the
+    token, so a composition joins per-token corpus counts to this
+    instead of dragging the corpus through the chain.
 
-    ``tokens`` is any frame with a ``token`` column; both physical
-    paths (expr chain / Arrow rank-map) are unchanged from
-    :func:`bpe_encode`, whose docstring explains the crossover.
+    ``tokens`` is any frame with a ``token`` column.
     """
     _validate_merges(merges)
-    if impl == "auto":
-        impl = "expr" if len(merges) <= _EXPR_MERGE_BOUND else "arrow"
     vocab = tokens.select("token").distinct()
-    if impl == "expr":
-        vocab = vocab.withColumn("subwords", _chars_with_eow(F.col("token")))
-        for i, (a, b) in enumerate(merges):
-            vocab = vocab.withColumn(
-                "subwords", _apply_merge(F.col("subwords"), a, b)
-            )
-            if (i + 1) % checkpoint_every == 0:
-                vocab = vocab.localCheckpoint(eager=True)
-    elif impl == "arrow":
-        import pandas as pd
-
-        merges_local = list(merges)
-        ranks = {p: i for i, p in enumerate(merges_local)}
-
-        def _apply(tokens_ser):
-            return pd.Series(
-                [
-                    None
-                    if t is None
-                    else _bpe_apply_ranked(t, merges_local, ranks)
-                    for t in tokens_ser
-                ]
-            )
-
-        apply_udf = F.pandas_udf(_apply, "array<string>")
-        vocab = vocab.withColumn("subwords", apply_udf(F.col("token")))
-    else:
-        raise ValueError(f"unknown impl {impl!r} (auto | expr | arrow)")
+    vocab = vocab.withColumn("subwords", _chars_with_eow(F.col("token")))
+    for i, (a, b) in enumerate(merges):
+        vocab = vocab.withColumn("subwords", _apply_merge(F.col("subwords"), a, b))
+        if (i + 1) % checkpoint_every == 0:
+            vocab = vocab.localCheckpoint(eager=True)
     return vocab
 
 
@@ -358,125 +211,6 @@ def bpe_train_py(
     return merges
 
 
-def bpe_train_py_fast(
-    word_counts: dict[str, int], n_merges: int = 50, min_pair_count: int = 2
-) -> list[tuple[str, str]]:
-    """Incremental twin of :func:`bpe_train_py` for REAL merge counts
-    (round 16 — VERDICT r15 item 4): the reference trainer rescans
-    EVERY word's pairs on EVERY merge (O(vocab·len) per merge — hours
-    at 32k merges), which is why the 32k production shape had never
-    been run end to end. This trainer maintains the classic
-    incremental structures (Sennrich et al.'s released subword-nmt
-    does the same): a pair→count table, a pair→containing-words
-    index, and a lazy max-heap keyed (−count, pair) — each merge
-    touches only the words that contain the merged pair, and the
-    argmax is a heap pop with staleness re-checks.
-
-    Output is IDENTICAL to :func:`bpe_train_py` by construction —
-    same (count desc, pair asc) argmax tie-break, same greedy
-    left-to-right application, same ``min_pair_count`` stop —
-    and parity is hypothesis-pinned (tests/test_bpe.py)."""
-    import heapq
-
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    words: list[list[str]] = []
-    wcs: list[int] = []
-    for w, c in word_counts.items():
-        words.append(list(w) + [_EOW])
-        wcs.append(c)
-
-    pair_counts: dict[tuple[str, str], int] = {}
-    pair_words: dict[tuple[str, str], set[int]] = {}
-    for idx, syms in enumerate(words):
-        c = wcs[idx]
-        for i in range(len(syms) - 1):
-            p = (syms[i], syms[i + 1])
-            pair_counts[p] = pair_counts.get(p, 0) + c
-            pair_words.setdefault(p, set()).add(idx)
-    heap: list[tuple[int, tuple[str, str]]] = [
-        (-n, p) for p, n in pair_counts.items()
-    ]
-    heapq.heapify(heap)
-
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        best: tuple[str, str] | None = None
-        while heap:
-            negn, p = heapq.heappop(heap)
-            if pair_counts.get(p, 0) == -negn and -negn > 0:
-                best = p
-                break
-        if best is None or pair_counts[best] < min_pair_count:
-            break
-        a, b = best
-        merges.append(best)
-        touched: dict[tuple[str, str], int] = {}
-        for idx in pair_words.pop(best, ()):  # only containing words
-            syms = words[idx]
-            c = wcs[idx]
-            for i in range(len(syms) - 1):
-                q = (syms[i], syms[i + 1])
-                touched[q] = touched.get(q, 0) - c
-            out: list[str] = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = a + b
-                else:
-                    out.append(s)
-            words[idx] = out
-            for i in range(len(out) - 1):
-                q = (out[i], out[i + 1])
-                touched[q] = touched.get(q, 0) + c
-                pair_words.setdefault(q, set()).add(idx)
-        for q, d in touched.items():
-            if d == 0:
-                continue
-            n = pair_counts.get(q, 0) + d
-            if n <= 0:
-                pair_counts.pop(q, None)
-            else:
-                pair_counts[q] = n
-                heapq.heappush(heap, (-n, q))
-        pair_counts.pop(best, None)
-    return merges
-
-
-def bpe_apply_py(token: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Pure-Python greedy BPE application of a trained merge list to
-    ONE token — the per-token twin of :func:`bpe_encode`'s expression
-    chain (parity-pinned). Applies the lowest-RANK pair present, all
-    occurrences left-to-right, until none applies; because a merge's
-    operands can only be base characters or products of EARLIER
-    merges, the rank loop is exactly sequential in-order application
-    without paying a pass per merge the token never contains."""
-    ranks = {p: i for i, p in enumerate(merges)}
-    return _bpe_apply_ranked(token, merges, ranks)
-
-
-def _bpe_apply_ranked(
-    token: str, merges: list[tuple[str, str]], ranks: dict[tuple[str, str], int]
-) -> list[str]:
-    syms = list(token) + [_EOW]
-    while len(syms) > 1:
-        best_rank = None
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank = r
-        if best_rank is None:
-            break
-        a, b = merges[best_rank]
-        out: list[str] = []
-        for s in syms:
-            if out and out[-1] == a and s == b:
-                out[-1] = a + b
-            else:
-                out.append(s)
-        syms = out
-    return syms
-
-
 def bpe_vocab_ids(
     merges: list[tuple[str, str]], alphabet: list[str] | None = None
 ) -> dict[str, int]:
@@ -497,8 +231,7 @@ def bpe_vocab_ids(
     both ways).
 
     Tokens containing symbols outside the table are the caller's OOV
-    policy; :func:`bpe_encode_ids` maps them to id −1 and flags the
-    row.
+    policy; :func:`subword_ids_expr` maps them to id −1.
     """
     products = {a + b for a, b in merges}
     if alphabet is not None:
@@ -519,94 +252,13 @@ def bpe_vocab_ids(
 
 
 def subword_ids_expr(vocab_ids: dict[str, int]) -> F.Column:
-    """The literal-path id lookup of :func:`bpe_encode_ids` as a
-    reusable expression over a ``subwords`` column: every symbol maps
-    through a ``create_map`` literal, unknowns to −1. Factored out
-    (round 18) so a vocab-granularity composition can stamp ids
-    without re-running the corpus-sized encode — the expression is
-    THE one :func:`bpe_encode_ids` uses, so the two cannot drift."""
+    """Subword-id lookup as an expression over a ``subwords`` column:
+    every symbol maps through a ``create_map`` literal of
+    ``vocab_ids`` (from :func:`bpe_vocab_ids`), unknowns to −1."""
     mapping = F.create_map(
         *[F.lit(x) for kv in vocab_ids.items() for x in kv]
     )
     return F.transform(
         "subwords",
         lambda s: F.coalesce(mapping[s], F.lit(-1)).cast("int"),
-    )
-
-
-def bpe_encode_ids(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    alphabet: list[str] | None = None,
-    checkpoint_every: int = 8,
-    max_map_literal: int = 1024,
-    impl: str = "auto",
-) -> DataFrame:
-    """:func:`bpe_encode` + id assignment: (doc_id, token, subword_ids
-    array<int>, n_oov). Unknown symbols (characters absent from every
-    merge — the model never saw them) map to −1 and are counted in
-    ``n_oov`` so a pipeline can route them to a byte-fallback pass
-    instead of silently training on a sentinel.
-
-    TWO PHYSICAL PATHS, same result (unit-pinned parity): an id table
-    of at most ``max_map_literal`` entries is embedded as a
-    ``create_map`` literal — zero extra joins, the lookup rides the
-    encode projection. Beyond that a literal bloats every serialized
-    plan fragment (a 100k-id byte-level model would ship ~200k
-    expression nodes with EVERY task), so the table becomes a
-    broadcast-joined DataFrame instead: symbols are pos-exploded on
-    the DISTINCT-token table (vocab-sized, never the corpus),
-    broadcast-joined to the id table, re-assembled in position order,
-    and stamped onto the corpus-sized encode output by the same key
-    equi-join :func:`bpe_encode` already uses. MEASURED crossover
-    (scripts/stress.py --bpe-ids, 20k docs, fixed 8-merge chain,
-    alphabet-driven table size): the join path is flat ~1.5s at every
-    size; the literal matches it at ~1k ids, is 2× at 2k, 6× at 8k,
-    and effectively hangs by 64k (create_map lookup is a linear scan
-    of the literal per symbol, on top of the plan-size blowup) — hence
-    the 1024 default.
-    """
-    vocab_ids = bpe_vocab_ids(merges, alphabet=alphabet)
-    enc = bpe_encode(docs, merges, checkpoint_every=checkpoint_every, impl=impl)
-    if len(vocab_ids) <= max_map_literal:
-        ids = subword_ids_expr(vocab_ids)
-        return enc.select(
-            "doc_id",
-            "token",
-            ids.alias("subword_ids"),
-            F.size(F.filter(ids, lambda i: i == -1)).cast("int").alias("n_oov"),
-        )
-    spark = docs.sparkSession
-    id_table = spark.createDataFrame(
-        list(vocab_ids.items()), "__sym string, __id int"
-    )
-    # vocab-granularity mapping: subwords are a pure function of the
-    # token, so one row per distinct token carries the whole id work
-    per_token = (
-        enc.select("token", "subwords")
-        .distinct()
-        .select("token", F.posexplode("subwords").alias("__pos", "__sym"))
-        .join(F.broadcast(id_table), "__sym", "left")
-        .groupBy("token")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("__pos"),
-                            F.coalesce("__id", F.lit(-1)).alias("__id"),
-                        )
-                    )
-                ),
-                lambda s: s["__id"].cast("int"),
-            ).alias("subword_ids")
-        )
-    )
-    return enc.join(per_token, "token").select(
-        "doc_id",
-        "token",
-        "subword_ids",
-        F.size(F.filter("subword_ids", lambda i: i == -1))
-        .cast("int")
-        .alias("n_oov"),
     )

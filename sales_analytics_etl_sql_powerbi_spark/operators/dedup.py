@@ -30,7 +30,6 @@ __all__ = [
     "neardup_clusters",
     "keep_canonical",
     "simhash",
-    "simhash_neardup_pairs",
     "ngram_jaccard_topk",
     "EXACT_DEDUP_SQL",
     "duplicated_spans",
@@ -540,78 +539,6 @@ def simhash(docs: DataFrame) -> DataFrame:
         )
         packed = term if packed is None else packed + term
     return agg.select("doc_id", packed.alias("simhash"))
-
-
-def simhash_neardup_pairs(
-    docs: DataFrame, max_hamming: int = 3, n_bands: int = 4
-) -> DataFrame:
-    """SimHash near-dup pairs: hamming(simhash_a, simhash_b) ≤ max_hamming.
-
-    The fingerprint-side dedup path (cheap 32-bit signatures vs
-    MinHash's 16×32-bit): candidates come from a banded self equi-join
-    — the 32 bits split into ``n_bands`` contiguous bands, and by
-    pigeonhole any pair within hamming ``n_bands − 1`` agrees on at
-    least one whole band, so the candidate join has NO false negatives
-    for ``max_hamming ≤ n_bands − 1`` (asserted). Verification is one
-    ``bit_count(a XOR b)`` per candidate. Same never-all-pairs shape as
-    the MinHash path: equi-join on (band_id, band_bits), output
-    (doc_a, doc_b, hamming).
-
-    Scale note: near-identical corpora collapse into few distinct
-    simhashes → hot bands; the band join is AQE-skew-splittable, and
-    the downstream is candidate-sized.
-    """
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"banding misses pairs past hamming {n_bands - 1}; raise n_bands"
-        )
-    width = _SIM_BITS // n_bands
-    sig = simhash(docs)
-    from pyspark.storagelevel import StorageLevel
-
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.shiftright(F.col("simhash"), b * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("band_bits"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sig.select(
-        "doc_id", "simhash", F.explode_outer(band_structs).alias("b")
-    ).select(
-        "doc_id",
-        "simhash",
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_bits").alias("band_bits"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(b, on=["band_id", "band_bits"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("__sa"),
-            F.col("b.simhash").alias("__sb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(
-        F.col("__sa").bitwiseXOR(F.col("__sb")).bitwiseAND(F.lit((1 << _SIM_BITS) - 1))
-    )
-    out = (
-        cand.select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .localCheckpoint(eager=True)
-    )
-    sig.unpersist()
-    return out.orderBy("doc_a", "doc_b")
 
 
 def simhash_sql() -> str:

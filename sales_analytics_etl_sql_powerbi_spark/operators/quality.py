@@ -18,7 +18,6 @@ __all__ = [
     "profile_table",
     "sku_count_by_subcategory",
     "units_by_subcategory",
-    "nonnull_counts",
     "rowcounts",
     "observed",
     "observed_metrics",
@@ -48,15 +47,6 @@ def units_by_subcategory(fact: DataFrame, dim_product: DataFrame, category: str)
         .groupBy("subcategory")
         .agg(F.sum("units").cast("long").alias("units_sold"))
         .orderBy(F.desc("units_sold"), "subcategory")
-    )
-
-
-def nonnull_counts(staging: DataFrame, cols: list[str]) -> DataFrame:
-    """A4 — staging QA non-null counts
-    (reference etl/product_info_etl.py:336-344)."""
-    return staging.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        *[F.count(c).alias(f"nonnull_{c}") for c in cols],
     )
 
 
@@ -292,7 +282,7 @@ def profile_table(
         ordered = c not in unorderable
         aggs += [
             # count(col) ignores NULLs (and is 0 on empty input), so
-            # nulls = n - count — same idiom as nonnull_counts above
+            # nulls = n - count
             (F.count(F.lit(1)) - F.count(qc(c))).alias(f"__nu_{i}"),
             (
                 F.approx_count_distinct(qc(c), rsd) if ordered else null_lng

@@ -32,9 +32,7 @@ __all__ = [
     "training_shards",
     "weighted_sample",
     "weighted_sample_sql",
-    "deterministic_sample_sql",
     "split_assign_sql",
-    "sample_per_group_sql",
     "sampling_profile_sql",
 ]
 
@@ -77,13 +75,6 @@ def deterministic_sample(
     """
     threshold = int(rate * _BUCKETS)
     return df.where(hash_bucket(key, salt) < threshold)
-
-
-def deterministic_sample_sql(
-    source: str, key_expr: str, rate: float, salt: str = "s1"
-) -> str:
-    threshold = int(rate * _BUCKETS)
-    return f"SELECT * FROM {source} WHERE {_bucket_duck(key_expr, salt)} < {threshold}"
 
 
 def split_assign(
@@ -152,19 +143,6 @@ def sample_per_group(
         .where(F.col("__rn") <= n)
         .drop("__rn")
     )
-
-
-def sample_per_group_sql(
-    source: str, group: str, key_expr: str, n: int, salt: str = "grp"
-) -> str:
-    b = _bucket_duck(key_expr, salt)
-    return f"""
-SELECT * EXCLUDE (__rn) FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY {group} ORDER BY {b} ASC, {key_expr} ASC) AS __rn
-  FROM {source}
-) r WHERE __rn <= {n}
-"""
 
 
 def sampling_profile(
@@ -319,8 +297,7 @@ def training_shards(
     ``monotonically_increasing_id`` — partition layout never leaks in.
 
     Returns the frame with ``shard`` (int) and ``__ord`` (the order
-    hash) columns; :func:`sales_analytics_etl_sql_powerbi_spark.sources.sinks.write_training_shards`
-    materializes it one-file-per-shard.
+    hash) columns.
     """
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")

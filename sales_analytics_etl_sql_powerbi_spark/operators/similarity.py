@@ -28,7 +28,6 @@ __all__ = [
     "int8_cosine_topk",
     "rp_project",
     "rp_index",
-    "rp_index_append",
     "rp_cosine_topk",
     "rp_cosine_topk_sql",
     "shortlisted_cosine_topk",
@@ -39,24 +38,18 @@ __all__ = [
     "cosine_topk_sql",
     "lsh_buckets",
     "ann_index",
-    "ann_index_append",
     "ann_query",
     "ann_lsh_topk",
     "ann_lsh_topk_sql",
     "embedding_neardup_pairs",
-    "embedding_neardup_clusters",
-    "semantic_contamination",
-    "semantic_decontaminate",
     "hyperplanes",
     "auto_n_planes",
-    "auto_n_planes_eval",
     "embedding_dim_parquet",
     "train_ivf_codebook",
     "ivf_codebook",
     "codebook_from_parquet",
     "with_cells",
     "ivf_index",
-    "ivf_index_append",
     "ivf_query",
     "ann_ivf_topk",
     "ann_ivf_topk_sql",
@@ -146,42 +139,13 @@ def _codebook_digest(centroids: list[list[int]]) -> str:
 
 
 def _codebook_stamp(centroids: list[list[int]]) -> dict:
-    """The IVF stamp payload — built in ONE place so the builder, the
-    query validator, and the append all agree on its shape."""
+    """The IVF stamp payload — built in ONE place so the builder and
+    the query validator agree on its shape."""
     return {
         "n_clusters": len(centroids),
         "dim": len(centroids[0]) if centroids else 0,
         "codebook_md5": _codebook_digest(centroids),
     }
-
-
-def _grow_index(new_emb: DataFrame, path: str, col: str, ctx: str,
-                required: tuple, rebuild) -> None:
-    """Shared skeleton of the three ``*_index_append`` ops (round 17):
-    read the materialized index, require its build-param stamp,
-    width-handshake the batch against the stamped corpus width (a
-    wrong-width batch must RAISE, not upsert NULL-scored rows that a
-    later corrective replay can never repair — insert-if-missing
-    keeps the first row per vec_id), rebuild only the batch with the
-    stamped params, and write through the idempotent key-upsert. One
-    body so the three appends cannot drift."""
-    from sales_analytics_etl_sql_powerbi_spark.streaming.sinks import (
-        upsert_batch_into_parquet,
-    )
-
-    spark = new_emb.sparkSession
-    existing = spark.read.parquet(path)
-    stamp = _read_stamp(existing, col)
-    if not stamp or any(k not in stamp for k in required):
-        raise ValueError(
-            f"{ctx}: no build-param stamp on {path!r} — only indexes "
-            "materialized by the stamping builders (round 17+) can be "
-            "grown in place; rebuild once with the builder, or derive "
-            "the batch with the original params and append manually"
-        )
-    _resolve_dim(new_emb, stamp["dim"], ctx)
-    batch = rebuild(stamp).select(*existing.columns)
-    upsert_batch_into_parquet(batch, path, ["vec_id"])
 
 
 def auto_n_planes(
@@ -202,63 +166,6 @@ def auto_n_planes(
     import math
 
     return max(lo, min(hi, math.ceil(math.log2(max(1.0, n_rows / target_bucket_size)))))
-
-
-def auto_n_planes_eval(
-    n_eval: int,
-    lo: int = _N_PLANES,
-    hi: int = 16,
-    threshold: float | None = None,
-) -> int:
-    """Hyperplane count for the DECONTAMINATION shape, sized to the
-    EVAL side, not the corpus (round 13 — the measured fix for
-    recall-degrades-with-corpus-size).
-
-    In :func:`semantic_contamination` the eval set is broadcast and
-    every corpus row pays ``n_eval · n_probes / 2^planes`` candidate
-    cosines; with ``2^planes ≈ n_eval/4`` (this rule) that is
-    ~``4·n_probes`` extra cosines per row — LINEAR in the corpus and
-    independent of corpus size. Sizing planes to the CORPUS (the
-    ann_query rule, which optimizes serving-index bucket size) is
-    wrong here: planes grow with the corpus, band-edge collision
-    probability falls, and measured recall on planted
-    cosine∈[0.90,0.99) hits dropped 0.96→0.70 from 2k→200k rows at
-    equal probes (PLAN_AUDIT r13, `scripts/recall.py --decontam`).
-    With eval-sized planes recall is corpus-size-INDEPENDENT by
-    construction (collision probability depends only on the plane
-    count): measured IDENTICAL (0.844 at 4 probes, planes=7) at
-    2k/20k/200k. The −2 tilt buys the recall a decontamination
-    filter wants (planes 7→5 at 4 probes: 0.844→0.956 measured) for
-    4× the per-row candidate cost — still corpus-linear, and this
-    filter runs per eval-set refresh, not per query.
-
-    The trade that remains is EVAL-size: the rule holds per-row cost
-    ≈4·n_probes by letting planes grow with n_eval, and band-edge
-    recall falls with the plane count (measured: n_eval=1000 →
-    planes 8 → 0.752 at 4 probes, again identical at 20k and 200k
-    corpus). To hold the 0.956 level with a big eval set, pin
-    ``n_planes=5`` explicitly and pay ``n_eval·n_probes/32`` cosines
-    per row — linear in both sizes, just no longer constant.
-
-    THRESHOLD axis (round 14 — VERDICT r13 item 3, encoding the
-    PLAN_AUDIT r13 addendum-2 finding as the default): hyperplane
-    collision probability is 1 − θ/π, so a LOWER flag threshold
-    widens the band with low-cosine members and band-edge recall
-    falls — and the measured fix is dropping a plane, not adding
-    probes (probes saturate at 4: single-bit multiprobe only reaches
-    Hamming distance 1). When ``threshold`` is given and < 0.85, the
-    rule subtracts one plane (~2× candidate cosines per row, still
-    corpus-linear). Measured at 20k corpus / 100 eval / threshold
-    0.8, probes=4: planes 5 → recall 0.88, planes 4 (this rule) →
-    ≥0.9 (probe table in PLAN_AUDIT r14). Callers that pass no
-    threshold get the unchanged r13 sizing.
-    """
-    import math
-
-    planes = math.ceil(math.log2(max(2.0, float(n_eval)))) - 2
-    if threshold is not None and threshold < 0.85:
-        planes -= 1
-    return max(lo, min(hi, planes))
 
 
 def _embeddings_rowcount_parquet(sf_dir: str) -> int:
@@ -605,7 +512,6 @@ def shortlisted_cosine_topk(
     multiplier: int | None = 5,
     n_queries: int = 5,
     topk: int = 10,
-    max_rows_per_task: int | None = None,
     dim: int | None = None,
     validate_dim: bool = True,
     index: DataFrame | None = None,
@@ -671,7 +577,6 @@ def shortlisted_cosine_topk(
         out_dim=out_dim,
         n_queries=n_queries,
         topk=multiplier * topk,
-        max_rows_per_task=max_rows_per_task,
         dim=dim,
         validate_dim=validate_dim,
         index=index,
@@ -861,10 +766,8 @@ def _expand_probes(
     """Multi-probe LSH expansion (query-directed, single bit flips):
     each row additionally probes the ``n_probes - 1`` buckets reached
     by flipping the hyperplane bits with the SMALLEST |dot| margin —
-    the planes the vector sits closest to. Shared by :func:`ann_query`
-    and :func:`semantic_contamination` so the probe arithmetic cannot
-    drift between serving and decontamination. Validates ``n_probes``
-    here (single-bit perturbations only) so every caller raises on
+    the planes the vector sits closest to. Validates ``n_probes``
+    here (single-bit perturbations only) so a caller raises on
     out-of-range values instead of silently under-probing via
     ``F.slice`` clamping."""
     if not 1 <= n_probes <= n_planes + 1:
@@ -896,103 +799,6 @@ def _expand_probes(
         ),
     )
     return qb0.withColumn("bucket", F.explode(probes))
-
-
-def semantic_contamination(
-    corpus_emb: DataFrame,
-    eval_emb: DataFrame,
-    threshold: float = 0.9,
-    n_planes: int | None = None,
-    n_probes: int = 4,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-level eval-set decontamination (beyond-reference) —
-    the SEMANTIC sibling of ``text.decontaminate``'s k-gram overlap:
-    flag every corpus vector whose cosine to ANY eval-set vector is
-    ≥ ``threshold`` (paraphrased or lightly-edited benchmark items
-    that no n-gram overlap catches). Returns (vec_id, eval_id,
-    cosine), one row per contaminated (corpus, eval) hit.
-
-    Scale shape: the corpus is bucketed once (``lsh_buckets``); the
-    eval set — benchmark-sized, thousands of rows, never corpus-sized
-    — is hashed with the SAME planes and BROADCAST into a bucket
-    equi-join, so the corpus is touched by exactly one scan and no
-    all-pairs product exists. ``n_probes`` raises recall with
-    single-bit-flip multi-probe (same knob and same helper as
-    :func:`ann_query`); the residual cross-bucket miss is the
-    documented LSH contract, same as :func:`embedding_neardup_pairs`.
-
-    Plane/probe sizing (round 13, MEASURED — `scripts/recall.py
-    --decontam`, table in PLAN_AUDIT r13): default planes come from
-    :func:`auto_n_planes_eval` (the EVAL count, NOT the corpus count
-    — corpus-sized planes made band-edge recall fall with corpus
-    size), and ``n_probes`` defaults to 4 — on planted hits with
-    cosine uniformly in [0.90, 0.99) at threshold 0.9, probes 1→4
-    raised recall 0.61→0.96 while probes beyond 6 saturate. Expected
-    extra cost at the defaults: ~``n_probes`` candidate cosines per
-    corpus row, independent of corpus size. For a recall floor
-    closer to 1.0, LOWER ``n_planes`` below the auto value (every
-    −1 plane ~doubles candidate cosines per row and raises band-edge
-    collision probability) — brute-force threshold scan over
-    broadcast eval is the n_planes→0 limit.
-
-    The auto sizing is additionally THRESHOLD-aware (round 14): an
-    aggressive threshold < 0.85 drops one plane, because the wider
-    flag band needs collision probability, not probes (saturated at
-    4) — measured ≥0.9 band recall at threshold 0.8 with the rule vs
-    0.88 without (:func:`auto_n_planes_eval`, PLAN_AUDIT r14).
-
-    NOTE THE EAGERNESS: deriving planes runs ``eval_emb.count()`` as
-    a real job at construction time (the eval side is benchmark-sized
-    — thousands of rows — so this is cheap, unlike the entity
-    prescan's corpus-sized scan). Repeat decontamination against the
-    same eval set can pass ``n_planes=auto_n_planes_eval(n_eval,
-    threshold=...)`` explicitly to stay fully lazy.
-    """
-    if n_planes is None:
-        n_planes = auto_n_planes_eval(eval_emb.count(), threshold=threshold)
-    # resolve the width once from the corpus side (dim=None infers —
-    # round 16); the eval side still gets a VALIDATING peek, because a
-    # width disagreement between the two frames is exactly the silent
-    # zero-hit collapse the loud contract exists for
-    dim = _resolve_dim(corpus_emb, dim, "semantic_contamination")
-    index = lsh_buckets(corpus_emb, n_planes, dim, validate_dim=False)
-    qb = _expand_probes(
-        lsh_buckets(eval_emb, n_planes, dim), n_planes, n_probes, dim
-    ).select(
-        F.col("vec_id").alias("eval_id"),
-        F.col("__q").alias("__qq"),
-        F.col("__norm").alias("__qn"),
-        F.col("bucket").alias("qbucket"),
-    )
-    cand = index.select("vec_id", "__q", "__norm", "bucket")
-    joined = F.broadcast(qb).join(cand, F.col("bucket") == F.col("qbucket"))
-    cos = _cos(_dot("__qq", "__q"), F.col("__qn"), F.col("__norm"))
-    return (
-        joined.select("vec_id", "eval_id", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-        .dropDuplicates(["vec_id", "eval_id"])  # multi-probe re-hits
-        .orderBy("vec_id", "eval_id")
-    )
-
-
-def semantic_decontaminate(
-    corpus_emb: DataFrame,
-    eval_emb: DataFrame,
-    threshold: float = 0.9,
-    n_planes: int | None = None,
-    n_probes: int = 4,
-    dim: int | None = None,
-) -> DataFrame:
-    """The rewrite side: the corpus with every
-    :func:`semantic_contamination` hit REMOVED (one anti-join on
-    vec_id — the flag side is hit-count-sized, corpus untouched
-    otherwise). Same contract discipline as ``text.corpus_clean``:
-    drop, don't mutate."""
-    hits = semantic_contamination(
-        corpus_emb, eval_emb, threshold, n_planes, n_probes, dim
-    ).select("vec_id")
-    return corpus_emb.join(hits, "vec_id", "left_anti")
 
 
 def ann_index(
@@ -1152,76 +958,6 @@ def ann_lsh_topk(
     )
 
 
-def ann_index_append(new_emb: DataFrame, path: str) -> None:
-    """Grow a MATERIALIZED :func:`ann_index` in place — bucket only the
-    new batch and upsert it, never rebucketing the corpus (round 17).
-
-    The index's own build-param stamp is the source of truth: the
-    batch is hashed with the STAMPED (n_planes, dim) — there is no
-    parameter for the caller to get wrong — and the batch's width is
-    validated against the stamped dim (bounded peek), so a
-    wrong-width batch raises instead of polluting the index. The
-    write is the idempotent key-upsert
-    (:func:`~sales_analytics_etl_sql_powerbi_spark.streaming.sinks.upsert_batch_into_parquet`
-    on ``vec_id``): a replayed batch (at-least-once delivery, failure
-    recovery) inserts nothing, and the sink's crash contract
-    (staging sweep, torn-commit replay) applies — index maintenance
-    IS the streaming upsert primitive.
-
-    Scale shape: cost is batch-sized (one bucket projection + one
-    key anti-join against the index's vec_id column), never
-    corpus-sized; bucketing is per-vector-deterministic, so the grown
-    index is row-identical to a from-scratch rebuild over the union.
-    Appended files carry the same stamp, so later reads stay
-    validated whichever file the reader samples. Requires a stamped
-    index — for a hand-built one, bucket and append manually.
-    """
-    _grow_index(
-        new_emb,
-        path,
-        "bucket",
-        "ann_index_append",
-        ("n_planes", "dim"),
-        lambda s: _stamp_index(
-            lsh_buckets(new_emb, s["n_planes"], s["dim"], validate_dim=False),
-            "bucket",
-            {"n_planes": s["n_planes"], "dim": s["dim"]},
-        ),
-    )
-
-
-def ivf_index_append(
-    new_emb: DataFrame, path: str, centroids: list[list[int]]
-) -> None:
-    """Grow a MATERIALIZED :func:`ivf_index` in place (round 17) —
-    assign cells to the new batch with the SAME codebook and upsert.
-
-    The handed-in ``centroids`` are validated against the index's
-    stamped shape + content digest (a different codebook — even
-    same-shape — raises; cells are codebook-relative, so appending
-    under a drifted codebook would silently corrupt probe routing),
-    and the batch's embedding width is handshaken against the stamped
-    corpus width — a wrong-width batch used to quantize to NULL cells
-    and upsert rows no corrective replay could repair (r17 review).
-    Same idempotent-upsert write shape as :func:`ann_index_append`.
-    The codebook itself stays driver-sized state alongside the index,
-    exactly as :func:`ivf_index` documents.
-    """
-
-    def rebuild(stamp: dict) -> DataFrame:
-        _check_stamp(stamp, "ivf_index_append", **_codebook_stamp(centroids))
-        return ivf_index(new_emb, centroids)
-
-    _grow_index(
-        new_emb,
-        path,
-        "cell",
-        "ivf_index_append",
-        ("codebook_md5", "dim"),
-        rebuild,
-    )
-
-
 def ann_lsh_topk_sql(
     n_queries: int = 5,
     topk: int = 5,
@@ -1306,35 +1042,6 @@ def embedding_neardup_pairs(
         .where(F.col("cosine") >= threshold)
         .orderBy("vec_a", "vec_b")
     )
-
-
-def embedding_neardup_clusters(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    n_planes: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """Semantic dedup: collapse cosine-near-dup embeddings into clusters.
-
-    The embedding-side twin of ``dedup.neardup_clusters`` — pairs from
-    :func:`embedding_neardup_pairs`, transitive closure via the SAME
-    iterative min-label collapse (``dedup.neardup_clusters(pairs=...)``
-    — one algorithm, both modalities; drift impossible). Returns
-    (vec_id, cluster_id); keep ``min(vec_id)`` per cluster for the
-    dedup decision. Same scale shape as the text path: pair generation
-    is bucket-bounded, the collapse converges in graph-diameter rounds.
-    """
-    from .dedup import neardup_clusters
-
-    pairs = embedding_neardup_pairs(emb, threshold, n_planes, dim).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    out = neardup_clusters(
-        emb.select(F.col("vec_id").alias("doc_id")), pairs=pairs
-    )
-    return out.select(
-        F.col("doc_id").alias("vec_id"), "cluster_id"
-    ).orderBy("vec_id")
 
 
 def embedding_neardup_pairs_sql(
@@ -2038,7 +1745,6 @@ def rp_project(
     emb: DataFrame,
     out_dim: int = 16,
     impl: str = "arrow",
-    max_rows_per_task: int | None = None,
     dim: int | None = None,
     validate_dim: bool = True,
 ) -> DataFrame:
@@ -2068,27 +1774,10 @@ def rp_project(
     nothing changes cross-engine. ``impl="fold"`` is the pure-JVM
     expression path — the witness that pins the arithmetic without
     Python in the loop.
-
-    ``max_rows_per_task`` (round 15 — VERDICT r14 item 3) bounds the
-    Arrow leg's per-task row count by construction: one count job,
-    then ``repartition(ceil(n / bound))`` before the projection. On a
-    cluster the scan splits already bound task size
-    (``spark.sql.files.maxPartitionBytes``); the knob exists for
-    single-node runs over persisted/unioned frames whose inherited
-    partitioning can hand one Python worker a multi-million-row
-    straggler (the 32M rerank boundary, PLAN_AUDIT r14). Leave None on
-    gated paths — the count job is the only cost, but the default
-    stays zero-overhead.
     """
     dim = _resolve_dim(emb, dim, "rp_project", validate_dim)
     planes = hyperplanes(out_dim, dim)
-    q = quantized(emb)
-    if max_rows_per_task:
-        import math
-
-        n_parts = max(1, math.ceil(emb.count() / max_rows_per_task))
-        q = q.repartition(n_parts)
-    return q.select("vec_id", _rp_expr(planes, impl).alias("rp"))
+    return quantized(emb).select("vec_id", _rp_expr(planes, impl).alias("rp"))
 
 
 def _rp_expr(planes: list[list[int]], impl: str):
@@ -2158,7 +1847,6 @@ def _rp_expr(planes: list[list[int]], impl: str):
 def rp_index(
     emb: DataFrame,
     out_dim: int = 16,
-    max_rows_per_task: int | None = None,
     dim: int | None = None,
     validate_dim: bool = True,
 ) -> DataFrame:
@@ -2182,13 +1870,7 @@ def rp_index(
     round-trip."""
     dim = _resolve_dim(emb, dim, "rp_index", validate_dim)
     built = (
-        rp_project(
-            emb,
-            out_dim,
-            max_rows_per_task=max_rows_per_task,
-            dim=dim,
-            validate_dim=False,
-        )
+        rp_project(emb, out_dim, dim=dim, validate_dim=False)
         .withColumn("__pn", F.sqrt(_dot("rp", "rp").cast("double")))
         .where(F.col("__pn") > 0)
         .localCheckpoint(eager=True)
@@ -2196,46 +1878,11 @@ def rp_index(
     return _stamp_index(built, "rp", {"out_dim": out_dim, "dim": dim})
 
 
-def rp_index_append(
-    new_emb: DataFrame, path: str, max_rows_per_task: int | None = None
-) -> None:
-    """Grow a parquet-MATERIALIZED :func:`rp_index` in place (round
-    17) — project only the new batch with the STAMPED (out_dim, dim)
-    and upsert on ``vec_id``; same contract as
-    :func:`ann_index_append` (stamp is the source of truth, batch
-    width validated, replays are no-ops, grown index row-identical to
-    a from-scratch rebuild because the projection is deterministic).
-    The in-session localCheckpoint shape needs no append — this is
-    for the cross-job parquet deployment of the shortlist index.
-    """
-
-    def rebuild(s: dict) -> DataFrame:
-        batch = (
-            rp_project(
-                new_emb,
-                s["out_dim"],
-                max_rows_per_task=max_rows_per_task,
-                dim=s["dim"],
-                validate_dim=False,
-            )
-            .withColumn("__pn", F.sqrt(_dot("rp", "rp").cast("double")))
-            .where(F.col("__pn") > 0)
-        )
-        return _stamp_index(
-            batch, "rp", {"out_dim": s["out_dim"], "dim": s["dim"]}
-        )
-
-    _grow_index(
-        new_emb, path, "rp", "rp_index_append", ("out_dim", "dim"), rebuild
-    )
-
-
 def rp_cosine_topk(
     emb: DataFrame,
     out_dim: int | None = None,
     n_queries: int = 5,
     topk: int = 10,
-    max_rows_per_task: int | None = None,
     dim: int | None = None,
     validate_dim: bool = True,
     index: DataFrame | None = None,
@@ -2280,13 +1927,7 @@ def rp_cosine_topk(
     p = (
         index
         if index is not None
-        else rp_index(
-            emb,
-            out_dim,
-            max_rows_per_task=max_rows_per_task,
-            dim=dim,
-            validate_dim=validate_dim,
-        )
+        else rp_index(emb, out_dim, dim=dim, validate_dim=validate_dim)
     )
     queries = p.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),

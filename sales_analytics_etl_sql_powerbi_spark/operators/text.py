@@ -17,13 +17,11 @@ from pyspark.sql import functions as F
 __all__ = [
     "tokens_expr",
     "text_stats",
-    "corpus_quality_report",
     "token_count_bpe",
     "lang_id",
     "doc_fingerprint",
     "doc_profile",
     "doc_profile_sql",
-    "repetition_signals",
     "REPETITION_SIGNALS_SQL",
     "decontaminate",
     "decontaminate_sql",
@@ -352,36 +350,8 @@ def _max_run_expr(tok_col: str) -> Column:
     )
 
 
-def repetition_signals(docs: DataFrame) -> DataFrame:
-    """The two Gopher-style repetition signals :func:`text_stats`'s
-    ratio family can't express with distinct-counts alone: the MOST
-    FREQUENT adjacent bigram (occupancy of a single repeated phrase —
-    boilerplate and listicle pages score high even when every line is
-    distinct) and the longest CONSECUTIVE equal-token run (stutter —
-    ``buy buy buy buy``). Both are in-row folds over the token list:
-    one embarrassingly-parallel scan, no explode, no shuffle — the
-    per-row mode comes from a run-length pass over the SORTED bigram
-    list rather than a hashmap. The oracle twin takes the opposite
-    route (explode + group-by + window rank), so the gate checks the
-    convention, not shared code.
-
-    Columns: doc_id, n_bigrams, top_bigram (NULL when <2 tokens),
-    top_bigram_n, max_token_run.
-    """
-    d = docs.where(F.col("text").isNotNull()).withColumn(
-        "__tok", tokens_expr("text")
-    )
-    top = _top_bigram_expr("__tok")
-    return d.select(
-        "doc_id",
-        F.greatest(F.size("__tok") - 1, F.lit(0)).cast("long").alias("n_bigrams"),
-        top["top"].alias("top_bigram"),
-        top["n"].cast("long").alias("top_bigram_n"),
-        _max_run_expr("__tok").cast("long").alias("max_token_run"),
-    )
-
-
-#: DuckDB twin of repetition_signals — deliberately the OTHER route:
+#: DuckDB twin of doc_profile's repetition signals — deliberately the
+#: OTHER route:
 #: unnest to rows, group-by counts, window rank for the mode,
 #: gaps-and-islands (position − per-token row_number) for the run
 REPETITION_SIGNALS_SQL = """
@@ -925,51 +895,6 @@ SELECT count(1) AS n_docs,
        avg(length(text)) AS mean_len
 FROM documents
 """
-
-
-def corpus_quality_report(
-    docs: DataFrame, stopwords: tuple[str, ...] = DEFAULT_STOPWORDS
-) -> DataFrame:
-    """Corpus-level roll-up of the per-doc quality signals: one row per
-    signal with mean / p10 / p50 / p90 — what a mix designer reads
-    before picking :func:`quality_filter` thresholds (thresholds set
-    blind to the corpus distribution reject the wrong tail).
-
-    One :func:`text_stats` scan + ONE aggregate (all signals'
-    percentile sketches computed together, map-side combinable), then
-    an explode to long form — no per-signal pass.
-    """
-    stats = text_stats(docs, stopwords)
-    # every numeric signal text_stats emits, derived from its schema —
-    # a signal added there appears here automatically (this report
-    # exists so thresholds aren't set blind; silently omitting a new
-    # signal would defeat it)
-    signals = [c for c in stats.columns if c != "doc_id"]
-    aggs = []
-    for i, c in enumerate(signals):
-        v = F.col(c).cast("double")
-        aggs.append(F.avg(v).alias(f"__m_{i}"))
-        aggs.append(
-            F.percentile_approx(v, F.array(F.lit(0.1), F.lit(0.5), F.lit(0.9))).alias(
-                f"__p_{i}"
-            )
-        )
-    row = stats.agg(*aggs)
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("signal"),
-                F.col(f"__m_{i}").alias("mean"),
-                F.col(f"__p_{i}")[0].alias("p10"),
-                F.col(f"__p_{i}")[1].alias("p50"),
-                F.col(f"__p_{i}")[2].alias("p90"),
-            )
-            for i, c in enumerate(signals)
-        ]
-    )
-    return row.select(F.explode(structs).alias("r")).select(
-        "r.signal", "r.mean", "r.p10", "r.p50", "r.p90"
-    )
 
 
 # ---------------------------------------------------------------------------

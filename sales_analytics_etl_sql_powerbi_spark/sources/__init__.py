@@ -5,8 +5,6 @@ from .readers import (  # noqa: F401
     read_excel,
     read_input,
     read_table,
-    load_tables,
-    TESTDATA_TABLES,
 )
 from .sinks import (  # noqa: F401
     ConcurrentWriteError,

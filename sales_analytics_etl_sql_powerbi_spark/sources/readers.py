@@ -27,21 +27,6 @@ from pyspark.sql import types as T
 from ..functions.cleaning import normalize_colname
 from ..session import adopt, scoped
 
-#: Driver-provided testdata tables (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 #: Spark's CSV ``maxColumns`` default — a wider header fails its read
 _CSV_MAX_COLUMNS = 20480
 #: longest header line read on the driver; a longer one falls back
@@ -96,7 +81,12 @@ def _driver_csv_header(spark: SparkSession, path: str) -> list[str] | None:
     line end are dropped, then Spark's ``CSVUtils.makeSafeHeader`` runs:
     an empty name becomes ``_c{i}``, and a duplicated name — compared
     case-insensitively unless ``spark.sql.caseSensitive`` — becomes
-    ``{name}{i}``."""
+    ``{name}{i}``.
+
+    Raises ValueError, naming the columns, where that renaming itself
+    yields a duplicate (``a,,_c1``: the empty name becomes ``_c1`` next
+    to a literal ``_c1``), which Spark's read would reject later as
+    ``COLUMN_ALREADY_EXISTS``."""
     files = _csv_data_files(path)
     if not files:
         return None
@@ -129,10 +119,19 @@ def _driver_csv_header(spark: SparkSession, path: str) -> list[str] | None:
         return name if case_sensitive else name.lower()
 
     counts = Counter(fold(n) for n in names)
-    return [
+    safe = [
         f"_c{i}" if not n else f"{n}{i}" if counts[fold(n)] > 1 else n
         for i, n in enumerate(names)
     ]
+    safe_counts = Counter(fold(n) for n in safe)
+    collisions = [n for n in safe if safe_counts[fold(n)] > 1]
+    if collisions:
+        raise ValueError(
+            f"CSV header of {path!r} names columns {collisions} more than "
+            "once after Spark's header renaming (an empty name becomes "
+            "_c<i>, a duplicated one <name><i>); rename them in the export"
+        )
+    return safe
 
 
 def _csv_reader(spark: SparkSession):
@@ -152,7 +151,8 @@ def csv_header_schema(spark: SparkSession, path: str) -> T.StructType:
     :func:`_driver_csv_header` proves the names equal Spark's; anywhere
     else (quoted or non-ASCII headers, parts whose first lines differ,
     an empty file, remote paths) Spark infers the header with its own
-    one-job read."""
+    one-job read. A driver-read header whose renamed columns collide
+    raises ValueError naming them."""
     names = _driver_csv_header(spark, path)
     if names is None:
         return _csv_reader(spark).csv(path).schema
@@ -206,90 +206,6 @@ def read_excel(
     if normalize_names:
         df = df.toDF(*[normalize_colname(c) for c in df.columns])
     return df
-
-
-def read_excel_distributed(
-    spark: SparkSession,
-    path: str,
-    sheet: int | str = 0,
-    normalize_names: bool = True,
-) -> DataFrame:
-    """S2 at corpus scale — many-file Excel ingest as a distributed scan.
-
-    The single-file shim (:func:`read_excel`) matches the reference's
-    one-sheet semantics (etl/order_info_etl.py:178) and is honest for a
-    single workbook — an xlsx is a non-splittable zip. But a partner
-    landing zone holds MANY workbooks, and there the parallelism unit
-    is the FILE: ``binaryFile`` scan → Arrow-batched ``mapInPandas``
-    with the same pure-stdlib zip+XML parser running per-executor, one
-    workbook per row. 10k workbooks become 10k-way parallel parses with
-    no driver involvement beyond listing.
-
-    Semantics per workbook are identical to :func:`read_excel` (same
-    parser, same ``sheet`` selection, every value a raw string).
-    Columns are aligned BY NORMALIZED HEADER NAME across workbooks:
-    the declared schema comes from the lexicographically-first file
-    (one bounded driver read — metadata-cheap, like the CSV header
-    pass); a workbook missing a column yields NULLs for it, and a
-    workbook with a column the schema lacks fails loudly (schema drift
-    should stop a load, not silently drop data). Output carries
-    ``source_file`` for lineage, like Spark's own
-    ``input_file_name()`` contract.
-
-    ``path`` accepts a directory or glob (anything ``binaryFile``
-    loads); non-Excel files should be excluded via the glob (e.g.
-    ``dir/*.xlsx``). Each file dispatches on its own magic bytes —
-    zip ('PK') → xlsx parser, OLE2 compound file → the BIFF8 ``.xls``
-    parser — so mixed landing zones work.
-    """
-    import io
-
-    from .xls import read_xls_table
-    from .xlsx import read_xlsx_table
-
-    def parse_workbook(content: bytes):
-        if content[:2] == b"PK":
-            return read_xlsx_table(io.BytesIO(content), sheet)
-        return read_xls_table(content, sheet)
-
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-    first = files.orderBy("path").limit(1).collect()
-    if not first:
-        raise ValueError(f"No files matched {path!r}")
-    headers, _ = parse_workbook(bytes(first[0].content))
-    names = [normalize_colname(h) for h in headers] if normalize_names else headers
-    out_schema = T.StructType(
-        [T.StructField("source_file", T.StringType(), False)]
-        + [T.StructField(n, T.StringType(), True) for n in names]
-    )
-
-    def parse(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            frames = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                h, rows = parse_workbook(bytes(content))
-                file_names = [normalize_colname(c) for c in h] if normalize_names else h
-                unknown = set(file_names) - set(names)
-                if unknown:
-                    raise ValueError(
-                        f"{fpath}: columns {sorted(unknown)} not in the "
-                        f"declared schema {names} (schema drift)"
-                    )
-                by_name = {
-                    n: [r[i] for r in rows] for i, n in enumerate(file_names)
-                }
-                data = {"source_file": [fpath] * len(rows)}
-                for n in names:
-                    data[n] = pd.Series(
-                        by_name.get(n, [None] * len(rows)), dtype="object"
-                    )
-                frames.append(pd.DataFrame(data))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return files.mapInPandas(parse, out_schema)
 
 
 def read_input(spark: SparkSession, path: str, sheet: int | str = 0) -> DataFrame:
@@ -467,10 +383,3 @@ def read_events(
     elif isinstance(dt, T.TimestampNTZType):
         df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return adopt(spark, df)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load several testdata tables as a dict of DataFrames."""
-    return {n: read_table(spark, sf_dir, n) for n in names}

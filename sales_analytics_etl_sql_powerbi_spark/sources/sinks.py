@@ -533,77 +533,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    key: str = "doc_id",
-    salt: str = "",
-) -> None:
-    """Materialize :func:`operators.sampling.training_shards` as
-    one parquet file per ``shard=N/`` directory.
-
-    Layout contract: ``repartition(n_shards, shard)`` gives every
-    shard exactly one task (hash collisions may co-locate two shards
-    in a task — ``partitionBy`` still splits them into their own
-    directories, each written by that single task, so one data file
-    per shard holds); ``sortWithinPartitions(shard, __ord, key)``
-    pins the within-file row order to the content hash. Result: two
-    runs over the same rows produce byte-identical shard files
-    regardless of input partitioning — the property that makes
-    training jobs resumable and data lineage auditable. The order
-    hash is dropped from the written schema; ``shard`` survives as
-    the partition directory.
-
-    Scale: one shuffle (the repartition) + a sort of each task's
-    rows. Pick n_shards ≈ total_bytes / desired_file_size; shard
-    task memory is corpus/n_shards, so at 100 TB use thousands of
-    shards, not tens.
-    """
-    _write_training_shards(df, path, n_shards, key, salt, fmt="parquet")
-
-
-def write_training_shards_jsonl(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    key: str = "doc_id",
-    salt: str = "",
-) -> None:
-    """:func:`write_training_shards`, but each shard is one JSONL file
-    — the line-delimited format most LLM training loaders read
-    directly. Same layout contract (shared implementation): one file
-    per ``shard=N/`` directory, within-file row order pinned to the
-    content hash, two runs byte-identical. NULL fields are WRITTEN
-    (``ignoreNullFields=false``) so every line carries the full key
-    set — loaders index ``rec["field"]`` without existence checks, and
-    an all-null column survives the round trip. Use parquet shards
-    when types matter more than loader convenience.
-    """
-    _write_training_shards(df, path, n_shards, key, salt, fmt="json")
-
-
-def _write_training_shards(
-    df: DataFrame, path: str, n_shards: int, key: str, salt: str, fmt: str
-) -> None:
-    """The ONE shard layout implementation (see write_training_shards
-    for the contract) — format-specific writers only pick the codec."""
-    from ..operators.sampling import training_shards
-
-    sharded = training_shards(df, n_shards, key, salt)
-    w = (
-        sharded.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "__ord", key)
-        .drop("__ord")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-    )
-    if fmt == "json":
-        w.option("ignoreNullFields", "false").json(path)
-    else:
-        w.parquet(path)
-
-
 def _hadoop_parquet_files(t: _Table):
     """(path, length) for every VISIBLE ``*.parquet`` under ``path``
     via the Hadoop FileSystem API — works for any URI scheme Spark can
@@ -628,7 +557,3 @@ def _hadoop_parquet_files(t: _Table):
         ):
             continue
         yield full, f.getLen()
-
-
-def _parquet_bytes(spark, path: str) -> int:
-    return sum(n for _, n in _hadoop_parquet_files(_hfs(spark, path)))

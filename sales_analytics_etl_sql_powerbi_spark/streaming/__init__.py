@@ -5,7 +5,6 @@ from .windows import (  # noqa: F401
     sliding_counts,
     session_windows,
     dedup_within_watermark,
-    events_stream,
     TUMBLING_SQL,
     SLIDING_SQL,
     SESSION_SQL,

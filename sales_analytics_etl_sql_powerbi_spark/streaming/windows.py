@@ -18,12 +18,11 @@ alignments; session = gaps-and-islands with a lag().
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "enrich_with_dim",
-    "events_stream",
     "tumbling_counts",
     "sliding_counts",
     "session_windows",
@@ -35,16 +34,6 @@ __all__ = [
     "SESSION_SQL",
     "RUNNING_TOTALS_SQL",
 ]
-
-
-def events_stream(spark: SparkSession, path_dir: str, schema: str) -> DataFrame:
-    """File-source stream over a directory of parquet event files."""
-    df = spark.readStream.schema(schema).parquet(path_dir)
-    if dict(df.dtypes).get("ts") == "bigint":  # nanos-as-long normalization
-        # integer div — `/ 1000` via double loses precision at 1.7e18 ns
-        # (~12% of values off by 1µs; same fix as readers.read_events)
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:

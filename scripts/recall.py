@@ -229,15 +229,12 @@ def rerank_main() -> None:
                                              [mult,mult,...] [inflate]
                                              [dim,dim,...]
 
-    Env (round 15 — VERDICT r14 item 3): ``SPARK_GRAFT_RP_TASK_ROWS``
-    bounds the Arrow projection leg's per-task rows by construction
-    (threads ``max_rows_per_task`` through shortlisted_cosine_topk);
-    the session's Arrow batch cap is fixed at 10,000 rows
-    (``get_spark(extra_conf=...)`` overrides it). Use the env with a
-    lowered ``SPARK_DRIVER_MEM`` (the one JVM heap variable, read by
-    ``session.get_spark``; default 8g) on memory-tight single-node
-    runs — the 32M straggler kill was the Python worker losing the
-    box-OOM race to an 80g JVM.
+    The session's Arrow batch cap is fixed at 10,000 rows
+    (``get_spark(extra_conf=...)`` overrides it). On memory-tight
+    single-node runs lower ``SPARK_DRIVER_MEM`` (the one JVM heap
+    variable, read by ``session.get_spark``; default 8g) — the 32M
+    straggler kill was the Python worker losing the box-OOM race to
+    an 80g JVM.
 
     ``inflate`` > 1 unions (inflate−1) blocks of fully SYNTHETIC
     hash-random vectors (deterministic per (vec_id, dim) — near-
@@ -260,7 +257,6 @@ def rerank_main() -> None:
         if len(sys.argv) > 7
         else [16, 32]
     )
-    task_rows = int(os.environ.get("SPARK_GRAFT_RP_TASK_ROWS", "0")) or None
 
     from pyspark.sql import functions as F
 
@@ -303,7 +299,6 @@ def rerank_main() -> None:
                     multiplier=mult,
                     n_queries=n_queries,
                     topk=topk,
-                    max_rows_per_task=task_rows,
                 ).collect()
             )
             dt = time.perf_counter() - t0
@@ -313,133 +308,6 @@ def rerank_main() -> None:
             )
 
 
-def decontam_main() -> None:
-    """Measured recall of semantic_contamination (round 13 — VERDICT
-    r12 item 3): planted paraphrase-near eval copies in a synthetic
-    corpus, LSH-flagged pairs vs brute-force cosine ground truth,
-    swept over corpus size × n_probes.
-
-    Corpus: hash-random 64-d vectors (xxhash64-mixed — see --rerank's
-    lattice caveat), PLUS one planted near-copy per eval item:
-    ``t·eval + sqrt(1−t²)·noise`` with target cosine t cycling through
-    [0.90, 0.99) — the paraphrase band straddling the 0.9 threshold,
-    the worst case for recall (hits with cosine ≫ threshold are easy;
-    the band edge is where buckets disagree). Ground truth is the
-    exact cosine over corpus × broadcast(eval) — eval-bounded, linear
-    in the corpus, the same shape the operator itself avoids only
-    because at 100 TB even one exact pass per eval refresh is the
-    expensive path.
-
-    Usage: python scripts/recall.py --decontam [sizes] [n_eval] [probes]
-                                                [threshold]
-      sizes  comma list of corpus sizes   (default 2000,20000,200000)
-      n_eval eval-set rows                (default 100)
-      probes comma list of n_probes       (default 1,2,4,8)
-      threshold cosine flag threshold     (default 0.9; planted-copy
-             cosines always cycle [threshold, 0.99))
-    """
-    sizes = (
-        [int(s) for s in sys.argv[2].split(",")]
-        if len(sys.argv) > 2
-        else [2_000, 20_000, 200_000]
-    )
-    n_eval = int(sys.argv[3]) if len(sys.argv) > 3 else 100
-    probes = (
-        [int(p) for p in sys.argv[4].split(",")]
-        if len(sys.argv) > 4
-        else [1, 2, 4, 8]
-    )
-    threshold = float(sys.argv[5]) if len(sys.argv) > 5 else 0.9
-
-    from pyspark.sql import functions as F
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import similarity
-    from sales_analytics_etl_sql_powerbi_spark.session import get_spark
-
-    spark = get_spark()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def vec(seed: int):
-        # deterministic hash-random float in (-2, 2) per (id, dim)
-        return F.expr(
-            "transform(sequence(0, 63), i -> cast("
-            f"(xxhash64(id + {seed}, i) % 10007) / 5003.0 as float))"
-        )
-
-    eval_df = (
-        spark.range(n_eval)
-        .select(F.col("id").alias("vec_id"), vec(10_000_000).alias("embedding"))
-        .persist()
-    )
-    brute_cos = F.expr(
-        "aggregate(zip_with(embedding, ev, (x, y) -> cast(x as double) * y),"
-        " 0.0d, (a, x) -> a + x)"
-        " / (sqrt(aggregate(embedding, 0.0d, (a, x) -> a + cast(x as double) * x))"
-        "    * sqrt(aggregate(ev, 0.0d, (a, x) -> a + cast(x as double) * x)))"
-    )
-
-    for n in sizes:
-        base = spark.range(n).select(
-            F.col("id").alias("vec_id"), vec(0).alias("embedding")
-        )
-        # planted near-copies: one per eval row, target cosine cycling
-        # the band [0.90, 0.99)
-        t = (
-            F.lit(threshold)
-            + F.lit(0.99 - threshold) * ((F.col("id") * 37) % 100) / 100.0
-        ).cast("double")
-        planted = spark.range(n_eval).select(
-            (F.col("id") + n).alias("vec_id"),
-            F.zip_with(
-                vec(10_000_000),
-                vec(20_000_000),
-                lambda e, r: (t * e + F.sqrt(1 - t * t) * r).cast("float"),
-            ).alias("embedding"),
-        )
-        corpus = base.unionByName(planted).persist()
-        corpus.count()
-
-        truth = {
-            (r.vec_id, r.eval_id)
-            for r in corpus.crossJoin(
-                F.broadcast(
-                    eval_df.select(
-                        F.col("vec_id").alias("eval_id"),
-                        F.col("embedding").alias("ev"),
-                    )
-                )
-            )
-            .select(
-                "vec_id", "eval_id", F.round(brute_cos, 9).alias("cos")
-            )
-            .where(F.col("cos") >= threshold)
-            .collect()
-        }
-        n_planes = similarity.auto_n_planes_eval(n_eval, threshold=threshold)
-        for p in probes:
-            if p > n_planes + 1:
-                print(
-                    f"n={n + n_eval} planes={n_planes} n_probes={p}: "
-                    "skipped (exceeds n_planes+1 single-bit probes)"
-                )
-                continue
-            t0 = time.perf_counter()
-            got = {
-                (r.vec_id, r.eval_id)
-                for r in similarity.semantic_contamination(
-                    corpus, eval_df, threshold=threshold, n_probes=p
-                ).collect()
-            }
-            dt = time.perf_counter() - t0
-            assert got <= truth, "LSH flagged a pair brute force rejects"
-            rec = len(got & truth) / max(len(truth), 1)
-            print(
-                f"n={n + n_eval} planes={n_planes} n_probes={p}: "
-                f"recall={rec:.3f} ({len(got)}/{len(truth)} pairs, {dt:.1f}s)"
-            )
-        corpus.unpersist()
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--minhash":
         minhash_main()
@@ -447,7 +315,5 @@ if __name__ == "__main__":
         rp_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--rerank":
         rerank_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--decontam":
-        decontam_main()
     else:
         main()

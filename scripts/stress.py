@@ -172,7 +172,9 @@ def events_main() -> None:
 
     spark = _session("stress-events", 64)
 
-    from sales_analytics_etl_sql_powerbi_spark.operators.asof import events_asof
+    from sales_analytics_etl_sql_powerbi_spark.operators.asof import (
+        events_asof_directions,
+    )
     from sales_analytics_etl_sql_powerbi_spark.sources.readers import read_events
     from sales_analytics_etl_sql_powerbi_spark.streaming import windows as W
 
@@ -198,7 +200,7 @@ def events_main() -> None:
     print(f"events rows: {n}")
 
     for name, fn in [
-        ("events_asof", lambda d: events_asof(d)),
+        ("events_asof", events_asof_directions),
         ("tumbling", W.tumbling_counts),
         ("sessions", W.session_windows),
     ]:
@@ -516,12 +518,13 @@ def vectors_main() -> None:
         S.quantize_int8(big).select("vec_id", "codes", "q_scale").write.mode(
             "overwrite"
         ).parquet(f"{td}/int8")
-        from sales_analytics_etl_sql_powerbi_spark.sources.sinks import (
-            _parquet_bytes,
-        )
+        import glob
 
-        f32_b = _parquet_bytes(spark, f"{td}/f32")
-        i8_b = _parquet_bytes(spark, f"{td}/int8")
+        def parquet_bytes(d):
+            return sum(os.path.getsize(f) for f in glob.glob(f"{d}/*.parquet"))
+
+        f32_b = parquet_bytes(f"{td}/f32")
+        i8_b = parquet_bytes(f"{td}/int8")
         print(
             f"int8 storage: {f32_b / 1e6:.1f} MB float32 -> "
             f"{i8_b / 1e6:.1f} MB codes+scale ({f32_b / max(i8_b, 1):.2f}x)"
@@ -1024,60 +1027,6 @@ def tokmix_main() -> None:
     spark.stop()
 
 
-def bpe_ids_main() -> None:
-    """BPE id-table crossover probe (round 10): at what table size does
-    the create_map literal lose to the broadcast-join path? Synthetic
-    merge lists (the id-table size is alphabet + merges) over a fixed
-    200k-token corpus; per size, time end-to-end encode+ids on both
-    paths and report the analysis-plus-execution wall clock. The
-    literal's cost is in PLANNING (expression-tree size ships with
-    every task); the join's is a constant small broadcast."""
-    n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000
-
-    from pyspark.sql import functions as F
-
-    spark = _session("stress-bpe-ids", 32)
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import bpe
-
-    docs = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.sequence(F.lit(1), F.lit(10)),
-                lambda i: F.concat(
-                    F.lit("w"), ((F.col("id") * 13 + i) % 500).cast("string")
-                ),
-            ),
-        ).alias("text"),
-    ).localCheckpoint(eager=True)
-    # a FIXED 8-merge chain (merge application is O(n_merges) and
-    # identical on both paths); the id-table size is varied through
-    # the explicit alphabet — the byte-level-model shape, where the
-    # base symbol set, not the merge count, dominates the table
-    merges = [(f"w{i}", f"w{i+1}") for i in range(8)]
-    for n_ids in (500, 1_000, 2_000, 8_000, 16_000, 64_000):
-        alphabet = [f"sym{i}" for i in range(n_ids)]
-        for label, cap in (("join", 0), ("literal", 10**9)):
-            if label == "literal" and n_ids > 8_000:
-                # measured: the literal is 6× slower at 8k and
-                # effectively hangs by 64k (linear-scan lookup ×
-                # plan-size blowup) — skipping keeps the probe bounded
-                print(f"id-table ~{n_ids}: literal path SKIPPED (hangs)")
-                continue
-            t0 = time.time()
-            out = bpe.bpe_encode_ids(
-                docs, merges, alphabet=alphabet, max_map_literal=cap
-            )
-            n = out.count()
-            print(
-                f"id-table ~{n_ids}: {label} path {time.time()-t0:.1f}s "
-                f"({n} rows)"
-            )
-    spark.stop()
-
-
 def multimodal_main() -> None:
     """Codec-leg throughput probe (round 12): every real codec path —
     PPM, WAV, PNG, JPEG, Y4M, MJPEG-in-AVI — generate + decode over N
@@ -1218,81 +1167,6 @@ def corpus_e2e_main() -> None:
     print(f"recompute stage counts ({t_counts:.1f}s): {counts}")
     assert observed == counts, (observed, counts)
     print("observed == recompute: OK")
-
-
-def excel_main() -> None:
-    """Distributed many-workbook Excel ingest probe (round 12): N
-    small workbooks — half legacy .xls (CFB+BIFF8), half .xlsx
-    (zip+XML) — through read_excel_distributed's binaryFile scan with
-    per-file magic dispatch. The parallelism unit is the FILE: cost
-    should scale ~N/cores, with driver involvement limited to listing
-    plus ONE header read for the declared schema.
-
-    Usage: python scripts/stress.py --excel [n_files] [rows_per_file]
-    """
-    n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 400
-    rows_per = int(sys.argv[3]) if len(sys.argv) > 3 else 50
-
-    import shutil
-    import tempfile
-
-
-    spark = _session("stress-excel", 32)
-
-    from sales_analytics_etl_sql_powerbi_spark.sources.readers import (
-        read_excel_distributed,
-    )
-    from sales_analytics_etl_sql_powerbi_spark.sources.xls import (
-        write_minimal_xls,
-    )
-    from sales_analytics_etl_sql_powerbi_spark.sources.xlsx import (
-        write_minimal_xlsx,
-    )
-
-    root = tempfile.mkdtemp(prefix="excel-fleet-")
-    try:
-        t0 = time.time()
-        headers = ["Order No", "Qty", "Price", "State"]
-        for f in range(n_files):
-            rows = [
-                [f * rows_per + r, r, r + 0.5, "fl"] for r in range(rows_per)
-            ]
-            if f % 2:
-                write_minimal_xls(
-                    os.path.join(root, f"wb{f:05d}.xls"), headers, rows
-                )
-            else:
-                write_minimal_xlsx(
-                    os.path.join(root, f"wb{f:05d}.xlsx"), headers, rows
-                )
-        t_gen = time.time() - t0
-        print(f"generated {n_files} workbooks ({rows_per} rows each): {t_gen:.1f}s")
-
-        t0 = time.time()
-        df = read_excel_distributed(spark, root + "/*.xls*")
-        n = df.count()
-        t_scan = time.time() - t0
-        assert n == n_files * rows_per, (n, n_files * rows_per)
-        print(
-            f"distributed parse: {n} rows from {n_files} mixed workbooks "
-            f"in {t_scan:.1f}s ({n_files / max(t_scan, 1e-9):.0f} files/s)"
-        )
-        # per-file dispatch correctness at scale: both formats contribute
-        t0 = time.time()
-        by_ext = (
-            df.selectExpr(
-                "CASE WHEN source_file LIKE '%.xls' THEN 'xls' ELSE 'xlsx' END AS ext"
-            )
-            .groupBy("ext")
-            .count()
-            .collect()
-        )
-        print(
-            {r.ext: r["count"] for r in by_ext},
-            f"({time.time() - t0:.1f}s re-scan)",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def packing_main() -> None:
@@ -1544,116 +1418,6 @@ def aggregates_main() -> None:
     print(f"max |hist p95 - exact p95|: {err:.1f} (bin width {100000/256:.1f})")
 
 
-def bpe_main() -> None:
-    """Driver-side vs distributed BPE training at a REAL vocabulary
-    size (VERDICT r7 item 5): the distributed loop pays one driver
-    sync per merge (fine for tens, hours for 32k); ``bpe_train_local``
-    collects the vocab-sized count table once and trains locally.
-    Probe: a ~1M-token corpus over ~25k types — time 24 distributed
-    merges (→ s/merge), then 1000 local merges, and pin prefix parity
-    between the two paths."""
-
-    spark = _session("stress-bpe", 32)
-
-    from sales_analytics_etl_sql_powerbi_spark.operators.bpe import (
-        bpe_train,
-        bpe_train_local,
-    )
-
-    # Zipf-ish synthetic corpus: 200k docs × 5 tokens; type count
-    # dominated by the alpha% 19997 and w% 4999 families (~25k types)
-    docs = spark.range(200_000).selectExpr(
-        "id AS doc_id",
-        "concat('alpha', cast(id % 19997 AS string),"
-        " ' beta', cast(id % 311 AS string),"
-        " ' gamma', cast(id % 7 AS string),"
-        " ' delta', cast(id % 47 AS string),"
-        " ' w', cast(id % 4999 AS string)) AS text",
-    ).persist()
-    docs.count()
-
-    n_dist = 24
-    t0 = time.time()
-    m_dist = bpe_train(docs, n_merges=n_dist)
-    td = time.time() - t0
-    print(
-        f"distributed bpe_train {len(m_dist)} merges: {td:.1f}s "
-        f"({td / max(len(m_dist), 1):.2f}s/merge)"
-    )
-
-    t0 = time.time()
-    m_loc = bpe_train_local(docs, n_merges=1000)
-    tl = time.time() - t0
-    print(f"local bpe_train_local {len(m_loc)} merges: {tl:.1f}s total")
-    assert m_loc[: len(m_dist)] == m_dist, "path divergence"
-    print(
-        f"prefix parity OK; projected distributed cost for "
-        f"{len(m_loc)} merges ≈ {td / max(len(m_dist), 1) * len(m_loc):.0f}s"
-    )
-
-
-def bpe_32k_main() -> None:
-    """The 32k-merge PRODUCTION shape end to end (round 16 — VERDICT
-    r15 item 4): train a real-size vocabulary with the local fast
-    path, then encode a multi-million-token corpus with the id-table
-    JOIN path and the Arrow rank-map subword application, and GUARD
-    the plan (broadcast id join, no create_map literal, no fold
-    chain).
-
-    The gate corpus can't drive this (its whitespace vocabulary is
-    ~31 types — merges exhaust in the hundreds), so the probe corpus
-    is a compositional synthetic with a rich surface vocabulary:
-    ~500k docs × 8 tokens whose type count (~190k) supports well over
-    32k distinct merges.
-
-    Usage: python scripts/stress.py --bpe-32k [n_docs] [n_merges]
-    """
-    n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 500_000
-    n_merges = int(sys.argv[3]) if len(sys.argv) > 3 else 32_000
-
-
-    spark = _session("stress-bpe-32k", 32)
-
-    from sales_analytics_etl_sql_powerbi_spark.operators import bpe
-
-    # compositional vocabulary: md5-mixed syllable trigrams → ~19e4
-    # distinct 9-char types at 500k docs, zipf-ish reuse via the
-    # modulus families
-    docs = spark.range(n_docs).selectExpr(
-        "id AS doc_id",
-        "concat(" + ", ' ', ".join(
-            f"substring(md5(cast((id * {i + 1}) % {m} AS string)), 1, 9)"
-            for i, m in enumerate(
-                (190_001, 97_003, 53_089, 29_009, 9_973, 997, 97, 7)
-            )
-        ) + ") AS text",
-    ).persist()
-    n_tokens = docs.count() * 8
-    t0 = time.time()
-    merges = bpe.bpe_train_local(
-        docs, n_merges=n_merges, min_pair_count=2, max_vocab_rows=4_000_000
-    )
-    t_train = time.time() - t0
-    print(
-        f"bpe_train_local(fast): {len(merges)} merges from ~{n_tokens} "
-        f"tokens in {t_train:.1f}s"
-    )
-
-    t0 = time.time()
-    out = bpe.bpe_encode_ids(docs, merges)  # auto → arrow + join path
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "create_map" not in plan.lower(), "id literal leaked into plan"
-    joins = plan.count("BroadcastHashJoin")
-    total = out.selectExpr(
-        "sum(size(subword_ids)) AS s", "sum(n_oov) AS o"
-    ).collect()[0]
-    t_enc = time.time() - t0
-    print(
-        f"bpe_encode_ids(arrow+join): {total['s']} subword ids, "
-        f"{total['o']} oov, {joins} broadcast joins, {t_enc:.1f}s"
-    )
-
-
 def lsh_cap_main() -> None:
     """LSH candidate-blowup guard at scale (round 13 — the measured
     companion to VERDICT r12 item 4's unit tests): a mostly-unique
@@ -1899,11 +1663,7 @@ def entity_zipf_main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--bpe":
-        bpe_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--bpe-32k":
-        bpe_32k_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--docs":
+    if len(sys.argv) > 1 and sys.argv[1] == "--docs":
         docs_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--events":
         events_main()
@@ -1925,14 +1685,10 @@ if __name__ == "__main__":
         lsh_cap_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--packing":
         packing_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--excel":
-        excel_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--corpus-e2e":
         corpus_e2e_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--multimodal":
         multimodal_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--bpe-ids":
-        bpe_ids_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--tokmix":
         tokmix_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--retrieval":

@@ -1,10 +1,11 @@
-"""As-of backward join semantics on hand-built rows."""
+"""As-of join semantics on hand-built rows and against pandas
+``merge_asof``."""
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 from sales_analytics_etl_sql_powerbi_spark.operators.asof import (
     asof_backward,
-    events_asof,
+    events_asof_directions,
 )
 
 
@@ -51,13 +52,16 @@ def test_asof_equal_ts_tiebreak_deterministic(spark):
 def test_events_asof_shape(spark, sf_dir):
     from sales_analytics_etl_sql_powerbi_spark.sources.readers import read_table
 
-    out = events_asof(read_table(spark, sf_dir, "events"))
+    out = events_asof_directions(read_table(spark, sf_dir, "events"))
     rows = out.collect()
     assert len(rows) > 0
-    assert {f.name for f in out.schema.fields} == {
+    assert out.columns == [
         "event_id", "user_id", "ts", "prior_view_id", "prior_view_value",
-    }
-    assert any(r.prior_view_id is not None for r in rows)
+        "next_view_id", "next_view_value",
+        "nearest_view_id", "nearest_view_value",
+    ]
+    for col in ("prior_view_id", "next_view_id", "nearest_view_id"):
+        assert any(r[col] is not None for r in rows), col
 
 
 def _pandas_oracle_frames():
@@ -107,10 +111,30 @@ def _spark_asof(spark, fn, left, right, **kw):
     return {int(row.lid): row.asof_value for row in out.collect()}
 
 
+def _events_frame(spark, left, right):
+    """The oracle frames as one events table: left rows are purchases
+    (event_id = lid), right rows are views carrying ``value``; ``ts``
+    counts seconds from a fixed instant."""
+    t0 = datetime(2024, 1, 1)
+    rows = [
+        (int(r.lid), int(r.k), t0 + timedelta(seconds=r.ts), "purchase", None)
+        for r in left.itertuples()
+    ]
+    rows += [
+        (1000 + i, int(r.k), t0 + timedelta(seconds=r.ts), "view", float(r.value))
+        for i, r in enumerate(right.itertuples())
+    ]
+    return spark.createDataFrame(
+        rows,
+        "event_id long, user_id long, ts timestamp, event_type string, value double",
+    )
+
+
 def test_asof_directions_match_pandas_merge_asof(spark):
+    import pandas as pd
+
     from sales_analytics_etl_sql_powerbi_spark.operators.asof import (
         asof_forward,
-        asof_nearest,
     )
 
     left, right = _pandas_oracle_frames()
@@ -120,23 +144,27 @@ def test_asof_directions_match_pandas_merge_asof(spark):
     assert _spark_asof(spark, asof_forward, left, right) == _merge_asof(
         left, right, "forward"
     )
-    assert _spark_asof(
-        spark, asof_nearest, left, right, left_key="lid"
-    ) == _merge_asof(left, right, "nearest")
+    # nearest, through the events composition the gated query runs;
+    # key 7 adds an exact tie: a purchase 5 s after one view and 5 s
+    # before the next
+    left = pd.concat([left, pd.DataFrame({"k": [7], "ts": [105.0], "lid": [99]})])
+    right = pd.concat(
+        [right, pd.DataFrame({"k": [7, 7], "ts": [100.0, 110.0], "value": [1.0, 2.0]})],
+        ignore_index=True,
+    )
+    out = events_asof_directions(_events_frame(spark, left, right)).collect()
+    got = {r.event_id: r.nearest_view_value for r in out}
+    assert got == _merge_asof(left, right, "nearest")
+    assert got[99] == 1.0  # the tie goes backward
 
 
 def test_asof_tolerance_matches_pandas(spark):
     from sales_analytics_etl_sql_powerbi_spark.operators.asof import (
         asof_forward,
-        asof_nearest,
     )
 
     left, right = _pandas_oracle_frames()
-    for fn, direction, kw in (
-        (asof_backward, "backward", {}),
-        (asof_forward, "forward", {}),
-        (asof_nearest, "nearest", {"left_key": "lid"}),
-    ):
-        got = _spark_asof(spark, fn, left, right, tolerance_seconds=25.0, **kw)
+    for fn, direction in ((asof_backward, "backward"), (asof_forward, "forward")):
+        got = _spark_asof(spark, fn, left, right, tolerance_seconds=25.0)
         want = _merge_asof(left, right, direction, tolerance=25.0)
         assert got == want, direction

@@ -2,7 +2,6 @@
 encoding semantics, early stop."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from sales_analytics_etl_sql_powerbi_spark.operators import bpe
 
@@ -25,24 +24,6 @@ def test_bpe_train_matches_python_reference(spark):
     assert m[:2] == [("l", "o"), ("lo", "w")]  # the textbook first merges
 
 
-def test_bpe_train_local_parity_and_guard(spark):
-    """The driver-side fast path (VERDICT r7 item 5) returns the
-    IDENTICAL merge list as the distributed trainer — same argmax,
-    tie-break, fold — and refuses the collect (rather than attempting
-    it) when the type table exceeds the explicit size guard."""
-    docs = _docs(spark)
-    assert bpe.bpe_train_local(docs, n_merges=12) == bpe.bpe_train(
-        docs, n_merges=12
-    )
-    # early-stop parity too
-    tiny = spark.createDataFrame([(1, "ab cd ef")], "doc_id long, text string")
-    assert bpe.bpe_train_local(tiny, n_merges=10, min_pair_count=3) == []
-    with pytest.raises(ValueError, match="max_vocab_rows"):
-        bpe.bpe_train_local(docs, n_merges=4, max_vocab_rows=3)
-    with pytest.raises(ValueError):
-        bpe.bpe_train_local(docs, n_merges=0)
-
-
 def test_bpe_train_deterministic_across_runs(spark):
     docs = _docs(spark)
     assert bpe.bpe_train(docs, n_merges=8) == bpe.bpe_train(docs, n_merges=8)
@@ -58,35 +39,24 @@ def test_bpe_train_early_stop_on_min_pair_count(spark):
         bpe.bpe_train(docs, n_merges=0)
 
 
+def _encode(docs, merges):
+    return bpe.bpe_encode_vocab(bpe.exploded_tokens(docs), merges)
+
+
 def test_bpe_encode_full_words_and_subword_splits(spark):
     """Frequent words collapse to single tokens; rarer words split at
     learned boundaries; concatenating subwords (minus the end marker)
     reconstructs every original token."""
     docs = _docs(spark)
     merges = bpe.bpe_train(docs, n_merges=10)
-    rows = bpe.bpe_encode(docs, merges).collect()
+    rows = _encode(docs, merges).collect()
     by_tok = {}
     for r in rows:
         by_tok[r.token] = r.subwords
         joined = "".join(r.subwords).replace("▁", "")
         assert joined == r.token  # lossless reconstruction
-        assert r.n_subwords == len(r.subwords)
     assert by_tok["low"] == ["low▁"]
     assert by_tok["lower"] == ["low", "er▁"]
-
-
-def test_bpe_encode_corpus_join_shape(spark):
-    """The corpus side pays one tokenize + one equi-join: no window,
-    no cartesian, merge count does not touch the corpus plan."""
-    docs = _docs(spark)
-    merges = bpe.bpe_train(docs, n_merges=6)
-    plan = (
-        bpe.bpe_encode(docs, merges)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Window" not in plan and "CartesianProduct" not in plan
 
 
 def test_bpe_vocab_ids_stable_under_model_growth(spark):
@@ -118,164 +88,34 @@ def test_bpe_encode_ids_roundtrip_and_oov(spark):
     docs = _docs(spark)
     merges = bpe.bpe_train(docs, n_merges=10)
     ids = bpe.bpe_vocab_ids(merges)
-    rows = {r.token: r for r in bpe.bpe_encode_ids(docs, merges).collect()}
-    subs = {r.token: r.subwords for r in bpe.bpe_encode(docs, merges).collect()}
-    for tok, r in rows.items():
-        expect = [ids.get(s, -1) for s in subs[tok]]
-        assert r.subword_ids == expect
-        assert r.n_oov == sum(1 for i in expect if i == -1)
+
+    def encode_ids(d):
+        return {
+            r.token: r
+            for r in _encode(d, merges)
+            .select("token", "subwords", bpe.subword_ids_expr(ids).alias("ids"))
+            .collect()
+        }
+
+    for tok, r in encode_ids(docs).items():
+        assert r.ids == [ids.get(s, -1) for s in r.subwords]
+        assert -1 not in r.ids
     # an unseen-character doc: 'z' and 'q' never appear in training
     oov_docs = spark.createDataFrame(
         [(9, "zq low")], "doc_id long, text string"
     )
-    oov_rows = {
-        r.token: r for r in bpe.bpe_encode_ids(oov_docs, merges).collect()
-    }
-    assert oov_rows["zq"].n_oov >= 2
-    assert oov_rows["low"].n_oov == 0
-
-
-def test_bpe_encode_ids_join_path_parity_and_plan(spark):
-    """The broadcast-join id path (big-table regime, forced via
-    max_map_literal=0) returns EXACTLY the literal-map path's rows,
-    and its plan broadcasts the id table — no corpus-sized exchange
-    for the lookup, no create_map literal bloating the plan."""
-    docs = _docs(spark)
-    merges = bpe.bpe_train(docs, n_merges=10)
-    lit_rows = sorted(
-        (r.doc_id, r.token, tuple(r.subword_ids), r.n_oov)
-        for r in bpe.bpe_encode_ids(docs, merges).collect()
-    )
-    joined = bpe.bpe_encode_ids(docs, merges, max_map_literal=0)
-    join_rows = sorted(
-        (r.doc_id, r.token, tuple(r.subword_ids), r.n_oov)
-        for r in joined.collect()
-    )
-    assert join_rows == lit_rows
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # id table broadcast, never shuffled
-    assert "map_from" not in plan and "CartesianProduct" not in plan
-    # fixed-alphabet OOV parity across both paths
-    oov_docs = spark.createDataFrame(
-        [(9, "zq low")], "doc_id long, text string"
-    )
-    alpha = list("low")
-    a = {
-        r.token: (tuple(r.subword_ids), r.n_oov)
-        for r in bpe.bpe_encode_ids(oov_docs, merges, alphabet=alpha).collect()
-    }
-    b = {
-        r.token: (tuple(r.subword_ids), r.n_oov)
-        for r in bpe.bpe_encode_ids(
-            oov_docs, merges, alphabet=alpha, max_map_literal=0
-        ).collect()
-    }
-    assert a == b
-
-
-def test_bpe_fast_trainer_and_arrow_encode_parity(spark):
-    """Round 16 (VERDICT r15 item 4): the incremental heap trainer ==
-    the O(vocab·len)-per-merge reference trainer, and the Arrow
-    rank-map encode == the expression-chain encode, on a corpus with
-    ties, repeats, multi-char overlaps, and unicode."""
-    docs = spark.createDataFrame(
-        [
-            (0, "low lower lowest low low"),
-            (1, "newer newest new newer"),
-            (2, "aaa aab abab ▁odd"),
-            (3, "Ünïcode Ünïcode Ünï"),
-            (4, None),
-        ],
-        "doc_id long, text string",
-    )
-    for nm in (1, 3, 8, 40):
-        wc = {
-            r["token"]: r["cnt"]
-            for r in bpe.exploded_tokens(docs)
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        assert bpe.bpe_train_py_fast(wc, nm) == bpe.bpe_train_py(wc, nm), nm
-
-    merges = bpe.bpe_train_py(
-        {
-            r["token"]: r["cnt"]
-            for r in bpe.exploded_tokens(docs)
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        },
-        12,
-    )
-    expr = {
-        (r.doc_id, r.token): tuple(r.subwords)
-        for r in bpe.bpe_encode(docs, merges, impl="expr").collect()
-    }
-    arrow = {
-        (r.doc_id, r.token): tuple(r.subwords)
-        for r in bpe.bpe_encode(docs, merges, impl="arrow").collect()
-    }
-    assert expr == arrow and expr
-    # per-token twin agrees too
-    for (_, tok), sw in expr.items():
-        assert tuple(bpe.bpe_apply_py(tok, merges)) == sw, tok
-    with pytest.raises(ValueError, match="unknown impl"):
-        bpe.bpe_encode(docs, merges, impl="nope")
-
-
-def test_bpe_encode_auto_switches_to_arrow_and_stays_join_based(spark):
-    """Plan guard (round 16 — VERDICT r15 item 4): above the expr
-    bound the auto encode must run the vocab through the Arrow
-    rank-map (ArrowEvalPython / one pandas_udf — never a fold chain
-    with one expression per merge), and bpe_encode_ids at a real
-    vocab size must stamp ids via the broadcast JOIN path (no
-    create_map literal in the plan)."""
-    docs = spark.createDataFrame(
-        [(0, "aa ab ba bb aaa bbb")], "doc_id long, text string"
-    )
-    merges = [("a", "a"), ("b", "b"), ("a", "b")] * 100  # 300 > bound
-    # dedupe while preserving order (a merge list never repeats)
-    seen = set()
-    merges = [m for m in merges if not (m in seen or seen.add(m))]
-    # inert filler must be WELL-FORMED (round 17: bpe_encode validates
-    # merge-list derivability): single-char pairs always are, and CJK
-    # chars never occur in the corpus so they stay inert
-    merges += [(chr(0x4E00 + i), chr(0x4E00 + i)) for i in range(260)]
-    assert len(merges) > bpe._EXPR_MERGE_BOUND
-    enc = bpe.bpe_encode(docs, merges)  # auto
-    plan = enc._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan, plan[:500]
-    ids = bpe.bpe_encode_ids(
-        docs,
-        merges,
-        alphabet=[chr(c) for c in range(97, 123)],
-        max_map_literal=8,  # force the real-vocab join path
-    )
-    idplan = ids._jdf.queryExecution().executedPlan().toString()
-    assert "create_map" not in idplan.lower()
-    assert "BroadcastHashJoin" in idplan or "BroadcastNestedLoopJoin" in idplan
-    # and the arrow output is still the expr output
-    expr = {
-        (r.doc_id, r.token): tuple(r.subwords)
-        for r in bpe.bpe_encode(docs, merges, impl="expr").collect()
-    }
-    got = {(r.doc_id, r.token): tuple(r.subwords) for r in enc.collect()}
-    assert got == expr
+    oov_rows = encode_ids(oov_docs)
+    assert oov_rows["zq"].ids.count(-1) >= 2
+    assert -1 not in oov_rows["low"].ids
 
 
 def test_bpe_encode_rejects_ill_formed_merge_list(spark):
-    """ADVICE r16: an operand that is neither a single char nor the
-    product of an earlier merge would make the expr and arrow paths
-    diverge silently across the auto impl bound — now a loud raise."""
-    from sales_analytics_etl_sql_powerbi_spark.operators import bpe as B
-
+    """An operand that is neither a single char nor the product of an
+    earlier merge can never fire: a loud raise, not a silently
+    dropped merge."""
     docs = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
     with pytest.raises(ValueError, match="ill-formed merge list"):
-        B.bpe_encode(docs, [("ab", "c")])  # 'ab' never derived
+        _encode(docs, [("ab", "c")])  # 'ab' never derived
     # well-formed: second pair's operand is the first pair's product
-    ok = B.bpe_encode(docs, [("a", "b"), ("ab", B._EOW)])
-    assert ok.count() == 2
-    # validation is impl-independent
-    with pytest.raises(ValueError, match="ill-formed"):
-        B.bpe_encode(docs, [("xy", "z")], impl="arrow")
+    ok = _encode(docs, [("a", "b"), ("ab", bpe._EOW)])
+    assert [r.subwords for r in ok.collect()] == [["ab▁"]]

@@ -164,46 +164,6 @@ def test_neardup_clusters_accepts_precomputed_pairs(spark):
     assert rounds and rounds[-1][1] == 0
 
 
-def test_simhash_neardup_pairs_exact_vs_bruteforce(spark):
-    """Banded candidates + popcount verify must equal the brute-force
-    all-pairs hamming computation (pigeonhole: no false negatives at
-    max_hamming ≤ n_bands − 1)."""
-    docs = docs_frame(spark).unionByName(
-        spark.createDataFrame(
-            [
-                (10, "the quick brown fox jumps over the lazy dog today"),
-                (11, "spark pipelines at scale with catalyst optimizer!"),
-            ],
-            DOCS,
-        )
-    )
-    sigs = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
-    want = set()
-    ids = sorted(sigs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            h = bin(sigs[a] ^ sigs[b]).count("1")
-            if h <= 7:
-                want.add((a, b, h))
-    got = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in dedup.simhash_neardup_pairs(
-            docs, max_hamming=7, n_bands=8
-        ).collect()
-    }
-    assert got == want
-    assert (0, 2, 0) in got  # exact dups at hamming 0
-    # fixture exercises a spread of nonzero distances (4, 5, 7 here)
-    assert len({h for _, _, h in want if h > 0}) >= 3
-
-
-def test_simhash_neardup_validates_banding(spark):
-    import pytest
-
-    with pytest.raises(ValueError):
-        dedup.simhash_neardup_pairs(docs_frame(spark), max_hamming=4, n_bands=4)
-
-
 def test_keep_canonical_drops_near_dups_keeps_min(spark):
     docs = docs_frame(spark)
     kept = {r.doc_id for r in dedup.keep_canonical(docs, threshold=0.5).collect()}

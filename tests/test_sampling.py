@@ -92,32 +92,6 @@ def test_training_shards_deterministic_and_balanced(spark, sf_dir):
     assert a.select("doc_id", "shard").exceptAll(b.select("doc_id", "shard")).count() == 0
 
 
-def test_write_training_shards_one_file_per_shard_byte_identical(spark, sf_dir, tmp_path):
-    import glob
-    import hashlib
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def write_and_hash(p):
-        sinks.write_training_shards(docs, p, n_shards=4)
-        out = {}
-        for d in sorted(glob.glob(f"{p}/shard=*")):
-            files = [f for f in glob.glob(f"{d}/*") if f.endswith(".parquet")]
-            assert len(files) == 1, files  # ONE data file per shard
-            out[d.split("shard=")[1]] = hashlib.md5(open(files[0], "rb").read()).hexdigest()
-        return out
-
-    h1 = write_and_hash(str(tmp_path / "a"))
-    h2 = write_and_hash(str(tmp_path / "b"))
-    assert h1 == h2  # byte-identical shard files across runs
-    # within-shard order is the salt-decorrelated hash, not doc_id order
-    rows = spark.read.parquet(str(tmp_path / "a") + "/shard=0").collect()
-    ids = [r.doc_id for r in rows]
-    assert ids != sorted(ids)
-
-
 def test_stratified_mix_quotas_and_determinism(spark, sf_dir):
     from pyspark.sql import functions as F
 
@@ -240,45 +214,6 @@ def test_weighted_sample_plan_is_take_ordered(spark):
         .toString()
     )
     assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_write_training_shards_jsonl_byte_identical_and_loadable(spark, sf_dir, tmp_path):
-    import glob
-    import hashlib
-    import json as jsonlib
-
-    from sales_analytics_etl_sql_powerbi_spark.sources import sinks
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-
-    def write_and_hash(p):
-        sinks.write_training_shards_jsonl(docs, p, n_shards=4)
-        out = {}
-        for d in sorted(glob.glob(f"{p}/shard=*")):
-            files = [f for f in glob.glob(f"{d}/part-*") if not f.endswith(".crc")]
-            assert len(files) == 1, files
-            out[d.split("shard=")[1]] = hashlib.md5(
-                open(files[0], "rb").read()
-            ).hexdigest()
-        return out
-
-    h1 = write_and_hash(str(tmp_path / "a"))
-    h2 = write_and_hash(str(tmp_path / "b"))
-    assert h1 == h2  # byte-identical across runs
-    # each line is standalone JSON with the expected fields — what a
-    # training loader consumes without Spark
-    f = sorted(glob.glob(str(tmp_path / "a") + "/shard=0/part-*"))
-    f = [x for x in f if not x.endswith(".crc")][0]
-    lines = open(f).read().splitlines()
-    assert len(lines) > 0
-    # ignoreNullFields=false → EVERY line carries the full key set
-    for ln in lines[:50]:
-        assert set(jsonlib.loads(ln)) == {"doc_id", "lang", "text"}
-    # full round trip preserves the corpus
-    back = spark.read.json(str(tmp_path / "a"))
-    assert back.count() == docs.count()
 
 
 def test_weighted_sample_excludes_nan_weights(spark):

@@ -123,43 +123,6 @@ def test_auto_n_planes_scales_and_clamps():
     assert planes == sorted(planes)
 
 
-def test_auto_n_planes_eval_threshold_rule():
-    """Round 14 (VERDICT r13 item 3): decontam plane sizing derives
-    from (n_eval, threshold) — an aggressive threshold < 0.85 drops
-    one plane (the wider flag band needs collision probability, not
-    probes, which saturate at 4). Measured: threshold 0.8 at 20k/100
-    eval/probes 4 — planes 5 gave 0.88 band recall, planes 4 gives
-    0.912 (≥ the 0.9 bar; PLAN_AUDIT r14)."""
-    # default sizing unchanged when no threshold is passed (r13 rule)
-    assert similarity.auto_n_planes_eval(100) == 5
-    assert similarity.auto_n_planes_eval(1000) == 8
-    # at-or-above 0.85: same as unthresholded
-    assert similarity.auto_n_planes_eval(100, threshold=0.9) == 5
-    assert similarity.auto_n_planes_eval(100, threshold=0.85) == 5
-    # below 0.85: one plane dropped
-    assert similarity.auto_n_planes_eval(100, threshold=0.8) == 4
-    assert similarity.auto_n_planes_eval(1000, threshold=0.8) == 7
-    # the floor still holds — the rule can't push planes under lo
-    assert similarity.auto_n_planes_eval(10, threshold=0.5) == 4
-
-    # and semantic_contamination actually consumes the rule: planes
-    # derived inside must allow n_probes up to n_planes+1 only, so an
-    # n_probes valid at threshold 0.9 (planes 5 → max 6) must reject
-    # at threshold 0.8 (planes 4 → max 5)
-    import pytest as _pytest
-
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        rows = [(i, [float(i == j) for j in range(64)]) for i in range(100)]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        with _pytest.raises(ValueError, match="n_probes"):
-            similarity.semantic_contamination(
-                emb, emb.limit(100), threshold=0.8, n_probes=6
-            )
-
-
 def test_lsh_bucket_count_grows_with_n_planes(spark):
     df, _ = emb_frame(spark, n=120)
     b2 = similarity.lsh_buckets(df, 2).select("bucket").distinct().count()
@@ -344,27 +307,6 @@ def test_multi_probe_bounds_validated(spark):
         similarity.ann_lsh_topk(df, n_queries=1, topk=3, n_planes=4, n_probes=6)
     with pytest.raises(ValueError):
         similarity.ann_lsh_topk(df, n_queries=1, topk=3, n_planes=4, n_probes=0)
-
-
-def test_embedding_neardup_clusters_collapse_planted_group(spark):
-    """Three planted copies of one vector (+ jitter on one) must land
-    in a single cluster via transitive closure; unrelated vectors stay
-    singletons."""
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    base = rng.standard_normal(64).astype(np.float32)
-    jit = base + rng.standard_normal(64).astype(np.float32) * 0.01
-    others = rng.standard_normal((5, 64)).astype(np.float32)
-    rows = [(0, [float(x) for x in base]), (1, [float(x) for x in base]),
-            (2, [float(x) for x in jit])]
-    rows += [(10 + i, [float(x) for x in others[i]]) for i in range(5)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r.vec_id: r.cluster_id for r in
-           similarity.embedding_neardup_clusters(df, threshold=0.95).collect()}
-    assert out[0] == out[1] == out[2] == 0
-    for i in range(5):
-        assert out[10 + i] == 10 + i
 
 
 def test_ann_index_parquet_roundtrip_serves_queries(spark, tmp_path):
@@ -611,81 +553,6 @@ def test_shortlisted_auto_multiplier(spark):
     assert [tuple(r) for r in auto] == [tuple(r) for r in explicit]
 
 
-def test_semantic_contamination_and_decontaminate(spark):
-    """Embedding-level decontamination: a corpus vector that is a
-    near-copy of an eval item is flagged (and removed by the rewrite
-    side); unrelated vectors are untouched; multi-probe only ADDS
-    hits; plan stays a broadcast bucket equi-join."""
-    rng = np.random.default_rng(23)
-    base = rng.standard_normal((8, 64)).astype(np.float32)
-    corpus_vecs = list(base)
-    corpus_vecs.append(
-        base[0] + rng.standard_normal(64).astype(np.float32) * 0.01
-    )  # ~copy of eval item 0 (below)
-    corpus = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in enumerate(corpus_vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    eval_vecs = [base[0], rng.standard_normal(64).astype(np.float32)]
-    eval_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in enumerate(eval_vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    hits = similarity.semantic_contamination(
-        corpus, eval_df, threshold=0.95
-    ).collect()
-    got = {(r.vec_id, r.eval_id): r.cosine for r in hits}
-    # vec 0 IS eval 0; vec 8 is its near-copy — both must flag
-    assert got[(0, 0)] == 1.0
-    assert (8, 0) in got and got[(8, 0)] > 0.99
-    assert all(v in (0, 8) for v, _ in got)
-
-    clean = similarity.semantic_decontaminate(
-        corpus, eval_df, threshold=0.95
-    )
-    kept = sorted(r.vec_id for r in clean.collect())
-    assert kept == [1, 2, 3, 4, 5, 6, 7]
-    assert clean.columns == corpus.columns  # corpus schema untouched
-
-    # multi-probe is a superset of single-probe
-    one = {
-        (r.vec_id, r.eval_id)
-        for r in similarity.semantic_contamination(
-            corpus, eval_df, threshold=0.95, n_probes=1
-        ).collect()
-    }
-    multi = {
-        (r.vec_id, r.eval_id)
-        for r in similarity.semantic_contamination(
-            corpus, eval_df, threshold=0.95, n_probes=3
-        ).collect()
-    }
-    assert one <= multi
-
-    # out-of-range n_probes raises (ADVICE r12: validation centralized
-    # in _expand_probes so decontam can't silently under-probe via
-    # F.slice clamping the way a typo like n_probes=100 used to)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="n_probes"):
-        similarity.semantic_contamination(
-            corpus, eval_df, threshold=0.95, n_planes=4, n_probes=100
-        )
-    with _pytest.raises(ValueError, match="n_probes"):
-        similarity.semantic_decontaminate(
-            corpus, eval_df, threshold=0.95, n_planes=4, n_probes=0
-        )
-
-    # plan: eval side broadcast, no corpus-sized exchange beyond the scan
-    plan = (
-        similarity.semantic_contamination(corpus, eval_df, threshold=0.95)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
-
-
 def test_zero_norm_vectors_never_crash_or_match(spark):
     """Round 13 (found by the subset fuzz): an all-zero embedding has
     no cosine — under ANSI mode the unguarded division used to kill
@@ -707,17 +574,7 @@ def test_zero_norm_vectors_never_crash_or_match(spark):
     assert [(r.vec_id) for r in top] == [2, 3]
     assert all(r.cosine is not None for r in top)
 
-    # threshold ops: the zero vector is never flagged, never paired
-    ev = spark.createDataFrame(
-        [(0, v64()), (1, v64(1.0))],
-        "vec_id long, embedding array<float>",
-    )
-    hits = similarity.semantic_contamination(
-        emb, ev, threshold=0.5, n_planes=4, n_probes=5
-    ).collect()
-    assert all(r.vec_id != 1 and r.eval_id != 0 for r in hits)
-    assert (0, 1) in {(r.vec_id, r.eval_id) for r in hits}
-
+    # threshold ops: the zero vector is never paired
     pairs = similarity.embedding_neardup_pairs(emb, threshold=0.5).collect()
     assert all(1 not in (r.vec_a, r.vec_b) for r in pairs)
 
@@ -812,16 +669,7 @@ def test_nonfinite_vectors_never_crash_or_match(spark):
     ).collect()
     assert all(r.cosine is None for r in sh if r.vec_id in poison)
 
-    # threshold ops: poison never flagged on either side
-    ev = spark.createDataFrame(
-        [(0, v64(nan)), (1, v64(1.0)), (2, v64(inf))],
-        "vec_id long, embedding array<float>",
-    )
-    hits = similarity.semantic_contamination(
-        emb, ev, threshold=0.5, n_planes=4, n_probes=5
-    ).collect()
-    assert all(r.vec_id not in poison and r.eval_id == 1 for r in hits)
-    assert (0, 1) in {(r.vec_id, r.eval_id) for r in hits}
+    # threshold ops: poison never paired
     pairs = similarity.embedding_neardup_pairs(emb, threshold=0.5).collect()
     assert pairs and all(
         r.vec_a not in poison and r.vec_b not in poison for r in pairs
@@ -973,17 +821,6 @@ def test_hyperplane_dim_inferred_from_corpus(spark):
             ).collect()
         }
         assert got_inf == got_exp and all(v is not None for v in got_inf.values())
-
-    # semantic_contamination infers from the corpus side and still
-    # VALIDATES the eval side (a mismatched eval frame raises loudly)
-    eval_emb = spark.createDataFrame(rows[:2], "vec_id long, embedding array<double>")
-    hits = similarity.semantic_contamination(emb, eval_emb, threshold=0.99)
-    assert hits.count() >= 2  # every vector ~matches itself
-    bad_eval = spark.createDataFrame(
-        [(0, [0.1] * 9)], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(Exception, match="embedding width"):
-        similarity.semantic_contamination(emb, bad_eval).count()
 
     # embedding_neardup_pairs rides the same inference
     assert (
@@ -1187,160 +1024,6 @@ class TestIndexBuildStamps:
                 similarity.ann_query(back, df.where("vec_id < 2"), n_planes=8)
         finally:
             spark.sql("drop table if exists t_ann_idx_stamp")
-
-
-class TestIndexAppend:
-    """Round 17: incremental index maintenance — grow a materialized
-    index batch-sized (stamp-derived params + idempotent key-upsert),
-    row-identical to a from-scratch rebuild over the union."""
-
-    def test_ann_append_equals_rebuild_and_replay_is_noop(
-        self, spark, tmp_path
-    ):
-        a, _ = emb_frame(spark, n=40, seed=7)
-        b_rows, _ = emb_frame(spark, n=60, seed=7)
-        b = b_rows.where("vec_id >= 40")  # disjoint ids, same generator
-        p = str(tmp_path / "ann")
-        similarity.ann_index(a, n_planes=4).write.parquet(p)
-        similarity.ann_index_append(b, p)
-        grown = spark.read.parquet(p)
-        want = similarity.ann_index(a.unionByName(b), n_planes=4)
-        assert sorted(map(tuple, grown.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        # the grown index still carries the stamp and serves queries
-        assert similarity._read_stamp(grown, "bucket") == {
-            "n_planes": 4,
-            "dim": 64,
-        }
-        got = similarity.ann_query(
-            grown, a.where("vec_id < 2"), n_planes=4, topk=5
-        )
-        ref = similarity.ann_query(want, a.where("vec_id < 2"), 4, topk=5)
-        assert [tuple(r) for r in got.collect()] == [
-            tuple(r) for r in ref.collect()
-        ]
-        # replaying the SAME batch inserts nothing (idempotent upsert)
-        n_before = grown.count()
-        similarity.ann_index_append(b, p)
-        assert spark.read.parquet(p).count() == n_before
-
-    def test_ann_append_raises_on_width_mismatch_and_unstamped(
-        self, spark, tmp_path
-    ):
-        a, _ = emb_frame(spark, n=40, dim=64)
-        narrow, _ = emb_frame(spark, n=10, dim=32)
-        p = str(tmp_path / "ann")
-        similarity.ann_index(a, n_planes=4).write.parquet(p)
-        with pytest.raises(ValueError, match="width 32"):
-            similarity.ann_index_append(narrow, p)
-        # unstamped target: refuse rather than guess params
-        p2 = str(tmp_path / "raw")
-        similarity.lsh_buckets(a, 4).write.parquet(p2)
-        with pytest.raises(ValueError, match="no build-param stamp"):
-            similarity.ann_index_append(a, p2)
-
-    def test_ivf_append_equals_rebuild_and_rejects_drifted_codebook(
-        self, spark, tmp_path
-    ):
-        a, _ = emb_frame(spark, n=40, seed=7)
-        b_rows, _ = emb_frame(spark, n=60, seed=7)
-        b = b_rows.where("vec_id >= 40")
-        cb = similarity.ivf_codebook(a, n_clusters=4)
-        p = str(tmp_path / "ivf")
-        similarity.ivf_index(a, cb).write.parquet(p)
-        similarity.ivf_index_append(b, p, cb)
-        grown = spark.read.parquet(p)
-        want = similarity.ivf_index(a.unionByName(b), cb)
-        assert sorted(map(tuple, grown.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        # drifted codebook: cells would be routed wrong — loud raise
-        cb_mut = [list(c) for c in cb]
-        cb_mut[0][0] += 1
-        with pytest.raises(ValueError, match="codebook_md5"):
-            similarity.ivf_index_append(b, p, cb_mut)
-
-    def test_rp_append_equals_rebuild_and_serves_consumers(
-        self, spark, tmp_path
-    ):
-        a, _ = emb_frame(spark, n=40, seed=7)
-        b_rows, _ = emb_frame(spark, n=60, seed=7)
-        b = b_rows.where("vec_id >= 40")
-        p = str(tmp_path / "rp")
-        similarity.rp_index(a, out_dim=8).write.parquet(p)
-        similarity.rp_index_append(b, p)
-        grown = spark.read.parquet(p)
-        want = similarity.rp_index(a.unionByName(b), out_dim=8)
-        assert sorted(map(tuple, grown.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        union = a.unionByName(b)
-        got = similarity.rp_cosine_topk(
-            union, out_dim=8, n_queries=2, topk=5, index=grown
-        )
-        ref = similarity.rp_cosine_topk(union, out_dim=8, n_queries=2, topk=5)
-        assert [tuple(r) for r in got.collect()] == [
-            tuple(r) for r in ref.collect()
-        ]
-        # replay is a no-op; unstamped target refuses
-        n = grown.count()
-        similarity.rp_index_append(b, p)
-        assert spark.read.parquet(p).count() == n
-        p2 = str(tmp_path / "raw")
-        similarity.rp_project(a, 8).write.parquet(p2)
-        with pytest.raises(ValueError, match="no build-param stamp"):
-            similarity.rp_index_append(a, p2)
-
-    @staticmethod
-    def _all_footers_stamped(path):
-        import glob
-
-        import pyarrow.parquet as pq
-
-        key = b"org.apache.spark.sql.parquet.row.metadata"
-        files = glob.glob(path + "/part-*.parquet")
-        return bool(files) and all(
-            b"spark_graft_index_build"
-            in ((pq.ParquetFile(f).metadata.metadata or {}).get(key, b""))
-            for f in files
-        )
-
-    def test_append_stamps_every_file_footer(self, spark, tmp_path):
-        """The parquet writer records the PHYSICAL plan's output
-        schema; the upsert's dedup/anti-join used to optimize the
-        stamp away on appended files, and a directory read samples
-        ONE footer — so the grown index lost its stamp
-        NONDETERMINISTICALLY (caught as an order-dependent test
-        failure). The sinks now re-assert column metadata at the
-        write; every file's footer must carry the stamp."""
-        a, _ = emb_frame(spark, n=40, seed=7)
-        b_rows, _ = emb_frame(spark, n=60, seed=7)
-        b = b_rows.where("vec_id >= 40")
-        cb = similarity.ivf_codebook(a, n_clusters=4)
-        p = str(tmp_path / "ivf")
-        similarity.ivf_index(a, cb).write.parquet(p)
-        similarity.ivf_index_append(b, p, cb)
-        assert self._all_footers_stamped(p)
-        p2 = str(tmp_path / "ann")
-        similarity.ann_index(a, n_planes=4).write.parquet(p2)
-        similarity.ann_index_append(b, p2)
-        assert self._all_footers_stamped(p2)
-
-    def test_ivf_append_raises_on_width_mismatch(self, spark, tmp_path):
-        """r17 review finding: a wrong-width batch used to pass the
-        codebook check, quantize to NULL cells, and upsert rows no
-        corrective replay could repair — must raise like the other
-        two appends."""
-        a, _ = emb_frame(spark, n=40, dim=64)
-        narrow, _ = emb_frame(spark, n=10, dim=32)
-        cb = similarity.ivf_codebook(a, n_clusters=4)
-        p = str(tmp_path / "ivf")
-        similarity.ivf_index(a, cb).write.parquet(p)
-        with pytest.raises(ValueError, match="width 32"):
-            similarity.ivf_index_append(narrow, p, cb)
-        # the table is untouched by the refused append
-        assert spark.read.parquet(p).count() == 40
 
     def test_rp_defaulted_out_dim_resolves_from_stamp(self, spark):
         """r17 review finding: rp_cosine_topk(emb, index=idx) with the

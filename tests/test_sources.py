@@ -117,6 +117,21 @@ def test_csv_header_parity_case_sensitive(spark, tmp_path):
     assert df.columns == ["a0", "B", "A", "b", "a4"]
 
 
+def test_csv_header_collision_after_renaming_raises(spark, tmp_path):
+    """A header whose renamed columns collide fails at the header read,
+    naming them: ``a,,_c1`` renames the empty name to ``_c1`` next to a
+    literal ``_c1``, and case-insensitively ``_C1`` collides too."""
+    from sales_analytics_etl_sql_powerbi_spark.sources.readers import (
+        csv_header_schema,
+    )
+
+    for header, names in ((b"a,,_c1", "'_c1', '_c1'"), (b"a,,_C1", "'_c1', '_C1'")):
+        path = tmp_path / "one.csv"
+        path.write_bytes(header + b"\n1,2,3\n")
+        with pytest.raises(ValueError, match=f"columns \\[{names}\\]"):
+            csv_header_schema(spark, str(path))
+
+
 def test_csv_header_parity_export_fixture(spark, sf_dir):
     """The 32-part order export behind the CSV gate is read without a
     header job."""
@@ -471,64 +486,6 @@ def test_read_input_jsonl_and_text(spark, tmp_path):
     assert sorted(r.value for r in tf.collect()) == ["line one", "line two"]
 
 
-def test_excel_distributed_parity_and_alignment(spark, tmp_path):
-    """The binaryFile+mapInPandas Excel path must equal per-file
-    read_excel + union on multi-file input — including a workbook with
-    a DIFFERENT column order and one with a missing column (aligned by
-    normalized header name, NULL-filled); a workbook carrying an
-    unknown column fails the load loudly."""
-    import pytest as _pytest
-
-    from sales_analytics_etl_sql_powerbi_spark.sources.readers import (
-        read_excel,
-        read_excel_distributed,
-    )
-    from sales_analytics_etl_sql_powerbi_spark.sources.xlsx import (
-        write_minimal_xlsx,
-    )
-
-    d = tmp_path / "drops"
-    d.mkdir()
-    write_minimal_xlsx(
-        str(d / "a.xlsx"),
-        ["Order No", "goodsNumber", "Notes"],
-        [["A1", 3, "x"], ["A2", 4.5, None]],
-    )
-    # different column order: alignment must be by name, not position
-    write_minimal_xlsx(
-        str(d / "b.xlsx"),
-        ["Notes", "Order No", "goodsNumber"],
-        [["y", "B1", 7]],
-    )
-    # missing column: NULL-filled
-    write_minimal_xlsx(str(d / "c.xlsx"), ["Order No"], [["C1"], ["C2"]])
-
-    dist = read_excel_distributed(spark, str(d / "*.xlsx"))
-    assert dist.columns == ["source_file", "Order_No", "goodsNumber", "Notes"]
-
-    expected = []
-    for f in sorted(d.glob("*.xlsx")):
-        for r in read_excel(spark, str(f)).collect():
-            row = r.asDict()
-            expected.append(
-                (row.get("Order_No"), row.get("goodsNumber"), row.get("Notes"))
-            )
-    got = [
-        (r.Order_No, r.goodsNumber, r.Notes)
-        for r in dist.select("Order_No", "goodsNumber", "Notes").collect()
-    ]
-    assert sorted(got, key=str) == sorted(expected, key=str)
-    # lineage column carries the real file path
-    assert all(r.source_file.endswith(".xlsx") for r in dist.collect())
-
-    # schema drift (unknown column) stops the load
-    write_minimal_xlsx(str(d / "z.xlsx"), ["Order No", "Rogue"], [["Z1", "!"]])
-    from py4j.protocol import Py4JJavaError
-
-    with _pytest.raises((Py4JJavaError, Exception), match="schema drift"):
-        read_excel_distributed(spark, str(d / "*.xlsx")).collect()
-
-
 def test_asof_tolerance_preserves_column_order(spark):
     """Tolerance and no-tolerance calls of the same as-of function must
     return the SAME column order (ADVICE r5: the old implementation
@@ -544,7 +501,6 @@ def test_asof_tolerance_preserves_column_order(spark):
     for fn, kw in [
         (asof.asof_backward, {}),
         (asof.asof_forward, {}),
-        (asof.asof_nearest, {"left_key": "event_id"}),
     ]:
         plain = fn(left, right, on="user_id", ts="ts", payload=("src", "value"), **kw)
         tol = fn(

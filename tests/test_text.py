@@ -1,5 +1,7 @@
 """Text-analysis operators: stats, token counts, lang-id, fingerprints."""
 
+from pyspark.sql import functions as F
+
 from sales_analytics_etl_sql_powerbi_spark.operators import text
 
 DOCS = "doc_id long, text string, lang string"
@@ -331,20 +333,6 @@ def test_dup_line_char_ratio_weights_by_mass(spark):
     assert out[2] == 0.0
 
 
-def test_corpus_quality_report_shape_and_values(spark, sf_dir):
-    from sales_analytics_etl_sql_powerbi_spark.operators import text as T
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = {r.signal: r for r in T.corpus_quality_report(docs).collect()}
-    # self-updating coverage: every text_stats signal except the key
-    assert set(out) == set(T.text_stats(docs).columns) - {"doc_id"}
-    r = out["n_tokens"]
-    assert r.p10 <= r.p50 <= r.p90
-    assert r.mean > 0
-    for sig in ("ttr", "alpha_word_ratio"):
-        assert 0.0 <= out[sig].p50 <= 1.0
-
-
 # ---------------------------------------------------------------------------
 # TF-IDF / BM25 (round 6)
 # ---------------------------------------------------------------------------
@@ -532,10 +520,11 @@ def test_unigram_logprob_plan_no_window_no_cartesian(spark):
 
 
 def test_repetition_signals_conventions(spark):
-    """Pins the mode convention (ties → lexicographically smallest
-    bigram), the consecutive-run semantics, and the <2-token edge —
-    against a DuckDB twin that takes the explode/group-by/window
-    route instead of the in-row sorted-run fold."""
+    """Pins doc_profile's repetition signals: the mode convention (ties
+    → lexicographically smallest bigram), the consecutive-run
+    semantics, and the <2-token edge — against the DuckDB twin that
+    takes the explode/group-by/window route instead of the in-row
+    sorted-run fold."""
     import duckdb
 
     from sales_analytics_etl_sql_powerbi_spark.operators import text as T
@@ -548,29 +537,28 @@ def test_repetition_signals_conventions(spark):
             (4, ""),               # single empty token
             (6, "b a b a a b"),    # 'b a'×2 and 'a b'×2 tie → 'a b'
             (7, "t t s s t t"),    # tie 's s'? 's s'×1,'t t'×2 → 't t'
+            # 'z y'×2, 'y z'×2, 'z x'×2, 'x z'×1 → smallest maximum 'y z'
+            (9, "z y z x z y z x"),
         ],
         "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in T.repetition_signals(docs).collect()}
+    ).withColumn("lang", F.lit("en"))
+    cols = ["doc_id", "top_bigram", "top_bigram_n", "max_token_run"]
+    prof = T.doc_profile(docs).select(*cols)
+    rows = {r.doc_id: r for r in prof.collect()}
     assert (rows[1].top_bigram, rows[1].top_bigram_n) == ("a b", 3)
     assert rows[1].max_token_run == 1
     assert (rows[2].top_bigram, rows[2].top_bigram_n) == ("x x", 3)
     assert rows[2].max_token_run == 4
     assert (rows[3].top_bigram, rows[3].top_bigram_n) == (None, 0)
-    assert rows[3].max_token_run == 1 and rows[3].n_bigrams == 0
-    assert rows[4].n_bigrams == 0
+    assert rows[3].max_token_run == 1
+    assert (rows[4].top_bigram, rows[4].top_bigram_n) == (None, 0)
     assert (rows[6].top_bigram, rows[6].top_bigram_n) == ("a b", 2)
     assert (rows[7].top_bigram, rows[7].top_bigram_n) == ("t t", 2)
-    # tie case: two bigrams at the same max count → smallest wins
-    tie = spark.createDataFrame([(9, "z y z x z y z x")], "doc_id long, text string")
-    r9 = T.repetition_signals(tie).collect()[0]
-    # 'z y'×2, 'y z'×1... recompute: bigrams z y, y z, z x, x z, z y, y z, z x
-    # → 'z y'×2,'y z'×2,'z x'×2,'x z'×1 → lexicographically smallest of the
-    # three maxima is 'x z'? no: maxima are {z y, y z, z x} → 'y z'
-    assert (r9.top_bigram, r9.top_bigram_n) == ("y z", 2)
+    assert (rows[9].top_bigram, rows[9].top_bigram_n) == ("y z", 2)
     con = duckdb.connect()
     con.register("docs_py", docs.toPandas())
     con.execute("CREATE VIEW documents AS SELECT * FROM docs_py")
-    orows = sorted(tuple(t) for t in con.execute(T.REPETITION_SIGNALS_SQL).fetchall())
-    srows = sorted(tuple(r) for r in T.repetition_signals(docs).collect())
+    twin = f"SELECT {', '.join(cols)} FROM ({T.REPETITION_SIGNALS_SQL})"
+    orows = sorted(tuple(t) for t in con.execute(twin).fetchall())
+    srows = sorted(tuple(r) for r in prof.collect())
     assert srows == orows

@@ -173,30 +173,6 @@ def test_xls_through_read_excel_and_dispatch(spark, tmp_path):
     assert read_input(spark, p).count() == 2
 
 
-def test_xls_distributed_mixed_formats(spark, tmp_path):
-    """read_excel_distributed over a landing zone holding BOTH
-    formats: per-file magic dispatch, columns aligned by normalized
-    name, lineage column carried."""
-    from sales_analytics_etl_sql_powerbi_spark.sources.readers import (
-        read_excel_distributed,
-    )
-    from sales_analytics_etl_sql_powerbi_spark.sources.xlsx import (
-        write_minimal_xlsx,
-    )
-
-    write_minimal_xls(
-        str(tmp_path / "a.xls"), ["Order No", "Qty"], [["A1", 1], ["A2", 2]]
-    )
-    write_minimal_xlsx(
-        str(tmp_path / "b.xlsx"), ["Order No", "Qty"], [["B1", 3]]
-    )
-    df = read_excel_distributed(spark, str(tmp_path) + "/*.xls*")
-    rows = {r.Order_No: r for r in df.collect()}
-    assert set(rows) == {"A1", "A2", "B1"}
-    assert rows["B1"].Qty == "3"
-    assert rows["A2"].source_file.endswith("a.xls")
-
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
