@@ -7,7 +7,6 @@ the executor hot path except the optional pandas_udf key variant.
 from .cleaning import (  # noqa: F401
     normalize_colname,
     normalize_columns,
-    rename_columns,
     parse_timestamp,
     strip_units_to_double,
     valid_state_code,

@@ -45,16 +45,6 @@ def normalize_columns(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# P2 — explicit rename map (reference etl/order_info_etl.py:184-190)
-# ---------------------------------------------------------------------------
-
-
-def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
-    present = {k: v for k, v in mapping.items() if k in df.columns}
-    return df.withColumnsRenamed(dict(present))
-
-
-# ---------------------------------------------------------------------------
 # P4 — timestamp parse with fallback, malformed -> NULL
 # (reference etl/order_info_etl.py:37-46 — pd.to_datetime(errors="coerce"))
 # ---------------------------------------------------------------------------
@@ -66,9 +56,7 @@ def parse_timestamp(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Colu
     Pre-strips tabs/CR/LF/spaces like the reference's
     ``str.strip("\\t\\r\\n ")`` (etl/order_info_etl.py:42-44).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.regexp_replace(c, r"^[\t\r\n ]+|[\t\r\n ]+$", "")
-    cleaned = F.nullif(cleaned, F.lit(""))
+    cleaned = F.nullif(clean_whitespace(col), F.lit(""))
     return F.coalesce(
         F.try_to_timestamp(cleaned, F.lit(fmt)),
         F.try_to_timestamp(cleaned),

@@ -212,28 +212,6 @@ def category_rollup(view: DataFrame) -> DataFrame:
     )
 
 
-def platform_share_approx(view: DataFrame, rsd: float = 0.02) -> DataFrame:
-    """platform_share with HLL++ approximate distinct orders.
-
-    The scale path for the order_count column: exact count-distinct
-    shuffles every (platform, order_id) pair; approx_count_distinct
-    carries a fixed-size sketch through map-side partial aggregation —
-    at 100 TB the difference is a full-data shuffle vs kilobytes per
-    task. rsd=0.02 bounds relative error at ~2% (error-bound test in
-    tests/test_analytics.py). Not oracle-registered: sketch estimates
-    are engine-specific by construction.
-    """
-    return (
-        view.groupBy("platform_name")
-        .agg(
-            F.sum("units").cast("long").alias("units_sold"),
-            F.approx_count_distinct("order_id", rsd).alias("order_count_approx"),
-        )
-        .withColumn("pct_of_total", _pct_of_total("units_sold"))
-        .orderBy(F.desc("units_sold"), "platform_name")
-    )
-
-
 def cohort_retention(
     events: DataFrame, granularity: str = "month"
 ) -> DataFrame:

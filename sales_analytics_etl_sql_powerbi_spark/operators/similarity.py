@@ -18,9 +18,12 @@ both engines — no randomness at runtime.
 from __future__ import annotations
 
 import hashlib
+import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..sources.readers import parquet_footer
 
 __all__ = [
     "quantized",
@@ -166,15 +169,6 @@ def auto_n_planes(
     import math
 
     return max(lo, min(hi, math.ceil(math.log2(max(1.0, n_rows / target_bucket_size)))))
-
-
-def _embeddings_rowcount_parquet(sf_dir: str) -> int:
-    """Oracle-side corpus count without Spark (parquet metadata only)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
 
 
 def hyperplanes(n_planes: int = _N_PLANES, dim: int = _DIM) -> list[list[int]]:
@@ -343,11 +337,9 @@ def embedding_dim_parquet(sf_dir: str, col: str = "embedding") -> int:
     """Driver-side twin of :func:`_peek_dim`'s inference — the width
     of the first non-NULL embedding straight from the parquet footer's
     row groups, NO Spark job (round 16 — VERDICT r15 item 8: the
-    gated entries derive (n_planes, dim) once per session from table
-    metadata instead of paying a peek job per invocation). Bounded at
+    gated entries derive (n_planes, dim) from table metadata instead of
+    paying a peek job per invocation). Bounded at
     the same ``_PEEK_SCAN_ROWS`` as the Spark-side peek."""
-    import os
-
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(os.path.join(sf_dir, "embeddings.parquet"))
@@ -966,7 +958,9 @@ def ann_lsh_topk_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str:
     if n_planes is None:
-        n_planes = auto_n_planes(_embeddings_rowcount_parquet(sf_dir))
+        n_planes = auto_n_planes(
+            parquet_footer(os.path.join(sf_dir, "embeddings.parquet")).rows
+        )
     # plane literals built at the declared width (ADVICE r15: parity
     # for dim<_DIM previously leaned on the md5 family's prefix
     # stability via [lits][i] indexing — an implicit coupling)
@@ -1051,7 +1045,9 @@ def embedding_neardup_pairs_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str:
     if n_planes is None:
-        n_planes = auto_n_planes(_embeddings_rowcount_parquet(sf_dir))
+        n_planes = auto_n_planes(
+            parquet_footer(os.path.join(sf_dir, "embeddings.parquet")).rows
+        )
     # declared-width plane literals (ADVICE r15 — same rationale as
     # ann_lsh_topk_sql)
     planes = hyperplanes(n_planes, dim)
@@ -1516,9 +1512,6 @@ def codebook_from_parquet(
     :func:`train_ivf_codebook` — bit-identical centroids to
     :func:`ivf_codebook` on the same table.
     """
-    import hashlib
-    import os
-
     import pyarrow.parquet as pq
 
     t = pq.read_table(

@@ -32,6 +32,8 @@ Scale notes (the point of the exercise):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,7 +55,7 @@ from .operators.rules import (
     TESTDATA_SUBCATEGORY_PASSES,
     apply_passes,
 )
-from .sources.readers import parquet_layout, read_table
+from .sources.readers import parquet_footer, read_table
 
 __all__ = [
     "staging_orders",
@@ -235,15 +237,15 @@ def build_dim_platform(staging: DataFrame) -> DataFrame:
     return dim_platform_from_seed(bounded_dim_seed(staging))
 
 
-#: (applicationId, sf_dir, threshold) → numbered product dim. A
-#: warehouse materializes each dim once per load (the reference keeps
-#: dim_product as a SQL Server table) and this is that contract, on
-#: both paths: the scale path ends in an EAGER checkpoint
+#: (applicationId, sf_dir, threshold) → (part's file stamp, numbered
+#: product dim). A warehouse materializes each dim once per load (the
+#: reference keeps dim_product as a SQL Server table) and this is that
+#: contract, on both paths: the scale path ends in an EAGER checkpoint
 #: (with_dense_id pins its partitioning), the small path is persist()ed
 #: so the scan + rules + numbering window run once at first use instead
-#: of once per downstream consumer. Keyed by applicationId so a new
-#: session never sees a stale frame.
-_DIM_PRODUCT_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+#: of once per downstream consumer. A new session or a rewritten part
+#: table never sees a stale frame.
+_DIM_PRODUCT_CACHE: dict[tuple[str, str, int], tuple[tuple | None, DataFrame]] = {}
 
 #: Above this row count the IDENTITY numbering switches from the global
 #: row_number window (one task sorts the whole dim — fine for bounded
@@ -273,18 +275,19 @@ def build_dim_product(
     pinned in tests/test_keys.py and tests/test_plans.py); the plan
     guard pins the scale path's shape with ``dense_id_threshold=0``.
 
-    Memoized per (session, sf_dir, threshold): on the scale path the
-    numbering materializes eagerly, and the checkpointed result is
+    Memoized per (session, sf_dir, threshold) while the part table's
+    files keep their stamp: on the scale path the numbering
+    materializes eagerly, and the checkpointed result is
     self-contained, so every later consumer in the session reuses it
     instead of re-running the build.
     """
-    import os as _os
-
     threshold = DENSE_ID_THRESHOLD if dense_id_threshold is None else dense_id_threshold
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), threshold)
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), threshold)
+    footer = parquet_footer(os.path.join(sf_dir, "part.parquet"), spark)
+    stamp = footer.stamp if footer is not None else None
     cached = _DIM_PRODUCT_CACHE.get(key)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[0] == stamp:
+        return cached[1]
     part = read_table(spark, sf_dir, "part")
     product_key = F.when(
         (F.col("p_partkey") % 7 == 0) | (F.col("p_partkey") % 11 == 0),
@@ -308,10 +311,7 @@ def build_dim_product(
     # otherwise pay the spread exchange just to read a number the
     # footer already holds); a remote/unreadable layout falls back to
     # the metadata count job.
-    from .sources.readers import parquet_layout
-
-    layout = parquet_layout(_os.path.join(sf_dir, "part.parquet"))
-    n_part = layout[0] if layout is not None else part.count()
+    n_part = footer.rows if footer is not None else part.count()
     small = n_part <= threshold
     if small:
         numbered = categorized.withColumn(
@@ -329,7 +329,7 @@ def build_dim_product(
         # numbering over a unique key is deterministic, unlike the
         # scale path where the checkpoint pins the partitioning
         out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    _DIM_PRODUCT_CACHE[key] = out
+    _DIM_PRODUCT_CACHE[key] = (stamp, out)
     return out
 
 
@@ -499,12 +499,10 @@ def _bound_view_partitions(
     returned UNCHANGED — this bound cannot fold a real deployment's
     scan parallelism.
     """
-    import os as _os
-
-    layout = parquet_layout(_os.path.join(sf_dir, "lineitem.parquet"))
-    if layout is None:
+    footer = parquet_footer(os.path.join(sf_dir, "lineitem.parquet"), spark)
+    if footer is None:
         return view
-    rows, groups = layout
+    rows, groups = footer.rows, footer.row_groups
     parallelism = spark.sparkContext.defaultParallelism
     if groups >= parallelism:
         return view  # production layout — the spread was a no-op

@@ -10,6 +10,9 @@ dispatched by file extension (:174-180). Semantics to preserve:
 - BOM-tolerant headers (utf-8-sig);
 - unknown extension → ValueError.
 
+Parquet tables (S4) are read with the schema their footers declare,
+read on the driver (:func:`parquet_footer`) without a Spark job.
+
 Spark-first shape: the CSV path is a real distributed scan (a 100 TB
 export directory splits into ~800k tasks at 128 MB each); only the
 Excel shim is driver-side (xlsx is a zip — not splittable — and tiny
@@ -18,13 +21,16 @@ in practice; reference sheets are single-digit MB).
 
 from __future__ import annotations
 
+import json
 import os
 from collections import Counter
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.cleaning import normalize_colname
+from ..functions.cleaning import normalize_columns
 from ..session import adopt, scoped
 
 #: Spark's CSV ``maxColumns`` default — a wider header fails its read
@@ -44,13 +50,18 @@ def _spark_hidden(name: str) -> bool:
     return hidden and not name.startswith(("_common_metadata", "_metadata"))
 
 
-def _csv_data_files(path: str) -> list[str] | None:
+def _local_data_files(spark: SparkSession | None, path: str) -> list[str] | None:
     """The files a Spark read of ``path`` scans, when that is plain on
     the driver: a local non-hidden file, or a local directory whose
-    visible entries are all files. None for anything else (a URI, a
-    glob, a subdirectory, a missing path)."""
+    visible entries are all files, under a ``file:`` default FS (when
+    ``spark`` is given). None for anything else (a URI, a glob, a
+    subdirectory, a missing path)."""
     if "://" in path or path.startswith("file:") or any(c in path for c in "*?[]{}\\"):
         return None
+    if spark is not None:
+        default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+        if not default_fs.startswith("file:"):
+            return None
     if os.path.isfile(path):
         return None if _spark_hidden(os.path.basename(path)) else [path]
     if not os.path.isdir(path):
@@ -62,7 +73,7 @@ def _csv_data_files(path: str) -> list[str] | None:
         if not entry.is_file():
             return None
         files.append(entry.path)
-    return files
+    return sorted(files)
 
 
 def _first_line(path: str) -> bytes:
@@ -87,11 +98,8 @@ def _driver_csv_header(spark: SparkSession, path: str) -> list[str] | None:
     yields a duplicate (``a,,_c1``: the empty name becomes ``_c1`` next
     to a literal ``_c1``), which Spark's read would reject later as
     ``COLUMN_ALREADY_EXISTS``."""
-    files = _csv_data_files(path)
+    files = _local_data_files(spark, path)
     if not files:
-        return None
-    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-    if not default_fs.startswith("file:"):
         return None
     lines = {_first_line(f) for f in files}
     if len(lines) != 1:
@@ -172,9 +180,7 @@ def read_csv_all_string(
     etl/order_info_etl.py:31-35,182).
     """
     df = _csv_reader(spark).schema(csv_header_schema(spark, path)).csv(path)
-    if normalize_names:
-        df = df.toDF(*[normalize_colname(c) for c in df.columns])
-    return df
+    return normalize_columns(df) if normalize_names else df
 
 
 def read_excel(
@@ -203,9 +209,7 @@ def read_excel(
         [T.StructField(str(h), T.StringType(), True) for h in headers]
     )
     df = spark.createDataFrame(rows, schema=schema)
-    if normalize_names:
-        df = df.toDF(*[normalize_colname(c) for c in df.columns])
-    return df
+    return normalize_columns(df) if normalize_names else df
 
 
 def read_input(spark: SparkSession, path: str, sheet: int | str = 0) -> DataFrame:
@@ -235,42 +239,107 @@ def read_input(spark: SparkSession, path: str, sheet: int | str = 0) -> DataFram
 SPREAD_ROWS_PER_SLICE = 64
 
 
-def parquet_layout(path: str) -> tuple[int, int] | None:
-    """(rows, row_groups) from local parquet footers, or ``None``.
+def footer_schema(spark: SparkSession | None, meta) -> T.StructType | None:
+    """The schema Spark infers for a parquet file, from its pyarrow
+    ``FileMetaData`` on the driver, or None where that is not provable.
 
-    Metadata only — no Spark job. ``None`` when the layout cannot be
-    read cheaply (scheme-qualified remote path, missing file,
-    non-parquet): callers must then fall back to a safe default, never
-    guess. A directory table sums the footers of its ``*.parquet``
-    parts.
-    """
-    if "://" in path or path.startswith("file:"):
+    A Spark writer's schema JSON in the footer is the schema, as for
+    Spark's own reader. Otherwise every column must be an int32, int64,
+    float, double, bool, UTF-8 string or microsecond timestamp (with or
+    without a zone), or a list of one, and the schema is
+    ``from_arrow_schema`` with zone-less timestamps as TimestampNTZ, as
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` reads them; a
+    session with that conf off gets None. ``spark`` None takes Spark's
+    defaults."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    if spark is not None and spark.conf.get(ntz, "true").lower() != "true":
         return None
+    spark_json = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_json is not None:
+        return T.StructType.fromJson(json.loads(spark_json))
+
+    def plain(t) -> bool:
+        if pa.types.is_timestamp(t):
+            return t.unit == "us"
+        return t in (pa.int32(), pa.int64(), pa.float32(), pa.float64(), pa.bool_(), pa.string())
+
+    arrow = meta.schema.to_arrow_schema()
+    if not all(plain(f.type.value_type if pa.types.is_list(f.type) else f.type) for f in arrow):
+        return None
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
+class ParquetFooter(NamedTuple):
+    """A local parquet table as its footers describe it: ``schema`` is
+    Spark's (None where not provable), ``stamp`` each data file's
+    (name, size, mtime_ns), which a rewrite in place changes."""
+
+    schema: T.StructType | None
+    rows: int
+    row_groups: int
+    stamp: tuple
+
+
+def parquet_footer(path: str, spark: SparkSession | None = None) -> ParquetFooter | None:
+    """One driver-side read of the footers of a local parquet file or
+    flat directory, no Spark job; ``spark`` is the session that reads
+    it (see :func:`footer_schema`). None for a URI, nested (partition)
+    directories, summary files or an unreadable footer; ``schema`` is
+    None also where the data files' schemas differ."""
+    files = _local_data_files(spark, path)
+    if not files or any(
+        os.path.basename(f).startswith(("_metadata", "_common_metadata")) for f in files
+    ):
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            rows = groups = 0
-            for entry in os.listdir(path):
-                # a nested directory (Hive key=value partitioning)
-                # holds data this top-level walk would miss — fall
-                # back to the safe path instead of undercounting
-                # (ADVICE r18)
-                if os.path.isdir(os.path.join(path, entry)):
-                    return None
-                if not entry.endswith(".parquet"):
-                    continue
-                meta = pq.ParquetFile(os.path.join(path, entry)).metadata
-                rows += meta.num_rows
-                groups += meta.num_row_groups
-            return (rows, groups) if groups else None
-        meta = pq.ParquetFile(path).metadata
-        return meta.num_rows, meta.num_row_groups
-    except Exception:
-        return None
+        metas = [pq.read_metadata(f) for f in files]
+        schemas = [footer_schema(spark, m) for m in metas]
+        stats = [os.stat(f) for f in files]
+    except (OSError, ValueError, pa.ArrowException):
+        return None  # not a parquet file, or a footer pyarrow cannot read
+    return ParquetFooter(
+        schema=schemas[0] if all(s == schemas[0] for s in schemas) else None,
+        rows=sum(m.num_rows for m in metas),
+        row_groups=sum(m.num_row_groups for m in metas),
+        stamp=tuple(
+            (os.path.basename(f), st.st_size, st.st_mtime_ns) for f, st in zip(files, stats)
+        ),
+    )
 
 
-def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+#: absolute path → the file stamp of its last read in this process
+_READ_STAMPS: dict[str, tuple] = {}
+
+
+def _scan(spark: SparkSession, path: str, spread: bool) -> DataFrame:
+    """``path`` read with the schema its footers prove, or with Spark's
+    inference where they do not, and spread (:func:`spread_scan`) when
+    asked. A table rewritten in place since this process last read it
+    is refreshed first: Spark's cache matches a plan by the table's
+    path, so a frame persisted over the old files would keep serving
+    their rows."""
+    footer = parquet_footer(path, spark)
+    if footer is not None:
+        key = os.path.abspath(path)
+        if _READ_STAMPS.setdefault(key, footer.stamp) != footer.stamp:
+            spark.catalog.refreshByPath(path)
+            _READ_STAMPS[key] = footer.stamp
+    reader = spark.read
+    if footer is not None and footer.schema is not None:
+        reader = reader.schema(footer.schema)
+    df = reader.parquet(path)
+    return spread_scan(spark, df, footer) if spread else df
+
+
+def spread_scan(
+    spark: SparkSession, df: DataFrame, footer: ParquetFooter | None
+) -> DataFrame:
     """Scale-adaptive scan parallelism (optimization round 18).
 
     A parquet scan's effective parallelism is bounded by the file's
@@ -298,10 +367,9 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
       in this package (content-addressed sampling, range-partitioned
       id generation, rounded/quantized aggregate surfaces).
     """
-    layout = parquet_layout(path)
-    if layout is None:
+    if footer is None:
         return df
-    rows, row_groups = layout
+    rows, row_groups = footer.rows, footer.row_groups
     parallelism = spark.sparkContext.defaultParallelism
     if row_groups >= parallelism:
         return df
@@ -314,7 +382,9 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
 def read_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = True
 ) -> DataFrame:
-    """S4 — table scan over the driver's parquet layout.
+    """S4 — table scan with the schema the table's parquet footers
+    declare (:func:`_scan`), as the reference declares its tables as
+    DDL; each call reads the table as it is now.
 
     ``events`` gets its nanosecond epoch normalized to TimestampType
     (see :func:`read_events`). Scans are spread to the session's
@@ -328,9 +398,7 @@ def read_table(
     """
     if name == "events":
         return read_events(spark, sf_dir, spread=spread)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    return spread_scan(spark, df, path) if spread else df
+    return _scan(spark, os.path.join(sf_dir, f"{name}.parquet"), spread)
 
 
 #: the confs timestamps are read and cast under — the events ``ts``
@@ -362,6 +430,9 @@ def read_events(
       UTC; values stay identical to DuckDB's naive TIMESTAMP read of
       the same file.
 
+    The microsecond encoding reads with its footer schema; Spark infers
+    the nanosecond one (see :func:`footer_schema`).
+
     Both run under :data:`TIMESTAMP_CONF` through
     :func:`..session.scoped`, so the caller's confs are never written
     (callers build their own SparkSession). The scan keeps the
@@ -370,13 +441,8 @@ def read_events(
     Downstream (streaming watermarks, window(), the oracle hash
     compare) always sees one stable type: TimestampType.
     """
-    from pyspark.sql import functions as F
-
     read = scoped(spark, TIMESTAMP_CONF)
-    path = os.path.join(sf_dir, "events.parquet")
-    df = read.read.parquet(path)
-    if spread:
-        df = spread_scan(read, df, path)
+    df = _scan(read, os.path.join(sf_dir, "events.parquet"), spread)
     dt = df.schema["ts"].dataType
     if isinstance(dt, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

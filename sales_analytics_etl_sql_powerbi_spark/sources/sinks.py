@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .readers import footer_schema
+
 log = logging.getLogger(__name__)
 
 
@@ -346,16 +348,12 @@ def release_upsert_lock(t: _Table) -> None:
         )
 
 
-#: footer key under which every Spark parquet write stores its schema JSON
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
 def _table_schema(spark, t: _Table) -> StructType | None:
     """The table's Spark schema, or None while it holds no visible data
     file. A local table with data files at its root reads it from one
-    visible file's footer on the driver (no Spark job); partitioned
-    tables, other schemes, and files Spark did not write pay Spark's
-    own schema inference."""
+    visible file's footer on the driver (no Spark job) by
+    ``readers.footer_schema``; partitioned tables, other schemes, and
+    footers that rule cannot prove pay Spark's own schema inference."""
     local = _local_file_path(t.root)
     names = [
         n for n in os.listdir(local)
@@ -364,9 +362,9 @@ def _table_schema(spark, t: _Table) -> StructType | None:
     if names:
         import pyarrow.parquet as pq
 
-        meta = pq.read_metadata(os.path.join(local, min(names))).metadata
-        if meta and _SPARK_SCHEMA_KEY in meta:
-            return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+        schema = footer_schema(spark, pq.read_metadata(os.path.join(local, min(names))))
+        if schema is not None:
+            return schema
     elif next(_hadoop_parquet_files(t), None) is None:
         return None
     return spark.read.parquet(t.path).schema

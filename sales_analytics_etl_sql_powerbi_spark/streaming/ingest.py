@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.cleaning import normalize_colname
+from ..functions.cleaning import normalize_columns
 from ..pipeline import clean_order_export
 from ..sources.readers import csv_header_schema
 
@@ -50,5 +50,4 @@ def stream_order_export(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.csv(path)
-    stream = stream.toDF(*[normalize_colname(c) for c in stream.columns])
-    return clean_order_export(stream)
+    return clean_order_export(normalize_columns(stream))

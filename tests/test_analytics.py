@@ -79,20 +79,6 @@ def test_quality_rowcounts(star):
     assert counts["fact"] > 0 and counts["dim_platform"] == 5
 
 
-def test_platform_share_approx_error_bound(star):
-    exact = {
-        r.platform_name: r.order_count
-        for r in analytics.platform_share(star["view"]).collect()
-    }
-    approx = {
-        r.platform_name: r.order_count_approx
-        for r in analytics.platform_share_approx(star["view"]).collect()
-    }
-    assert set(exact) == set(approx)
-    for k, n in exact.items():
-        assert abs(approx[k] - n) / n < 0.05  # HLL++ rsd=0.02, 5% headroom
-
-
 def test_observed_rowcounts_free_pass(spark):
     """A10 — observation metrics ride the caller's own action: row and
     non-null counts arrive without a second scan."""

@@ -14,7 +14,6 @@ from sales_analytics_etl_sql_powerbi_spark.functions.cleaning import (
     normalize_colname,
     normalize_columns,
     parse_timestamp,
-    rename_columns,
     strip_units_to_double,
     truncate_to_widths,
     valid_state_code,
@@ -41,12 +40,6 @@ def test_normalize_colname_bom_and_separators():
 def test_normalize_columns(spark):
     df = spark.createDataFrame([(1, 2)], ["﻿A col", "B-col"])
     assert normalize_columns(df).columns == ["A_col", "B_col"]
-
-
-def test_rename_columns_ignores_absent(spark):
-    df = spark.createDataFrame([(1,)], ["a"])
-    out = rename_columns(df, {"a": "x", "nope": "y"})
-    assert out.columns == ["x"]
 
 
 def test_parse_timestamp_edges(spark):

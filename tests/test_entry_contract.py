@@ -37,32 +37,39 @@ def test_ivf_oracle_codebook_derives_from_sf_dir():
 def test_dead_session_cache_entries_evicted(spark):
     """Round 17 (VERDICT r16 item 4): session-scoped cache entries
     (``@app:``-prefixed keys) belonging to sessions other than the
-    live one are swept on access, and the live session's results are
-    unaffected. A true two-SparkSession restart is not viable inside
-    the shared test JVM, so the dead session is simulated by planting
-    entries under a foreign applicationId — exactly what a dead
-    session leaves behind."""
+    live one are swept when the live session writes a memo, and the
+    live session's results are unaffected. A true two-SparkSession
+    restart is not viable inside the shared test JVM, so the dead
+    session is simulated by planting entries under a foreign
+    applicationId — exactly what a dead session leaves behind."""
+    from sales_analytics_etl_sql_powerbi_spark.sources.readers import parquet_footer
+
     sf = "/root/testdata/sf0.001"
-    live = E._app_key(spark)
-    dead_tbl = ("@app:dead-session", sf, "region")
     dead_idx = ("@app:dead-session", "rp_index", sf, E._RP_DIM)
-    E._TABLE_CACHE[dead_tbl] = object()
-    E._PLAN_CACHE[dead_idx] = object()
+    dead_persist = ("@app:dead-session", sf, "text_retrieval")
+    sentinel = ("bpe_merges", "sentinel-sf", 1)
+    E._PLAN_CACHE[dead_idx] = (None, object())
+    E._QUERY_PERSISTS[dead_persist] = [object()]
     # session-independent entries (sf+params keys) must survive sweeps
-    E._PLAN_CACHE[("bpe_merges", "sentinel-sf", 1)] = ["sentinel"]
+    E._PLAN_CACHE[sentinel] = (None, ["sentinel"])
+    live = (E._app_key(spark), "live-sentinel")
     try:
-        df = E.read_table(spark, sf, "region")
-        assert dead_tbl not in E._TABLE_CACHE
-        # cache key carries the spread flag (round 18 scan spread)
-        assert (live, sf, "region", True) in E._TABLE_CACHE
-        assert df.count() == 5
-        # second access returns the SAME cached lazy plan
-        assert E.read_table(spark, sf, "region") is df
-        E._sweep_dead_sessions(E._PLAN_CACHE, live)
+        assert E.read_table(spark, sf, "region").count() == 5
+        # a table read writes no memo, so it sweeps nothing
+        assert dead_idx in E._PLAN_CACHE
+        assert E._memo(spark, sf, "embeddings", live, lambda: "built") == "built"
         assert dead_idx not in E._PLAN_CACHE
-        assert E._PLAN_CACHE[("bpe_merges", "sentinel-sf", 1)] == ["sentinel"]
+        assert dead_persist not in E._QUERY_PERSISTS
+        assert E._PLAN_CACHE[sentinel] == (None, ["sentinel"])
+        # the entry carries the embeddings table's file stamp
+        stamp = parquet_footer(f"{sf}/embeddings.parquet", spark).stamp
+        assert E._PLAN_CACHE[live] == (stamp, "built")
+        assert E._memo(spark, sf, "embeddings", live, lambda: "rebuilt") == "built"
     finally:
-        E._PLAN_CACHE.pop(("bpe_merges", "sentinel-sf", 1), None)
+        E._PLAN_CACHE.pop(live, None)
+        E._PLAN_CACHE.pop(sentinel, None)
+        E._PLAN_CACHE.pop(dead_idx, None)
+        E._QUERY_PERSISTS.pop(dead_persist, None)
 
 
 def test_release_caches_unpersists_tracked_handles(spark):
@@ -279,7 +286,6 @@ _OBSERVABILITY = (
     "the reference's per-stage rowcounts (A10); a quality.observed "
     "counter in clean_order_export is planned (ROADMAP item 1)"
 )
-_NEXT_CUT = "outside this cut's list; a candidate for the next one"
 
 #: top-level package functions and classes kept although no gated
 #: query, bench entry or perfbench workload reaches them — each with the
@@ -366,15 +372,6 @@ _UNREACHED_FUNCS_ALLOWED = {
             "sinks.foreach_batch_upsert_parquet",
             "sinks.drain_available_now",
             "windows.enrich_with_dim",
-        )
-    },
-    **{
-        n: _NEXT_CUT
-        for n in (
-            "functions.cleaning.normalize_columns",
-            "functions.cleaning.rename_columns",
-            "functions.cleaning.clean_whitespace",
-            "operators.analytics.platform_share_approx",
         )
     },
 }

@@ -121,7 +121,6 @@ def test_entry_queries_ignore_a_non_utc_caller(spark, sf_dir, monkeypatch, name)
     The entry's per-session memo dicts are swapped out so frames built
     for this caller's scoped child do not outlive the test."""
     for mod, attr in (
-        (E, "_TABLE_CACHE"),
         (E, "_PLAN_CACHE"),
         (E, "_QUERY_PERSISTS"),
         (pipeline, "_DIM_PRODUCT_CACHE"),

@@ -301,12 +301,13 @@ def test_scan_spread_parallelizes_row_group_starved_files(spark, sf_dir):
     parallelism; tiny tables and disabled-conf reads stay unspread;
     rows are identical either way."""
     from sales_analytics_etl_sql_powerbi_spark.sources.readers import (
-        parquet_layout,
+        parquet_footer,
         spread_scan,
     )
 
     p = spark.sparkContext.defaultParallelism
-    rows, groups = parquet_layout(os.path.join(sf_dir, "documents.parquet"))
+    footer = parquet_footer(os.path.join(sf_dir, "documents.parquet"), spark)
+    rows, groups = footer.rows, footer.row_groups
     assert groups == 1  # precondition of the fixture data
     if rows < 64 * p:
         # a very-high-core runner can outgrow the small fixture; the
@@ -328,7 +329,8 @@ def test_scan_spread_parallelizes_row_group_starved_files(spark, sf_dir):
     b = sorted(map(tuple, raw.select("doc_id").collect()))
     assert a == b
     # non-parquet/unreadable layout: spread_scan degrades to identity
-    assert spread_scan(spark, raw, "/nonexistent.parquet") is raw
+    assert parquet_footer("/nonexistent.parquet", spark) is None
+    assert spread_scan(spark, raw, None) is raw
 
 
 def test_excel_ingest_live(spark, tmp_path):
