@@ -1654,7 +1654,7 @@ _PAGERANK_ITERS = 6
 
 def q_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """Fixed-iteration PageRank under the driver gate (VERDICT r6
-    item 1): ``max_iter=6, tol=0.0`` so both engines run exactly six
+    item 1): ``max_iter=6`` so both engines run exactly six
     synchronous rounds; the DuckDB twin unrolls the same update into a
     CTE chain (a different evaluation strategy over the same math).
     Ranks are gated as ``round(rank·1e12)`` integers — per-destination
@@ -1672,7 +1672,7 @@ def q_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    ranks = pagerank(edges, damping=0.85, max_iter=_PAGERANK_ITERS, tol=0.0)
+    ranks = pagerank(edges, damping=0.85, max_iter=_PAGERANK_ITERS)
     return ranks.select(
         "node", F.round(F.col("rank") * 1e12).cast("long").alias("rank_e12")
     )

@@ -7,8 +7,8 @@ ways, all bit-exact with each other (parity test: tests/test_keys.py):
 
 1. :func:`stable_id_expr` — native Catalyst expression (the production
    path: whole-stage codegen, no Python in the executors);
-2. :func:`stable_id_sql` — the same computation as portable SQL text
-   (valid in Spark SQL and DuckDB) for the correctness oracle;
+2. :func:`stable_id_sql` — the same computation as DuckDB SQL text
+   for the correctness oracle;
 3. :func:`stable_id_pandas_udf` — an Arrow-vectorized pandas_udf that is
    a literal transcription of the reference function, kept as the
    parity witness.
@@ -58,21 +58,13 @@ def stable_id_expr(cols: list[Column | str], sep: str = "|") -> Column:
     return hi.bitwiseAND(F.lit(0x7FFFFFFF)) * F.lit(4294967296) + lo
 
 
-def stable_id_sql(col_exprs: list[str], sep: str = "|", dialect: str = "duckdb") -> str:
-    """Same key as portable SQL text (for the DuckDB oracle)."""
-    str_type = "varchar" if dialect == "duckdb" else "string"
-    parts = ", ".join(f"coalesce(cast({e} as {str_type}), '')" for e in col_exprs)
+def stable_id_sql(col_exprs: list[str], sep: str = "|") -> str:
+    """Same key as DuckDB SQL text (for the correctness oracle)."""
+    parts = ", ".join(f"coalesce(cast({e} as varchar), '')" for e in col_exprs)
     concat = f"concat_ws('{sep}', {parts})"
-    if dialect == "duckdb":
-        return (
-            f"(('0x' || substring(md5({concat}), 1, 16))::UBIGINT "
-            f"% {_MASK_63}::UBIGINT)::BIGINT"
-        )
-    # spark sql dialect — same long-split formulation as stable_id_expr
     return (
-        f"((cast(conv(substring(md5({concat}), 1, 8), 16, 10) as bigint)"
-        f" & 2147483647) * 4294967296"
-        f" + cast(conv(substring(md5({concat}), 9, 8), 16, 10) as bigint))"
+        f"(('0x' || substring(md5({concat}), 1, 16))::UBIGINT "
+        f"% {_MASK_63}::UBIGINT)::BIGINT"
     )
 
 

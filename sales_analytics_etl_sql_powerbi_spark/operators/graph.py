@@ -10,11 +10,10 @@ The Spark-first iterative pattern, made explicit here:
 
 - each iteration is ONE key equi-join (ranks → out-edges) + ONE
   key aggregate (mass per destination) — no RDDs, no Pregel API;
-- the dangling mass rides the DATAFLOW as a one-row aggregate
-  broadcast-crossJoined into the next update, so fixed-iteration runs
-  have ZERO driver round-trips between checkpoints; only the
-  EARLY-STOP decision (tol > 0) inherently needs a per-iteration
-  driver sync, and that one is a single fused one-row collect;
+- the loop runs a fixed number of iterations, and the dangling mass
+  rides the DATAFLOW as a one-row aggregate broadcast-crossJoined into
+  the next update, so the loop has ZERO driver round-trips between
+  checkpoints;
 - lineage is truncated with ``localCheckpoint`` every
   ``checkpoint_every`` iterations — without it the plan doubles per
   iteration and the optimizer chokes long before the data does (the
@@ -39,7 +38,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     max_iter: int = 20,
-    tol: float = 1e-6,
     checkpoint_every: int = 4,
 ) -> DataFrame:
     """PageRank over ``edges`` (columns ``src``, ``dst``).
@@ -48,32 +46,28 @@ def pagerank(
     splits its rank over its out-edges; dangling-node mass (nodes with
     no out-edges) is redistributed uniformly; teleport factor
     ``1 − damping``. Ranks sum to 1 every iteration (mass-conserving —
-    unit-pinned). Stops early when the L1 delta drops below ``tol``.
+    unit-pinned). Runs exactly ``max_iter`` iterations.
 
     Returns (node, rank). Deterministic: no sampling, no
-    partition-order dependence (all math rides key aggregates).
-    ``tol <= 0`` selects FIXED-iteration mode (the driver-gate shape):
-    early stopping is off and the dangling mass is carried INSIDE the
-    dataflow (one-row aggregate, broadcast crossJoin into the next
-    update), so the loop performs ZERO driver round-trips between
-    checkpoints — the only jobs are the eager ``localCheckpoint``s
-    every ``checkpoint_every`` iterations (collect-count pinned at 0
-    in tests).
+    partition-order dependence (all math rides key aggregates). The
+    dangling mass is carried INSIDE the dataflow (one-row aggregate,
+    broadcast crossJoin into the next update), so the loop performs
+    ZERO driver round-trips between checkpoints — the only jobs are the
+    eager ``localCheckpoint``s every ``checkpoint_every`` iterations
+    (collect-count pinned at 0 in tests).
 
     Scale shape per iteration: one join of the rank vector (node-sized)
     against the out-edge list on ``src``, one groupBy(``dst``) — both
-    key-partitioned shuffles AQE can plan; plus one one-row dangling
-    aggregate (and, converging mode only, the fused delta collect).
+    key-partitioned shuffles; plus one one-row dangling aggregate.
     Edge/degree frames are computed once and persisted; rank frames
     are checkpointed every ``checkpoint_every`` iterations to keep the
     plan flat.
 
     Confs contract: the caller's session confs are never written. The
-    fixed-mode loop runs in a private child session
-    (:func:`..session.scoped`) with AQE off and
-    ``spark.sql.shuffle.partitions`` at the loop's partition count;
-    the returned frame belongs to the caller's session, so whatever
-    consumes it plans under the caller's confs.
+    loop runs in a private child session (:func:`..session.scoped`)
+    with AQE off and ``spark.sql.shuffle.partitions`` at the loop's
+    partition count; the returned frame belongs to the caller's
+    session, so whatever consumes it plans under the caller's confs.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -126,15 +120,13 @@ def pagerank(
     )
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     # lazy persist (round 19): the eager count() here bought nothing —
-    # the first consumer (the first checkpoint in fixed mode, the first
-    # delta collect in converging mode) fills the cache with the same
+    # the first checkpoint fills the cache with the same
     # single-computation guarantee, minus one construction-time job
     links = (
         e.join(out_deg, "src")
         .repartition(p_n, "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    has_out = out_deg.select(F.col("src").alias("node"))
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint(
         eager=True
@@ -158,143 +150,91 @@ def pagerank(
             .repartition(p_n, "node")
         )
 
-    def dangling_frame(r: DataFrame) -> DataFrame:
-        # ONE-ROW aggregate: the rank mass held by nodes with no
-        # out-edges (stays a DataFrame in fixed mode — never collected)
-        return r.join(has_out, "node", "left_anti").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-        )
-
-    if tol <= 0:
-        # FIXED-ITERATION mode (VERDICT r7 item 3): ZERO driver
-        # round-trips between checkpoints. The dangling mass rides the
-        # DATAFLOW — a one-row aggregate broadcast-crossJoined into the
-        # update — so the loop only builds a lazy plan; the sole
-        # jobs are the eager localCheckpoints every ``checkpoint_every``
-        # iterations (which also gate the deferred unpersists: dropping
-        # an intermediate cache before the checkpoint materializes
-        # would force recomputation back to the previous checkpoint).
-        #
-        # Round 18: the dangling mass is derived from the SAME
-        # contribution aggregate the update already needs, via mass
-        # conservation — ranks sum to 1 every iteration and
-        # Σ __in = the mass held by nodes WITH out-edges (each source
-        # contributes exactly deg · rank/deg), so dangling = 1 − Σ __in.
-        # That removes the per-iteration anti-join + rank-frame pass
-        # the old dangling aggregate cost (one shuffle fewer per
-        # round at any scale); the float drift vs the anti-join sum is
-        # ~1e-15 absolute, five orders below the 1e-12 gate quantum.
-        # The contribs frame has two consumers (the one-row dangling
-        # aggregate and the update join), so IT carries the lazy
-        # persist the rank intermediates used to need. Measured
-        # (round 19): WITHOUT the persist AQE's exchange reuse does
-        # NOT dedupe the two references, the contribs subtree embeds
-        # twice per iteration and the plan doubles per round —
-        # 149 jobs / 14.7s vs 58 / 4.4s at sf0.1. The persist is
-        # load-bearing, not belt-and-braces.
-        # The loop runs in a private session with AQE OFF (round 19):
-        # with the partitioning pinned explicitly above, AQE has nothing
-        # left to re-plan here — no coalescible exchange, no join it
-        # may rewrite, no agg skew handling (it only splits joins) —
-        # while its per-query-stage materialization turns every
-        # checkpoint action into one JOB PER EXCHANGE: measured 58
-        # driver-scheduled jobs for 6 iterations at sf0.1, each paying
-        # a scheduling round-trip. Non-adaptive execution runs each
-        # checkpoint as ONE job (measured 58 → 27 jobs). With AQE's
-        # coalescing gone, shuffle.partitions is scoped to the SAME
-        # p_n the explicit repartitions use, so the groupBy exchange
-        # lands on the loop's partitioning directly (the post-agg
-        # repartition collapses into it) instead of spraying a
-        # node-sized reduce over 32 near-empty tasks. The session is
-        # :func:`..session.scoped`'s child of the caller's, and the
-        # loop's frames are adopted into it, so the caller's confs are
-        # never written (threads sharing the caller's session plan
-        # under its own settings throughout); the final checkpointed
-        # ranks are adopted back, so consumers plan under the caller's.
-        loop = scoped(
-            spark,
-            {
-                "spark.sql.adaptive.enabled": "false",
-                "spark.sql.shuffle.partitions": str(p_n),
-            },
-        )
-        loop_nodes, loop_links = adopt(loop, nodes), adopt(loop, links)
-        ranks = adopt(loop, ranks)
-        pending: list[DataFrame] = []
-        for it in range(max_iter):
-            contribs = contribs_of(loop_links, ranks).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            pending.append(contribs)
-            dm = contribs.agg(
-                (F.lit(1.0) - F.coalesce(F.sum("__in"), F.lit(0.0))).alias("__dm")
-            )
-            new_ranks = (
-                loop_nodes.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dm))
-                .select(
-                    "node",
-                    (
-                        F.lit(teleport)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("__in"), F.lit(0.0))
-                            + F.col("__dm") / F.lit(float(n))
-                        )
-                    ).alias("rank"),
-                )
-            )
-            if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-                for p in pending:
-                    p.unpersist()
-                pending = []
-            ranks = new_ranks
-        ranks = adopt(spark, ranks)
-        nodes_raw.unpersist()
-        nodes.unpersist()
-        links.unpersist()
-        return ranks
-
-    # CONVERGING mode: the early-stop decision is inherently a driver
-    # sync, so each iteration collects ONE fused one-row aggregate
-    # (L1 delta + the next iteration's dangling mass together)
-    dangling = dangling_frame(ranks).collect()[0][0]
+    # ZERO driver round-trips between checkpoints (VERDICT r7 item 3).
+    # The dangling mass rides the DATAFLOW — a one-row aggregate
+    # broadcast-crossJoined into the update — so the loop only builds a
+    # lazy plan; the sole jobs are the eager localCheckpoints every
+    # ``checkpoint_every`` iterations (which also gate the deferred
+    # unpersists: dropping an intermediate cache before the checkpoint
+    # materializes would force recomputation back to the previous
+    # checkpoint).
+    #
+    # Round 18: the dangling mass is derived from the SAME
+    # contribution aggregate the update already needs, via mass
+    # conservation — ranks sum to 1 every iteration and
+    # Σ __in = the mass held by nodes WITH out-edges (each source
+    # contributes exactly deg · rank/deg), so dangling = 1 − Σ __in.
+    # That removes the per-iteration anti-join + rank-frame pass
+    # the old dangling aggregate cost (one shuffle fewer per
+    # round at any scale); the float drift vs the anti-join sum is
+    # ~1e-15 absolute, five orders below the 1e-12 gate quantum.
+    # The contribs frame has two consumers (the one-row dangling
+    # aggregate and the update join), so IT carries the lazy
+    # persist the rank intermediates used to need. Measured
+    # (round 19): WITHOUT the persist AQE's exchange reuse does
+    # NOT dedupe the two references, the contribs subtree embeds
+    # twice per iteration and the plan doubles per round —
+    # 149 jobs / 14.7s vs 58 / 4.4s at sf0.1. The persist is
+    # load-bearing, not belt-and-braces.
+    # The loop runs in a private session with AQE OFF (round 19):
+    # with the partitioning pinned explicitly above, AQE has nothing
+    # left to re-plan here — no coalescible exchange, no join it
+    # may rewrite, no agg skew handling (it only splits joins) —
+    # while its per-query-stage materialization turns every
+    # checkpoint action into one JOB PER EXCHANGE: measured 58
+    # driver-scheduled jobs for 6 iterations at sf0.1, each paying
+    # a scheduling round-trip. Non-adaptive execution runs each
+    # checkpoint as ONE job (measured 58 → 27 jobs). With AQE's
+    # coalescing gone, shuffle.partitions is scoped to the SAME
+    # p_n the explicit repartitions use, so the groupBy exchange
+    # lands on the loop's partitioning directly (the post-agg
+    # repartition collapses into it) instead of spraying a
+    # node-sized reduce over 32 near-empty tasks. The session is
+    # :func:`..session.scoped`'s child of the caller's, and the
+    # loop's frames are adopted into it, so the caller's confs are
+    # never written (threads sharing the caller's session plan
+    # under its own settings throughout); the final checkpointed
+    # ranks are adopted back, so consumers plan under the caller's.
+    loop = scoped(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(p_n),
+        },
+    )
+    loop_nodes, loop_links = adopt(loop, nodes), adopt(loop, links)
+    ranks = adopt(loop, ranks)
+    pending: list[DataFrame] = []
     for it in range(max_iter):
-        new_ranks = nodes.join(contribs_of(links, ranks), "node", "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.lit(damping)
-                * (F.coalesce(F.col("__in"), F.lit(0.0)) + F.lit(dangling / n))
-            ).alias("rank"),
+        contribs = contribs_of(loop_links, ranks).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        # EVERY iteration is persisted (the delta collect materializes
-        # it into cache; without this, each driver sync recomputes all
-        # iterations since the last checkpoint — measured 7.6s/iter →
-        # 1.9s/iter at 2M edges); the periodic checkpoint additionally
-        # truncates lineage so the PLAN stays flat
+        pending.append(contribs)
+        dm = contribs.agg(
+            (F.lit(1.0) - F.coalesce(F.sum("__in"), F.lit(0.0))).alias("__dm")
+        )
+        new_ranks = (
+            loop_nodes.join(contribs, "node", "left")
+            .crossJoin(F.broadcast(dm))
+            .select(
+                "node",
+                (
+                    F.lit(teleport)
+                    + F.lit(damping)
+                    * (
+                        F.coalesce(F.col("__in"), F.lit(0.0))
+                        + F.col("__dm") / F.lit(float(n))
+                    )
+                ).alias("rank"),
+            )
+        )
         if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
             new_ranks = new_ranks.localCheckpoint(eager=True)
-        else:
-            new_ranks = new_ranks.persist(StorageLevel.MEMORY_AND_DISK)
-        delta, dangling = (
-            new_ranks.alias("a")
-            .join(ranks.alias("b"), "node")
-            .join(has_out.withColumn("__has", F.lit(True)), "node", "left")
-            .agg(
-                F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))),
-                F.coalesce(
-                    F.sum(F.when(F.col("__has").isNull(), F.col("a.rank"))),
-                    F.lit(0.0),
-                ),
-            )
-            .collect()[0]
-        )
-        ranks.unpersist()
+            for p in pending:
+                p.unpersist()
+            pending = []
         ranks = new_ranks
-        if delta < tol:
-            break
+    ranks = adopt(spark, ranks)
     nodes_raw.unpersist()
     nodes.unpersist()
     links.unpersist()
@@ -307,9 +247,9 @@ def pagerank_sql(
     iters: int = 6,
     scale: float = 1e12,
 ) -> str:
-    """DuckDB twin of a FIXED-iteration :func:`pagerank` run — the
-    driver-gate companion (``max_iter=iters, tol=0.0`` on the Spark
-    side so both engines run exactly ``iters`` rounds).
+    """DuckDB twin of a :func:`pagerank` run — the driver-gate
+    companion (``max_iter=iters`` on the Spark side so both engines run
+    exactly ``iters`` rounds).
 
     The iteration is UNROLLED into one CTE chain per round (r0..rN,
     each with its own dangling-mass scalar subquery) — the relational

@@ -131,7 +131,6 @@ def global_prefix_sum(
     weight_col: str,
     out_col: str = "offset",
     num_buckets: int | None = None,
-    materialize_input: bool = True,
 ) -> DataFrame:
     """EXCLUSIVE prefix sum of ``weight_col`` in ``order_col`` order,
     without a single-partition global window (module docstring). The
@@ -143,19 +142,15 @@ def global_prefix_sum(
     window, the bucket totals); each branch re-plans the input subtree
     with its own column pruning, so the subtree EXECUTES per branch.
     That is always CORRECT here — buckets derive from the data, so
-    every recompute agrees — and ``materialize_input`` only trades
-    recompute for one ``localCheckpoint``. Default True (safe for the
-    narrow frames this helper is meant for); :func:`pack_sequences`
-    passes False because re-reading compressed columnar source twice
+    every recompute agrees. The input is not materialized: for
+    :func:`pack_sequences`, re-reading compressed columnar source twice
     measured 4× cheaper than materializing its tokenized (much wider)
-    derivative once. Pass False likewise when the input is already
-    cached or cheap to recompute.
+    derivative once. Cache the input first when it is costly to
+    recompute.
     """
     spark = df.sparkSession
     if num_buckets is None:
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if materialize_input:
-        df = df.localCheckpoint(eager=True)
     # one column-pruned pass pins the bucket width as a plan literal —
     # deterministic however the stages replan (see module docstring
     # for why spark_partition_id() is NOT usable here) — and enforces
@@ -223,18 +218,12 @@ def pack_sequences(
         .withColumn("__n", F.size("__tok").cast("long"))
         .where(F.col("__n") > 0)
     )
-    # materialize_input=False, deliberately: buckets are data-derived,
-    # so branch recompute is CORRECT (not the spark_partition_id bug),
-    # and re-reading compressed columnar source twice measured 16s at
-    # 5M docs vs 60s materializing the 2-3×-wider token arrays once
-    d = global_prefix_sum(
-        d,
-        "doc_id",
-        "__n",
-        out_col="__off",
-        num_buckets=num_buckets,
-        materialize_input=False,
-    )
+    # the input is recomputed per branch, deliberately: buckets are
+    # data-derived, so branch recompute is CORRECT (not the
+    # spark_partition_id bug), and re-reading compressed columnar source
+    # twice measured 16s at 5M docs vs 60s materializing the 2-3×-wider
+    # token arrays once
+    d = global_prefix_sum(d, "doc_id", "__n", out_col="__off", num_buckets=num_buckets)
     b = F.lit(budget).cast("long")
     first_ex = F.expr(f"__off DIV {budget}")
     last_ex = F.expr(f"(__off + __n - 1) DIV {budget}")

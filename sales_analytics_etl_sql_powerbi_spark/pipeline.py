@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
@@ -363,7 +363,6 @@ def build_fact(
     dim_platform: DataFrame,
     dim_product: DataFrame,
     date_source: str = "submit_ts",
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Fact load — J1: left dim lookups + FK-not-null filters (⇒ inner).
 
@@ -376,21 +375,15 @@ def build_fact(
     (etl/order_info_etl.py:26) — which timestamp becomes ``date_id``
     (``submit_ts`` default; ``ship_ts`` is the other staging candidate).
 
-    ``broadcast_dims``: the explicit hints are needed because the
-    numbered product dim is checkpoint-backed (no size statistics —
-    Catalyst would assume worst-case and sort-merge). For a deployment
-    whose product master exceeds executor memory, pass ``False``: the
-    joins degrade to shuffles, which bucketing both sides on the join
-    key removes (sinks.write_bucketed).
+    The broadcast hints are explicit because the numbered product dim
+    is checkpoint-backed (no size statistics — Catalyst would assume
+    worst-case and sort-merge).
     """
-    def hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_dims else df
-
     f = (
         staging.join(
-            hint(dim_platform), on="platform_name", how="left"
+            F.broadcast(dim_platform), on="platform_name", how="left"
         ).join(
-            hint(dim_product.select("product_id", "product_key")),
+            F.broadcast(dim_product.select("product_id", "product_key")),
             on="product_key",
             how="left",
         )
@@ -421,24 +414,18 @@ def sales_product_geo_view(
     dim_date: DataFrame,
     dim_product: DataFrame,
     dim_platform: DataFrame,
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """The denormalized reporting view — J2, the 4-way star join.
 
     Reference sql/views/vw_sales_product_geo.View.sql:26-57. All three
-    dims broadcast by default; the fact side streams through one
-    whole-stage codegen pipeline with zero shuffles. ``broadcast_dims``
-    as in :func:`build_fact` — date/platform are bounded by
-    construction, the product master is the one that can outgrow a
-    broadcast at extreme scale.
+    dims are broadcast (hinted, as in :func:`build_fact`); the fact
+    side streams through one whole-stage codegen pipeline with zero
+    shuffles.
     """
-    def hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_dims else df
-
     return (
         fact.join(F.broadcast(dim_date), on="date_id")
         .join(
-            hint(
+            F.broadcast(
                 dim_product.select(
                     "product_id", "product_key", "english_name", "category", "subcategory"
                 )
@@ -510,9 +497,7 @@ def _bound_view_partitions(
     return view.coalesce(target)
 
 
-def star(
-    spark: SparkSession, sf_dir: str, broadcast_dims: bool = True
-) -> dict[str, DataFrame]:
+def star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Build the whole star once: staging, 4 dims, fact, reporting view.
 
     ``staging`` is deliberately NOT persisted: each consumer needs only
@@ -553,17 +538,11 @@ def star(
     dim_product = build_dim_product(spark, sf_dir)
     dim_customer = build_dim_customer(staging)
     dim_date = calendar_frame(spark, F.col("lo"), F.col("hi"), bounds_df=seed)
-    fact = build_fact(staging, dim_platform, dim_product, broadcast_dims=broadcast_dims)
+    fact = build_fact(staging, dim_platform, dim_product)
     view = _bound_view_partitions(
         spark,
         sf_dir,
-        sales_product_geo_view(
-            fact,
-            dim_date,
-            dim_product,
-            dim_platform,
-            broadcast_dims=broadcast_dims,
-        ),
+        sales_product_geo_view(fact, dim_date, dim_product, dim_platform),
     )
     return {
         "staging": staging,

@@ -167,9 +167,7 @@ def csv_header_schema(spark: SparkSession, path: str) -> T.StructType:
     return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
 
 
-def read_csv_all_string(
-    spark: SparkSession, path: str, normalize_names: bool = True
-) -> DataFrame:
+def read_csv_all_string(spark: SparkSession, path: str) -> DataFrame:
     """S1 — CSV scan with every column as StringType (mirrors dtype=str).
 
     The header comes from :func:`csv_header_schema` — on the driver for
@@ -180,12 +178,10 @@ def read_csv_all_string(
     etl/order_info_etl.py:31-35,182).
     """
     df = _csv_reader(spark).schema(csv_header_schema(spark, path)).csv(path)
-    return normalize_columns(df) if normalize_names else df
+    return normalize_columns(df)
 
 
-def read_excel(
-    spark: SparkSession, path: str, sheet: int | str = 0, normalize_names: bool = True
-) -> DataFrame:
+def read_excel(spark: SparkSession, path: str, sheet: int | str = 0) -> DataFrame:
     """S2 — Excel ingest shim (driver-side parse → createDataFrame).
 
     Mirrors ``pd.read_excel(path, sheet_name=SHEET, dtype=str)``
@@ -208,8 +204,7 @@ def read_excel(
     schema = T.StructType(
         [T.StructField(str(h), T.StringType(), True) for h in headers]
     )
-    df = spark.createDataFrame(rows, schema=schema)
-    return normalize_columns(df) if normalize_names else df
+    return normalize_columns(spark.createDataFrame(rows, schema=schema))
 
 
 def read_input(spark: SparkSession, path: str, sheet: int | str = 0) -> DataFrame:

@@ -1254,7 +1254,7 @@ def graph_main() -> None:
         ((F.col("id") * 2654435761) % n_nodes).alias("dst"),
     ).where(F.col("src") != F.col("dst"))
     t0 = time.time()
-    ranks = graph.pagerank(edges, max_iter=10, tol=0.0)
+    ranks = graph.pagerank(edges, max_iter=10)
     total = ranks.agg(F.sum("rank")).collect()[0][0]
     secs = time.time() - t0
     print(

@@ -1,3 +1,5 @@
+import uuid
+
 import pytest
 
 
@@ -13,3 +15,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+def jobs_in(spark, fn):
+    """(``fn()``, the ids of the Spark jobs it launched). Each call runs
+    ``fn`` in a job group of its own, so jobs of earlier calls never
+    count."""
+    sc = spark.sparkContext
+    group = "jobs-" + uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

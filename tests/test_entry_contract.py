@@ -468,3 +468,122 @@ def test_every_package_function_is_reached():
         not in {mod for mod, _ in defs.get(key.rsplit(".", 1)[1], [])}
     )
     assert missing == [], f"allowlisted functions that do not exist: {missing}"
+
+
+_INPUT_CHECK = (
+    "input check no gated caller needs: those callers read the width "
+    "from the footer (_emb_plan); the peek checks any other frame"
+)
+
+#: ``bool`` flags of top-level package functions that no seed or
+#: package call sets both ways — each with the reason it stays
+_ONE_WAY_FLAGS_ALLOWED = {
+    "operators.rules.apply_passes.compile_via_sql": "the Column-path "
+    "witness the fuzz test checks the SQL compiler against",
+    "operators.dedup.neardup_pairs.lazy": "test_plans reads the candidate "
+    "join's plan before the checkpoint",
+    "operators.dims.scd2_apply.strict": _INPUT_CHECK,
+    **{
+        f"operators.similarity.{n}.validate_dim": _INPUT_CHECK
+        for n in (
+            "ann_index",
+            "ann_query",
+            "ann_lsh_topk",
+            "embedding_neardup_pairs",
+            "rp_project",
+            "shortlisted_cosine_topk",
+        )
+    },
+}
+
+
+def _bool_flags(node) -> dict[str, tuple[int | None, bool]]:
+    """``{name: (positional index or None, default)}`` for the
+    ``bool``-annotated parameters of ``node`` with a literal default,
+    except ``_``-prefixed ones."""
+    import ast
+
+    a = node.args
+    positional = a.posonlyargs + a.args
+    pos_defaults = [None] * (len(positional) - len(a.defaults)) + a.defaults
+    params = [(i, p, d) for i, (p, d) in enumerate(zip(positional, pos_defaults))]
+    params += [(None, p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+    return {
+        p.arg: (i, d.value)
+        for i, p, d in params
+        if isinstance(p.annotation, ast.Name)
+        and p.annotation.id == "bool"
+        and isinstance(d, ast.Constant)
+        and isinstance(d.value, bool)
+        and not p.arg.startswith("_")
+    }
+
+
+def _passed_values(call, index: int | None, name: str, default: bool) -> set[bool]:
+    """The values ``call`` gives the flag: both when it passes a
+    non-literal (or ``*args``/``**kwargs`` that may carry it)."""
+    import ast
+
+    def value(arg) -> set[bool]:
+        if isinstance(arg, ast.Constant) and isinstance(arg.value, bool):
+            return {arg.value}
+        return {True, False}
+
+    for kw in call.keywords:
+        if kw.arg == name:
+            return value(kw.value)
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return {True, False}
+        if i == index:
+            return value(arg)
+    if any(kw.arg is None for kw in call.keywords):
+        return {True, False}
+    return {default}
+
+
+def test_every_package_flag_is_used_both_ways():
+    """Every ``bool`` parameter with a literal default on a top-level
+    package function is left at its default by some call in the gated
+    queries, the bench, the perfbench workloads or the package, and
+    given the other value by some call — or is listed with its reason
+    in ``_ONE_WAY_FLAGS_ALLOWED`` (a flag of an allowlisted function
+    takes that function's reason). Calls match by function name, as in
+    :func:`_name_closure`. Pure AST walk: no Spark, no imports run."""
+    import ast
+
+    root = pathlib.Path(E.__file__).resolve().parent
+    files = sorted((root / _PKG).rglob("*.py"))
+    flags: dict[str, list] = {}  # function name -> [(module, flag, index, default)]
+    for p in files:
+        mod = ".".join(p.relative_to(root / _PKG).with_suffix("").parts)
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                flags.setdefault(node.name, []).extend(
+                    (mod, flag, index, default)
+                    for flag, (index, default) in _bool_flags(node).items()
+                )
+    used: dict[str, set[bool]] = {}
+    for path in _seeds(root) + files:
+        for call in ast.walk(ast.parse(path.read_text())):
+            if isinstance(call, ast.Call):
+                name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+                for mod, flag, index, default in flags.get(name, []):
+                    used.setdefault(f"{mod}.{name}.{flag}", set()).update(
+                        _passed_values(call, index, flag, default)
+                    )
+    one_way = {
+        f"{mod}.{name}.{flag}"
+        for name, entries in flags.items()
+        for mod, flag, _, _ in entries
+        if used.get(f"{mod}.{name}.{flag}") != {True, False}
+        and f"{mod}.{name}" not in _UNREACHED_FUNCS_ALLOWED
+        and mod not in _UNREACHED_ALLOWED
+    }
+    unlisted = sorted(one_way - set(_ONE_WAY_FLAGS_ALLOWED))
+    assert unlisted == [], (
+        f"flags no call sets both ways: {unlisted} — delete the option, or "
+        "allow it with a reason"
+    )
+    stale = sorted(set(_ONE_WAY_FLAGS_ALLOWED) - one_way)
+    assert stale == [], f"allowlisted flags are used both ways or gone: {stale}"

@@ -10,9 +10,9 @@ is read as it is now, and how many jobs the plan builds launch.
 
 import os
 import shutil
-import uuid
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,18 +32,6 @@ TABLES = (
 )
 
 
-def _jobs(spark, build):
-    """(``build()``, the ids of the Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = "footer-reads-" + uuid.uuid4().hex
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_table_reads_declare_the_inferred_schema_without_a_job(spark, sf_dir, sf):
     """Every testdata table reads with exactly the schema Spark infers
@@ -61,7 +49,7 @@ def test_table_reads_declare_the_inferred_schema_without_a_job(spark, sf_dir, sf
             inferred = scoped(spark, TIMESTAMP_CONF).read.parquet(path)
             want = inferred.withColumn("ts", F.col("ts").cast(T.TimestampType())).schema
         for read in reads:
-            df, jobs = _jobs(spark, read)
+            df, jobs = jobs_in(spark, read)
             assert jobs == [], name
             assert df.schema == want, name
 
@@ -132,7 +120,7 @@ def test_footer_fallbacks_get_sparks_own_schema(spark, tmp_path):
         path = os.path.join(sf_dir, "t.parquet")
         footer = parquet_footer(path, session)
         assert (footer is not None and footer.schema is not None) == proven, case
-        df, jobs = _jobs(session, lambda: read_table(session, sf_dir, "t"))
+        df, jobs = jobs_in(session, lambda: read_table(session, sf_dir, "t"))
         assert df.schema == session.read.parquet(path).schema, case
         if proven:
             assert jobs == [], case
@@ -210,7 +198,7 @@ def test_plan_builds_launch_no_table_read_job(spark, sf_dir, monkeypatch):
     #: jobs a build may launch, with the reason
     allowed = {"ann_ivf_topk": 1}  # the IVF codebook's sample collect
     for name, build in builds.items():
-        _, jobs = _jobs(spark, build)
+        _, jobs = jobs_in(spark, build)
         assert len(jobs) <= allowed.get(name, 0), (name, jobs)
-    _, jobs = _jobs(spark, builds["pipeline.star"])
+    _, jobs = jobs_in(spark, builds["pipeline.star"])
     assert jobs == [], "repeat star build"

@@ -32,7 +32,7 @@ def test_pagerank_matches_numpy_reference(spark):
     df = spark.createDataFrame(edges, EDGES)
     # SAME recurrence at the SAME iteration count matches to fp error
     # even mid-convergence - 12 iterations keeps the test fast
-    got = {r.node: r.rank for r in graph.pagerank(df, max_iter=12, tol=0.0).collect()}
+    got = {r.node: r.rank for r in graph.pagerank(df, max_iter=12).collect()}
     want = _numpy_pagerank(edges, 5, iters=12)
     for i in range(5):
         assert abs(got[i] - want[i]) < 1e-6, (i, got[i], want[i])
@@ -51,7 +51,7 @@ def test_pagerank_ranks_hub_higher(spark):
 
 
 def test_pagerank_fixed_mode_has_zero_driver_collects(spark, monkeypatch):
-    """VERDICT r7 item 3: tol<=0 runs the whole loop with NO
+    """VERDICT r7 item 3: the whole loop runs with NO
     DataFrame.collect — the dangling mass rides the dataflow as a
     one-row broadcast crossJoin, so the only jobs are the periodic
     eager checkpoints. Pinned by counting collect() calls (the numpy
@@ -70,17 +70,13 @@ def test_pagerank_fixed_mode_has_zero_driver_collects(spark, monkeypatch):
     df = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 0), (3, 0), (3, 4)], EDGES
     )
-    out = graph.pagerank(df, max_iter=9, tol=0.0, checkpoint_every=4)
+    out = graph.pagerank(df, max_iter=9, checkpoint_every=4)
     assert calls["n"] == 0
     monkeypatch.undo()
     got = {r.node: r.rank for r in out.collect()}
     assert abs(sum(got.values()) - 1.0) < 1e-9  # mass still conserved
 
 
-def test_pagerank_converges_early_and_empty_graph(spark):
-    df = spark.createDataFrame([(0, 1), (1, 0)], EDGES)
-    out = graph.pagerank(df, max_iter=50, tol=1e-12).collect()
-    got = {r.node: r.rank for r in out}
-    assert abs(got[0] - 0.5) < 1e-9 and abs(got[1] - 0.5) < 1e-9
+def test_pagerank_empty_graph(spark):
     empty = spark.createDataFrame([], EDGES)
     assert graph.pagerank(empty).count() == 0

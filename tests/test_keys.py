@@ -65,14 +65,6 @@ def test_three_way_parity(spark):
     assert duck_vals == expected
 
 
-def test_spark_sql_dialect_matches(spark):
-    df = spark.createDataFrame(ROWS, ["name", "addr", "postal"])
-    df.createOrReplaceTempView("kt")
-    sql = stable_id_sql(["name", "addr", "postal"], dialect="spark")
-    got = [r.v for r in spark.sql(f"SELECT {sql} AS v FROM kt").collect()]
-    assert got == [py_reference(*row) for row in ROWS]
-
-
 def test_dense_surrogate_id(spark):
     df = spark.createDataFrame([("b",), ("a",), ("c",)], ["k"])
     out = df.select("k", dense_surrogate_id(["k"]).alias("id")).orderBy("id")

@@ -78,7 +78,7 @@ def test_adopt_rehomes_a_frame_without_changing_it(spark):
 
 
 def test_pagerank_leaves_a_concurrent_callers_confs_alone(spark):
-    """Thread A runs fixed-mode PageRank; thread B, sharing the session,
+    """Thread A runs PageRank; thread B, sharing the session,
     keeps reading its confs and planning a query. B must see the
     caller's AQE, shuffle partitions and zone throughout."""
     want = {k: spark.conf.get(k) for k in (AQE, PARTS, TZ)}
@@ -91,7 +91,7 @@ def test_pagerank_leaves_a_concurrent_callers_confs_alone(spark):
 
     def run_pagerank():
         try:
-            graph.pagerank(edges, max_iter=12, tol=0.0, checkpoint_every=2).count()
+            graph.pagerank(edges, max_iter=12, checkpoint_every=2).count()
         except Exception as e:  # surfaced below
             errors.append(e)
         finally:

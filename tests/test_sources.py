@@ -3,6 +3,7 @@
 import os
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import types as T
 
 from sales_analytics_etl_sql_powerbi_spark.sources.readers import (
@@ -53,18 +54,6 @@ _HEADER_SHAPES = {
 }
 
 
-def _jobs_in(spark, fn):
-    """(fn's result, the ids of the Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = "jobs-" + os.urandom(4).hex()
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _inferred_header(session, path):
     """Spark's own ``header=True`` names, normalized like the reader's."""
     from sales_analytics_etl_sql_powerbi_spark.functions.cleaning import (
@@ -78,7 +67,7 @@ def _inferred_header(session, path):
 def _assert_header_parity(session, path, declared):
     from sales_analytics_etl_sql_powerbi_spark.sources import readers
 
-    df, jobs = _jobs_in(session, lambda: read_csv_all_string(session, path))
+    df, jobs = jobs_in(session, lambda: read_csv_all_string(session, path))
     assert df.columns == _inferred_header(session, path)
     assert all(isinstance(f.dataType, T.StringType) for f in df.schema.fields)
     assert (readers._driver_csv_header(session, path) is not None) == declared
@@ -113,7 +102,7 @@ def test_csv_header_parity_case_sensitive(spark, tmp_path):
     path.write_bytes(b"a,B,A,b,a\n1,2,3,4,5\n")
     child = scoped(spark, {"spark.sql.caseSensitive": "true"})
     _assert_header_parity(child, str(path), True)
-    df = read_csv_all_string(child, str(path), normalize_names=False)
+    df = read_csv_all_string(child, str(path))
     assert df.columns == ["a0", "B", "A", "b", "a4"]
 
 

@@ -3,6 +3,7 @@
 import datetime
 
 import pytest
+from conftest import jobs_in
 
 from sales_analytics_etl_sql_powerbi_spark.streaming import windows as W
 
@@ -946,13 +947,10 @@ class TestUpsertDeclaredRead:
         monkeypatch.setattr(
             sinks, "_append_isolated", lambda df, *_: appended.append(df)
         )
-        sc = spark.sparkContext
-        sc.setJobGroup("upsert-key-read", "upsert-key-read")
-        try:
-            upsert_batch_into_parquet(self._batch(spark, 3, 8), tbl, ["k"])
-        finally:
-            sc.setJobGroup(None, None)
-        assert list(sc.statusTracker().getJobIdsForGroup("upsert-key-read")) == []
+        _, jobs = jobs_in(
+            spark, lambda: upsert_batch_into_parquet(self._batch(spark, 3, 8), tbl, ["k"])
+        )
+        assert jobs == []
         assert sorted(r.k for r in appended[0].collect()) == [5, 6, 7]
 
     def test_first_upsert_into_empty_root(self, spark, tmp_path):
@@ -1062,17 +1060,12 @@ class TestUpsertRegimes:
             upsert_batch_into_parquet,
         )
 
-        sc = spark.sparkContext
-        tracker = sc.statusTracker()
+        tracker = spark.sparkContext.statusTracker()
         costs = []
-        for i, batch in enumerate(TestUpsertRegimes._batches(spark)):
-            group = f"upsert-regime-{id(spark)}-{tbl}-{i}"
-            sc.setJobGroup(group, group)
-            try:
-                upsert_batch_into_parquet(batch, tbl, ["k1", "k2"])
-            finally:
-                sc.setJobGroup(None, None)
-            jobs = list(tracker.getJobIdsForGroup(group))
+        for batch in TestUpsertRegimes._batches(spark):
+            _, jobs = jobs_in(
+                spark, lambda: upsert_batch_into_parquet(batch, tbl, ["k1", "k2"])
+            )
             tasks = sum(
                 tracker.getStageInfo(s).numTasks
                 for j in jobs
@@ -1097,13 +1090,11 @@ class TestUpsertRegimes:
 
         batch = spark.range(0, 50_000, numPartitions=4).selectExpr("id AS k", "id AS v")
         assert sinks._ONE_TASK_BATCH_BYTES < plan_size_bytes(batch)
-        sc = spark.sparkContext
-        sc.setJobGroup("upsert-above-bound", "upsert-above-bound")
-        try:
-            sinks.upsert_batch_into_parquet(batch, str(tmp_path / "tbl"), ["k"])
-        finally:
-            sc.setJobGroup(None, None)
-        assert len(sc.statusTracker().getJobIdsForGroup("upsert-above-bound")) > 1
+        _, jobs = jobs_in(
+            spark,
+            lambda: sinks.upsert_batch_into_parquet(batch, str(tmp_path / "tbl"), ["k"]),
+        )
+        assert len(jobs) > 1
         assert spark.read.parquet(str(tmp_path / "tbl")).count() == 50_000
 
     def test_regimes_build_identical_tables(self, spark, tmp_path):
